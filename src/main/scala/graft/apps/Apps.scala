@@ -35,8 +35,7 @@ private object AppUtil {
              usage: String): Unit = {
     require(args.length >= 1, usage)
     val spark = session("graft-" + algos.head._1)
-    val featurized = TweetPipeline.featurize(
-      Csv.tweets(spark, args(0))).persist()
+    val featurized = TweetPipeline.featurize(Csv.tweets(spark, args(0)))
     algos.foreach { case (algo, tag) =>
       val r = TweetPipeline.trainEval(algo, featurized)
       printResults(tag, r.accuracy, r.f1, r.trainSec, r.testSec)

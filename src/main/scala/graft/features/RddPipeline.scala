@@ -11,9 +11,12 @@ import graft.text.TextOps
   * CSV → RDD-flavor tokenize chain → top-K vocabulary → sparse
   * TF-IDF Dataset ready for the GD loop.
   *
-  * One shuffle chain instead of the reference's four (flatMap-distinct
-  * -join-groupByKey with both sides shuffled): the ≤K-row vocabulary
-  * broadcasts, the big side shuffles once for the per-doc group-by.
+  * No per-document shuffle (the reference runs flatMap-distinct-join-
+  * groupByKey with both sides shuffled): the tokenized frame is
+  * persisted and read by the vocabulary's top-K aggregate and by
+  * [[TfIdf.transform]]'s single df pass; the ≤K-row vocabulary and
+  * IDF table broadcast, and each document's sparse vector comes from
+  * a per-row map, so `data` keeps the CSV scan's partitioning.
   * The featurized Dataset is persisted — the reference recomputes the
   * entire tokenize+TF-IDF lineage on every one of its 300 iterations
   * (SURVEY.md §2.10 R2).
@@ -64,12 +67,11 @@ object RddPipeline {
     * the gate and the golden emitter cannot drift.
     *
     * Why not `randomSplit(seed)`: its assignment depends on the
-    * partition layout of the input, and the featurized frame's
-    * partition count is `spark.sql.shuffle.partitions` = the core
-    * count ([[graft.core.Sessions]]) — the round-10 goldens were
-    * silently local[8]-only (VERDICT r10 §wrong). A hash gate on the
-    * stable doc id ([[graft.operators.Splits.hashBucket]]) is a pure
-    * per-row expression: same rows in the same split on any
+    * partition layout of the input, and the featurized frame keeps
+    * whatever partitioning its upstream scan had — the round-10
+    * goldens were silently local[8]-only (VERDICT r10 §wrong). A hash
+    * gate on the stable doc id ([[graft.operators.Splits.hashBucket]])
+    * is a pure per-row expression: same rows in the same split on any
     * partitioning, core count, or cluster size — the 100 TB shape.
     * Exact RNG parity with the reference's seeded split is impossible
     * anyway (SURVEY §7), so determinism wins for the gate contract;

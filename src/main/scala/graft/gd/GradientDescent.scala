@@ -244,15 +244,14 @@ object GradientDescent {
       stop
     }
 
-    // Bounded local finish (see scaladoc): rows gate first (one cheap
-    // count over the persisted input), then an estimated-bytes gate
-    // (row bound alone would let huge rows OOM the driver — VERDICT
-    // r14 #4), then one glom().collect() that preserves partition
-    // structure and order.
-    if (localFinishRows > 0 && rdd.count() <= localFinishRows) {
-      val estBytes = rdd.map(d =>
-        (48L + 2L * d.id.length + 12L * d.indices.length).toDouble).sum()
-      if (estBytes <= localFinishBytes.toDouble) {
+    // Bounded local finish (see scaladoc): a rows gate and an
+    // estimated-bytes gate (row bound alone would let huge rows OOM
+    // the driver — VERDICT r14 #4), both from one job over the
+    // persisted input, then one glom().collect() that preserves
+    // partition structure and order.
+    if (localFinishRows > 0) {
+      val (rows, estBytes) = SparseDoc.rowsAndBytes(rdd)
+      if (rows <= localFinishRows && estBytes <= localFinishBytes.toDouble) {
         val parts = rdd.glom().collect()
         var i = 0
         var stopped = false

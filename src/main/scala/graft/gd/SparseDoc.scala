@@ -21,3 +21,16 @@ case class SparseDoc(
     s
   }
 }
+
+object SparseDoc {
+
+  /** Row count and estimated driver-side bytes (48 B of object
+    * headers, 2 B per id char, 12 B per index/value pair) in one job —
+    * the two bounds of the trainers' local-finish gate.
+    */
+  def rowsAndBytes(rdd: org.apache.spark.rdd.RDD[SparseDoc]): (Long, Double) =
+    rdd.aggregate((0L, 0.0))(
+      (acc, d) => (acc._1 + 1L,
+        acc._2 + (48L + 2L * d.id.length + 12L * d.indices.length).toDouble),
+      (a, b) => (a._1 + b._1, a._2 + b._2))
+}

@@ -179,7 +179,9 @@ object TwoLayerNet {
     val sc = rdd.sparkContext
     val p = initial.getOrElse(init(cfg))
     val nIn = cfg.nIn; val nH = cfg.nHidden; val nOut = cfg.nOut
-    val n = rdd.count().toDouble
+    // rows (the 1/n scale) and the local-finish bytes gate: one job
+    val (rows, estBytes) = SparseDoc.rowsAndBytes(rdd)
+    val n = rows.toDouble
     require(n > 0, "empty training set")
     var lr = cfg.learningRate
     var oldCost = 0.0
@@ -246,69 +248,66 @@ object TwoLayerNet {
     // buffers are reused across iterations and fully zeroed first
     // (the RowScratch discipline — bit-identical to fresh arrays).
     // Above the bound: the distributed loop below, unchanged.
-    if (localFinishRows > 0 && n <= localFinishRows.toDouble) {
-      val estBytes = rdd.map(d =>
-        (48L + 2L * d.id.length + 12L * d.indices.length).toDouble).sum()
-      if (estBytes <= localFinishBytes.toDouble) {
-        val parts = rdd.glom().collect()
-        val nP = parts.length
-        // thread budget = the session's task-slot count
-        // (defaultParallelism), NOT availableProcessors: a
-        // SPARK_GRAFT_CPUS=8 bench must not borrow the host's other
-        // 24 vCPUs for the local loop when the distributed path it
-        // replaces would have been capped at 8 task slots — the
-        // core-count scaling measurement stays honest. Thread count
-        // never affects the result (each thread owns whole
-        // partitions; merge order is partition-indexed).
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.max(1, math.min(nP, sc.defaultParallelism)))
-        try {
-          val bufs = Array.tabulate(nP)(_ =>
-            (new Array[Double](nIn * nH), new Array[Double](nH),
-              new Array[Double](nH * nOut), new Array[Double](nOut),
-              new RowScratch(nH, nOut)))
-          var i = 0
-          while (i < cfg.iterations) {
-            val futs = (0 until nP).map { pi =>
-              pool.submit(new java.util.concurrent.Callable[Double] {
-                def call(): Double = {
-                  val docs = parts(pi)
-                  val (w1, b1, w2, b2, scr) = bufs(pi)
-                  java.util.Arrays.fill(w1, 0.0)
-                  java.util.Arrays.fill(b1, 0.0)
-                  java.util.Arrays.fill(w2, 0.0)
-                  java.util.Arrays.fill(b2, 0.0)
-                  var c = 0.0
-                  var r = 0
-                  while (r < docs.length) {
-                    c += rowCostGrad(docs(r), p, nIn, nH, nOut,
-                      w1, b1, w2, b2, scr)
-                    r += 1
-                  }
-                  c
+    if (localFinishRows > 0 && rows <= localFinishRows &&
+        estBytes <= localFinishBytes.toDouble) {
+      val parts = rdd.glom().collect()
+      val nP = parts.length
+      // thread budget = the session's task-slot count
+      // (defaultParallelism), NOT availableProcessors: a
+      // SPARK_GRAFT_CPUS=8 bench must not borrow the host's other
+      // 24 vCPUs for the local loop when the distributed path it
+      // replaces would have been capped at 8 task slots — the
+      // core-count scaling measurement stays honest. Thread count
+      // never affects the result (each thread owns whole
+      // partitions; merge order is partition-indexed).
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(
+        math.max(1, math.min(nP, sc.defaultParallelism)))
+      try {
+        val bufs = Array.tabulate(nP)(_ =>
+          (new Array[Double](nIn * nH), new Array[Double](nH),
+            new Array[Double](nH * nOut), new Array[Double](nOut),
+            new RowScratch(nH, nOut)))
+        var i = 0
+        while (i < cfg.iterations) {
+          val futs = (0 until nP).map { pi =>
+            pool.submit(new java.util.concurrent.Callable[Double] {
+              def call(): Double = {
+                val docs = parts(pi)
+                val (w1, b1, w2, b2, scr) = bufs(pi)
+                java.util.Arrays.fill(w1, 0.0)
+                java.util.Arrays.fill(b1, 0.0)
+                java.util.Arrays.fill(w2, 0.0)
+                java.util.Arrays.fill(b2, 0.0)
+                var c = 0.0
+                var r = 0
+                while (r < docs.length) {
+                  c += rowCostGrad(docs(r), p, nIn, nH, nOut,
+                    w1, b1, w2, b2, scr)
+                  r += 1
                 }
-              })
-            }
-            var total: Buf = null
-            var pi = 0
-            while (pi < nP) {
-              val c = futs(pi).get()
-              // empty partitions emit nothing, like the distributed
-              // mapPartitions
-              if (parts(pi).nonEmpty) {
-                val (w1, b1, w2, b2, _) = bufs(pi)
-                val b: Buf = (c, w1, b1, w2, b2)
-                total = if (total == null) b else combOp(total, b)
+                c
               }
-              pi += 1
-            }
-            val (cost, dW1, dB1, dW2, dB2) = total
-            step(cost, dW1, dB1, dW2, dB2, i)
-            i += 1
+            })
           }
-        } finally pool.shutdown()
-        return Result(p, costs.toArray)
-      }
+          var total: Buf = null
+          var pi = 0
+          while (pi < nP) {
+            val c = futs(pi).get()
+            // empty partitions emit nothing, like the distributed
+            // mapPartitions
+            if (parts(pi).nonEmpty) {
+              val (w1, b1, w2, b2, _) = bufs(pi)
+              val b: Buf = (c, w1, b1, w2, b2)
+              total = if (total == null) b else combOp(total, b)
+            }
+            pi += 1
+          }
+          val (cost, dW1, dB1, dW2, dB2) = total
+          step(cost, dW1, dB1, dW2, dB2, i)
+          i += 1
+        }
+      } finally pool.shutdown()
+      return Result(p, costs.toArray)
     }
 
     // phase accounting under SPARK_GRAFT_GD_DEBUG, same attribution

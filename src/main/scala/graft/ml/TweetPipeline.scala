@@ -6,6 +6,8 @@ import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.feature._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+import graft.core.Pinned
 import graft.text.TextOps
 
 /** Stack A — the reference's spark.ml pipeline (SURVEY.md §2.9
@@ -18,6 +20,9 @@ import graft.text.TextOps
   * `length`, `cleanstopwords` → higher-order `filter`. In the
   * reference every UDF stage is a `BatchEvalPython` pipeline break;
   * here the whole pre-ML prep is one codegen'd stage (SURVEY.md §3.1).
+  *
+  * [[featurize]] runs that prep once for all three estimator fits and
+  * returns a persisted frame that several classifiers share.
   *
   * Parity notes:
   *  - `ml.feature.Tokenizer` splits on the single-whitespace regex
@@ -65,11 +70,20 @@ object TweetPipeline {
 
   /** prep + fit + transform → (label, features), the frame every
     * classifier trains on (`LogisticRegression.py:91-96`).
+    *
+    * The prep is persisted for the three estimator fits and the
+    * transform, then freed here. Returns a persisted, materialized
+    * frame: the caller unpersists it when its classifiers are done.
     */
   def featurize(raw: DataFrame): DataFrame = {
-    val prepared = prepare(raw)
-    featurePipeline().fit(prepared).transform(prepared)
-      .select(col("label"), col("features"))
+    val prepared = prepare(raw).persist(StorageLevel.MEMORY_AND_DISK)
+    Pinned.withPinned(prepared) {
+      val out = featurePipeline().fit(prepared).transform(prepared)
+        .select(col("label"), col("features"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      try { out.count(); out }
+      catch { case e: Throwable => out.unpersist(); throw e }
+    }
   }
 
   /** M8–M13 — classifier zoo with the reference's hyper-parameters. */
@@ -125,19 +139,25 @@ object TweetPipeline {
       val Array(training, testing) =
         featurized.randomSplit(Array(0.8, 0.2), seed)
       val model = est.fit(training)
-      val predictions = model.transform(testing)
-      val evaluator = new MulticlassClassificationEvaluator()
-        .setPredictionCol("prediction").setLabelCol("label")
-      EvalResult(s"$algo@$p",
-        evaluator.setMetricName("accuracy").evaluate(predictions),
-        evaluator.setMetricName("f1").evaluate(predictions),
-        0L, 0L, 0.0, 0.0)
+      val (acc, f1) = accuracyF1(model.transform(testing))
+      EvalResult(s"$algo@$p", acc, f1, 0L, 0L, 0.0, 0.0)
     }
+
+  /** Accuracy and weighted F1 of a predictions frame (label,
+    * prediction) from one metrics pass — the exact values the
+    * evaluator's "accuracy" and "f1" metrics return.
+    */
+  private[graft] def accuracyF1(predictions: DataFrame): (Double, Double) = {
+    val m = new MulticlassClassificationEvaluator()
+      .setPredictionCol("prediction").setLabelCol("label")
+      .getMetrics(predictions)
+    (m.accuracy, m.weightedFMeasure)
+  }
 
   /** Split → fit → transform → M14 evaluate, mirroring
     * `LogisticRegression.py:96-116`. The split is seeded (R1).
-    * Callers should persist `featurized` (R2) — this method leaves
-    * the caller's persistence level untouched so one cached
+    * `featurized` is normally [[featurize]]'s persisted output (R2);
+    * this method leaves its persistence untouched so one cached
     * featurization can serve several classifiers.
     */
   def trainEval(algo: String, featurized: DataFrame,
@@ -161,16 +181,10 @@ object TweetPipeline {
     val model = classifier(algo).fit(fitInput)
       .asInstanceOf[org.apache.spark.ml.Transformer]
     val t1 = System.nanoTime()
-    val predictions = model.transform(testing).persist()
-    val evaluator = new MulticlassClassificationEvaluator()
-      .setPredictionCol("prediction").setLabelCol("label")
-    val acc = evaluator.setMetricName("accuracy").evaluate(predictions)
-    val f1 = evaluator.setMetricName("f1").evaluate(predictions)
+    val (acc, f1) = accuracyF1(model.transform(testing))
     val t2 = System.nanoTime()
-    val res = EvalResult(algo, acc, f1,
+    EvalResult(algo, acc, f1,
       training.count(), testing.count(),
       (t1 - t0) / 1e9, (t2 - t1) / 1e9)
-    predictions.unpersist()
-    res
   }
 }

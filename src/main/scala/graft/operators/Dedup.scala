@@ -327,22 +327,30 @@ object Dedup {
       prefixFilterStagesHashed(sh, dfTab, threshold).result
   }
 
+  /** Emission's exact pre-dedup candidate volume Σ df·(df−1)/2 and
+    * the total occurrences Σ df of a (shingle, df) table; None for an
+    * empty table. Both sums run in Double, exact below 2^53 and free
+    * of overflow above it: a Long df·(df−1) overflows at df ≈ 3.04e9,
+    * which ANSI mode turns into a query failure.
+    */
+  private[graft] def emissionStats(dfTab: DataFrame): Option[(Double, Double)] = {
+    val df = col("df").cast("double")
+    val row = dfTab.agg(
+      sum(df * (df - lit(1.0))).as("pairs2"),
+      sum(df).as("occ")).collect()(0)
+    if (row.isNullAt(0) || row.isNullAt(1)) None
+    else Some((row.getDouble(0) / 2.0, row.getDouble(1)))
+  }
+
   /** The [[exactJaccardPairsAuto]] decision, exposed for the spec:
-    * emission's exact pre-dedup candidate volume Σ df·(df−1)/2 vs the
-    * budget × total occurrences Σ df.
+    * [[emissionStats]]' candidate volume vs the budget × total
+    * occurrences. An empty corpus picks emission.
     */
   private[graft] def emissionWins(dfTab: DataFrame,
-                                  emissionBudgetPerOcc: Double): Boolean = {
-    val row = dfTab.agg(
-      sum(col("df") * (col("df") - lit(1))).as("pairs2"),
-      sum(col("df")).as("occ")).collect()(0)
-    if (row.isNullAt(0) || row.isNullAt(1)) true // empty corpus
-    else {
-      val pairs = row.getLong(0) / 2.0
-      val occ = row.getLong(1).toDouble
+                                  emissionBudgetPerOcc: Double): Boolean =
+    emissionStats(dfTab).forall { case (pairs, occ) =>
       pairs <= emissionBudgetPerOcc * occ
     }
-  }
 
   // shingles ride as xxhash64 i64s from here on: prefix-filter
   // COMPLETENESS only needs a consistent global order (Bayardo et

@@ -430,14 +430,15 @@ object Similarity {
                        vecCol: String = "embedding"): DataFrame = {
     val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
       norm(col(vecCol)).as("q_nrm"))
-    val qCells = broadcast(q.select(col("q_id"), col("q_vec"),
-      col("q_nrm"),
-      explode(nearestCells(col("q_vec"), centroids, nProbe)).as("cell")))
+    val qCells = q.select(col("q_id"), col("q_vec"), col("q_nrm"),
+      explode(nearestCells(col("q_vec"), centroids, nProbe)).as("cell"))
     val probed = qCells.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).toSeq
     val idx = spark.read.parquet(path)
       .filter(col("cell").isin(probed: _*))
-    val scored = idx.join(qCells, Seq("cell"))
+    // the hint sits on the join side only: on qCells itself it would
+    // also ride into the probed-cell collect above, which has no join
+    val scored = idx.join(broadcast(qCells), Seq("cell"))
       .filter(col("n_id") =!= col("q_id"))
       .select(col("q_id"), col("n_id"),
         cosineFromNorms(col("q_vec"), col("n_vec"),

@@ -35,7 +35,7 @@ object MlQueries {
       // featurize FIRST: if it throws, computeIfAbsent leaves no cache
       // entry and no listener behind (registering before the call
       // would leak one dead listener per failed attempt)
-      val df = TweetPipeline.featurize(raw(sess)).persist()
+      val df = TweetPipeline.featurize(raw(sess))
       // evict every entry of this context when it stops: the cached
       // DataFrame strongly references its session (so weak-keyed maps
       // can never collect the entry), and without eviction a

@@ -24,12 +24,10 @@ object D20Decision {
       def sh = graft.operators.Dedup.shingles(
         graft.core.Tables.documents(spark, sf), "doc_id",
         graft.text.TextOps.tokenize(col("text")))
-      val r = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-        .agg(sum(col("df") * (col("df") - lit(1))).as("p2"),
-          sum(col("df")).as("occ")).collect()(0)
-      val pairs = r.getLong(0) / 2.0
-      val occ = r.getLong(1)
-      println(f"[d20-decision] $sf pairs=$pairs%.0f occ=$occ " +
+      val (pairs, occ) = graft.operators.Dedup.emissionStats(
+          sh.groupBy(col("shingle")).agg(count(lit(1)).as("df")))
+        .getOrElse((0.0, 0.0))
+      println(f"[d20-decision] $sf pairs=$pairs%.0f occ=$occ%.0f " +
         f"ratio=${pairs / occ}%.2f")
       def sweep(): Unit =
         spark.sparkContext.getPersistentRDDs.foreach {

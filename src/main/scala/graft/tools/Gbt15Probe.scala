@@ -27,8 +27,7 @@ object Gbt15Probe {
       a
     }
     val raw = graft.core.Csv.tweets(spark, graft.core.Csv.TrainCsv)
-    val featurized = graft.ml.TweetPipeline.featurize(raw).persist()
-    featurized.count()
+    val featurized = graft.ml.TweetPipeline.featurize(raw)
     val Array(training, testing) =
       featurized.randomSplit(Array(0.8, 0.2), 123L)
     training.persist().count()

@@ -21,8 +21,10 @@ object GbtProbe {
     val raw = graft.core.Csv.tweets(spark, graft.core.Csv.TrainCsv)
     val featurized = timed("featurize+persist") {
       val f0 = graft.ml.TweetPipeline.featurize(raw)
-      val df = (if (nPart > 0) f0.repartition(nPart) else f0).persist()
-      df.count(); df
+      if (nPart > 0) {
+        val df = f0.repartition(nPart).persist()
+        df.count(); f0.unpersist(); df
+      } else f0
     }
     println(s"[gbt-probe] featurized partitions=" +
       featurized.rdd.getNumPartitions)

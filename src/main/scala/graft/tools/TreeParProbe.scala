@@ -23,8 +23,7 @@ object TreeParProbe {
     val spark = graft.core.Sessions.local("graft-treepar-probe",
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "*"))
     val raw = graft.core.Csv.tweets(spark, graft.core.Csv.TrainCsv)
-    val featurized = graft.ml.TweetPipeline.featurize(raw).persist()
-    featurized.count()
+    val featurized = graft.ml.TweetPipeline.featurize(raw)
     val Array(training, testing) =
       featurized.randomSplit(Array(0.8, 0.2), 123L)
     val tr1 = training.persist(); tr1.count()

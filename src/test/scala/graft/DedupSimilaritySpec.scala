@@ -826,4 +826,19 @@ class DedupSimilaritySpec extends AnyFunSuite {
       assert(got == Seq((1L, 2L)))
     } finally shS.unpersist()
   }
+
+  test("emissionWins: hot-shingle df past the Long range picks the " +
+      "prefix path instead of overflowing") {
+    import spark.implicits._
+    // df = 2^32: df·(df−1) alone exceeds Long.MaxValue; two shingles at
+    // 3e9 each fit a Long but their sum does not — under ANSI either
+    // Long form throws ARITHMETIC_OVERFLOW
+    val oneHot = Seq((1L, 1L << 32)).toDF("shingle", "df")
+    val twoHot = Seq((1L, 3000000000L), (2L, 3000000000L))
+      .toDF("shingle", "df")
+    assert(!Dedup.emissionWins(oneHot, 16.0))
+    assert(!Dedup.emissionWins(twoHot, 16.0))
+    val (pairs, occ) = Dedup.emissionStats(twoHot).get
+    assert(pairs == 3e9 * (3e9 - 1) && occ == 6e9)
+  }
 }

@@ -20,7 +20,7 @@ class MlPipelineSpec extends AnyFunSuite {
     .getOrCreate()
 
   lazy val raw = Csv.tweets(spark, Csv.TrainCsv).cache()
-  lazy val featurized = TweetPipeline.featurize(raw).cache()
+  lazy val featurized = TweetPipeline.featurize(raw)
 
   test("S1: multiLine CSV scan matches the pandas reader's shape") {
     // pandas: 7,613 rows (SURVEY.md §6); a naive non-multiLine read

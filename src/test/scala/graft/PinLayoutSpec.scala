@@ -79,7 +79,7 @@ class PinLayoutSpec extends AnyFunSuite {
     // spec pins that claim instead of assuming it.
     def run(): (String, Double, Double, Long, Long) = {
       val featurized =
-        TweetPipeline.featurize(Csv.tweets(spark, Csv.TrainCsv)).persist()
+        TweetPipeline.featurize(Csv.tweets(spark, Csv.TrainCsv))
       val r = TweetPipeline.trainEval("lr", featurized)
       featurized.unpersist()
       (r.algo, r.accuracy, r.f1, r.trainN, r.testN)
