@@ -15,6 +15,7 @@
 # compare warm costs: that is the two-cold-sessions reproducibility
 # check the operational contract needs (target: within +/-20%).
 set -euo pipefail
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 SF_DIR=$1; OUT=$2; shift 2
 QUERIES=("$@")
 
@@ -41,7 +42,7 @@ for q in "${QUERIES[@]}"; do
     if [ "$REPS" -gt 1 ]; then ARGS=("$q"); else ARGS=("$q" "$q"); fi
     java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
       -Xmx${SPARK_DRIVER_MEM:-100g} \
-      -cp /root/repo/target/scala-2.13/classes:"/opt/spark/jars/*" \
+      -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" \
       graft.tools.TimeQuery "$SF_DIR" "${ARGS[@]}" 2>/dev/null \
       | grep '^TIMED' | sed "s/^TIMED/FORKED $q/" | tee -a "$TMP"
   done

@@ -9,11 +9,12 @@
 # 1. One full graft.Bench pass -> target/bench.json (every query once).
 # 2. One graft.tools.TimeQuery session timing the listed heavy queries
 #    <runs> times in interleaved order (q1 q2 .. qN q1 q2 .. — the
-#    QuantileProbe discipline: machine-state drift hits all queries of
+#    interleaved-A/B discipline: machine-state drift hits all queries of
 #    a round equally instead of biasing one).
 # 3. Merge: out.json = the full-pass record + per-heavy-query
 #    {median,min,max,runs} overriding the single-run number.
 set -euo pipefail
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 SF_DIR=$1; RUNS=$2; OUT=$3; shift 3
 HEAVY=("$@")
 
@@ -25,7 +26,7 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 JAVA="java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx${SPARK_DRIVER_MEM:-100g} \
-  -cp /root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+  -cp $ROOT/target/scala-2.13/classes:/opt/spark/jars/*"
 
 echo "[median] full bench pass on $SF_DIR"
 SPARK_GRAFT_SF_DIR=$SF_DIR $JAVA graft.Bench

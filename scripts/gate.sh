@@ -1,7 +1,8 @@
 #!/bin/bash
-# One-command correctness gate, run EXACTLY the way the driver runs it:
-# default parallelism (local[32] on this box — SPARK_GRAFT_CPUS deliberately
-# unset), sf0.01 fixtures, full query set, DuckDB oracle compare.
+# One-command correctness gate at the contract parallelism, local[4]:
+# Verify's default, with SPARK_GRAFT_CPUS deliberately unset (each run's
+# oracle_env.json records the master). sf0.01 fixtures, full query set,
+# DuckDB oracle compare.
 #
 #   scripts/gate.sh [sfDir] [outDir] [queryPrefixes]
 #

@@ -23,6 +23,7 @@ Design notes (what makes the replication honest):
  - schemas are preserved via pyarrow (events.ts stays timestamp[ns]).
 
 Usage: python3 scripts/make_scale_fixture.py [src] [dst] [replicas]
+(dst defaults to target/sf1 of the checkout holding this script)
 """
 import sys
 import pyarrow as pa
@@ -31,7 +32,8 @@ import pyarrow.compute as pc
 import os
 
 SRC = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-DST = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/target/sf1"
+DST = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "..", "target", "sf1")
 REPLICAS = int(sys.argv[3]) if len(sys.argv) > 3 else 10
 OFFSET = 10_000_000
 

@@ -1,7 +1,9 @@
 #!/bin/bash
-# Run any graft main class without the sbt lock (flags mirror build.sbt).
+# Run any graft main class without the sbt lock (flags mirror build.sbt),
+# from the classes of the checkout this script lives in.
 # Usage: run_tool.sh <mainClass> [args...]
 MAIN="$1"; shift
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \
@@ -10,4 +12,4 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 exec java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx${SPARK_DRIVER_MEM:-8g} \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" "$MAIN" "$@"
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" "$MAIN" "$@"

@@ -12,26 +12,7 @@ object Bench {
     val spark = Sessions.local("graft-bench",
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "*"))
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
-    // untimed warmup so the alphabetically-first query doesn't absorb
-    // JVM/codegen/FS-cache startup cost
-    try graft.core.Tables.lineitem(spark, sfDir).count()
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] lineitem warmup FAILED: $e") }
-    // …and so m01 doesn't absorb the m-pack's shared featurization
-    // (BASELINE.md's per-model numbers are train+predict only). A
-    // silent failure here would skew the first ML query's time, so it
-    // must be visible in the bench tail.
-    try graft.queries.MlQueries.warmFeaturized(spark)
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] featurization warmup FAILED: $e") }
-    // RDDs pinned before the measured loop starts (the warm featurized
-    // cache) survive the whole run; anything a query pins AFTER that —
-    // its own persists and localCheckpoint blocks — is swept when the
-    // query finishes. Round 8 showed why: checkpoint blocks leaked by
-    // d06/d09/d10/bpe01 inflated later queries 7-9x over their
-    // dedicated-run times (d06 40.9 s sequential vs 4.5 s dedicated).
-    val sc = spark.sparkContext
-    val keepIds = sc.getPersistentRDDs.keySet
+    val loop = QueryLoop(spark, sfDir, SparkEntry.queries.keys)
     // Order-randomized pass (protocol recorded in the JSON): a FIXED
     // alphabetical order gives every query the same predecessors
     // every round, so same-JVM heap/GC debt biases the same block of
@@ -47,38 +28,14 @@ object Bench {
     val order = new scala.util.Random(seed)
       .shuffle(SparkEntry.queries.toSeq.sortBy(_._1))
     val results = order.map { case (name, fn) =>
-      // untimed GC between queries: without it a query's time includes
-      // collection debt left by its predecessor (m07 after the GBT
-      // ensemble measured 2-4x its isolated time) — standard bench
-      // hygiene, same reason JMH GCs between iterations
-      System.gc()
-      val t0 = System.nanoTime()
-      // Materialize EVERY output column executor-side (toRdd.foreach),
-      // not count(): under count() the optimizer prunes all columns,
-      // so a projection-only query (d19's in-row strip, t19's kernel)
-      // measured its SCAN, not its work — d19 timed 0.21 s under
-      // count() vs 1.0 s materialized at sf0.1. No driver collection,
-      // so the measured cost is still compute, not transfer.
-      val ok =
-        try {
-          fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ()); true
-        }
+      val dt =
+        try loop.time(fn(spark, sfDir))
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           errors += name
-          false
+          -1.0
         }
-      val dt = (System.nanoTime() - t0) / 1e9
-      // untimed sweep of this query's leftover pinned storage —
-      // BLOCKING, so block removal completes here instead of running
-      // asynchronously inside the next query's timed window (the
-      // round-9 e02-after-d20 lesson: d20's multi-GB persisted
-      // shingle arrays being dropped concurrently inflated the next
-      // query ~2× even though the sweep itself was untimed)
-      sc.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!keepIds.contains(id)) rdd.unpersist(blocking = true)
-      }
-      name -> (if (ok) dt else -1.0)
+      name -> dt
     }
     def fmt(v: Double, dec: Int): String =
       s"%.${dec}f".formatLocal(java.util.Locale.ROOT, v)

@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,35 +12,11 @@ object Verify {
     val spark = graft.core.Sessions.local("graft-verify",
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
-    // Sweep each query's leftover pinned storage (persists +
-    // localCheckpoint blocks) once its output is written — a 130-query
-    // session otherwise accumulates every checkpoint ever taken
-    // (see Bench.scala / core/Checkpoints.scala). Pre-existing pins
-    // (none today) would be preserved via the keepIds snapshot.
-    val sc = spark.sparkContext
-    val keepIds = sc.getPersistentRDDs.keySet
-    SparkEntry.queries
+    val queries = SparkEntry.queries
       .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        e.printStackTrace()
-        // Fail-loud sentinel: a crashed query must not vanish from the
-        // gate. Write a 0-row frame whose schema can never match an
-        // oracle (and whose rowcount fails a rows-only check), so the
-        // driver's compare records an explicit fail instead of
-        // omitting the entry.
-        try {
-          import spark.implicits._
-          Seq.empty[String].toDF("__verify_error")
-            .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        } catch { case _: Throwable => () }
-      }
-      finally sc.getPersistentRDDs.foreach { case (id, rdd) =>
-        if (!keepIds.contains(id)) rdd.unpersist(blocking = false)
-      }
+    val loop = QueryLoop(spark, sfDir, queries.keys)
+    queries.foreach { case (name, fn) =>
+      dump(spark, loop, outDir, name)(fn(spark, sfDir))
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -71,8 +48,8 @@ object Verify {
       s"""\"pinned_fingerprint\": ${q(env.PinnedFingerprint)}""",
       s"""\"mode_override_prop\": ${opt(sys.props.get("graft.oracle.mode"))}""",
       s"""\"mode_override_env\": ${opt(sys.env.get("GRAFT_ORACLE_MODE"))}""",
-      s"""\"master\": ${q(sc.master)}""",
-      s"""\"default_parallelism\": ${sc.defaultParallelism}""",
+      s"""\"master\": ${q(spark.sparkContext.master)}""",
+      s"""\"default_parallelism\": ${spark.sparkContext.defaultParallelism}""",
       s"""\"shuffle_partitions\": ${q(spark.conf.get("spark.sql.shuffle.partitions"))}""",
       s"""\"spark_graft_cpus\": ${opt(sys.env.get("SPARK_GRAFT_CPUS"))}""",
       s"""\"java_version\": ${q(System.getProperty("java.version", "?"))}""",
@@ -81,5 +58,25 @@ object Verify {
     ).mkString("{", ", ", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_env.json"), envJson)
     spark.stop()
+  }
+
+  /** Writes `query`'s result to `outDir/name` as one parquet file.
+    * A query that throws gets a fail-loud sentinel instead, so it
+    * cannot vanish from the gate: a 0-row frame whose one column,
+    * `__verify_error`, can never match an oracle's schema (and whose
+    * rowcount fails a rows-only check), so the compare records an
+    * explicit fail rather than omitting the entry. */
+  def dump(spark: SparkSession, loop: QueryLoop, outDir: String,
+           name: String)(query: => DataFrame): Unit = loop.run {
+    try query.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    catch { case e: Throwable =>
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      e.printStackTrace()
+      try {
+        import spark.implicits._
+        Seq.empty[String].toDF("__verify_error")
+          .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      } catch { case _: Throwable => () }
+    }
   }
 }

@@ -28,7 +28,7 @@ object Sessions {
       // evidence: at pseudo-sf1 it coalesces the pre-generator
       // shuffles of d20/q17 by their INPUT bytes, under-parallelizing
       // stages whose row count fans out 5x+ downstream (d20 5.8 ->
-      // 17.5 s, q17 3.3 -> 9.4 s warm, tools.AqeAudit), while the
+      // 17.5 s, q17 3.3 -> 9.4 s warm, OPTIMIZATION_r15.md), while the
       // sf0.1 tiny-stage tail already collapses to 1 partition under
       // EITHER setting (the default's target is
       // max(totalBytes/parallelism, 1MB), so KB-sized stages merge to

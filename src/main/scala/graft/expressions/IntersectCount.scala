@@ -18,7 +18,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * element counting once, exactly as array_intersect would emit it.
   * Null input array → null.
   *
-  * Why it exists (tools.SnmProfile at pseudo-sf10, SCALE.md round 9):
+  * Why it exists (SCALE.md, round 9 coda 4, pseudo-sf10):
   * array_intersect builds an SQLOpenHashSet PLUS the full intersection
   * array per pair only for `size` to discard it. On d13's verify join
   * (4.4M candidate pairs of ~74-element shingle arrays) the

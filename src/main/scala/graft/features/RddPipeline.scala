@@ -26,8 +26,12 @@ object RddPipeline {
   final case class Featurized(
       tokenized: DataFrame,       // (id, label, tokens) — persisted
       vocab: DataFrame,           // (word, cnt, id) — id = rank 0..K-1
-      data: Dataset[SparseDoc],   // persisted
-      numberOfTweets: Long) {
+      data: Dataset[SparseDoc]) { // persisted
+    /** Document count, run as its own job only when a caller asks for
+      * it (the SVM λ); read it before [[release]] or it recounts from
+      * the CSV. */
+    lazy val numberOfTweets: Long = tokenized.count()
+
     /** Free both persisted frames once training/eval is done — the
       * pin-release handle of this featurization (persist-backed, so
       * a late re-read silently recomputes rather than failing). */
@@ -59,7 +63,7 @@ object RddPipeline {
     val data = TfIdf.transform(toks, "id", "label", "tokens", vocab,
         dim, exactParity = true)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    Featurized(toks, vocab, data, toks.count())
+    Featurized(toks, vocab, data)
   }
 
   /** Deterministic ~80/20 train/test split + pinned training layout

@@ -281,29 +281,10 @@ object GradientDescent {
       }
     }
 
-    // Phase accounting (printed only under SPARK_GRAFT_GD_DEBUG):
-    // where each iteration's wall time goes — broadcast create, the
-    // job itself, broadcast destroy, driver-side update — plus JVM GC
-    // and JIT deltas over the whole loop, to attribute in-pass
-    // slowdowns (guide §1: measure before blaming).
-    val debug = sys.env.contains("SPARK_GRAFT_GD_DEBUG")
-    var tBcast = 0L; var tJob = 0L; var tDestroy = 0L; var tDrv = 0L
-    import scala.jdk.CollectionConverters._
-    def gcMillis: Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    val gc0 = if (debug) gcMillis else 0L
-    val jit = java.lang.management.ManagementFactory.getCompilationMXBean
-    val jit0 = if (debug && jit != null) jit.getTotalCompilationTime else 0L
-
-    val iterWall = scala.collection.mutable.ArrayBuffer.empty[Long]
-
     var i = 0
     var stopped = false
     while (i < cfg.iterations && !stopped) {
-      val tIter = System.nanoTime()
-      var t = System.nanoTime()
       val bc = sc.broadcast(coef)
-      tBcast += System.nanoTime() - t; t = System.nanoTime()
       val total = rdd.mapPartitions { docs =>
         if (!docs.hasNext) Iterator.empty
         else {
@@ -315,23 +296,9 @@ object GradientDescent {
           Iterator.single(GradVec.pack(c, g))
         }
       }.treeAggregate(GradVec.empty)(mergeOp, mergeOp, depth)
-      tJob += System.nanoTime() - t; t = System.nanoTime()
       bc.destroy()
-      tDestroy += System.nanoTime() - t; t = System.nanoTime()
       stopped = step(total, i)
-      tDrv += System.nanoTime() - t
-      iterWall += System.nanoTime() - tIter
       i += 1
-    }
-    if (debug) {
-      val jit1 = if (jit != null) jit.getTotalCompilationTime else 0L
-      System.err.println(
-        f"[gd-debug] iters=$i bcast=${tBcast / 1e9}%.2fs " +
-        f"job=${tJob / 1e9}%.2fs destroy=${tDestroy / 1e9}%.2fs " +
-        f"driver=${tDrv / 1e9}%.2fs gcDelta=${(gcMillis - gc0) / 1e3}%.2fs " +
-        f"jitDelta=${(jit1 - jit0) / 1e3}%.2fs")
-      System.err.println("[gd-debug] per-25-iter wall (s): " +
-        iterWall.grouped(25).map(g => f"${g.sum / 1e9}%.2f").mkString(" "))
     }
     Result(coef, costs.toArray)
   }

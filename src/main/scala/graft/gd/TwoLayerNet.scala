@@ -310,16 +310,9 @@ object TwoLayerNet {
       return Result(p, costs.toArray)
     }
 
-    // phase accounting under SPARK_GRAFT_GD_DEBUG, same attribution
-    // as GradientDescent.runRdd (guide §1: measure before blaming)
-    val debug = sys.env.contains("SPARK_GRAFT_GD_DEBUG")
-    var tBcast = 0L; var tJob = 0L; var tDestroy = 0L; var tDrv = 0L
-
     var i = 0
     while (i < cfg.iterations) {
-      var t0 = System.nanoTime()
       val bc = sc.broadcast(p)
-      tBcast += System.nanoTime() - t0; t0 = System.nanoTime()
       // Gradient buffers are allocated INSIDE the partition (the old
       // treeAggregate form shipped a (nIn·nH + …)-double zero value
       // in every task closure — ~1 MB serialized per task per
@@ -347,17 +340,10 @@ object TwoLayerNet {
       val (cost, dW1, dB1, dW2, dB2) =
         if (depth <= 1) partials.reduce(combOp)
         else partials.treeReduce(combOp, depth)
-      tJob += System.nanoTime() - t0; t0 = System.nanoTime()
       bc.destroy()
-      tDestroy += System.nanoTime() - t0; t0 = System.nanoTime()
       step(cost, dW1, dB1, dW2, dB2, i)
-      tDrv += System.nanoTime() - t0
       i += 1
     }
-    if (debug) System.err.println(
-      f"[nn-debug/${cfg.optimizer}] iters=$i bcast=${tBcast / 1e9}%.2fs " +
-      f"job=${tJob / 1e9}%.2fs destroy=${tDestroy / 1e9}%.2fs " +
-      f"driver=${tDrv / 1e9}%.2fs")
     Result(p, costs.toArray)
   }
 

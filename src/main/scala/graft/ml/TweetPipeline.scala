@@ -107,8 +107,9 @@ object TweetPipeline {
       // ensemble internals (per-tree binning/split search), not a
       // plan this engine owns; trimming maxIter/maxDepth would be
       // benchmarking a different model than BASELINE.md's.
-      // Round 9 (tools.GbtProbe, SCALE.md): repartitioning the
-      // 1-partition featurized input to 8 was measured and rejected —
+      // Round 9 (SCALE.md, "why the m-pack stays at 1 partition"):
+      // repartitioning the 1-partition featurized input to 8 was
+      // measured and rejected —
       // it makes the fitted trees nondeterministic run-to-run
       // (breaking every pinned m01–m06 literal oracle) and slows
       // LinearSVC 3.4× for a ~2× GBT gain.
@@ -170,7 +171,7 @@ object TweetPipeline {
     // integer class counts and findSplits samples every row at this
     // n (< 10k), so the fitted tree — and the pinned accuracy/f1
     // doubles — are bit-identical at any layout, only 3× faster
-    // (tools.TreeParProbe, round 14: fit 7.1 → 2.4 s, acc/f1 equal
+    // (OPTIMIZATION_r14.md, fit 7.1 → 2.4 s, acc/f1 equal
     // to the last ulp; re-verified twice per layout). rf/gbt were
     // probed and REJECTED: rf's per-partition feature-bagging rng and
     // gbt's real-valued residual sums both change the model with the

@@ -26,7 +26,7 @@ object Dedup {
     * intersection array (parity in ExpressionSpec); the sets-verify
     * Jaccard hot core for d13/d20. The string-array sibling
     * [[graft.expressions.IntersectCountStr]] remains available for
-    * unhashed set workloads (measured in tools.SnmProfile).
+    * unhashed set workloads (measured in SCALE.md, round 9 coda 4).
     */
   private[graft] def intersectCountI64(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge._
@@ -281,7 +281,7 @@ object Dedup {
   }
 
   /** Intermediate frames of [[prefixFilterPairs]], exposed for
-    * stage-level profiling (tools.DedupProfile) and plan audits. */
+    * stage-level tests and plan audits. */
   private[graft] case class PrefixStages(docSets: DataFrame,
                                          cands: DataFrame,
                                          survivors: DataFrame,

@@ -15,8 +15,8 @@ import graft.core.Leased
   * simply cannot exist. Even at pseudo-sf10 with NDV 583k
   * (`l_extendedprice`) the raw-row form measured 22.7/72.5/25.8 s
   * across interleaved rounds with heap-degradation spikes, vs
-  * 19.6/15.2/15.6 s for this operator (tools.QuantileProbe A/B,
-  * SCALE.md round 9). Counterpoint, same A/B: when the NDV is small
+  * 19.6/15.2/15.6 s for this operator (interleaved A/B, SCALE.md
+  * round 9 coda 3). Counterpoint, same A/B: when the NDV is small
   * enough that a (group, value) frequency histogram is cheap to build
   * and tiny to hold, percentile-WITH-FREQUENCY over that histogram
   * beats this operator's three prepass scans (q17's bounds, NDV ≤

@@ -52,8 +52,8 @@ object MlQueries {
     })
 
   /** Force-materialize the shared featurization (fits + persists the
-    * feature pipeline). Bench calls this in its untimed warmup so the
-    * alphabetically-first classifier query doesn't absorb the
+    * feature pipeline). [[graft.QueryLoop]] calls this in its untimed
+    * warm-up so the first classifier query doesn't absorb the
     * featurization cost — BASELINE.md's per-model numbers are the
     * reference scripts' own train+predict timings, which exclude
     * featurization the same way.

@@ -482,9 +482,9 @@ object RelationalQueries {
       // reads ≤NDV pre-summed rows instead of the corpus. BOUNDED-NDV
       // PREMISE, measured: l_quantity NDV=50, l_extendedprice
       // NDV=583k at pseudo-sf10, so the per-group map is ≤583k
-      // entries; the interleaved sf10 A/B (tools.QuantileProbe,
-      // SCALE.md round 9) has this form's warm floor at 13.9 s vs
-      // 51 s for the two-phase rank-select, whose 6 pinned prepass
+      // entries; the interleaved sf10 A/B (SCALE.md round 9 coda 3)
+      // has this form's warm floor at 13.9 s vs 51 s for the
+      // two-phase rank-select, whose 6 pinned prepass
       // scans dominate when the frequency map is this small. For a
       // GENUINELY near-unique double column (NDV ~ rows, map
       // unbounded) swap in operators/Quantiles — the q23 discipline.
@@ -591,8 +591,8 @@ object RelationalQueries {
       // raw-row `percentile` builds a per-group value→count map
       // bounded only by NDV (583k for this column at pseudo-sf10,
       // row count in the worst case) inside a non-codegen
-      // ObjectHashAggregate — interleaved sf10 A/B (tools
-      // .QuantileProbe, SCALE.md round 9): 22.7/72.5/25.8 s across
+      // ObjectHashAggregate — interleaved sf10 A/B (SCALE.md round 9
+      // coda 3): 22.7/72.5/25.8 s across
       // rounds, heap-spiking, vs 19.6/15.2/15.6 s for this form's
       // three codegen scans + bounded windows. Same interpolated
       // values (parity in ApproxSpec, DuckDB quantile_cont oracle).

@@ -486,7 +486,7 @@ object TextQueries {
     * bad-word variants). Deterministic seeded 3-token phrases over a
     * 60-word vocabulary; the automaton built from it is asserted
     * O(pattern bytes) in ExpressionSpec and timed flat against the
-    * 12/263-entry lists in tools.BlocklistProbe (SCALE.md row). NOT
+    * 12/263-entry lists (SCALE.md, round 10 blocklist gate). NOT
     * used by the t21 oracle query — a 100k-term contains() chain is
     * no oracle.
     */

@@ -41,7 +41,8 @@ object Lemmatizer {
   /** Lexicon-derived corrections for the rule cascade's wrong picks —
     * WordNet morphy only accepts a detachment if the candidate is in
     * the noun lexicon, which this container cannot ship. Three classes
-    * measured on the train.csv vocabulary (tools/LemmaAudit):
+    * measured on the train.csv vocabulary (SCALE.md "Retired probe
+    * mains"; the exposure bound is pinned in TextOpsSpec):
     * -se/-ie singulars where a later rule fires before the lexicon
     * would accept plain s-drop (houses→house, not "hous"; movies→
     * movie, not "movy"); -oes/-es irregulars; and words morphy finds

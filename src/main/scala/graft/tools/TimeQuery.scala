@@ -1,30 +1,34 @@
 package graft.tools
 
-import graft.SparkEntry
+import graft.{QueryLoop, SparkEntry}
 import graft.core.Sessions
 
-/** Time selected queries: `runMain graft.tools.TimeQuery <sfDir> <q>...` */
+/** Times selected queries in one session through [[QueryLoop]], the
+  * loop `graft.Bench` runs: a `TIMED <query> <secs> s` line per run,
+  * then a min/median/max line per query run more than once. The first
+  * run of a query carries its codegen warm-up; repeat it (`-n`) for a
+  * warm number.
+  *
+  * Usage: TimeQuery <sfDir> [-n <runs>] <q>...
+  */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
-    val spark = Sessions.local("graft-time", "32")
     val sfDir = args.head
-    graft.core.Tables.lineitem(spark, sfDir).count() // warmup
-    args.tail.foreach { name =>
-      // untimed inter-query hygiene, same as Bench: GC the
-      // predecessor's debt before the timer starts
-      System.gc()
-      val t0 = System.nanoTime()
-      // Materialize every output column executor-side, same as Bench —
-      // count() lets the optimizer prune projections, timing the scan
-      // instead of the work.
-      SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.toRdd.foreach(_ => ())
-      println(f"TIMED $name ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      // blocking: block removal must not run inside the next query's
-      // timed window (see Bench.scala)
-      spark.sparkContext.getPersistentRDDs.foreach {
-        case (_, rdd) => rdd.unpersist(blocking = true)
+    val (n, names) =
+      if (args.lift(1).contains("-n")) (args(2).toInt, args.drop(3).toSeq)
+      else (1, args.tail.toSeq)
+    val spark = Sessions.local("graft-time", "32")
+    val loop = QueryLoop(spark, sfDir, names)
+    names.foreach { name =>
+      val fn = SparkEntry.queries(name)
+      val times = Seq.fill(n) {
+        val dt = loop.time(fn(spark, sfDir))
+        println(f"TIMED $name $dt%.2f s")
+        dt
       }
+      if (n > 1) println(f"SUMMARY $name min=${times.min}%.2f " +
+        f"median=${times.sorted.apply(n / 2)}%.2f max=${times.max}%.2f s " +
+        f"over $n runs")
     }
     spark.stop()
   }

@@ -183,8 +183,8 @@ class TextOpsSpec extends AnyFunSuite {
 
   test("lemmatizer: corpus-level divergence exposure stays bounded") {
     // Divergence vs NLTK can only come from detachments whose result
-    // the WordNet lexicon would have rejected. Proxy (tools/LemmaAudit
-    // method): a detachment is CORROBORATED when its output occurs as
+    // the WordNet lexicon would have rejected. Proxy (the method behind
+    // the lexicon guard, SCALE.md "Retired probe mains"): a detachment is CORROBORATED when its output occurs as
     // a corpus token itself ("fires"→"fire", "fire" appears 250×) —
     // those match NLTK for real plurals. The uncorroborated remainder
     // is the at-risk bound; manual review of its head shows mostly
