@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.CacheBridge
 
 /** The per-query loop of [[Bench]], [[Verify]] and
   * [[graft.tools.TimeQuery]]: each query runs after an untimed GC, and
@@ -16,12 +17,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * inside its timed window (round 9: d20's multi-GB shingle arrays,
   * dropped concurrently, inflated the next query ~2×).
   *
+  * Dataset caches are swept through the cache manager, not only as
+  * RDDs: an entry whose RDD was unpersisted behind its back stays
+  * registered, so a later `persist()` of an equal plan is a no-op and
+  * every read of it recomputes. The plans cached when the loop is
+  * built are kept; every entry a query adds is uncached.
+  *
   * The GC is the same hygiene JMH applies between iterations: without
   * it a query pays collection debt left by its predecessor (m07 after
   * the GBT ensemble measured 2-4x its isolated time).
   */
 final class QueryLoop(spark: SparkSession) {
   private val keep = spark.sparkContext.getPersistentRDDs.keySet.toSet
+  private val keepPlans = CacheBridge.cachedPlans(spark)
 
   /** Runs `query` between the GC and the sweep. */
   def run[A](query: => A): A = {
@@ -42,10 +50,14 @@ final class QueryLoop(spark: SparkSession) {
     (System.nanoTime() - t0) / 1e9
   }
 
-  private def sweep(): Unit =
+  private def sweep(): Unit = {
+    CacheBridge.cachedPlans(spark)
+      .filterNot(p => keepPlans.exists(_ eq p))
+      .foreach(CacheBridge.uncache(spark, _))
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
       if (!keep.contains(id)) rdd.unpersist(blocking = true)
     }
+  }
 }
 
 object QueryLoop {

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native stop-word removal, order- and duplicate-preserving — the
-  * hot filter of the ML featurization chain (t02, mlTokens, rddTokens;
+  * hot filter of the ML featurization chain (t02, rddTokens;
   * reference semantics `LogisticRegression.py:35-39`).
   *
   * Value-identical to the composed

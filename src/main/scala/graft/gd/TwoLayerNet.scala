@@ -2,6 +2,7 @@ package graft.gd
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
+import graft.core.LocalFinish
 
 /** The reference's 2-layer network (`RDD_NN.py:119-301`, SURVEY.md
   * §2.11 L3): in → hidden leaky-ReLU → 2 sigmoid outputs, SSE cost,
@@ -162,24 +163,30 @@ object TwoLayerNet {
 
   def train(data: Dataset[SparseDoc], cfg: Config,
             initial: Option[Params] = None,
-            localFinishRows: Long = 1L << 20,
-            localFinishBytes: Long = 1L << 28): Result =
-    trainRdd(data.rdd, cfg, initial, localFinishRows, localFinishBytes)
+            localFinishRows: Long = LocalFinish.MaxRows): Result =
+    trainRdd(data.rdd, cfg, initial, localFinishRows)
 
   /** RDD form — callers that iterate many times should persist the
     * RDD itself (deserialized object cache) so the per-iteration pass
     * reads `SparseDoc`s directly instead of re-decoding the Dataset's
     * cached InternalRows 600 times (guide §1.2 step 2; measured in
     * OPTIMIZATION_r14.md m08).
+    *
+    * Bounded local finish ([[graft.core.LocalFinish]]): the state is
+    * the training set, measured like [[GradientDescent.runRdd]]'s.
+    * The local loop keeps the partition structure (`glom`), runs each
+    * partition's rows in order on a pool thread, and merges partials
+    * in partition-index order — one of the arrival orders the
+    * distributed reduce already produces (parity in
+    * GdLocalParitySpec).
     */
   def trainRdd(rdd: RDD[SparseDoc], cfg: Config,
                initial: Option[Params] = None,
-               localFinishRows: Long = 1L << 20,
-               localFinishBytes: Long = 1L << 28): Result = {
+               localFinishRows: Long = LocalFinish.MaxRows): Result = {
     val sc = rdd.sparkContext
     val p = initial.getOrElse(init(cfg))
     val nIn = cfg.nIn; val nH = cfg.nHidden; val nOut = cfg.nOut
-    // rows (the 1/n scale) and the local-finish bytes gate: one job
+    // rows (the 1/n scale) and the local-finish bytes: one job
     val (rows, estBytes) = SparseDoc.rowsAndBytes(rdd)
     val n = rows.toDouble
     require(n > 0, "empty training set")
@@ -236,20 +243,11 @@ object TwoLayerNet {
       oldCost = avgCost
     }
 
-    // Bounded local finish (round 15 — the GradientDescent.runRdd
-    // policy, see its scaladoc): 300 iterations over a bench-scale
-    // training set pay per-job machinery, not compute. Below the
-    // rows+bytes bound the partitions are collected once (glom keeps
-    // partition structure and order), each iteration accumulates the
-    // per-partition gradients on a fixed thread pool (one slot per
-    // partition — per-partition accumulation order unchanged), and
-    // partials merge in partition-INDEX order, one of the arrival
-    // orders the distributed reduce already produces. Per-partition
-    // buffers are reused across iterations and fully zeroed first
-    // (the RowScratch discipline — bit-identical to fresh arrays).
-    // Above the bound: the distributed loop below, unchanged.
-    if (localFinishRows > 0 && rows <= localFinishRows &&
-        estBytes <= localFinishBytes.toDouble) {
+    // Per-partition buffers are reused across iterations and fully
+    // zeroed first (the RowScratch discipline — bit-identical to fresh
+    // arrays).
+    if (LocalFinish.fits(rows, estBytes, cfg.iterations,
+        localFinishRows)) {
       val parts = rdd.glom().collect()
       val nP = parts.length
       // thread budget = the session's task-slot count

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.LocalFinish
 
 /** Distributed byte-pair-encoding (BPE) tokenizer training and
   * encoding — the subword-tokenizer workload of a training-data
@@ -173,30 +174,17 @@ object Bpe {
     * partitionings and engines. Stops early if the vocabulary runs
     * out of adjacent pairs (single-symbol words only).
     *
-    * Bounded local finish (round 14): pair statistics are word-
-    * internal, so after the one corpus-sized shuffle the loop state
-    * is the VOCABULARY. When that fits the 2^20-row driver bound
-    * (the dupClusters/Splits policy) the merge rounds run locally —
-    * the distributed loop paid one pair-count shuffle + a codegen'd
-    * replace-chain plan per round for a frame of a few thousand rows.
-    * Distributed rounds still run for vocabularies above the bound;
-    * `localFinishVocab = 0` forces them (specs do, for parity).
-    *
-    * The gate is three-way (round 15, VERDICT r14 #4 + ADVICE): rows
-    * ≤ `localFinishVocab` AND collected marked bytes ≤
-    * `localFinishBytes` (a row bound alone would let a vocabulary of
-    * huge words OOM the driver) AND rows × numMerges ≤
-    * `localFinishWork` (the local loop rewrites the whole vocab
-    * serially per merge round, so a production-scale numMerges over a
-    * near-bound vocab must stay distributed where the rewrite
-    * parallelizes). Rows and bytes come from one aggregate over the
-    * already-checkpointed vocab — no extra pass over the corpus.
+    * Bounded local finish ([[graft.core.LocalFinish]]): pair
+    * statistics are word-internal, so after the one corpus-sized
+    * shuffle the loop state is the VOCABULARY — rows, UTF-8 bytes of
+    * the marked words, and `numMerges` rounds of work, all from one
+    * aggregate over the checkpointed vocab. The local loop
+    * ([[trainMergesLocal]]) is the same integer recurrence with the
+    * same tie order.
     */
   def trainMerges(docs: DataFrame, tokens: Column, numMerges: Int,
                   checkpointEvery: Int = 16,
-                  localFinishVocab: Long = 1L << 20,
-                  localFinishBytes: Long = 1L << 26,
-                  localFinishWork: Long = 1L << 28): Seq[Merge] = {
+                  localFinishRows: Long = LocalFinish.MaxRows): Seq[Merge] = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     require(checkpointEvery >= 1,
       s"checkpointEvery must be >= 1, got $checkpointEvery")
@@ -211,8 +199,8 @@ object Bpe {
       .collect()(0)
     val nRows = stats.getLong(0)
     val nBytes = if (stats.isNullAt(1)) 0L else stats.getLong(1)
-    if (nRows <= localFinishVocab && nBytes <= localFinishBytes &&
-        nRows * math.max(numMerges, 1) <= localFinishWork) {
+    if (LocalFinish.fits(nRows, nBytes.toDouble, numMerges,
+        localFinishRows)) {
       val rows = v.collect().map(r => (r.getString(0), r.getLong(1)))
       graft.core.Checkpoints.release(v)
       return trainMergesLocal(rows, numMerges)

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.Checkpoints
+import graft.core.{Checkpoints, LocalFinish}
 import graft.text.Analysis
 
 /** Deduplication operators for training-data pipelines.
@@ -1008,14 +1008,12 @@ object Dedup {
     * d, trips the guard at d-1 — so the default 25 tolerates any
     * graph of diameter ≤ 25, vastly beyond near-dup cliques.
     *
-    * `maxIters` (and its fail-loud convergence guard) applies to the
-    * DISTRIBUTED rounds only: a pair list at or under
-    * `localFinishEdges` finishes on the driver by union-find, which
-    * is exact for any graph shape and never trips the guard. Edge
-    * rows are two Longs (16 B fixed), so the 2^20-row default is
-    * simultaneously a ≤16 MB byte bound — no wide-row escape exists
-    * for this operator (unlike Bpe.trainMerges, whose vocab rows are
-    * strings and carry an explicit byte cap).
+    * Bounded local finish ([[graft.core.LocalFinish]]): the pair list
+    * is materialized once and, when it fits, closed on the driver by
+    * [[componentRoots]] — union by minimum id, the same min-id-per-
+    * component relation for any graph shape (parity in
+    * DupClustersSpec). `maxIters` and its fail-loud guard apply to
+    * the distributed rounds only.
     *
     * Pin contract: the loop holds O(1) storage ([[graft.core.Checkpoints.roll]])
     * and the result plan is backed by the FINAL label checkpoint —
@@ -1024,45 +1022,15 @@ object Dedup {
     * queries; sessions free everything at stop).
     */
   def dupClusters(pairs: DataFrame, maxIters: Int = 25,
-                  localFinishEdges: Long = 1L << 20): DataFrame = {
+                  localFinishRows: Long = LocalFinish.MaxRows): DataFrame = {
     val p = pairs.select(col("a"), col("b")).persist()
-    // Bounded local finish (round 14, guide §1.2 step 1 — the
-    // per-round fixed cost was the measured time, not the data):
-    // materialize the expensive upstream pair pipeline once, and when
-    // the pair list is small enough to sit on the driver (≤16 MB at
-    // the 2^20 default — the dupClustersStar/Splits bound), union-find
-    // it there instead of paying 2 shuffles + an action per
-    // propagation round. Min-id-per-component is the same integer
-    // relation either way (parity spec'd in DupClustersSpec);
-    // distributed label propagation below runs only while the graph
-    // is genuinely bigger than the bound. localFinishEdges = 0 forces
-    // the distributed path (specs use it for round-count coverage).
     val nPairs = p.count()
-    if (nPairs <= localFinishEdges) {
+    if (LocalFinish.fits(nPairs, EdgeBytes * nPairs, 1, localFinishRows)) {
       val es = p.collect().map(r => (r.getLong(0), r.getLong(1)))
       p.unpersist()
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
-        }
-        r
-      }
-      es.foreach { case (a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) {
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-        }
-      }
-      val nodes = es.iterator.flatMap(e => Iterator(e._1, e._2))
-        .toArray.distinct
       val spark = pairs.sparkSession
       import spark.implicits._
-      return nodes.iterator.map(nd => (nd, find(nd))).toSeq
-        .toDF("doc_id", "cluster_id")
+      return componentRoots(es).toSeq.toDF("doc_id", "cluster_id")
     }
     val edges = p.select(col("a").as("src"), col("b").as("dst"))
       .union(p.select(col("b").as("src"), col("a").as("dst")))
@@ -1102,6 +1070,35 @@ object Dedup {
         "dupClustersStar for this input")
     edges.unpersist()
     labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
+  }
+
+  /** Driver bytes of one collected edge row: two Longs. */
+  private val EdgeBytes = 16.0
+
+  /** Driver union-find over a collected edge list: every node that
+    * appears in an edge → its component's minimum id. Union by
+    * minimum id makes each root that minimum, so the relation is
+    * exact for any graph shape.
+    */
+  private def componentRoots(es: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) {
+        val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
+      }
+      r
+    }
+    es.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) {
+        if (ra < rb) parent(rb) = ra else parent(ra) = rb
+      }
+    }
+    es.iterator.flatMap(e => Iterator(e._1, e._2)).toArray.distinct
+      .map(nd => (nd, find(nd)))
   }
 
   /** One large-star round: every node u hangs its strictly-larger
@@ -1152,16 +1149,11 @@ object Dedup {
     * Per-round `localCheckpoint` keeps lineage O(1) — use
     * `checkpoint` on a real cluster.
     *
-    * Bounded local finish: once the (contracted) edge list is at most
-    * `localFinishEdges` rows it is union-found on the driver instead
-    * of paying 3 jobs + a shuffle barrage per remaining round — the
-    * GraphFrames/GraphX "finish small components locally" design. At
-    * the 2^20 default that is ≤16 MB on the driver, documented and
-    * bounded like the Splits prefix table; distributed rounds only run
-    * while the graph is genuinely bigger (the round-6 bench showed
-    * per-round fixed overhead dominating d09 end-to-end on small
-    * graphs: 3.6→6.2 s at sf0.1 for a 25-edge graph). Set it to 0 to
-    * force the pure distributed path (the specs do, for coverage).
+    * Bounded local finish ([[graft.core.LocalFinish]]): once the
+    * contracted edge list fits, [[componentRoots]] closes it on the
+    * driver — union by minimum id, so every root is its component's
+    * min id, the same star forest the fixpoint reaches (the
+    * GraphFrames/GraphX "finish small components locally" design).
     *
     * Pin contract: O(1) storage across rounds (rolling release); the
     * result plan references the `canon` checkpoint (and, on the
@@ -1170,7 +1162,7 @@ object Dedup {
     * finds every checkpoint leaf in the plan.
     */
   def dupClustersStar(pairs: DataFrame, maxIters: Int = 30,
-                      localFinishEdges: Long = 1L << 20): DataFrame = {
+      localFinishRows: Long = LocalFinish.MaxRows): DataFrame = {
     // Materialize the canonical pair list ONCE: both `selfOnly` (only
     // consumed at the very end) and the contraction loop's seed edges
     // hang off it, and without this the entire upstream pair pipeline
@@ -1193,7 +1185,8 @@ object Dedup {
     var n = edges.count()
     var converged = false
     var iter = 0
-    while (!converged && n > localFinishEdges && iter < maxIters) {
+    def fits = LocalFinish.fits(n, EdgeBytes * n, 1, localFinishRows)
+    while (!converged && !fits && iter < maxIters) {
       val next = smallStar(largeStar(edges)).localCheckpoint()
       val nNext = next.count()
       converged = nNext == n && next.exceptAll(edges).isEmpty
@@ -1204,45 +1197,23 @@ object Dedup {
       n = nNext
       iter += 1
     }
-    require(converged || n <= localFinishEdges,
+    require(converged || fits,
       s"dupClustersStar did not converge in $maxIters rounds — the " +
         "proven worst-case bound for alternating large-star/small-star " +
         "is O(log² n) rounds, so an extremely deep pathological " +
         "graph can legitimately need more; raise maxIters before " +
         "suspecting a bug")
-    // at the fixpoint the edge set is a star forest: u → root v.
-    // If the loop exited via the local-finish bound instead, build the
-    // same star forest with a driver union-find on the ≤localFinishEdges
-    // rows (min id per component = the root, same contract).
+    // at the fixpoint the edge set is a star forest: u → root v
     val star =
       if (converged) edges
       else {
         val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
         // the edge list now lives on the driver; free the pinned copy
         Checkpoints.release(edges)
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-          var c = x
-          while (parent.getOrElse(c, c) != c) {
-            val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
-          }
-          r
-        }
-        es.foreach { case (a, b) =>
-          val (ra, rb) = (find(a), find(b))
-          if (ra != rb) {
-            // union by min id so every root IS its component's min
-            if (ra < rb) parent(rb) = ra else parent(ra) = rb
-          }
-        }
-        val nodes = es.iterator.flatMap(e => Iterator(e._1, e._2))
-          .toArray.distinct
         val spark = pairs.sparkSession
         import spark.implicits._
-        nodes.iterator.map(nd => (nd, find(nd)))
-          .filter { case (nd, r) => nd != r }.toSeq.toDF("u", "v")
+        componentRoots(es).filter { case (nd, r) => nd != r }.toSeq
+          .toDF("u", "v")
       }
     val lone = selfOnly
       .join(star.select(col("u").as("n"))
@@ -1355,26 +1326,17 @@ object Dedup {
     */
   def sortedNeighborhoodPairs(docs: DataFrame, idCol: String,
                               sortKey: Column, tokens: Column,
-                              window: Int, threshold: Double): DataFrame =
-    sortedNeighborhoodPairsLeased(docs, idCol, sortKey, tokens, window,
-      threshold).df
-
-  /** [[sortedNeighborhoodPairs]] with the pin-release handle — the
-    * result plan reads the internally persisted shingle table, so the
-    * plain variant's pin lives until a caller-side storage sweep;
-    * long-lived sessions consume this form and `release()`.
-    */
-  def sortedNeighborhoodPairsLeased(docs: DataFrame, idCol: String,
-      sortKey: Column, tokens: Column, window: Int,
-      threshold: Double): graft.core.Leased = {
+                              window: Int, threshold: Double): DataFrame = {
     // persisted: the verification reads the shingle table three times
     // (sizes + both intersection sides) — without the persist each
     // read re-runs tokenize+ngram over the corpus, which dominated
-    // the 100× decade (253 s at pseudo-sf10, ~3× the shingling cost)
+    // the 100× decade (253 s at pseudo-sf10, ~3× the shingling cost).
+    // The result plan reads it, so the pin lives until a caller-side
+    // storage sweep.
     val sh = shingles(docs, idCol, tokens).persist()
     val cands = sortedNeighborhoodCands(
       sortedNeighborhoodRanks(docs, idCol, sortKey), window)
-    graft.core.Leased(verifyJaccard(sh, cands, threshold), Seq(sh))
+    verifyJaccard(sh, cands, threshold)
   }
 
   /** [[sortedNeighborhoodPairs]] with verification on per-doc shingle
@@ -1397,9 +1359,9 @@ object Dedup {
     sortedNeighborhoodPairsSetsLeased(docs, idCol, sortKey, tokens,
       window, threshold).df
 
-  /** [[sortedNeighborhoodPairsSets]] with the pin-release handle —
-    * same contract as [[sortedNeighborhoodPairsLeased]] (the result
-    * joins the internally persisted hashed-set table twice).
+  /** [[sortedNeighborhoodPairsSets]] with the pin-release handle: the
+    * result joins the internally persisted hashed-set table twice, so
+    * long-lived sessions consume this form and `release()`.
     */
   def sortedNeighborhoodPairsSetsLeased(docs: DataFrame, idCol: String,
       sortKey: Column, tokens: Column, window: Int,
@@ -1793,7 +1755,7 @@ object Dedup {
     * outer-join patch-up.
     */
   def centralityFixedPoint(pairs: DataFrame, iters: Int,
-                           localFinishEdges: Long = 1L << 20): DataFrame = {
+      localFinishRows: Long = LocalFinish.MaxRows): DataFrame = {
     val Scale = 1L << 40
     // the pair derivation upstream (shingle → minhash → band join) is
     // the expensive part; checkpoint the symmetric edge list ONCE so
@@ -1806,16 +1768,13 @@ object Dedup {
     val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
       .distinct().localCheckpoint()
-    // Bounded local finish (round 14): ALL arithmetic is Q40 integer
-    // (order-independent, truncating div), so when the symmetric edge
-    // list fits the driver bound (≤16 MB at the 2^20 default) the
-    // whole power iteration runs there bit-identically instead of
-    // paying 2 shuffles per round × iters. The distributed Pregel
-    // path below is the shape that runs when the graph is genuinely
-    // big; parity spec'd in DupClustersSpec (localFinishEdges = 0
-    // forces it).
+    // Bounded local finish (graft.core.LocalFinish): ALL arithmetic
+    // is Q40 integer (order-independent, truncating div), so the power
+    // iteration runs on the driver bit-identically when the symmetric
+    // edge list fits (parity in DupClustersSpec).
     val nEdges = edges.count()
-    if (nEdges <= localFinishEdges) {
+    if (LocalFinish.fits(nEdges, EdgeBytes * nEdges, iters,
+        localFinishRows)) {
       val es = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
       graft.core.Checkpoints.release(edges)
       val deg = scala.collection.mutable.Map.empty[Long, Long]

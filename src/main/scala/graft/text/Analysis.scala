@@ -142,13 +142,6 @@ object Analysis {
         .cast("double") / size(tokens).cast("double"), 6))
       .otherwise(lit(0.0))
 
-  /** Ratio of non-alphabetic, non-space characters. */
-  def punctRatio(text: Column): Column =
-    when(length(text) > 0,
-      round((length(text) -
-        length(regexp_replace(text, "[^a-zA-Z ]", ""))).cast("double") /
-        length(text).cast("double"), 6)).otherwise(lit(0.0))
-
   /** Ratio of stop-words among tokens (high ⇒ natural prose). */
   def stopwordRatio(tokens: Column): Column =
     when(size(tokens) > 0,

@@ -85,13 +85,6 @@ object TextOps {
   def blocklistHitsComposed(text: Column, patterns: Seq[String]): Column =
     size(filter(array(patterns.map(lit): _*), p => contains(text, p)))
 
-  /** Full cleanup chain used by the ML stack:
-    * clean → tokenize → default-English stops → extra stops. */
-  def mlTokens(text: Column): Column =
-    removeStopwords(
-      removeStopwords(tokenize(clean(text)), EnglishStopwords),
-      ExtraStopwordsMl)
-
   /** Unidecode-style ASCII folding (`RDD_logisticregression.py:52`):
     * NFD-decompose, strip combining marks, drop remaining non-ASCII.
     * In the reference's own chain this is provably an identity — it

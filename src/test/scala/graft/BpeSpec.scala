@@ -154,7 +154,7 @@ class BpeSpec extends AnyFunSuite {
         s"rules diverged for corpus $words")
       // the distributed merge rounds (forced past the bounded local
       // finish) must learn the identical rule sequence
-      val gotDist = Bpe.trainMerges(d, toks, 4, localFinishVocab = 0L)
+      val gotDist = Bpe.trainMerges(d, toks, 4, localFinishRows = 0L)
       assert(gotDist == got, s"local vs distributed trainer diverged " +
         s"for corpus $words")
       val enc = d.select(Bpe.encode(toks, got).as("e"))

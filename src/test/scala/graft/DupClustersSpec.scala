@@ -29,22 +29,22 @@ class DupClustersSpec extends AnyFunSuite {
   }
 
   test("diameter-5 chain: converges at maxIters = 5, fails at 4") {
-    // localFinishEdges = 0 forces the distributed propagation rounds
+    // localFinishRows = 0 forces the distributed propagation rounds
     // (the default bounded local finish would union-find this tiny
     // graph on the driver and never trip the round guard)
     val labels = Dedup.dupClusters(chain(6), maxIters = 5,
-        localFinishEdges = 0L)
+        localFinishRows = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.keySet == (0L to 5L).toSet)
     assert(labels.values.toSet == Set(0L))
 
     val ex = intercept[IllegalArgumentException](
-      Dedup.dupClusters(chain(6), maxIters = 4, localFinishEdges = 0L))
+      Dedup.dupClusters(chain(6), maxIters = 4, localFinishRows = 0L))
     assert(ex.getMessage.contains("did not converge"))
   }
 
   test("diameter-25 chain converges within the default budget") {
-    val labels = Dedup.dupClusters(chain(26), localFinishEdges = 0L)
+    val labels = Dedup.dupClusters(chain(26), localFinishRows = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.keySet == (0L to 25L).toSet)
     assert(labels.values.toSet == Set(0L))
@@ -52,17 +52,17 @@ class DupClustersSpec extends AnyFunSuite {
 
   test("diameter > maxIters fails loudly with the escape-hatch hint") {
     val ex = intercept[IllegalArgumentException](
-      Dedup.dupClusters(chain(40), maxIters = 8, localFinishEdges = 0L))
+      Dedup.dupClusters(chain(40), maxIters = 8, localFinishRows = 0L))
     assert(ex.getMessage.contains("dupClustersStar"))
   }
 
   test("star contraction: diameter-199 chain converges in O(log n) rounds") {
     // label propagation would need 199 rounds here; star contraction
     // lands well inside 15 (≈ log-squared bound, log₂ 200 ≈ 8).
-    // localFinishEdges = 0 forces the distributed rounds all the way
+    // localFinishRows = 0 forces the distributed rounds all the way
     // to the fixpoint — this test exists to cover them.
     val labels = Dedup.dupClustersStar(chain(200), maxIters = 15,
-        localFinishEdges = 0L)
+        localFinishRows = 0L)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.keySet == (0L to 199L).toSet)
     assert(labels.values.toSet == Set(0L))
@@ -76,7 +76,7 @@ class DupClustersSpec extends AnyFunSuite {
       val edges = Seq.fill(n)((rng.nextInt(200).toLong,
         rng.nextInt(200).toLong))
         .filter(e => e._1 != e._2).toDF("a", "b")
-      val prop = Dedup.dupClusters(edges, localFinishEdges = 0L)
+      val prop = Dedup.dupClusters(edges, localFinishRows = 0L)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       // label propagation's own bounded local finish (the default
       // path at this size) must land on the identical relation
@@ -84,7 +84,7 @@ class DupClustersSpec extends AnyFunSuite {
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       assert(propLocal == prop, s"trial $trial dupClusters local finish diverged")
       // distributed rounds to the fixpoint…
-      val star = Dedup.dupClustersStar(edges, localFinishEdges = 0L)
+      val star = Dedup.dupClustersStar(edges, localFinishRows = 0L)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
       assert(star == prop, s"trial $trial diverged")
       // …and the bounded driver union-find finish (default path for
@@ -107,7 +107,7 @@ class DupClustersSpec extends AnyFunSuite {
     }.filter(e => e._1 != e._2).toDF("a", "b")
     val prop = Dedup.dupClusters(edges)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val mixed = Dedup.dupClustersStar(edges, localFinishEdges = 64L)
+    val mixed = Dedup.dupClustersStar(edges, localFinishRows = 64L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(mixed == prop)
   }
@@ -119,7 +119,7 @@ class DupClustersSpec extends AnyFunSuite {
     val edges = Seq((0L, 1L), (7L, 7L), (3L, 3L), (3L, 4L)).toDF("a", "b")
     val prop = Dedup.dupClusters(edges)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val propDist = Dedup.dupClusters(edges, localFinishEdges = 0L)
+    val propDist = Dedup.dupClusters(edges, localFinishRows = 0L)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(propDist == prop, "self-pair handling diverged local vs distributed")
     val star = Dedup.dupClustersStar(edges)
@@ -221,12 +221,12 @@ class DupClustersSpec extends AnyFunSuite {
       assert(spk == exp, s"trial $trial diverged from the reference")
       // the distributed Pregel path (forced) must match bit-for-bit —
       // integer Q40 arithmetic is order-independent
-      val dist = Dedup.centralityFixedPoint(df, 5, localFinishEdges = 0L)
+      val dist = Dedup.centralityFixedPoint(df, 5, localFinishRows = 0L)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(dist == exp, s"trial $trial distributed path diverged")
       // integer arithmetic ⇒ identical under any partitioning
       val spk7 = Dedup.centralityFixedPoint(df.repartition(7), 5,
-          localFinishEdges = 0L)
+          localFinishRows = 0L)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(spk7 == exp)
     }

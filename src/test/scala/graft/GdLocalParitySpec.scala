@@ -14,11 +14,11 @@ import graft.gd._
   * rtol the committed goldens use (1e-9 — far tighter than the gate's
   * 1e-6 bands).
   *
-  * Also pins the gate itself: `localFinishRows = 0` and a 1-byte
-  * `localFinishBytes` must both take the distributed path (exercised
-  * by asserting those runs agree with the default-path run — and, for
-  * the rows=0 case, that no extra collect of the input happens is a
-  * non-goal; the contract is result parity both ways).
+  * Also pins which path runs, by counting how often the input's rows
+  * are computed: the default path reads them twice (the rows/bytes job
+  * and the one collect), `localFinishRows = 0` once per iteration —
+  * and, for GD, skips the rows/bytes job. The bounds themselves are
+  * spec'd in LocalFinishSpec.
   */
 class GdLocalParitySpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -80,18 +80,26 @@ class GdLocalParitySpec extends AnyFunSuite {
     ds.unpersist()
   }
 
-  test("GD byte gate: tiny localFinishBytes falls back to distributed") {
-    import spark.implicits._
-    val ds = spark.createDataset(docs(30, 31)).repartition(3).persist()
+  /** `train` over an unpersisted 3-partition RDD of `n` docs; returns
+    * how many times its rows were computed.
+    */
+  def rowReads(n: Int)(
+      train: org.apache.spark.rdd.RDD[SparseDoc] => Unit): Long = {
+    val reads = spark.sparkContext.longAccumulator("rowReads")
+    val d = docs(n, 31)
+    train(spark.sparkContext.parallelize(d, 3).map { x => reads.add(1); x })
+    reads.sum
+  }
+
+  test("GD path by row reads: override 0 skips the rows/bytes job") {
     val cfg = GradientDescent.Config(iterations = 10,
       learningRate = 0.05)
-    val viaBytes = GradientDescent.run(ds, Dim, LogisticLoss, cfg,
-      localFinishBytes = 1L)
-    val dist = GradientDescent.run(ds, Dim, LogisticLoss, cfg,
-      localFinishRows = 0L)
-    arrEq(viaBytes.costs, dist.costs, "bytegate costs")
-    arrEq(viaBytes.coef, dist.coef, "bytegate coef")
-    ds.unpersist()
+    assert(rowReads(30)(GradientDescent.runRdd(_, Dim, LogisticLoss,
+      cfg)) == 2 * 30)
+    assert(rowReads(30)(GradientDescent.runRdd(_, Dim, LogisticLoss,
+      cfg, localFinishRows = 0L)) == 10 * 30)
+    assert(rowReads(30)(GradientDescent.runRdd(_, Dim, LogisticLoss,
+      cfg, localFinishRows = 29L)) == 30 + 10 * 30)
   }
 
   test("NN local finish ≡ distributed: SGD and Adam, params + curves") {
@@ -112,15 +120,11 @@ class GdLocalParitySpec extends AnyFunSuite {
     ds.unpersist()
   }
 
-  test("NN byte gate falls back to distributed") {
-    import spark.implicits._
+  test("NN path by row reads: default collects once, override 0 iterates") {
     val cfg = TwoLayerNet.Config(nIn = Dim, nHidden = 8, nOut = 2,
       iterations = 6, learningRate = 0.01, seed = 7L)
-    val ds = spark.createDataset(docs(20, 53)).repartition(3).persist()
-    val viaBytes = TwoLayerNet.train(ds, cfg, localFinishBytes = 1L)
-    val dist = TwoLayerNet.train(ds, cfg, localFinishRows = 0L)
-    arrEq(viaBytes.costs, dist.costs, "nn bytegate costs")
-    arrEq(viaBytes.params.w1, dist.params.w1, "nn bytegate w1")
-    ds.unpersist()
+    assert(rowReads(20)(TwoLayerNet.trainRdd(_, cfg)) == 2 * 20)
+    assert(rowReads(20)(TwoLayerNet.trainRdd(_, cfg,
+      localFinishRows = 0L)) == 20 + 6 * 20)
   }
 }

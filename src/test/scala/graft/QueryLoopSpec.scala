@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The per-query pin sweep that Bench, Verify and TimeQuery share
   * ([[QueryLoop]]): pins made before the loop is built survive every
   * query; a query's own persists and localCheckpoint blocks are gone
-  * when the call returns — also when the query throws — and a crashed
-  * Verify query still leaves its `__verify_error` sentinel.
+  * when the call returns — also when the query throws — along with
+  * their cache-manager entries, and a crashed Verify query still
+  * leaves its `__verify_error` sentinel.
   */
 class QueryLoopSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -26,10 +27,9 @@ class QueryLoopSpec extends AnyFunSuite {
 
   private def frame(n: Int): DataFrame = spark.range(n).toDF("id")
 
-  /** Every test starts from an empty store (the session is shared
-    * with other suites), pins one frame, then builds the loop. The
-    * cache manager is cleared too: it would otherwise take a later
-    * `persist()` of an equal plan for a no-op. */
+  /** Every test starts from an empty store and an empty cache
+    * manager (the session is shared with other suites), pins one
+    * frame, then builds the loop. */
   private def loopWithOnePin(): (QueryLoop, Int) = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
@@ -51,6 +51,18 @@ class QueryLoopSpec extends AnyFunSuite {
     val (loop, keepId) = loopWithOnePin()
     val n = loop.run { pinTwo(); pinned.size }
     assert(n == 3)
+    assert(pinned == Set(keepId))
+    assert(cachedBlocks == Set(keepId))
+  }
+
+  test("a plan one query persists is pinned again by the next") {
+    val (loop, keepId) = loopWithOnePin()
+    // no clearCache() between the runs: the sweep must drop the first
+    // run's cache-manager entry, or the second persist is a no-op
+    def pinsDuringRun(): Int =
+      loop.run { frame(20).persist().count(); pinned.size }
+    assert(pinsDuringRun() == 2)
+    assert(pinsDuringRun() == 2)
     assert(pinned == Set(keepId))
     assert(cachedBlocks == Set(keepId))
   }
