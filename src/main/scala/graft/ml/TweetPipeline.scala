@@ -1,13 +1,17 @@
 package graft.ml
 
-import org.apache.spark.ml.Pipeline
+import scala.collection.mutable
+import org.apache.spark.ml.Transformer
 import org.apache.spark.ml.classification._
 import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.feature._
+import org.apache.spark.ml.graftbridge.FeatureBridge
+import org.apache.spark.ml.util.Identifiable
+import org.apache.spark.mllib.evaluation.MulticlassMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import org.apache.spark.storage.StorageLevel
-import graft.core.Pinned
 import graft.text.TextOps
 
 /** Stack A — the reference's spark.ml pipeline (SURVEY.md §2.9
@@ -21,8 +25,11 @@ import graft.text.TextOps
   * reference every UDF stage is a `BatchEvalPython` pipeline break;
   * here the whole pre-ML prep is one codegen'd stage (SURVEY.md §3.1).
   *
-  * [[featurize]] runs that prep once for all three estimator fits and
-  * returns a persisted frame that several classifiers share.
+  * [[featurize]] builds the StringIndexer, CountVectorizer and IDF
+  * models from two passes over that prep and returns a persisted frame
+  * that several classifiers share. The fitted spark.ml Pipeline is
+  * its test oracle, `graft.TweetPipelineComposed`; `TweetFeaturizeSpec`
+  * pins the two together.
   *
   * Parity notes:
   *  - `ml.feature.Tokenizer` splits on the single-whitespace regex
@@ -31,6 +38,10 @@ import graft.text.TextOps
   *    faithful to the reference, which has the same artifact.
   *  - StringIndexer orders by frequency desc: majority class "0" →
   *    label 0.0 (`LogisticRegression.py:88`).
+  *  - The vocabulary comes from CountVectorizer's own word-count
+  *    lineage, so words with equal counts keep spark.ml's order. That
+  *    order is defined at one partition only; across partitions it
+  *    follows task completion, in spark.ml as here.
   *  - The reference's split is unseeded (`LogisticRegression.py:97`);
   *    we seed (default 123) for reproducibility — SURVEY.md §5.
   */
@@ -57,33 +68,80 @@ object TweetPipeline {
       .withColumn("filtered_tokens", size(col("filteredmore")))
   }
 
-  /** M5/M3/M4/M6/M7 — the fitted feature Pipeline, stage order as in
-    * `LogisticRegression.py:86-91`.
-    */
-  def featurePipeline(): Pipeline = new Pipeline().setStages(Array(
-    new StringIndexer().setInputCol("class").setOutputCol("label"),
-    new CountVectorizer().setInputCol("filteredmore").setOutputCol("c_vec"),
-    new IDF().setInputCol("c_vec").setOutputCol("tf_idf"),
-    new VectorAssembler()
-      .setInputCols(Array("tf_idf", "filtered_tokens"))
-      .setOutputCol("features")))
+  /** CountVectorizer's default vocabulary size. */
+  private val VocabSize = 1 << 18
 
-  /** prep + fit + transform → (label, features), the frame every
-    * classifier trains on (`LogisticRegression.py:91-96`).
+  /** prep → StringIndexer → CountVectorizer → IDF → VectorAssembler →
+    * (label, features), the frame every classifier trains on
+    * (`LogisticRegression.py:86-96`, M5/M3/M4/M6/M7).
     *
-    * The prep is persisted for the three estimator fits and the
-    * transform, then freed here. Returns a persisted, materialized
-    * frame: the caller unpersists it when its classifiers are done.
+    * The three estimator fits are replaced by two passes over the
+    * prep, and the library's own models and transforms are built from
+    * them, so vectors and column metadata are spark.ml's:
+    *  - one aggregate gives N and the class frequencies; labels are
+    *    ordered by frequency descending, then by string, as
+    *    StringIndexer's `frequencyDesc` does (nulls are not counted,
+    *    and the transform rejects them);
+    *  - CountVectorizer's own word-count lineage gives the vocabulary
+    *    and each word's document frequency, from which the IDF model
+    *    follows ([[org.apache.spark.ml.graftbridge.FeatureBridge]]).
+    *
+    * Three jobs in all: those two passes and one that builds the
+    * persisted output. The prep is not cached: each pass recomputes
+    * its one codegen'd stage. Returns a persisted, materialized frame:
+    * the caller unpersists it when its classifiers are done.
     */
   def featurize(raw: DataFrame): DataFrame = {
-    val prepared = prepare(raw).persist(StorageLevel.MEMORY_AND_DISK)
-    Pinned.withPinned(prepared) {
-      val out = featurePipeline().fit(prepared).transform(prepared)
-        .select(col("label"), col("features"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try { out.count(); out }
-      catch { case e: Throwable => out.unpersist(); throw e }
-    }
+    val prepared = prepare(raw)
+    materialize(prepared, featureModels(prepared))
+  }
+
+  /** The fitted StringIndexer, CountVectorizer and IDF models over
+    * `prepared`, then the VectorAssembler, from the two passes that
+    * [[featurize]] describes.
+    */
+  private[graft] def featureModels(prepared: DataFrame): Seq[Transformer] = {
+    val (n, classFreq) = prepared.select(col("class").cast(StringType))
+      .rdd.aggregate((0L, mutable.HashMap.empty[String, Long]))(
+        { case ((k, freq), r) =>
+          if (!r.isNullAt(0)) {
+            val c = r.getString(0)
+            freq(c) = freq.getOrElse(c, 0L) + 1L
+          }
+          (k + 1L, freq) },
+        { case ((k1, f1), (k2, f2)) =>
+          f2.foreach { case (c, m) => f1(c) = f1.getOrElse(c, 0L) + m }
+          (k1 + k2, f1) })
+    val labels = classFreq.toArray.sortBy { case (c, m) => (-m, c) }
+      .map(_._1)
+    val vocab = FeatureBridge.topTerms(
+      prepared.select(col("filteredmore")).rdd.map(_.getSeq[String](0)),
+      VocabSize)
+    Seq(
+      new StringIndexerModel(labels)
+        .setInputCol("class").setOutputCol("label"),
+      // the uid constructor, as fit uses: the vocabulary one rejects an
+      // empty vocabulary, which fit lets through to IDF's error
+      new CountVectorizerModel(Identifiable.randomUID("cntVecModel"),
+          vocab.map(_._1))
+        .setInputCol("filteredmore").setOutputCol("c_vec"),
+      FeatureBridge.idfModel(vocab.map(_._3), n)
+        .setInputCol("c_vec").setOutputCol("tf_idf"),
+      new VectorAssembler()
+        .setInputCols(Array("tf_idf", "filtered_tokens"))
+        .setOutputCol("features"))
+  }
+
+  /** `models` applied to `prepared` → (label, features), persisted and
+    * built by one job; a failed build leaves nothing persisted.
+    */
+  private[graft] def materialize(prepared: DataFrame,
+      models: Seq[Transformer]): DataFrame = {
+    val out = models.foldLeft(prepared)((df, t) => t.transform(df))
+      .select(col("label"), col("features"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    try { out.queryExecution.toRdd.foreach(_ => ()); out }
+    catch { case e: Throwable => out.unpersist(); throw e }
   }
 
   /** M8–M13 — classifier zoo with the reference's hyper-parameters. */
@@ -144,22 +202,41 @@ object TweetPipeline {
       EvalResult(s"$algo@$p", acc, f1, 0L, 0L, 0.0, 0.0)
     }
 
+  /** The evaluator's metrics over a predictions frame (label,
+    * prediction), computed by one pass.
+    */
+  private[graft] def metrics(predictions: DataFrame): MulticlassMetrics =
+    new MulticlassClassificationEvaluator()
+      .setPredictionCol("prediction").setLabelCol("label")
+      .getMetrics(predictions)
+
   /** Accuracy and weighted F1 of a predictions frame (label,
     * prediction) from one metrics pass — the exact values the
     * evaluator's "accuracy" and "f1" metrics return.
     */
   private[graft] def accuracyF1(predictions: DataFrame): (Double, Double) = {
-    val m = new MulticlassClassificationEvaluator()
-      .setPredictionCol("prediction").setLabelCol("label")
-      .getMetrics(predictions)
+    val m = metrics(predictions)
     (m.accuracy, m.weightedFMeasure)
   }
+
+  /** The number of rows `m` was computed from, read off its confusion
+    * matrix (every weight is 1, so the sum is exact below 2^53). The
+    * matrix spans the test labels only, so a prediction of a class no
+    * test row has would be missing from it: the figure is returned
+    * only when all `numClasses` classes are among those labels.
+    */
+  private[graft] def evaluatedRows(m: MulticlassMetrics, numClasses: Int)
+      : Option[Long] =
+    if ((0 until numClasses).forall(k => m.labels.contains(k.toDouble)))
+      Some(m.confusionMatrix.toArray.sum.toLong)
+    else None
 
   /** Split → fit → transform → M14 evaluate, mirroring
     * `LogisticRegression.py:96-116`. The split is seeded (R1).
     * `featurized` is normally [[featurize]]'s persisted output (R2);
     * this method leaves its persistence untouched so one cached
-    * featurization can serve several classifiers.
+    * featurization can serve several classifiers. The test-split size
+    * comes from the metrics pass ([[evaluatedRows]]) when it can.
     */
   def trainEval(algo: String, featurized: DataFrame,
                 seed: Long = 123L): EvalResult = {
@@ -180,12 +257,14 @@ object TweetPipeline {
       if (algo == "dt") training.repartition(8) else training
     val t0 = System.nanoTime()
     val model = classifier(algo).fit(fitInput)
-      .asInstanceOf[org.apache.spark.ml.Transformer]
+      .asInstanceOf[ClassificationModel[_, _]]
     val t1 = System.nanoTime()
-    val (acc, f1) = accuracyF1(model.transform(testing))
+    val m = metrics(model.transform(testing))
+    val (acc, f1) = (m.accuracy, m.weightedFMeasure)
     val t2 = System.nanoTime()
     EvalResult(algo, acc, f1,
-      training.count(), testing.count(),
+      training.count(),
+      evaluatedRows(m, model.numClasses).getOrElse(testing.count()),
       (t1 - t0) / 1e9, (t2 - t1) / 1e9)
   }
 }

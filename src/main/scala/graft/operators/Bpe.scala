@@ -169,6 +169,16 @@ object Bpe {
     out.result()
   }
 
+  /** Driver heap of the local finish's collected vocabulary, estimated
+    * per row as 160 B of objects plus 2 B per char: the collected
+    * `Row` (24 B), its value array (24 B), the word's `String` and its
+    * array header (40 B) and a boxed count (16 B), then the
+    * `(String, Long)` tuple (24 B) with its own boxed count (16 B) and
+    * a slot in each array (8 B) — 152 B, rounded up.
+    */
+  private[graft] def localBytes(rows: Long, chars: Double): Double =
+    rows.toDouble * 160.0 + 2.0 * chars
+
   /** Learn `numMerges` merge rules over `docs`. Ties in pair
     * frequency break by (lhs, rhs) ascending — deterministic across
     * partitionings and engines. Stops early if the vocabulary runs
@@ -176,11 +186,11 @@ object Bpe {
     *
     * Bounded local finish ([[graft.core.LocalFinish]]): pair
     * statistics are word-internal, so after the one corpus-sized
-    * shuffle the loop state is the VOCABULARY — rows, UTF-8 bytes of
-    * the marked words, and `numMerges` rounds of work, all from one
-    * aggregate over the checkpointed vocab. The local loop
-    * ([[trainMergesLocal]]) is the same integer recurrence with the
-    * same tie order.
+    * shuffle the loop state is the VOCABULARY — rows, the driver heap
+    * they take once collected ([[localBytes]]), and `numMerges`
+    * rounds of work, all from one aggregate over the checkpointed
+    * vocab. The local loop ([[trainMergesLocal]]) is the same integer
+    * recurrence with the same tie order.
     */
   def trainMerges(docs: DataFrame, tokens: Column, numMerges: Int,
                   checkpointEvery: Int = 16,
@@ -195,11 +205,13 @@ object Bpe {
     // exit — training returns only driver-side rules, so it pins zero
     // executor storage after it returns.
     var v = vocab(docs, tokens).localCheckpoint()
-    val stats = v.agg(count(lit(1)), sum(octet_length(col("marked"))))
+    // a UTF-8 byte count bounds a string's UTF-16 chars from above
+    val stats = v.agg(count(lit(1)),
+        sum(octet_length(col("marked")).cast("double")))
       .collect()(0)
     val nRows = stats.getLong(0)
-    val nBytes = if (stats.isNullAt(1)) 0L else stats.getLong(1)
-    if (LocalFinish.fits(nRows, nBytes.toDouble, numMerges,
+    val nChars = if (stats.isNullAt(1)) 0.0 else stats.getDouble(1)
+    if (LocalFinish.fits(nRows, localBytes(nRows, nChars), numMerges,
         localFinishRows)) {
       val rows = v.collect().map(r => (r.getString(0), r.getLong(1)))
       graft.core.Checkpoints.release(v)

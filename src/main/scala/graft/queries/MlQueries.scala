@@ -51,8 +51,8 @@ object MlQueries {
       df
     })
 
-  /** Force-materialize the shared featurization (fits + persists the
-    * feature pipeline). [[graft.QueryLoop]] calls this in its untimed
+  /** Force-materialize the shared featurization (builds the feature
+    * models and the persisted (label, features) frame). [[graft.QueryLoop]] calls this in its untimed
     * warm-up so the first classifier query doesn't absorb the
     * featurization cost — BASELINE.md's per-model numbers are the
     * reference scripts' own train+predict timings, which exclude

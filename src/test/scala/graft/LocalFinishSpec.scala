@@ -38,6 +38,19 @@ class LocalFinishSpec extends AnyFunSuite {
     assert(!fits(1L, math.nextUp(MaxBytes), 1L))
   }
 
+  test("Bpe's vocabulary bytes: 160 B a row plus 2 B a char, at the " +
+      "MaxBytes boundary") {
+    assert(Bpe.localBytes(0L, 0.0) == 0.0)
+    assert(Bpe.localBytes(3L, 10.0) == 500.0)
+    // 2^18 words of 48 chars take exactly MaxBytes
+    val rows = 1L << 18
+    assert(Bpe.localBytes(rows, 48.0 * rows) == MaxBytes)
+    assert(fits(rows, Bpe.localBytes(rows, 48.0 * rows), 1L))
+    assert(!fits(rows, Bpe.localBytes(rows, 48.0 * rows + 1.0), 1L))
+    // MaxRows words of 8 chars: 8 MiB of UTF-8, but 176 MiB of heap
+    assert(!fits(MaxRows, Bpe.localBytes(MaxRows, 8.0 * MaxRows), 1L))
+  }
+
   test("work bound: rows × rounds = MaxWork fits, one more round does " +
       "not") {
     val maxWork = MaxWork.toLong

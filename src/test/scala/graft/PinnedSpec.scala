@@ -2,9 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.CacheBridge
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{Checkpoints, Pinned}
+import graft.core.{Checkpoints, Csv, Pinned}
+import graft.ml.TweetPipeline
 import graft.operators.{Dedup, Quantiles}
 
 /** The pin-release contract (core/Pinned): operators that pin
@@ -121,5 +124,33 @@ class PinnedSpec extends AnyFunSuite {
     assert(rows.nonEmpty)
     Checkpoints.release(out)
     assert(pinnedCount == 0, "release(result) left checkpoint blocks")
+  }
+
+  test("TweetPipeline.featurize pins only the frame it returns; " +
+      "unpersist or a failure leaves nothing") {
+    sweepToZero()
+    def cacheEntries = CacheBridge.cachedPlans(spark).size
+    val before = cacheEntries
+    def tweets(name: String, classes: Seq[String]) = {
+      val p = java.nio.file.Files.createTempFile(name, ".csv")
+      p.toFile.deleteOnExit()
+      java.nio.file.Files.write(p, ("id,keyword,location,text,target" +:
+        classes.zipWithIndex.map { case (c, i) =>
+          s"$i,,,\"fire storm  number $i\",$c" })
+        .mkString("", "\n", "\n").getBytes("UTF-8"))
+      Csv.tweets(spark, p.toString)
+    }
+    val out = TweetPipeline.featurize(tweets("pins", Seq("0", "1", "0")))
+    assert(out.storageLevel == StorageLevel.MEMORY_AND_DISK)
+    assert(cacheEntries == before + 1, "a cache entry besides the result")
+    assert(pinnedCount == 1, "an RDD persisted besides the result")
+    assert(out.count() == 3L)
+    out.unpersist(blocking = true)
+    assert(cacheEntries == before && pinnedCount == 0)
+    // StringIndexer rejects the null class while the result is built
+    intercept[Exception](
+      TweetPipeline.featurize(tweets("pins-null", Seq("0", "", "1"))))
+    assert(cacheEntries == before, "a failed featurize left a cache entry")
+    assert(pinnedCount == 0, "a failed featurize left pins behind")
   }
 }
