@@ -1,6 +1,6 @@
 package graft.apps
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import graft.core.{Csv, Sessions, Sinks}
 import graft.features.RddPipeline
 import graft.gd._
@@ -41,6 +41,18 @@ private object AppUtil {
       printResults(tag, r.accuracy, r.f1, r.trainSec, r.testSec)
     }
     spark.stop()
+  }
+
+  /** Stack B's split (`randomSplit(0.8, 0.2)`, seed 123), both sides
+    * persisted; training is coalesced to 8 partitions because 300
+    * iteration-jobs × 32 near-empty tasks is pure scheduler overhead
+    * at this data size.
+    */
+  def split(data: Dataset[SparseDoc])
+      : (Dataset[SparseDoc], Dataset[SparseDoc]) = {
+    val Array(training, testing) =
+      data.randomSplit(Array(0.8, 0.2), seed = 123L)
+    (training.coalesce(8).persist(), testing.persist())
   }
 
   /** Seeded stand-in for `np.random.normal(0, 0.1, dim)`
@@ -113,12 +125,7 @@ object RddLogisticRegressionApp {
     println("\nTop 50 words in all Tweets:\n" + "-" * 100)
     f.vocab.orderBy(org.apache.spark.sql.functions.col("id")).show(50)
 
-    val Array(training0, testing) =
-      f.data.randomSplit(Array(0.8, 0.2), seed = 123L)
-    // few partitions for the iterative loops: 300 jobs x 32 near-empty
-    // tasks is pure scheduler overhead at this data size
-    val training = training0.coalesce(8)
-    training.persist(); testing.persist()
+    val (training, testing) = AppUtil.split(f.data)
     println(s"Training data count ${training.count()}")
     println(s"Testing data count ${testing.count()}")
 
@@ -156,12 +163,7 @@ object LrOptimizersApp {
     val opts = if (args.length > 2) args.drop(2).toSeq else All
     val spark = AppUtil.session("graft-lr-optimizers")
     val f = RddPipeline.featurize(spark, args(0), dim = 10000)
-    val Array(training0, testing) =
-      f.data.randomSplit(Array(0.8, 0.2), seed = 123L)
-    // few partitions for the iterative loops: 300 jobs x 32 near-empty
-    // tasks is pure scheduler overhead at this data size
-    val training = training0.coalesce(8)
-    training.persist(); testing.persist()
+    val (training, testing) = AppUtil.split(f.data)
     val init = AppUtil.normalInit(10000, seed = 123L)
     opts.foreach { opt =>
       val res = GradientDescent.run(training, 10000, LogisticLoss,
@@ -188,12 +190,7 @@ object SvmOptimizersApp {
       else LrOptimizersApp.All
     val spark = AppUtil.session("graft-svm-optimizers")
     val f = RddPipeline.featurize(spark, args(0), dim = 10000)
-    val Array(training0, testing) =
-      f.data.randomSplit(Array(0.8, 0.2), seed = 123L)
-    // few partitions for the iterative loops: 300 jobs x 32 near-empty
-    // tasks is pure scheduler overhead at this data size
-    val training = training0.coalesce(8)
-    training.persist(); testing.persist()
+    val (training, testing) = AppUtil.split(f.data)
     val init = AppUtil.normalInit(10000, seed = 123L)
     val lambda = 1.0 / (0.5 * f.numberOfTweets)
     opts.foreach { opt =>
@@ -218,12 +215,7 @@ object RddSvmApp {
     require(args.length == 2, "Usage: RddSvmApp <file> <output>")
     val spark = AppUtil.session("graft-rdd-svm")
     val f = RddPipeline.featurize(spark, args(0), dim = 10000)
-    val Array(training0, testing) =
-      f.data.randomSplit(Array(0.8, 0.2), seed = 123L)
-    // few partitions for the iterative loops: 300 jobs x 32 near-empty
-    // tasks is pure scheduler overhead at this data size
-    val training = training0.coalesce(8)
-    training.persist(); testing.persist()
+    val (training, testing) = AppUtil.split(f.data)
     val lambda = 1.0 / (0.5 * f.numberOfTweets)
     val res = GradientDescent.run(training, 10000, HingeLoss,
       GradientDescent.Config(iterations = 200, learningRate = 0.01,
@@ -250,22 +242,11 @@ object RddNnApp {
     val spark = AppUtil.session("graft-rdd-nn")
     val f = RddPipeline.featurize(spark, args(0), dim = 1000,
       dictFilter = Some("1"))
-    val Array(training0, testing) =
-      f.data.randomSplit(Array(0.8, 0.2), seed = 123L)
-    // few partitions for the iterative loops: 300 jobs x 32 near-empty
-    // tasks is pure scheduler overhead at this data size
-    val training = training0.coalesce(8)
-    training.persist(); testing.persist()
+    val (training, testing) = AppUtil.split(f.data)
     Seq("SGD", "Adam").foreach { opt =>
       val res = TwoLayerNet.train(training,
         TwoLayerNet.Config(optimizer = opt))
-      val spark2 = spark
-      import spark2.implicits._
-      val bc = spark.sparkContext.broadcast(res.params)
-      val preds = testing.map(d => (d.id, d.label.toInt,
-          TwoLayerNet.predict(d, bc.value, 128, 2)))
-        .toDF("id", "y", "pred")
-      val c = Predict.confusion(preds)
+      val c = TwoLayerNet.evaluate(testing, res.params)
       AppUtil.printResults(s"Results ($opt):", c.accuracy, c.f1, 0, 0)
       Sinks.costCurve(spark, res.costs.toSeq, args(1) + "_" + opt)
     }

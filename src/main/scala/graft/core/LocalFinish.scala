@@ -17,8 +17,10 @@ package graft.core
   * The state fits when rows ≤ the caller's `localFinishRows` (default
   * [[MaxRows]]), estimated bytes ≤ [[MaxBytes]] (a row bound alone
   * lets a few huge rows exhaust the heap), and rows × rounds ≤
-  * [[MaxWork]] (the local loop is serial, so a near-bound state
-  * iterated many times belongs on the cluster). Each site says what
+  * [[MaxWork]] (a local loop has at most the session's task slots:
+  * both trainers' loop, `gd.FullBatch`, runs partitions on them and
+  * the other sites run on one thread, so a near-bound state iterated
+  * many times belongs on the cluster). Each site says what
   * its byte figure measures; bytes and work are `Double`s, so no
   * product of driver statistics overflows. `localFinishRows = 0`
   * forces the distributed path, empty state included (parity specs,
@@ -33,7 +35,9 @@ object LocalFinish {
   /** Estimated bytes of that state once collected (64 MB). */
   val MaxBytes: Double = (1L << 26).toDouble
 
-  /** Serial row-visits (rows × rounds) of the local loop. */
+  /** Row-visits (rows × rounds) of the local loop, which has at most
+    * the session's task slots where the cluster has all of its.
+    */
   val MaxWork: Double = (1L << 28).toDouble
 
   /** False when the override forces the distributed path, so a caller

@@ -3,16 +3,15 @@ package graft.gd
 import org.apache.spark.sql.Dataset
 import graft.core.LocalFinish
 
-/** Full-batch gradient descent driven from the driver, with the
-  * per-iteration gradient computed distributed (SURVEY.md §2.11,
-  * §3.2).
+/** Full-batch gradient descent driven from the driver (SURVEY.md
+  * §2.11, §3.2), on the one full-batch loop [[FullBatch]].
   *
   * Scale design vs the reference:
   *  - coefficients ship via `SparkContext.broadcast` (torrent, one
   *    copy per executor) instead of task-closure pickling;
-  *  - the (cost, gradient) reduce is a depth-2 `treeAggregate` —
-  *    executor-side partial combines, then a tree to the driver,
-  *    instead of the reference's pairwise `reduce` fan-in;
+  *  - partials are adaptive sparse/dense [[GradVec]]s combined by
+  *    `treeAggregate` instead of the reference's pairwise `reduce` of
+  *    dense rows;
   *  - callers must `.persist()` the featurized Dataset (the reference
   *    recomputes the whole TF-IDF lineage on every iteration —
   *    SURVEY.md §2.10 R2).
@@ -92,9 +91,6 @@ object GradientDescent {
       val vals: Array[Double]) extends Serializable
 
   private[gd] object GradVec {
-    val empty = new GradVec(0.0, Array.emptyIntArray,
-      Array.emptyDoubleArray)
-
     private def sparseWins(nnz: Long, dim: Int): Boolean =
       nnz * 3 < dim.toLong * 2
 
@@ -122,8 +118,7 @@ object GradientDescent {
     }
 
     /** Index-wise sum. Mutates whichever side is already dense (both
-      * args are partition/merge outputs consumed exactly once; the
-      * shared `empty` zero is sparse and never mutated).
+      * args are partition/merge outputs consumed exactly once).
       */
     def merge(dim: Int)(a: GradVec, b: GradVec): GradVec = {
       val cost = a.cost + b.cost
@@ -185,20 +180,18 @@ object GradientDescent {
     * the Dataset's cached InternalRows every pass (guide §1.2 step 2;
     * A/B in OPTIMIZATION_r14.md m07).
     *
-    * Bounded local finish ([[graft.core.LocalFinish]]): the state is
-    * the training set, measured by rows and estimated heap bytes
-    * ([[SparseDoc.rowsAndBytes]]) with `iterations` rounds of work.
-    * The local loop is exact up to reduce order: it keeps the
-    * partition structure (`glom`), accumulates each partition in the
-    * same row order, and merges partials in partition-index order —
-    * one of the arrival orders the distributed reduce already
-    * produces, inside the ~1e-15 jitter the gate bands cover (parity
-    * in GdLocalParitySpec).
+    * The loop, both of its paths and the local-finish decision are
+    * [[FullBatch.run]]'s. The rows/bytes job runs only when the
+    * override allows a local finish. A partition's partial accumulates
+    * its rows in order into a fresh dense `dim` buffer and packs it
+    * ([[GradVec.pack]]); no buffer outlives its round, so the driver
+    * holds a few gradients at any dim. The merge is [[GradVec.merge]],
+    * index-wise, so both paths sum each coordinate over the same
+    * partials and agree up to merge order (GdLocalParitySpec).
     */
   def runRdd(rdd: org.apache.spark.rdd.RDD[SparseDoc], dim: Int,
              loss: Loss, cfg: Config,
              localFinishRows: Long = LocalFinish.MaxRows): Result = {
-    val sc = rdd.sparkContext
     val coef = cfg.initialCoef.map(_.clone())
       .getOrElse(new Array[Double](dim))
     require(coef.length == dim)
@@ -207,19 +200,19 @@ object GradientDescent {
     var oldCost = 0.0 // reference starts old_cost at 0 → first bold-
                       // driver step always halves lr
     val costs = scala.collection.mutable.ArrayBuffer.empty[Double]
-    // depth-2 tree reduce only pays when there are enough partitions
-    // to fan in (an intermediate stage per iteration otherwise): local
-    // runs with a handful of partitions aggregate directly; a
-    // 1000-executor job gets the tree.
-    val depth = if (rdd.getNumPartitions <= 16) 1 else 2
-    val mergeOp = GradVec.merge(dim) _
-
-    // Driver-side update step, shared verbatim by the local and
-    // distributed paths: same reg, same optimizer update, same
-    // bold-driver lr recurrence, same early-stop check.
-    def step(total: GradVec, i: Int): Boolean = {
-      val costSum = total.cost
-      val gradSum = GradVec.toDense(total, dim)
+    FullBatch.run(rdd, coef, cfg.iterations, localFinishRows,
+        SparseDoc.rowsAndBytes(rdd))(
+      () => (c: Array[Double], docs: Iterator[SparseDoc]) => {
+        val g = new Array[Double](dim)
+        var cost = 0.0
+        while (docs.hasNext) cost += loss.accumulate(docs.next(), c, g)
+        GradVec.pack(cost, g)
+      },
+      GradVec.merge(dim)) { (total, i) =>
+      // an empty training set sums to a zero cost and gradient
+      val costSum = total.fold(0.0)(_.cost)
+      val gradSum =
+        total.fold(new Array[Double](dim))(GradVec.toDense(_, dim))
       val cost = cfg.reg(costSum, gradSum, coef)
       opt.update(coef, gradSum, lr, i)
       if (cfg.boldDriver) {
@@ -230,61 +223,6 @@ object GradientDescent {
         cfg.earlyStopDelta.exists(d => math.abs(oldCost - cost) <= d)
       oldCost = cost
       stop
-    }
-
-    // rows and bytes come from one job over the persisted input, and
-    // only when the override allows a local finish at all
-    if (LocalFinish.enabled(localFinishRows)) {
-      val (rows, estBytes) = SparseDoc.rowsAndBytes(rdd)
-      if (LocalFinish.fits(rows, estBytes, cfg.iterations,
-          localFinishRows)) {
-        val parts = rdd.glom().collect()
-        var i = 0
-        var stopped = false
-        while (i < cfg.iterations && !stopped) {
-          var total = GradVec.empty
-          var pi = 0
-          while (pi < parts.length) {
-            val docs = parts(pi)
-            // empty partitions emit nothing, exactly like the
-            // distributed mapPartitions
-            if (docs.nonEmpty) {
-              val g = new Array[Double](dim)
-              var c = 0.0
-              var r = 0
-              while (r < docs.length) {
-                c += loss.accumulate(docs(r), coef, g)
-                r += 1
-              }
-              total = mergeOp(total, GradVec.pack(c, g))
-            }
-            pi += 1
-          }
-          stopped = step(total, i)
-          i += 1
-        }
-        return Result(coef, costs.toArray)
-      }
-    }
-
-    var i = 0
-    var stopped = false
-    while (i < cfg.iterations && !stopped) {
-      val bc = sc.broadcast(coef)
-      val total = rdd.mapPartitions { docs =>
-        if (!docs.hasNext) Iterator.empty
-        else {
-          val g = new Array[Double](dim)
-          var c = 0.0
-          while (docs.hasNext) {
-            c += loss.accumulate(docs.next(), bc.value, g)
-          }
-          Iterator.single(GradVec.pack(c, g))
-        }
-      }.treeAggregate(GradVec.empty)(mergeOp, mergeOp, depth)
-      bc.destroy()
-      stopped = step(total, i)
-      i += 1
     }
     Result(coef, costs.toArray)
   }

@@ -1,8 +1,8 @@
 package graft.gd
 
 /** Per-row loss/gradient contributions (SURVEY.md §2.8 F6/F7).
-  * `accumulate` adds the row's gradient into `grad` (mutable executor-
-  * side buffer — this runs inside `treeAggregate`'s seqOp) and returns
+  * `accumulate` adds the row's gradient into `grad` (a partition's
+  * mutable buffer in [[GradientDescent.runRdd]]'s partial) and returns
   * the row's cost.
   */
 trait Loss extends Serializable {

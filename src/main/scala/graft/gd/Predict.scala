@@ -1,5 +1,6 @@
 package graft.gd
 
+import scala.reflect.ClassTag
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -13,18 +14,6 @@ import org.apache.spark.sql.functions._
   * traffic at any scale.
   */
 object Predict {
-
-  /** F8: label 1 iff x·coef > 0 (`RDD_logisticregression.py:177-181`).
-    * Coefficients ship by broadcast, not task closure.
-    */
-  def predict(ds: Dataset[SparseDoc], coef: Array[Double]): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(coef)
-    ds.map(d => (d.id, d.label.toInt,
-        if (d.dot(bc.value) > 0) 1 else 0))
-      .toDF("id", "y", "pred")
-  }
 
   final case class Confusion(tp: Long, tn: Long, fp: Long, fn: Long) {
     /** F13 (`RDD_logisticregression.py:233-234`). */
@@ -45,7 +34,22 @@ object Predict {
     Confusion(r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))
   }
 
-  /** Convenience: predict → confusion. */
+  /** F8 → confusion: label 1 iff x·coef > 0
+    * (`RDD_logisticregression.py:177-181`).
+    */
   def evaluate(ds: Dataset[SparseDoc], coef: Array[Double]): Confusion =
-    confusion(predict(ds, coef))
+    confusionOf(ds, coef)((d, c) => if (d.dot(c) > 0) 1 else 0)
+
+  /** Broadcasts `model`, labels each row with `label` and counts the
+    * confusion matrix in one pass; the broadcast is destroyed after it.
+    */
+  private[gd] def confusionOf[M: ClassTag](ds: Dataset[SparseDoc],
+      model: M)(label: (SparseDoc, M) => Int): Confusion = {
+    val spark = ds.sparkSession
+    import spark.implicits._
+    val bc = spark.sparkContext.broadcast(model)
+    try confusion(ds.map(d => (d.id, d.label.toInt, label(d, bc.value)))
+      .toDF("id", "y", "pred"))
+    finally bc.destroy()
+  }
 }

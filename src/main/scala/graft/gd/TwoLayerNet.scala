@@ -6,13 +6,14 @@ import graft.core.LocalFinish
 
 /** The reference's 2-layer network (`RDD_NN.py:119-301`, SURVEY.md
   * §2.11 L3): in → hidden leaky-ReLU → 2 sigmoid outputs, SSE cost,
-  * full-batch GD with SGD or the reference's Adam variant.
+  * full-batch GD with SGD or the reference's Adam variant, on the one
+  * full-batch loop [[FullBatch]].
   *
   * The reference splits forward+backward into 11 chained `.map`
-  * stages (pedagogy); here one fused function runs per row inside a
-  * depth-2 `treeAggregate` — a single pass, no intermediate tuples.
-  * Gradients are accumulated into flat per-partition buffers
-  * (nIn·nHidden + nHidden + nHidden·nOut + nOut doubles).
+  * stages (pedagogy); here one fused function runs per row — a single
+  * pass, no intermediate tuples. Gradients are accumulated into flat
+  * per-partition buffers (nIn·nHidden + nHidden + nHidden·nOut + nOut
+  * doubles).
   *
   * Reference quirks kept for parity (SURVEY.md §7 #1):
   * `optimizer_adam` updates the bias second-moment with the *raw*
@@ -161,6 +162,23 @@ object TwoLayerNet {
 
   case class Result(params: Params, costs: Array[Double])
 
+  /** A partition's partial: (SSE cost, then the gradient sums for w1,
+    * b1, w2 and b2 in the params' layout).
+    */
+  private type Grads =
+    (Double, Array[Double], Array[Double], Array[Double], Array[Double])
+
+  /** The merge: adds `b` into `a`'s arrays. */
+  private def addGrads(a: Grads, b: Grads): Grads = {
+    def add(x: Array[Double], y: Array[Double]): Array[Double] = {
+      var k = 0
+      while (k < x.length) { x(k) += y(k); k += 1 }
+      x
+    }
+    (a._1 + b._1, add(a._2, b._2), add(a._3, b._3), add(a._4, b._4),
+      add(a._5, b._5))
+  }
+
   def train(data: Dataset[SparseDoc], cfg: Config,
             initial: Option[Params] = None,
             localFinishRows: Long = LocalFinish.MaxRows): Result =
@@ -172,177 +190,96 @@ object TwoLayerNet {
     * cached InternalRows 600 times (guide §1.2 step 2; measured in
     * OPTIMIZATION_r14.md m08).
     *
-    * Bounded local finish ([[graft.core.LocalFinish]]): the state is
-    * the training set, measured like [[GradientDescent.runRdd]]'s.
-    * The local loop keeps the partition structure (`glom`), runs each
-    * partition's rows in order on a pool thread, and merges partials
-    * in partition-index order — one of the arrival orders the
-    * distributed reduce already produces (parity in
-    * GdLocalParitySpec).
+    * The loop, both of its paths and the local-finish decision are
+    * [[FullBatch.run]]'s; the rows/bytes job always runs, because its
+    * row count is the 1/n scale. A partition's partial runs
+    * `rowCostGrad` over its rows in order into four gradient buffers
+    * and a [[RowScratch]], which the local path keeps per partition and
+    * zeroes every round (bit-identical to fresh arrays). The merge adds
+    * the four arrays index-wise, so both paths sum the same partials
+    * and agree up to merge order (GdLocalParitySpec).
     */
   def trainRdd(rdd: RDD[SparseDoc], cfg: Config,
                initial: Option[Params] = None,
                localFinishRows: Long = LocalFinish.MaxRows): Result = {
-    val sc = rdd.sparkContext
     val p = initial.getOrElse(init(cfg))
     val nIn = cfg.nIn; val nH = cfg.nHidden; val nOut = cfg.nOut
+    var lr = cfg.learningRate
+    // chosen before any Spark job, so an unknown name fails without
+    // reading the input
+    val update: (Grads, Int) => Unit = cfg.optimizer match {
+      case "SGD" => (g, _) => {
+        def sgd(x: Array[Double], d: Array[Double]): Unit = {
+          var k = 0
+          while (k < x.length) { x(k) -= lr * d(k); k += 1 }
+        }
+        sgd(p.w1, g._2); sgd(p.b1, g._3); sgd(p.w2, g._4); sgd(p.b2, g._5)
+      }
+      case "Adam" =>
+        val sW1 = new AdamState(nIn * nH); val sB1 = new AdamState(nH)
+        val sW2 = new AdamState(nH * nOut); val sB2 = new AdamState(nOut)
+        (g, i) => {
+          adamUpdate(p.w1, g._2, sW1, i, lr, squareGrad = true)
+          adamUpdate(p.b1, g._3, sB1, i, lr, squareGrad = false)
+          adamUpdate(p.w2, g._4, sW2, i, lr, squareGrad = true)
+          adamUpdate(p.b2, g._5, sB2, i, lr, squareGrad = false)
+        }
+      case other =>
+        throw new IllegalArgumentException(s"unknown optimizer: $other")
+    }
     // rows (the 1/n scale) and the local-finish bytes: one job
     val (rows, estBytes) = SparseDoc.rowsAndBytes(rdd)
     val n = rows.toDouble
     require(n > 0, "empty training set")
-    var lr = cfg.learningRate
     var oldCost = 0.0
     val costs = scala.collection.mutable.ArrayBuffer.empty[Double]
-    // same fan-in rule as GradientDescent.run: a tree stage per
-    // iteration only pays when there are enough partitions to fan in;
-    // the gate's 8-partition layout aggregates directly (one job per
-    // iteration, not two), a 1000-executor run gets the tree
-    val depth = if (rdd.getNumPartitions <= 16) 1 else 2
-    val sW1 = new AdamState(nIn * nH); val sB1 = new AdamState(nH)
-    val sW2 = new AdamState(nH * nOut); val sB2 = new AdamState(nOut)
-    type Buf = (Double, Array[Double], Array[Double], Array[Double], Array[Double])
-    val combOp: (Buf, Buf) => Buf = {
-      case ((c1, a1, a2, a3, a4), (c2, b1, b2, b3, b4)) =>
-        def add(x: Array[Double], y: Array[Double]): Array[Double] = {
-          var k = 0
-          while (k < x.length) { x(k) += y(k); k += 1 }
-          x
-        }
-        (c1 + c2, add(a1, b1), add(a2, b2), add(a3, b3), add(a4, b4))
-    }
-
-    // Driver-side update step, shared verbatim by the local and
-    // distributed paths: same 1/n scaling, same SGD/Adam updates,
-    // same bold-driver lr recurrence.
-    def step(cost: Double, dW1: Array[Double], dB1: Array[Double],
-             dW2: Array[Double], dB2: Array[Double], i: Int): Unit = {
-      val avgCost = cost / n
-      def scale(a: Array[Double]): Array[Double] = {
-        var k = 0
-        while (k < a.length) { a(k) /= n; k += 1 }
-        a
-      }
-      scale(dW1); scale(dB1); scale(dW2); scale(dB2)
-      cfg.optimizer match {
-        case "SGD" =>
-          def sgd(x: Array[Double], g: Array[Double]): Unit = {
-            var k = 0
-            while (k < x.length) { x(k) -= lr * g(k); k += 1 }
-          }
-          sgd(p.w1, dW1); sgd(p.b1, dB1); sgd(p.w2, dW2); sgd(p.b2, dB2)
-        case "Adam" =>
-          adamUpdate(p.w1, dW1, sW1, i, lr, squareGrad = true)
-          adamUpdate(p.b1, dB1, sB1, i, lr, squareGrad = false)
-          adamUpdate(p.w2, dW2, sW2, i, lr, squareGrad = true)
-          adamUpdate(p.b2, dB2, sB2, i, lr, squareGrad = false)
-        case other =>
-          throw new IllegalArgumentException(s"unknown optimizer: $other")
-      }
-      lr = if (avgCost < oldCost) lr * 1.05 else lr * 0.5
-      costs += avgCost
-      oldCost = avgCost
-    }
-
-    // Per-partition buffers are reused across iterations and fully
-    // zeroed first (the RowScratch discipline — bit-identical to fresh
-    // arrays).
-    if (LocalFinish.fits(rows, estBytes, cfg.iterations,
-        localFinishRows)) {
-      val parts = rdd.glom().collect()
-      val nP = parts.length
-      // thread budget = the session's task-slot count
-      // (defaultParallelism), NOT availableProcessors: a
-      // SPARK_GRAFT_CPUS=8 bench must not borrow the host's other
-      // 24 vCPUs for the local loop when the distributed path it
-      // replaces would have been capped at 8 task slots — the
-      // core-count scaling measurement stays honest. Thread count
-      // never affects the result (each thread owns whole
-      // partitions; merge order is partition-indexed).
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.max(1, math.min(nP, sc.defaultParallelism)))
-      try {
-        val bufs = Array.tabulate(nP)(_ =>
-          (new Array[Double](nIn * nH), new Array[Double](nH),
-            new Array[Double](nH * nOut), new Array[Double](nOut),
-            new RowScratch(nH, nOut)))
-        var i = 0
-        while (i < cfg.iterations) {
-          val futs = (0 until nP).map { pi =>
-            pool.submit(new java.util.concurrent.Callable[Double] {
-              def call(): Double = {
-                val docs = parts(pi)
-                val (w1, b1, w2, b2, scr) = bufs(pi)
-                java.util.Arrays.fill(w1, 0.0)
-                java.util.Arrays.fill(b1, 0.0)
-                java.util.Arrays.fill(w2, 0.0)
-                java.util.Arrays.fill(b2, 0.0)
-                var c = 0.0
-                var r = 0
-                while (r < docs.length) {
-                  c += rowCostGrad(docs(r), p, nIn, nH, nOut,
-                    w1, b1, w2, b2, scr)
-                  r += 1
-                }
-                c
-              }
-            })
-          }
-          var total: Buf = null
-          var pi = 0
-          while (pi < nP) {
-            val c = futs(pi).get()
-            // empty partitions emit nothing, like the distributed
-            // mapPartitions
-            if (parts(pi).nonEmpty) {
-              val (w1, b1, w2, b2, _) = bufs(pi)
-              val b: Buf = (c, w1, b1, w2, b2)
-              total = if (total == null) b else combOp(total, b)
-            }
-            pi += 1
-          }
-          val (cost, dW1, dB1, dW2, dB2) = total
-          step(cost, dW1, dB1, dW2, dB2, i)
-          i += 1
-        }
-      } finally pool.shutdown()
-      return Result(p, costs.toArray)
-    }
-
-    var i = 0
-    while (i < cfg.iterations) {
-      val bc = sc.broadcast(p)
-      // Gradient buffers are allocated INSIDE the partition (the old
-      // treeAggregate form shipped a (nIn·nH + …)-double zero value
-      // in every task closure — ~1 MB serialized per task per
-      // iteration at m08's dims). Per-partition accumulation order is
-      // unchanged, so the cost/grad doubles are bit-identical; the
-      // cross-partition merge stays the same arrival-order reduce the
-      // goldens' 1e-6 bands already cover.
-      val partials = rdd.mapPartitions { docs =>
-        if (!docs.hasNext) Iterator.empty
-        else {
-          val pp = bc.value
-          val w1 = new Array[Double](nIn * nH)
-          val b1 = new Array[Double](nH)
-          val w2 = new Array[Double](nH * nOut)
-          val b2 = new Array[Double](nOut)
-          val scr = new RowScratch(nH, nOut)
+    FullBatch.run(rdd, p, cfg.iterations, localFinishRows,
+        (rows, estBytes))(
+      () => {
+        val w1 = new Array[Double](nIn * nH)
+        val b1 = new Array[Double](nH)
+        val w2 = new Array[Double](nH * nOut)
+        val b2 = new Array[Double](nOut)
+        val scr = new RowScratch(nH, nOut)
+        (pp: Params, docs: Iterator[SparseDoc]) => {
+          java.util.Arrays.fill(w1, 0.0)
+          java.util.Arrays.fill(b1, 0.0)
+          java.util.Arrays.fill(w2, 0.0)
+          java.util.Arrays.fill(b2, 0.0)
           var c = 0.0
           while (docs.hasNext) {
             c += rowCostGrad(docs.next(), pp, nIn, nH, nOut,
               w1, b1, w2, b2, scr)
           }
-          Iterator.single((c, w1, b1, w2, b2): Buf)
+          (c, w1, b1, w2, b2): Grads
         }
+      },
+      addGrads) { (total, i) =>
+      // n > 0, so some partition is non-empty
+      val g = total.get
+      val avgCost = g._1 / n
+      def scale(a: Array[Double]): Unit = {
+        var k = 0
+        while (k < a.length) { a(k) /= n; k += 1 }
       }
-      val (cost, dW1, dB1, dW2, dB2) =
-        if (depth <= 1) partials.reduce(combOp)
-        else partials.treeReduce(combOp, depth)
-      bc.destroy()
-      step(cost, dW1, dB1, dW2, dB2, i)
-      i += 1
+      scale(g._2); scale(g._3); scale(g._4); scale(g._5)
+      update(g, i)
+      lr = if (avgCost < oldCost) lr * 1.05 else lr * 0.5
+      costs += avgCost
+      oldCost = avgCost
+      false
     }
     Result(p, costs.toArray)
+  }
+
+  /** Confusion counts of [[predict]] over `ds`, with the hidden and
+    * output widths read from `p`. The params ship by one broadcast,
+    * destroyed after the pass.
+    */
+  def evaluate(ds: Dataset[SparseDoc], p: Params): Predict.Confusion = {
+    val nH = p.b1.length
+    val nOut = p.b2.length
+    Predict.confusionOf(ds, p)((d, pp) => predict(d, pp, nH, nOut))
   }
 
   /** argmax(sigmoid(forward(Lrelu(forward(x))))) — `RDD_NN.py:175-177`. */

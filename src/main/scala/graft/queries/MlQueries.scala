@@ -58,7 +58,7 @@ object MlQueries {
     * reference scripts' own train+predict timings, which exclude
     * featurization the same way.
     */
-  def warmFeaturized(s: SparkSession): Unit = { featurized(s).count(); () }
+  def warmFeaturized(s: SparkSession): Unit = { featurized(s); () }
 
   /** One (algo, accuracy, f1, train_n, test_n) row per trainer — only
     * the run-to-run-deterministic columns, so the row can be pinned
@@ -284,15 +284,8 @@ object MlQueries {
           graft.gd.TwoLayerNet.trainRdd(trainingRdd,
             graft.gd.TwoLayerNet.Config(optimizer = opt))
         }
-        val (c, evalSec) = timed {
-          val bc = s.sparkContext.broadcast(res.params)
-          val preds = testing.map(d => (d.id, d.label.toInt,
-              graft.gd.TwoLayerNet.predict(d, bc.value, 128, 2)))
-            .toDF("id", "y", "pred")
-          val conf = graft.gd.Predict.confusion(preds)
-          bc.destroy()
-          conf
-        }
+        val (c, evalSec) =
+          timed(graft.gd.TwoLayerNet.evaluate(testing, res.params))
         System.err.println(f"[m08/$opt] featurize=$featSec%.1fs " +
           f"train=$trainSec%.1fs eval=$evalSec%.1fs")
         val diag = Seq(

@@ -30,14 +30,7 @@ object M08Dump {
       val res = graft.gd.TwoLayerNet.train(tr,
         graft.gd.TwoLayerNet.Config(optimizer = opt),
         localFinishRows = 0L)
-      val sp = spark
-      import sp.implicits._
-      val bc = spark.sparkContext.broadcast(res.params)
-      val preds = testing.map(d => (d.id, d.label.toInt,
-          graft.gd.TwoLayerNet.predict(d, bc.value, 128, 2)))
-        .toDF("id", "y", "pred")
-      val c = graft.gd.Predict.confusion(preds)
-      bc.destroy()
+      val c = graft.gd.TwoLayerNet.evaluate(testing, res.params)
       println(s"[m08dump] $opt tp=${c.tp} tn=${c.tn} fp=${c.fp} fn=${c.fn}")
       println(s"[m08dump] $opt accuracy=${c.accuracy} f1=${c.f1}")
       println(s"[m08dump] $opt costsHead=" +

@@ -18,7 +18,9 @@ import graft.gd._
   * are computed: the default path reads them twice (the rows/bytes job
   * and the one collect), `localFinishRows = 0` once per iteration —
   * and, for GD, skips the rows/bytes job. The bounds themselves are
-  * spec'd in LocalFinishSpec.
+  * spec'd in LocalFinishSpec. Both trainers run on [[FullBatch]], whose
+  * distributed combine adds a tree level above 16 partitions; the
+  * 20-partition case covers it.
   */
 class GdLocalParitySpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -118,6 +120,69 @@ class GdLocalParitySpec extends AnyFunSuite {
       arrEq(local.params.b2, dist.params.b2, s"nn $opt b2")
     }
     ds.unpersist()
+  }
+
+  test("GD and NN local finish ≡ distributed at 20 partitions (tree " +
+      "fan-in)") {
+    import spark.implicits._
+    // more than 16 partitions: the distributed combine adds a tree level
+    val ds = spark.createDataset(docs(90, 53)).repartition(20).persist()
+    assert(ds.rdd.getNumPartitions == 20)
+    val gdCfg = GradientDescent.Config(iterations = 12,
+      learningRate = 0.05, optimizer = "Momentum",
+      reg = GradientDescent.L2(0.3))
+    val gdLocal = GradientDescent.run(ds, Dim, LogisticLoss, gdCfg)
+    val gdDist = GradientDescent.run(ds, Dim, LogisticLoss, gdCfg,
+      localFinishRows = 0L)
+    arrEq(gdLocal.costs, gdDist.costs, "gd costs")
+    arrEq(gdLocal.coef, gdDist.coef, "gd coef")
+    val nnCfg = TwoLayerNet.Config(nIn = Dim, nHidden = 12, nOut = 2,
+      iterations = 8, learningRate = 0.01, optimizer = "Adam", seed = 5L)
+    val nnLocal = TwoLayerNet.train(ds, nnCfg)
+    val nnDist = TwoLayerNet.train(ds, nnCfg, localFinishRows = 0L)
+    arrEq(nnLocal.costs, nnDist.costs, "nn costs")
+    arrEq(nnLocal.params.w1, nnDist.params.w1, "nn w1")
+    arrEq(nnLocal.params.b1, nnDist.params.b1, "nn b1")
+    arrEq(nnLocal.params.w2, nnDist.params.w2, "nn w2")
+    arrEq(nnLocal.params.b2, nnDist.params.b2, "nn b2")
+    ds.unpersist()
+  }
+
+  test("unknown optimizer: both trainers fail before reading a row") {
+    def rejects(train: => Unit): Unit = {
+      val e = intercept[IllegalArgumentException](train)
+      assert(e.getMessage.contains("unknown optimizer: Nadam"))
+    }
+    assert(rowReads(20)(rdd => rejects(GradientDescent.runRdd(rdd, Dim,
+      LogisticLoss, GradientDescent.Config(optimizer = "Nadam")))) == 0)
+    assert(rowReads(20)(rdd => rejects(TwoLayerNet.trainRdd(rdd,
+      TwoLayerNet.Config(nIn = Dim, nHidden = 8, optimizer = "Nadam")))) == 0)
+  }
+
+  test("local pool: its threads end after a run and after a partial " +
+      "throws") {
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[Thread]()
+    def recording(fail: Boolean): Loss = new Loss {
+      def accumulate(doc: SparseDoc, coef: Array[Double],
+                     grad: Array[Double]): Double = {
+        seen.add(Thread.currentThread())
+        if (fail) throw new IllegalStateException("partial failed")
+        LogisticLoss.accumulate(doc, coef, grad)
+      }
+    }
+    def allEnded(): Unit = {
+      assert(!seen.isEmpty)
+      seen.forEach { t => t.join(10000); assert(!t.isAlive, t.getName) }
+      seen.clear()
+    }
+    val rdd = spark.sparkContext.parallelize(docs(40, 61), 6)
+    val cfg = GradientDescent.Config(iterations = 3, learningRate = 0.05)
+    GradientDescent.runRdd(rdd, Dim, recording(fail = false), cfg)
+    allEnded()
+    val e = intercept[IllegalStateException](
+      GradientDescent.runRdd(rdd, Dim, recording(fail = true), cfg))
+    assert(e.getMessage == "partial failed")
+    allEnded()
   }
 
   test("NN path by row reads: default collects once, override 0 iterates") {

@@ -13,8 +13,8 @@ import graft.text.TextOps
 /** The bounded-local-finish policy ([[LocalFinish]]): each bound at
   * its boundary, the override of 0, `Double` work past `Long.MaxValue`,
   * the six sites on empty input under both the default and the
-  * override of 0, and a source audit that keeps the budget in one
-  * file.
+  * override of 0, a source audit that keeps the budget in one file,
+  * and one that keeps the trainers' loop in `gd/FullBatch.scala`.
   */
 class LocalFinishSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -174,6 +174,29 @@ class LocalFinishSpec extends AnyFunSuite {
         }
       }
     val found = files.flatMap(offences)
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("source audit: only gd/FullBatch.scala collects, reduces, picks " +
+      "a fan-in depth or decides the local finish") {
+    val gd = Paths.get(sys.props("user.dir"), "src", "main", "scala",
+      "graft", "gd")
+    val loop = gd.resolve("FullBatch.scala")
+    assert(Files.isRegularFile(loop), s"$loop not found")
+    // any `.reduce`: gd has no collection reduce to tell apart from an
+    // RDD's
+    val call = ("""\.(?:glom|treeAggregate|treeReduce|getNumPartitions|""" +
+      """reduce)\b|\bLocalFinish\.(?:fits|enabled)\b""").r
+    val files = Files.list(gd).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).filterNot(_ == loop)
+      .toList.sortBy(_.toString)
+    assert(files.size >= 5, s"gd sources not found under $gd")
+    val found = files.flatMap { f =>
+      Files.readAllLines(f).asScala.toSeq.zipWithIndex.collect {
+        case (line, i) if call.findFirstIn(line).isDefined =>
+          s"${gd.relativize(f)}:${i + 1}: ${line.trim}"
+      }
+    }
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

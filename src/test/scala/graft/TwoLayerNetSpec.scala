@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-import graft.gd.{SparseDoc, TwoLayerNet}
+import graft.gd.{Predict, SparseDoc, TwoLayerNet}
 
 /** Golden tests for the 2-layer net (SURVEY.md §2.8 F10/F11, §2.11
   * L3): expected cost curves and final parameters computed with numpy
@@ -74,5 +74,27 @@ class TwoLayerNetSpec extends AnyFunSuite {
     val preds = fixtureDocs.map(d =>
       TwoLayerNet.predict(d, p, nH, nOut))
     assert(preds.forall(p => p == 0 || p == 1))
+  }
+
+  test("evaluate ≡ broadcast → predict → Predict.confusion, widths " +
+      "from the params") {
+    import spark.implicits._
+    // 2 → 3 → 2: input 0 drives output 1 and input 1 drives output 0,
+    // so each crafted doc lands in the cell its id names
+    val p = TwoLayerNet.Params(
+      w1 = Array(1.0, 0.0, 0.0, 0.0, 1.0, 0.0), b1 = Array(0.0, 0.0, 0.0),
+      w2 = Array(0.0, 1.0, 1.0, 0.0, 0.0, 0.0), b2 = Array(0.0, 0.0))
+    val data = spark.createDataset(Seq(
+      SparseDoc("tp", 1.0, Array(0), Array(1.0)),
+      SparseDoc("tp2", 1.0, Array(0, 1), Array(3.0, 1.0)),
+      SparseDoc("fp", 0.0, Array(0), Array(2.0)),
+      SparseDoc("tn", 0.0, Array(1), Array(1.0)),
+      SparseDoc("fn", 1.0, Array(1), Array(0.5)))).repartition(2)
+    val bc = spark.sparkContext.broadcast(p)
+    val hand = Predict.confusion(data.map(d => (d.id, d.label.toInt,
+        TwoLayerNet.predict(d, bc.value, 3, 2))).toDF("id", "y", "pred"))
+    bc.destroy()
+    assert(hand == Predict.Confusion(tp = 2, tn = 1, fp = 1, fn = 1))
+    assert(TwoLayerNet.evaluate(data, p) == hand)
   }
 }
