@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Checkpoints, LocalFinish}
+import graft.core.{Checkpoints, IndexCache, LocalFinish, PlanLiterals}
 import graft.text.Analysis
 
 /** Deduplication operators for training-data pipelines.
@@ -478,8 +478,8 @@ object Dedup {
     PrefixStages(docSets, cands, survivors, result)
   }
 
-  private def scoreJaccard(inter: DataFrame, sizes: DataFrame,
-                           threshold: Double): DataFrame =
+  private[graft] def scoreJaccard(inter: DataFrame, sizes: DataFrame,
+                                  threshold: Double): DataFrame =
     inter
       .join(sizes.as("sa"), col("a") === col("sa.doc_id"))
       .join(sizes.as("sb"), col("b") === col("sb.doc_id"))
@@ -737,62 +737,15 @@ object Dedup {
   }
 
   /** Persist a MinHash-LSH near-dup index for
-    * [[incrementalNearDups]]: the production-profile
-    * ([[lshBandSignaturesFast]]) band signatures plus the shingle
-    * rows and per-doc set sizes the exact-Jaccard verify needs.
-    * Build-once / dedupe-many: the corpus is shingled and hashed
-    * exactly once, and every incoming batch afterwards pays only its
-    * own shingling plus a candidates-bounded verify against the
-    * stored rows — the existing corpus is never re-hashed.
-    */
-  def writeNearDupIndex(sh: DataFrame, path: String,
-                        numHashes: Int = 16,
-                        rowsPerBand: Int = 4): Unit = {
-    lshBandSignaturesFast(sh, numHashes, rowsPerBand)
-      .write.mode("overwrite").parquet(s"$path/bands")
-    sh.write.mode("overwrite").parquet(s"$path/shingles")
-    sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$path/sizes")
-  }
-
-  /** Near-dup pairs between a NEW batch of shingled docs and a
-    * persisted [[writeNearDupIndex]] corpus index — exactly the
-    * [[minhashLshPairsFast]] relation restricted to batch×index
-    * pairs (the d12 oracle asserts that identity). Id spaces must be
-    * disjoint, batch ids below index ids, to keep the a<b pair
-    * convention. Scale shape: candidates come from the batch's band
-    * signatures equi-joined against the stored ones (the index side
-    * streams through a hash join — with a small batch Spark
-    * broadcasts the batch side and the index never shuffles), and
-    * verification touches only candidate docs' stored shingle rows.
-    */
-  def incrementalNearDups(spark: SparkSession, path: String,
-                          newSh: DataFrame, numHashes: Int = 16,
-                          rowsPerBand: Int = 4,
-                          threshold: Double = 0.5): DataFrame = {
-    val idxBands = spark.read.parquet(s"$path/bands")
-    val newBands = lshBandSignaturesFast(newSh, numHashes, rowsPerBand)
-    val cands = newBands.as("x").join(idxBands.as("y"),
-        col("x.b") === col("y.b") && col("x.sig") === col("y.sig"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-    val idxSh = spark.read.parquet(s"$path/shingles")
-    val sizes = newSh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-      .unionByName(spark.read.parquet(s"$path/sizes"))
-    val inter = cands
-      .join(newSh.as("nx"), col("a") === col("nx.doc_id"))
-      .join(idxSh.as("ny"), col("b") === col("ny.doc_id") &&
-        col("nx.shingle") === col("ny.shingle"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("i"))
-    scoreJaccard(inter, sizes, threshold)
-  }
-
-  /** [[writeNearDupIndex]] from per-doc shingle SETS
-    * ([[shingleSets]]): band signatures come out of the scan
-    * projection via the in-row kernel instead of a corpus-wide
-    * group-by, and sizes are `size(shset)` — same stored rows in all
-    * three index tables (kernel ≡ aggregation parity), one shuffle
-    * fewer per table.
+    * [[incrementalNearDupsSets]] from per-doc shingle SETS
+    * ([[shingleSets]]): the production-profile band signatures
+    * (in-row kernel, ≡ the [[lshBandSignaturesFast]] group-by) and the
+    * shingle rows the exact-Jaccard verify needs. Build-once /
+    * dedupe-many: the corpus is shingled and hashed exactly once, and
+    * every incoming batch afterwards pays only its own shingling plus
+    * a candidates-bounded verify against the stored rows — the
+    * existing corpus is never re-hashed. Overwriting a path drops its
+    * open [[NearDupIndex]] handle.
     */
   def writeNearDupIndexSets(sets: DataFrame, path: String,
                             numHashes: Int = 16,
@@ -804,40 +757,105 @@ object Dedup {
       .write.mode("overwrite").parquet(s"$path/bands")
     sets.select(col("doc_id"), explode(col("shset")).as("shingle"))
       .write.mode("overwrite").parquet(s"$path/shingles")
-    sets.select(col("doc_id"), size(col("shset")).as("n"))
-      .write.mode("overwrite").parquet(s"$path/sizes")
+    IndexCache.invalidate(sets.sparkSession, path)
   }
 
-  /** [[incrementalNearDups]] with the batch side given as shingle
-    * SETS: batch bands and sizes are in-row (kernel / `size`), the
-    * batch's exploded shingle rows feed the same verification joins —
-    * identical output relation (parity in DedupSimilaritySpec).
+  /** An opened [[writeNearDupIndexSets]] index: its band and shingle
+    * tables are resolved once (schema and listing), so a probe plans
+    * against them without re-reading the path. Get one through
+    * [[NearDupIndex.open]].
+    */
+  final class NearDupIndex private (bands: DataFrame, shingles: DataFrame) {
+
+    /** Near-dup pairs between a NEW batch of docs, given as shingle
+      * SETS with integral ids, and the index — exactly the
+      * [[minhashLshPairsFast]] relation restricted to batch×index
+      * pairs (the d12 oracle asserts that identity; the exploded-row
+      * form it replaced is the parity spec). Id spaces must be
+      * disjoint, batch ids below index ids, to keep the a<b pair
+      * convention.
+      *
+      * The batch is the small side by contract: ONE collect brings
+      * back each doc's id, shingle set and in-row band signatures, at
+      * most `PlanLiterals.MaxMapTerms` shingles and band keys in all,
+      * and they ride the plan as literal maps (band → signature →
+      * batch ids, shingle → batch ids, id → set size). The index is
+      * only scanned — never shuffled, never broadcast: each stored
+      * band row looks up the batch docs sharing its signature, the
+      * distinct (batch, index) candidate pairs are broadcast, and
+      * each stored shingle row of a candidate index doc counts, per
+      * candidate, whether the batch doc holds that shingle. The
+      * index doc's set size is its shingle-row count (the rows are
+      * its distinct shingles), so intersection and union come from
+      * that one aggregate.
+      */
+    def probe(newSets: DataFrame, numHashes: Int, rowsPerBand: Int,
+              threshold: Double): DataFrame = {
+      val numBands = numHashes / rowsPerBand
+      val batch = newSets.select(col("doc_id").cast("long"),
+          col("shset"),
+          bandSignaturesInRowFast(col("shset"), numHashes, rowsPerBand)
+            .getField("sig").as("sigs"))
+        .limit(PlanLiterals.MaxMapTerms + 1).collect()
+        .map(r => (r.getLong(0), r.getSeq[String](1), r.getSeq[Long](2)))
+      PlanLiterals.requireMapTerms(
+        batch.map(d => d._2.size + numBands).sum, "near-dup probe batch")
+      val aType = newSets.schema("doc_id").dataType
+      def pairs(df: DataFrame) = df.select(col("a").cast(aType).as("a"),
+        col("b"), col("jaccard"))
+      if (batch.isEmpty)
+        return pairs(shingles.limit(0).select(col("doc_id").as("a"),
+          col("doc_id").as("b"), lit(0.0).as("jaccard")))
+
+      def ids[K](kv: Seq[(K, Long)]): Map[K, Seq[Long]] =
+        kv.groupMap(_._1)(_._2).map { case (k, v) => k -> v.sorted }
+      val bySig = typedLit((0 until numBands).map(band =>
+        ids(batch.toSeq.map(d => d._3(band) -> d._1))))
+      val byShingle = typedLit(
+        ids(batch.toSeq.flatMap(d => d._2.map(_ -> d._1))))
+      val sizes = typedLit(batch.map(d => d._1 -> d._2.size).toMap)
+
+      // (a, b) = (batch doc, index doc); the stored `b` is the band.
+      // A band the probe does not compute matches nothing, as in a join.
+      val cands = bands
+        .select(explode(try_element_at(bySig, col("b") + 1)(col("sig")))
+            .as("a"),
+          col("doc_id").as("b"))
+        .distinct()
+      val counts = shingles.join(broadcast(cands),
+          col("doc_id") === col("b"))
+        .groupBy(col("a"), col("b"))
+        .agg(count_if(coalesce(array_contains(byShingle(col("shingle")),
+            col("a")), lit(false))).as("i"),
+          count(lit(1)).as("nb"))
+      pairs(counts.filter(col("i") > 0)
+        .select(col("a"), col("b"),
+          (col("i").cast("double") /
+            (sizes(col("a")) + col("nb") - col("i"))).as("jaccard"))
+        .filter(col("jaccard") >= threshold))
+    }
+  }
+
+  object NearDupIndex {
+    /** The session's handle on the index at `path`
+      * (`core.IndexCache`: opened once, revalidated per call).
+      */
+    def open(spark: SparkSession, path: String): NearDupIndex =
+      IndexCache.open(spark, path)(new NearDupIndex(
+        spark.read.parquet(s"$path/bands"),
+        spark.read.parquet(s"$path/shingles")))
+  }
+
+  /** Near-dup probe of a persisted [[writeNearDupIndexSets]] index
+    * through its open-once handle: [[NearDupIndex.probe]] on
+    * [[NearDupIndex.open]].
     */
   def incrementalNearDupsSets(spark: SparkSession, path: String,
                               newSets: DataFrame, numHashes: Int = 16,
                               rowsPerBand: Int = 4,
-                              threshold: Double = 0.5): DataFrame = {
-    val idxBands = spark.read.parquet(s"$path/bands")
-    val newBands = newSets.select(col("doc_id"),
-        explode(bandSignaturesInRowFast(col("shset"), numHashes,
-          rowsPerBand)).as("bs"))
-      .select(col("doc_id"), col("bs.b").as("b"), col("bs.sig").as("sig"))
-    val cands = newBands.as("x").join(idxBands.as("y"),
-        col("x.b") === col("y.b") && col("x.sig") === col("y.sig"))
-      .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct()
-    val idxSh = spark.read.parquet(s"$path/shingles")
-    val newSh = newSets.select(col("doc_id"),
-      explode(col("shset")).as("shingle"))
-    val sizes = newSets.select(col("doc_id"), size(col("shset")).as("n"))
-      .unionByName(spark.read.parquet(s"$path/sizes"))
-    val inter = cands
-      .join(newSh.as("nx"), col("a") === col("nx.doc_id"))
-      .join(idxSh.as("ny"), col("b") === col("ny.doc_id") &&
-        col("nx.shingle") === col("ny.shingle"))
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("i"))
-    scoreJaccard(inter, sizes, threshold)
-  }
+                              threshold: Double = 0.5): DataFrame =
+    NearDupIndex.open(spark, path)
+      .probe(newSets, numHashes, rowsPerBand, threshold)
 
   /** Per-token 60-bit hashes (15 hex chars of md5 → fits a signed
     * long in every engine). Materialize this as its own column before

@@ -402,49 +402,103 @@ object Similarity {
     * build-once / query-many shape a production vector store needs:
     * the assignment scan runs once, and every search afterwards
     * reads ~nProbe/numCells of the data and never re-derives norms.
+    * Overwriting a path drops its open [[IvfIndex]] handle.
     */
   def ivfWriteIndex(corpus: DataFrame, centroids: Array[Array[Double]],
                     path: String, idCol: String = "vec_id",
-                    vecCol: String = "embedding"): Unit =
+                    vecCol: String = "embedding"): Unit = {
     corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"),
         norm(col(vecCol)).as("n_nrm"))
       .withColumn("cell",
         element_at(nearestCells(col("n_vec"), centroids, 1), 1))
       .write.mode("overwrite").partitionBy("cell").parquet(path)
+    graft.core.IndexCache.invalidate(corpus.sparkSession, path)
+  }
 
-  /** IVF search against a persisted [[ivfWriteIndex]] index —
-    * result-identical to [[ivfSearch]] over the same corpus and
-    * centroids: same assignment expression, same scoring order over
-    * stored norms (parquet round-trips float64 exactly), same
-    * bounded-heap top-k. Pinned by spec and by e16 sharing e08's
-    * DuckDB oracle. The probed cell set is collected driver-side
-    * from the broadcast-small queries side (≤ numCells ids — a
-    * bounded, documented collect) and pushed into the scan as an IN
-    * predicate on the partition column, so only the probed
-    * directories are listed and read.
+  /** An opened [[ivfWriteIndex]] index: the relation is resolved once
+    * (schema and cell-partition listing), so a search plans against it
+    * without re-reading the path. Get one through [[IvfIndex.open]].
+    */
+  final class IvfIndex private (rel: DataFrame) {
+
+    /** Top-k search of `queries` over the `nProbe` nearest cells —
+      * result-identical to [[ivfSearch]] over the same corpus and
+      * centroids: same assignment expression, same scoring order over
+      * stored norms (parquet round-trips float64 exactly), same
+      * bounded-heap top-k. Pinned by spec and by e16 sharing e08's
+      * DuckDB oracle.
+      *
+      * The query side is the small side by contract: ONE collect
+      * brings back each query's id, float64 vector, norm and probed
+      * cells, all computed executor-side by [[norm]] and
+      * [[nearestCells]] — no arithmetic is copied to the driver. The
+      * collect is bounded: at most `PlanLiterals.MaxDoubles /
+      * (dim + nProbe + 2)` rows (15,420 at dim 64, nProbe 2) come
+      * back, and a larger query side fails before any literal is
+      * built. The union of the probed cells becomes an IN predicate
+      * on the partition column, so only those directories are read;
+      * the queries ride the plan as literals (the [[lshKnn]] shape),
+      * and each index row scores the queries that probe its cell in
+      * the same row. A request is three jobs: the query collect, and
+      * the top-k's map stage and result.
+      */
+    def search(queries: DataFrame, centroids: Array[Array[Double]],
+               k: Int, nProbe: Int = 4, idCol: String = "vec_id",
+               vecCol: String = "embedding"): DataFrame = {
+      val perQuery = centroids.headOption.fold(0)(_.length).toLong +
+        nProbe + 2
+      val maxRows = graft.core.PlanLiterals.MaxDoubles / perQuery
+      val qRows = queries.select(col(idCol).as("q_id"),
+          col(vecCol).cast("array<double>").as("q_vec"),
+          norm(col(vecCol)).as("q_nrm"),
+          nearestCells(col(vecCol), centroids, nProbe).as("q_cells"))
+        .limit((maxRows + 1).toInt).collect()
+      graft.core.PlanLiterals.requireDoubles(qRows.length * perQuery,
+        "ivfSearchIndexed query literals")
+      if (qRows.isEmpty)
+        return topKPerQuery(rel.limit(0).select(
+          lit(null).cast(queries.schema(idCol).dataType).as("q_id"),
+          col("n_id"), lit(0.0).as("cos")), "cos", scoreAsc = false, k)
+      val probed = qRows.flatMap(_.getSeq[Int](3)).distinct.sorted
+      val qlit = array(qRows.map { r =>
+        struct(lit(r.get(0)).as("q_id"),
+          typedLit(r.getSeq[Double](1)).as("q_vec"),
+          lit(r.getDouble(2)).as("q_nrm"),
+          typedLit(r.getSeq[Int](3)).as("q_cells"))
+      }: _*)
+      val scored = rel.filter(col("cell").isin(probed: _*))
+        .select(col("n_id"), col("n_vec"), col("n_nrm"),
+          explode(filter(qlit, q => array_contains(q("q_cells"),
+            col("cell")) && q("q_id") =!= col("n_id"))).as("q"))
+        .select(col("q")("q_id").as("q_id"), col("n_id"),
+          cosineFromNorms(col("q")("q_vec"), col("n_vec"),
+            col("q")("q_nrm"), col("n_nrm")).as("cos"))
+      topKPerQuery(scored, "cos", scoreAsc = false, k)
+    }
+  }
+
+  object IvfIndex {
+    /** The session's handle on the index at `path`
+      * (`core.IndexCache`: opened once, revalidated per call).
+      */
+    def open(spark: SparkSession, path: String): IvfIndex =
+      graft.core.IndexCache.open(spark, path)(
+        new IvfIndex(spark.read.parquet(path)))
+  }
+
+  /** IVF search against a persisted [[ivfWriteIndex]] index through
+    * its open-once handle: [[IvfIndex.search]] on [[IvfIndex.open]].
+    * A warm call lists nothing and reads no schema; it collects the
+    * query side once (at most `PlanLiterals.MaxDoubles / (dim +
+    * nProbe + 2)` rows) and scans only the probed cells.
     */
   def ivfSearchIndexed(spark: SparkSession, path: String,
                        queries: DataFrame,
                        centroids: Array[Array[Double]], k: Int,
                        nProbe: Int = 4, idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame = {
-    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-      norm(col(vecCol)).as("q_nrm"))
-    val qCells = q.select(col("q_id"), col("q_vec"), col("q_nrm"),
-      explode(nearestCells(col("q_vec"), centroids, nProbe)).as("cell"))
-    val probed = qCells.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val idx = spark.read.parquet(path)
-      .filter(col("cell").isin(probed: _*))
-    // the hint sits on the join side only: on qCells itself it would
-    // also ride into the probed-cell collect above, which has no join
-    val scored = idx.join(broadcast(qCells), Seq("cell"))
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id"),
-        cosineFromNorms(col("q_vec"), col("n_vec"),
-          col("q_nrm"), col("n_nrm")).as("cos"))
-    topKPerQuery(scored, "cos", scoreAsc = false, k)
-  }
+                       vecCol: String = "embedding"): DataFrame =
+    IvfIndex.open(spark, path)
+      .search(queries, centroids, k, nProbe, idCol, vecCol)
 
   /** Embedding-cosine near-duplicate pairs above a threshold —
     * exact all-pairs variant (a < b). Quadratic: the verification

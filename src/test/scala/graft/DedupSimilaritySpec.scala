@@ -364,9 +364,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .createTempDirectory("graft-idx-parity-sh-").toString
     val p2 = java.nio.file.Files
       .createTempDirectory("graft-idx-parity-sets-").toString
-    Dedup.writeNearDupIndex(sh.filter(col("doc_id") >= 100), p1)
+    NearDupIndexComposed.writeNearDupIndex(sh.filter(col("doc_id") >= 100), p1)
     Dedup.writeNearDupIndexSets(sets.filter(col("doc_id") >= 100), p2)
-    val viaSh = key(Dedup.incrementalNearDups(spark, p1,
+    val viaSh = key(NearDupIndexComposed.incrementalNearDups(spark, p1,
       sh.filter(col("doc_id") < 100), threshold = 0.5))
     val viaSets = key(Dedup.incrementalNearDupsSets(spark, p2,
       sets.filter(col("doc_id") < 100), threshold = 0.5))

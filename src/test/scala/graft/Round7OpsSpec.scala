@@ -70,8 +70,8 @@ class Round7OpsSpec extends AnyFunSuite {
       .collect().map(_.toSeq).toSet
     val path = java.nio.file.Files
       .createTempDirectory("lsh-idx-spec-").toString
-    Dedup.writeNearDupIndex(sh.filter(col("doc_id") >= 100), path)
-    val inc = Dedup.incrementalNearDups(spark, path,
+    NearDupIndexComposed.writeNearDupIndex(sh.filter(col("doc_id") >= 100), path)
+    val inc = NearDupIndexComposed.incrementalNearDups(spark, path,
       sh.filter(col("doc_id") < 100), threshold = 0.5)
       .collect().map(_.toSeq).toSet
     assert(inc == full)
