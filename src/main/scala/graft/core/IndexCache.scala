@@ -1,35 +1,35 @@
 package graft.core
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Open-once handles on persisted indexes (`Similarity.IvfIndex`,
-  * `Dedup.NearDupIndex`), keyed by (session, qualified path).
+/** Open-once reads of persisted index tables, keyed by (session,
+  * qualified path).
   *
   * `spark.read.parquet(path)` lists the directory tree and runs a
   * schema-inference job (a `parallelize(...).collect()` over the
-  * footers) every time it is called. An index that serves many
-  * requests is read once: the handle keeps the resolved relations, so
-  * their schema and `InMemoryFileIndex` listing are reused, and a
-  * request adds no listing and no schema job to its own.
+  * footers) every time it is called. A table that serves many
+  * requests is read once: [[read]] keeps the resolved relation, so its
+  * schema and `InMemoryFileIndex` listing are reused, and a request
+  * adds no listing and no schema job to its own.
   *
-  * Revalidation: each [[open]] stats the index root once. A handle is
-  * reused only while the root's modification time is the one it was
-  * opened at; an overwrite deletes and recreates the root's entries,
-  * which moves that time. A missing root drops the entry (the reopen
-  * then fails as a fresh read would). The writers drop the entry
-  * themselves through [[invalidate]], so a same-process overwrite
-  * never depends on the clock's resolution.
+  * Revalidation: each [[read]] stats the table path once. A cached
+  * relation is reused only while the path's modification time is the
+  * one it was read at; an overwrite deletes and recreates the path,
+  * which moves that time. A missing path drops the entry (the reread
+  * then fails as a fresh read would). The index writers drop the
+  * entries under the path they overwrite through [[invalidate]], so a
+  * same-process overwrite never depends on the clock's resolution.
   *
-  * The cache holds at most [[MaxEntries]] handles, least recently used
+  * The cache holds at most [[MaxEntries]] tables, least recently used
   * first out: callers that write a fresh temporary index per call (the
   * gate rows) never grow it.
   */
 object IndexCache {
-  val MaxEntries = 4
+  val MaxEntries = 8
 
   private final case class Key(session: SparkSession, path: String)
-  private final case class Entry(modified: Long, handle: AnyRef)
+  private final case class Entry(modified: Long, table: DataFrame)
 
   private val entries =
     new java.util.LinkedHashMap[Key, Entry](16, 0.75f, true) {
@@ -44,12 +44,10 @@ object IndexCache {
     (fs, fs.makeQualified(p))
   }
 
-  /** The handle for `path` in `spark`: the cached one when it is of
-    * type `H` and the root is unchanged since it was opened, else a new
-    * one from `load` (which must read the index itself).
+  /** `spark.read.parquet(path)`, resolved once per (session, path) and
+    * reused while the path is unchanged.
     */
-  def open[H <: AnyRef](spark: SparkSession, path: String)(load: => H)(
-      implicit ct: scala.reflect.ClassTag[H]): H = {
+  def read(spark: SparkSession, path: String): DataFrame = {
     val (fs, q) = qualify(spark, path)
     val modified =
       try fs.getFileStatus(q).getModificationTime
@@ -57,32 +55,33 @@ object IndexCache {
     val key = Key(spark, q.toString)
     val cached = entries.synchronized {
       val e = entries.get(key)
-      if (e == null || e.modified == modified) e
+      if (e != null && e.modified == modified) e.table
       else { entries.remove(key); null }
     }
-    cached match {
-      case Entry(_, h: H) if modified >= 0 => h
-      case _ =>
-        val h = load
-        entries.synchronized { entries.put(key, Entry(modified, h)) }
-        h
+    if (cached != null) cached
+    else {
+      val table = spark.read.parquet(path)
+      entries.synchronized(entries.put(key, Entry(modified, table)))
+      table
     }
   }
 
-  /** Drop every session's handle on `path`; the index writers call it
-    * after they overwrite the path.
+  /** Drop every session's tables at or under `path`; the index writers
+    * call it after they overwrite the path.
     */
   def invalidate(spark: SparkSession, path: String): Unit = {
     val q = qualify(spark, path)._2.toString
-    entries.synchronized { entries.keySet.removeIf(_.path == q) }
+    entries.synchronized {
+      entries.keySet.removeIf(k => k.path == q || k.path.startsWith(q + "/"))
+    }
   }
 
-  /** Whether `spark` holds a handle on `path`. */
-  def holds(spark: SparkSession, path: String): Boolean = {
+  /** Whether `spark` holds the table at `path`. */
+  private[graft] def holds(spark: SparkSession, path: String): Boolean = {
     val q = qualify(spark, path)._2.toString
     entries.synchronized(entries.containsKey(Key(spark, q)))
   }
 
-  /** Handles currently held (at most [[MaxEntries]]). */
-  def size: Int = entries.synchronized(entries.size)
+  /** Tables currently held (at most [[MaxEntries]]). */
+  private[graft] def size: Int = entries.synchronized(entries.size)
 }

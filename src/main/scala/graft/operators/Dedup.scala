@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.core.{Checkpoints, IndexCache, LocalFinish, PlanLiterals}
+import graft.core.{Checkpoints, IndexCache, LocalFinish}
 import graft.text.Analysis
 
 /** Deduplication operators for training-data pipelines.
@@ -745,7 +745,7 @@ object Dedup {
     * every incoming batch afterwards pays only its own shingling plus
     * a candidates-bounded verify against the stored rows — the
     * existing corpus is never re-hashed. Overwriting a path drops its
-    * open [[NearDupIndex]] handle.
+    * cached reads (`core.IndexCache`).
     */
   def writeNearDupIndexSets(sets: DataFrame, path: String,
                             numHashes: Int = 16,
@@ -760,102 +760,53 @@ object Dedup {
     IndexCache.invalidate(sets.sparkSession, path)
   }
 
-  /** An opened [[writeNearDupIndexSets]] index: its band and shingle
-    * tables are resolved once (schema and listing), so a probe plans
-    * against them without re-reading the path. Get one through
-    * [[NearDupIndex.open]].
-    */
-  final class NearDupIndex private (bands: DataFrame, shingles: DataFrame) {
-
-    /** Near-dup pairs between a NEW batch of docs, given as shingle
-      * SETS with integral ids, and the index — exactly the
-      * [[minhashLshPairsFast]] relation restricted to batch×index
-      * pairs (the d12 oracle asserts that identity; the exploded-row
-      * form it replaced is the parity spec). Id spaces must be
-      * disjoint, batch ids below index ids, to keep the a<b pair
-      * convention.
-      *
-      * The batch is the small side by contract: ONE collect brings
-      * back each doc's id, shingle set and in-row band signatures, at
-      * most `PlanLiterals.MaxMapTerms` shingles and band keys in all,
-      * and they ride the plan as literal maps (band → signature →
-      * batch ids, shingle → batch ids, id → set size). The index is
-      * only scanned — never shuffled, never broadcast: each stored
-      * band row looks up the batch docs sharing its signature, the
-      * distinct (batch, index) candidate pairs are broadcast, and
-      * each stored shingle row of a candidate index doc counts, per
-      * candidate, whether the batch doc holds that shingle. The
-      * index doc's set size is its shingle-row count (the rows are
-      * its distinct shingles), so intersection and union come from
-      * that one aggregate.
-      */
-    def probe(newSets: DataFrame, numHashes: Int, rowsPerBand: Int,
-              threshold: Double): DataFrame = {
-      val numBands = numHashes / rowsPerBand
-      val batch = newSets.select(col("doc_id").cast("long"),
-          col("shset"),
-          bandSignaturesInRowFast(col("shset"), numHashes, rowsPerBand)
-            .getField("sig").as("sigs"))
-        .limit(PlanLiterals.MaxMapTerms + 1).collect()
-        .map(r => (r.getLong(0), r.getSeq[String](1), r.getSeq[Long](2)))
-      PlanLiterals.requireMapTerms(
-        batch.map(d => d._2.size + numBands).sum, "near-dup probe batch")
-      val aType = newSets.schema("doc_id").dataType
-      def pairs(df: DataFrame) = df.select(col("a").cast(aType).as("a"),
-        col("b"), col("jaccard"))
-      if (batch.isEmpty)
-        return pairs(shingles.limit(0).select(col("doc_id").as("a"),
-          col("doc_id").as("b"), lit(0.0).as("jaccard")))
-
-      def ids[K](kv: Seq[(K, Long)]): Map[K, Seq[Long]] =
-        kv.groupMap(_._1)(_._2).map { case (k, v) => k -> v.sorted }
-      val bySig = typedLit((0 until numBands).map(band =>
-        ids(batch.toSeq.map(d => d._3(band) -> d._1))))
-      val byShingle = typedLit(
-        ids(batch.toSeq.flatMap(d => d._2.map(_ -> d._1))))
-      val sizes = typedLit(batch.map(d => d._1 -> d._2.size).toMap)
-
-      // (a, b) = (batch doc, index doc); the stored `b` is the band.
-      // A band the probe does not compute matches nothing, as in a join.
-      val cands = bands
-        .select(explode(try_element_at(bySig, col("b") + 1)(col("sig")))
-            .as("a"),
-          col("doc_id").as("b"))
-        .distinct()
-      val counts = shingles.join(broadcast(cands),
-          col("doc_id") === col("b"))
-        .groupBy(col("a"), col("b"))
-        .agg(count_if(coalesce(array_contains(byShingle(col("shingle")),
-            col("a")), lit(false))).as("i"),
-          count(lit(1)).as("nb"))
-      pairs(counts.filter(col("i") > 0)
-        .select(col("a"), col("b"),
-          (col("i").cast("double") /
-            (sizes(col("a")) + col("nb") - col("i"))).as("jaccard"))
-        .filter(col("jaccard") >= threshold))
-    }
-  }
-
-  object NearDupIndex {
-    /** The session's handle on the index at `path`
-      * (`core.IndexCache`: opened once, revalidated per call).
-      */
-    def open(spark: SparkSession, path: String): NearDupIndex =
-      IndexCache.open(spark, path)(new NearDupIndex(
-        spark.read.parquet(s"$path/bands"),
-        spark.read.parquet(s"$path/shingles")))
-  }
-
-  /** Near-dup probe of a persisted [[writeNearDupIndexSets]] index
-    * through its open-once handle: [[NearDupIndex.probe]] on
-    * [[NearDupIndex.open]].
+  /** Near-dup pairs between a NEW batch of docs, given as shingle
+    * SETS, and a persisted [[writeNearDupIndexSets]] index — exactly
+    * the [[minhashLshPairsFast]] relation restricted to batch×index
+    * pairs (the d12 oracle asserts that identity; the exploded-row
+    * form it replaced is the parity spec). Id spaces must be disjoint,
+    * batch ids below index ids, to keep the a<b pair convention.
+    *
+    * The index tables are read once per session and path
+    * (`core.IndexCache`), so a warm probe lists nothing and reads no
+    * schema. The index is only scanned — never shuffled, never
+    * broadcast. The batch is the small side: its in-row band
+    * signatures are broadcast, and the stored band rows stream through
+    * that hash join; the distinct (batch, index) candidate pairs are
+    * broadcast, each stored shingle row of a candidate index doc meets
+    * them, and a broadcast of the batch's shingle rows marks the
+    * shared ones. One aggregate per pair then gives the intersection
+    * and the index doc's set size (its stored rows are its distinct
+    * shingles). Only aggregated pairs cross a shuffle. A batch doc
+    * with no shingle has no band and so no pair, as in the join form.
     */
   def incrementalNearDupsSets(spark: SparkSession, path: String,
                               newSets: DataFrame, numHashes: Int = 16,
                               rowsPerBand: Int = 4,
-                              threshold: Double = 0.5): DataFrame =
-    NearDupIndex.open(spark, path)
-      .probe(newSets, numHashes, rowsPerBand, threshold)
+                              threshold: Double = 0.5): DataFrame = {
+    val idxBands = IndexCache.read(spark, s"$path/bands")
+    val idxSh = IndexCache.read(spark, s"$path/shingles")
+    val newBands = newSets.select(col("doc_id").as("a"),
+        size(col("shset")).as("na"),
+        explode(bandSignaturesInRowFast(col("shset"), numHashes,
+          rowsPerBand)).as("bs"))
+    val cands = idxBands.join(broadcast(newBands),
+        col("b") === col("bs.b") && col("sig") === col("bs.sig"))
+      .select(col("a"), col("na"), col("doc_id").as("b"))
+      .distinct()
+    val newSh = newSets.select(col("doc_id").as("x_a"),
+      explode(col("shset")).as("x_shingle"))
+    idxSh.join(broadcast(cands), col("doc_id") === col("b"))
+      .join(broadcast(newSh), col("a") === col("x_a") &&
+        col("shingle") === col("x_shingle"), "left_outer")
+      .groupBy(col("a"), col("b"), col("na"))
+      .agg(count(col("x_a")).as("i"), count(lit(1)).as("nb"))
+      .filter(col("i") > 0)
+      .select(col("a"), col("b"),
+        (col("i").cast("double") /
+          (col("na") + col("nb") - col("i"))).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
+  }
 
   /** Per-token 60-bit hashes (15 hex chars of md5 → fits a signed
     * long in every engine). Materialize this as its own column before

@@ -402,7 +402,7 @@ object Similarity {
     * build-once / query-many shape a production vector store needs:
     * the assignment scan runs once, and every search afterwards
     * reads ~nProbe/numCells of the data and never re-derives norms.
-    * Overwriting a path drops its open [[IvfIndex]] handle.
+    * Overwriting a path drops its cached read (`core.IndexCache`).
     */
   def ivfWriteIndex(corpus: DataFrame, centroids: Array[Array[Double]],
                     path: String, idCol: String = "vec_id",
@@ -415,90 +415,71 @@ object Similarity {
     graft.core.IndexCache.invalidate(corpus.sparkSession, path)
   }
 
-  /** An opened [[ivfWriteIndex]] index: the relation is resolved once
-    * (schema and cell-partition listing), so a search plans against it
-    * without re-reading the path. Get one through [[IvfIndex.open]].
-    */
-  final class IvfIndex private (rel: DataFrame) {
-
-    /** Top-k search of `queries` over the `nProbe` nearest cells —
-      * result-identical to [[ivfSearch]] over the same corpus and
-      * centroids: same assignment expression, same scoring order over
-      * stored norms (parquet round-trips float64 exactly), same
-      * bounded-heap top-k. Pinned by spec and by e16 sharing e08's
-      * DuckDB oracle.
-      *
-      * The query side is the small side by contract: ONE collect
-      * brings back each query's id, float64 vector, norm and probed
-      * cells, all computed executor-side by [[norm]] and
-      * [[nearestCells]] — no arithmetic is copied to the driver. The
-      * collect is bounded: at most `PlanLiterals.MaxDoubles /
-      * (dim + nProbe + 2)` rows (15,420 at dim 64, nProbe 2) come
-      * back, and a larger query side fails before any literal is
-      * built. The union of the probed cells becomes an IN predicate
-      * on the partition column, so only those directories are read;
-      * the queries ride the plan as literals (the [[lshKnn]] shape),
-      * and each index row scores the queries that probe its cell in
-      * the same row. A request is three jobs: the query collect, and
-      * the top-k's map stage and result.
-      */
-    def search(queries: DataFrame, centroids: Array[Array[Double]],
-               k: Int, nProbe: Int = 4, idCol: String = "vec_id",
-               vecCol: String = "embedding"): DataFrame = {
-      val perQuery = centroids.headOption.fold(0)(_.length).toLong +
-        nProbe + 2
-      val maxRows = graft.core.PlanLiterals.MaxDoubles / perQuery
-      val qRows = queries.select(col(idCol).as("q_id"),
-          col(vecCol).cast("array<double>").as("q_vec"),
-          norm(col(vecCol)).as("q_nrm"),
-          nearestCells(col(vecCol), centroids, nProbe).as("q_cells"))
-        .limit((maxRows + 1).toInt).collect()
-      graft.core.PlanLiterals.requireDoubles(qRows.length * perQuery,
-        "ivfSearchIndexed query literals")
-      if (qRows.isEmpty)
-        return topKPerQuery(rel.limit(0).select(
-          lit(null).cast(queries.schema(idCol).dataType).as("q_id"),
-          col("n_id"), lit(0.0).as("cos")), "cos", scoreAsc = false, k)
-      val probed = qRows.flatMap(_.getSeq[Int](3)).distinct.sorted
-      val qlit = array(qRows.map { r =>
-        struct(lit(r.get(0)).as("q_id"),
-          typedLit(r.getSeq[Double](1)).as("q_vec"),
-          lit(r.getDouble(2)).as("q_nrm"),
-          typedLit(r.getSeq[Int](3)).as("q_cells"))
-      }: _*)
-      val scored = rel.filter(col("cell").isin(probed: _*))
-        .select(col("n_id"), col("n_vec"), col("n_nrm"),
-          explode(filter(qlit, q => array_contains(q("q_cells"),
-            col("cell")) && q("q_id") =!= col("n_id"))).as("q"))
-        .select(col("q")("q_id").as("q_id"), col("n_id"),
-          cosineFromNorms(col("q")("q_vec"), col("n_vec"),
-            col("q")("q_nrm"), col("n_nrm")).as("cos"))
-      topKPerQuery(scored, "cos", scoreAsc = false, k)
-    }
-  }
-
-  object IvfIndex {
-    /** The session's handle on the index at `path`
-      * (`core.IndexCache`: opened once, revalidated per call).
-      */
-    def open(spark: SparkSession, path: String): IvfIndex =
-      graft.core.IndexCache.open(spark, path)(
-        new IvfIndex(spark.read.parquet(path)))
-  }
-
-  /** IVF search against a persisted [[ivfWriteIndex]] index through
-    * its open-once handle: [[IvfIndex.search]] on [[IvfIndex.open]].
-    * A warm call lists nothing and reads no schema; it collects the
-    * query side once (at most `PlanLiterals.MaxDoubles / (dim +
-    * nProbe + 2)` rows) and scans only the probed cells.
+  /** IVF search against a persisted [[ivfWriteIndex]] index —
+    * result-identical to [[ivfSearch]] over the same corpus and
+    * centroids: same assignment expression, same scoring order over
+    * stored norms (parquet round-trips float64 exactly), same
+    * bounded-heap top-k. Pinned by spec and by e16 sharing e08's
+    * DuckDB oracle.
+    *
+    * The index relation is read once per session and path
+    * (`core.IndexCache`), so a warm call lists nothing and reads no
+    * schema. The query side is the small side by contract: ONE collect
+    * brings back each query's id, float64 vector, norm and probed
+    * cells, all computed executor-side by [[norm]] and
+    * [[nearestCells]] — no arithmetic is copied to the driver. The
+    * collect is bounded: at most `PlanLiterals.MaxDoubles / (dim +
+    * nProbe + 2)` rows (15,420 at dim 64, nProbe 2) come back, and a
+    * larger query side fails before any literal is built. The union of
+    * the probed cells becomes an IN predicate on the partition column,
+    * so only those directories are read. The queries ride the plan as
+    * literals (the [[lshKnn]] shape): an array of the queries and a
+    * map from each probed cell to the positions of the queries that
+    * probe it, so an index row looks up its cell and scores only those
+    * queries, as a join on `cell` would. A warm request is three jobs:
+    * the query collect, and the top-k's map stage and result.
     */
   def ivfSearchIndexed(spark: SparkSession, path: String,
                        queries: DataFrame,
                        centroids: Array[Array[Double]], k: Int,
                        nProbe: Int = 4, idCol: String = "vec_id",
-                       vecCol: String = "embedding"): DataFrame =
-    IvfIndex.open(spark, path)
-      .search(queries, centroids, k, nProbe, idCol, vecCol)
+                       vecCol: String = "embedding"): DataFrame = {
+    val perQuery = centroids.headOption.fold(0)(_.length).toLong +
+      nProbe + 2
+    val maxRows = graft.core.PlanLiterals.MaxDoubles / perQuery
+    val qRows = queries.select(col(idCol).as("q_id"),
+        col(vecCol).cast("array<double>").as("q_vec"),
+        norm(col(vecCol)).as("q_nrm"),
+        nearestCells(col(vecCol), centroids, nProbe).as("q_cells"))
+      .limit((maxRows + 1).toInt).collect()
+    graft.core.PlanLiterals.requireDoubles(qRows.length * perQuery,
+      "ivfSearchIndexed query literals")
+    val rel = graft.core.IndexCache.read(spark, path)
+    if (qRows.isEmpty)
+      return topKPerQuery(rel.limit(0).select(
+        lit(null).cast(queries.schema(idCol).dataType).as("q_id"),
+        col("n_id"), lit(0.0).as("cos")), "cos", scoreAsc = false, k)
+    val qs = array(qRows.toSeq.map { r =>
+      struct(lit(r.get(0)).as("q_id"),
+        typedLit(r.getSeq[Double](1)).as("q_vec"),
+        lit(r.getDouble(2)).as("q_nrm"))
+    }: _*)
+    // cell -> 1-based positions in `qs` of the queries probing it
+    val byCell = qRows.indices
+      .flatMap(i => qRows(i).getSeq[Int](3).map(_ -> (i + 1)))
+      .groupMap(_._1)(_._2)
+    val cellQs = typedLit(byCell.map { case (c, qi) => c -> qi.toSeq })
+    val scored = rel.filter(col("cell").isin(byCell.keys.toSeq.sorted: _*))
+      .select(col("n_id"), col("n_vec"), col("n_nrm"),
+        explode(cellQs(col("cell"))).as("qi"))
+      .select(col("n_id"), col("n_vec"), col("n_nrm"),
+        element_at(qs, col("qi")).as("q"))
+      .filter(col("q.q_id") =!= col("n_id"))
+      .select(col("q.q_id").as("q_id"), col("n_id"),
+        cosineFromNorms(col("q.q_vec"), col("n_vec"),
+          col("q.q_nrm"), col("n_nrm")).as("cos"))
+    topKPerQuery(scored, "cos", scoreAsc = false, k)
+  }
 
   /** Embedding-cosine near-duplicate pairs above a threshold —
     * exact all-pairs variant (a < b). Quadratic: the verification

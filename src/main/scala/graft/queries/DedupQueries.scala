@@ -108,7 +108,7 @@ object DedupQueries {
     // exactly that restriction, so persistence round-trip + split
     // candidate generation are both hash-verified.
     "d12_incremental_neardup" -> ((s, d) => {
-      // sets form: index bands/sizes and batch bands all in-row —
+      // sets form: index bands and batch bands all in-row —
       // no corpus-wide group-by on either side of the persistence
       val sets = Dedup.shingleSets(Tables.documents(s, d), "doc_id",
         docTokens(s))

@@ -2,23 +2,24 @@ package graft
 
 import java.nio.file.{Files, Path}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.core.IndexCache
 import graft.operators.{Dedup, Similarity}
 
-/** What one served request costs, and that the open-once index
-  * handles behind [[Similarity.ivfSearchIndexed]] and
+/** What one served request costs, and that the open-once index reads
+  * (`core.IndexCache`) behind [[Similarity.ivfSearchIndexed]] and
   * [[Dedup.incrementalNearDupsSets]] stay correct: a warm request runs
   * a pinned number of Spark jobs and no parquet schema read, the
   * near-dup probe never moves index rows through an exchange, and a
-  * handle follows overwrites, deletes and its cache bound.
+  * cached read follows overwrites, deletes and its cache bound.
   */
 class LookupCostSpec extends AnyFunSuite with BeforeAndAfterAll
     with AdaptiveSparkPlanHelper {
@@ -106,15 +107,16 @@ class LookupCostSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(schemaReads(warm).isEmpty, warm.mkString("\n"))
   }
 
-  test("a warm near-dup probe is 5 jobs and reads no parquet schema") {
+  test("a warm near-dup probe is 6 jobs and reads no parquet schema") {
     val batch = docSets.filter(col("doc_id") < 16)
     ndPath
     val cold = jobs(probe(ndPath, batch).collect())
     assert(schemaReads(cold).size == 2, cold.mkString("\n"))
     val warm = jobs(probe(ndPath, batch).collect())
-    // the batch collect; the candidate pairs' map stage and broadcast;
-    // the verify's map stage and result
-    assert(warm.size == 5, warm.mkString("\n"))
+    // the batch bands' broadcast; the candidate pairs' map stage and
+    // broadcast; the batch shingles' broadcast; the verify's map stage
+    // and result
+    assert(warm.size == 6, warm.mkString("\n"))
     assert(schemaReads(warm).isEmpty, warm.mkString("\n"))
   }
 
@@ -122,21 +124,49 @@ class LookupCostSpec extends AnyFunSuite with BeforeAndAfterAll
     val res = probe(ndPath, docSets.filter(col("doc_id") < 16))
     res.collect()
     val plan = res.queryExecution.executedPlan
-    def exchanged(p: SparkPlan) = (p match {
-      case e: ShuffleExchangeExec => Some(e.child)
-      case e: BroadcastExchangeExec => Some(e.child)
-      case _ => None
-    }).map {
+    def unwrap(p: SparkPlan) = p match {
       case w: WholeStageCodegenExec => w.child
       case c => c
     }
-    val inputs = collect(plan)(Function.unlift(exchanged))
-    // two shuffles of aggregated (batch, index) pairs and one broadcast
-    // of the distinct candidates: every exchange sits on an aggregate
-    assert(inputs.size == 3, plan.toString)
-    assert(inputs.forall(_.isInstanceOf[HashAggregateExec]), plan.toString)
-    assert(collect(plan) { case b: BroadcastExchangeExec => b }.size == 1,
+    val exchanged = collect(plan) {
+      case e: ShuffleExchangeExec => unwrap(e.child)
+      case e: BroadcastExchangeExec => unwrap(e.child)
+    }
+    def readsIndex(p: SparkPlan) = collect(p) {
+      case s: FileSourceScanExec
+          if s.relation.location.rootPaths.exists(
+            _.toString.contains(ndPath)) => s
+    }.nonEmpty
+    // the index is scanned only below aggregates: every exchange over
+    // index rows carries aggregated (batch, index) pairs, and the three
+    // broadcasts are the candidates and the batch's bands and shingles
+    assert(exchanged.nonEmpty && exchanged.forall(c =>
+      c.isInstanceOf[HashAggregateExec] || !readsIndex(c)), plan.toString)
+    assert(collect(plan) { case b: BroadcastExchangeExec => b }.size == 3,
       plan.toString)
+  }
+
+  test("short docs and null ids in a batch give the reference pairs") {
+    val text = docs.filter(col("doc_id") === 120).select(col("text"))
+      .head().getString(0)
+    val extra = spark.createDataFrame(java.util.Arrays.asList(
+        Row(90L, "two words"), Row(91L, "one"), Row(92L, ""),
+        Row(93L, text), Row(null, text)),
+      StructType(Seq(StructField("doc_id", LongType),
+        StructField("text", StringType))))
+    val batch = docs.filter(col("doc_id") < 16)
+      .select(col("doc_id").cast("long"), col("text")).unionByName(extra)
+    val ref = tmp("lookup-cost-nd-ref-")
+    val sh = Dedup.shingles(docs, "doc_id",
+      graft.text.TextOps.tokenize(col("text")))
+    NearDupIndexComposed.writeNearDupIndex(sh.filter(col("doc_id") >= 100),
+      ref, 32, 4)
+    val want = rows(NearDupIndexComposed.incrementalNearDups(spark, ref,
+      Dedup.shingles(batch, "doc_id",
+        graft.text.TextOps.tokenize(col("text"))), 32, 4))
+    assert(want.map(r => (r(0).toString, r(1).toString))
+      .contains(("93", "120")), want)
+    assert(rows(probe(ndPath, sets(batch))) == want)
   }
 
   test("an overwritten IVF index serves its new contents") {
@@ -180,7 +210,7 @@ class LookupCostSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(second != first, "the two indexes must differ for this check")
   }
 
-  test("a deleted index path drops its handle") {
+  test("a deleted index path drops its cached read") {
     val path = tmp("lookup-cost-ivf-del-")
     Similarity.ivfWriteIndex(emb, ctrs, path)
     search(path).collect()
@@ -190,7 +220,7 @@ class LookupCostSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(!IndexCache.holds(spark, path))
   }
 
-  test("the handle cache never holds more than its bound") {
+  test("the index read cache never holds more than its bound") {
     val paths = (0 until IndexCache.MaxEntries + 2).map { i =>
       val p = tmp(s"lookup-cost-ivf-lru-$i-")
       Similarity.ivfWriteIndex(emb, ctrs, p)
