@@ -40,17 +40,6 @@ object Csv {
       .csv(path)
       .select(col("id"), col("text"), col("target").as("class"))
 
-  /** S4 — schema-inferred CSV scan (the reference's commented-out /
-    * notebook-demo variant, `LogisticRegression.py:46`).
-    */
-  def inferred(spark: SparkSession, path: String): DataFrame =
-    spark.read
-      .option("header", "true")
-      .option("multiLine", "true")
-      .option("escape", "\"")
-      .option("inferSchema", "true")
-      .csv(path)
-
   /** Location of the reference's training data — overridable via
     * SPARK_GRAFT_TRAIN_CSV so bench/verify run on hosts without the
     * reference mount.

@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
   * cost curves as a single text file via
   * `sc.parallelize(cost_array).coalesce(1).saveAsTextFile(dir)`
   * (`RDD_logisticregression.py:253-254`) and re-reads them for
-  * plotting (S7). Output layout matches: one part file + _SUCCESS.
+  * plotting (S7; the specs' reader is `SpecSupport.readCostCurve`).
+  * Output layout matches: one part file + _SUCCESS.
   */
 object Sinks {
 
@@ -20,22 +21,4 @@ object Sinks {
   def costCurve(spark: SparkSession, costs: Seq[Double],
                 dir: String): Unit =
     textSingleFile(spark, costs.map(_.toString), dir)
-
-  /** S7 — golden-output re-scan: read a saved cost curve back as
-    * doubles (`utils/plots.py:61-73`). Plain JVM IO — these files are
-    * tiny driver artifacts by construction (one float per iteration).
-    */
-  def readCostCurve(dir: String): Seq[Double] = {
-    val d = new java.io.File(dir)
-    // listFiles() is null for a missing/non-directory path; an absent
-    // curve must fail loudly, not read back as an empty Seq
-    val parts = Option(d.listFiles())
-      .getOrElse(sys.error(s"readCostCurve: no such directory: $dir"))
-      .filter(_.getName.startsWith("part-")).sorted
-    if (parts.isEmpty) sys.error(s"readCostCurve: no part- files in $dir")
-    parts.flatMap { f =>
-      scala.io.Source.fromFile(f).getLines().filter(_.nonEmpty)
-        .map(_.toDouble).toSeq
-    }.toSeq
-  }
 }

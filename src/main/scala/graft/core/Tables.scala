@@ -11,10 +11,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * single file or a single executor.
   */
 object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
@@ -53,13 +49,4 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
-
-  /** Register every table as a temp view so the whole corpus is
-    * queryable through `spark.sql(...)` (the `events` view gets the
-    * nanos→micros conversion).
-    */
-  def registerAll(s: SparkSession, d: String): Unit = names.foreach {
-    case "events" => events(s, d).createOrReplaceTempView("events")
-    case n        => load(s, d, n).createOrReplaceTempView(n)
-  }
 }

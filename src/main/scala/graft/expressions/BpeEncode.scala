@@ -9,10 +9,10 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** Native BPE encode kernel: apply a learned merge-rule list to a
   * token array, producing the boundary-marked encoded string
-  * (`#lo##w#` form — identical output to
-  * [[graft.operators.Bpe.encode]]'s chained-replace plan, which
-  * remains the executable spec and the DuckDB-oracle mirror; parity
-  * on random corpora incl. the 256-merge sliced path in BpeSpec).
+  * (`#lo##w#` form — identical output to the chained-replace plan,
+  * `BpeComposed.encode` in the specs, which remains the executable
+  * spec and the DuckDB-oracle mirror; parity on random corpora incl.
+  * the 256-merge sliced path in BpeSpec).
   *
   * Semantics parity: each rule merges adjacent symbol pairs
   * LEFT-TO-RIGHT, NON-OVERLAPPING, in rank order — exactly what the
@@ -24,7 +24,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * the document string once PER RULE (12 rules ⇒ 12 corpus copies;
   * measured 89 s at pseudo-sf10 for bpe04's encode+decode), and its
   * plan depth grows with the rule count — the reason
-  * `Bpe.MaxPlanMerges` and the sliced-encode/checkpoint path exist.
+  * the spec's sliced-encode/checkpoint path exists.
   * This kernel applies ALL rules in one pass per word over symbol
   * arrays, skipping inapplicable rules with O(1) presence counts, so
   * a production 30k-rule tokenizer encodes in ONE expression with no

@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * Two row-hash profiles, both oracle-mirrored (the d05 MinHash
   * discipline):
   *  - default (`fnvProfile = false`): the engine-portable md5-chunk
-  *    trick ([[graft.operators.Dedup.minhashChunk]] lineage): cell of
+  *    trick (`DedupComposed.minhashChunk` lineage): cell of
   *    item x in row r = first 8 hex chars of md5("r|x") parsed as a
   *    32-bit int, mod width — mirrored verbatim in DuckDB as
   *    `CAST(('0x' || substring(md5(r || '|' || x), 1, 8)) AS BIGINT)

@@ -7,7 +7,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** FNV-1a 64-bit hash over a string's Unicode CODE POINTS — the cheap
   * hash basis of the production MinHash-LSH profile
-  * ([[graft.operators.Dedup.lshBandSignaturesFast]]).
+  * (`DedupComposed.lshBandSignaturesFast`).
   *
   * Why FNV-1a and why code points: the fast profile needs a 64-bit
   * hash that (a) costs one multiply+xor per character instead of a

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * featurization, one sweep per document.
   *
   * Value-identical to the composed form retained as
-  * [[graft.operators.Dsir.featureBucketsComposed]] (parity on random
+  * `DsirComposed.featureBucketsComposed` (parity on random
   * corpora in ExpressionSpec): for token array `t_0..t_{n-1}` emit
   * `bucket(t_i)` for every token then `bucket(t_i ++ "_" ++ t_{i+1})`
   * for every adjacent pair, where `bucket(s) = u32(md5(s)[0..3]) % m`

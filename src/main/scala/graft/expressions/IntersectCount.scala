@@ -6,11 +6,11 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Distinct-intersection SIZE of two string arrays, without
-  * materializing the intersection — the hot core of every sets-verify
-  * Jaccard pass (d13 sorted-neighborhood, d20 prefix-filter join).
+/** Distinct-intersection SIZE of two `array<bigint>` hashed-shingle
+  * sets, without materializing the intersection — the hot core of
+  * d20's sets-verify Jaccard pass. Open-addressing probe over a
+  * primitive long table, zero boxing.
   *
   * Value-identical to `size(array_intersect(a, b))` (parity in
   * ExpressionSpec: duplicates, nulls, empties, codegen+interpreted):
@@ -26,50 +26,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * (composed); in a heap-degraded session the composed form was
   * measured at 59 s warm / 218 s cold — the allocation storm is what
   * amplifies under GC pressure, so the kernel also flattens that
-  * failure mode. One smaller-side HashSet build + larger-side probe
+  * failure mode. One smaller-side table build + larger-side probe
   * per pair, no output array, JIT-compiled inside whole-stage codegen.
-  */
-case class IntersectCountStr(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = left.nullable || right.nullable
-  override def prettyName: String = "graft_intersect_count"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), ArrayType(StringType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (array<string>, array<string>), got $other")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input)
-    if (a == null) return null
-    val b = right.eval(input)
-    if (b == null) return null
-    IntersectCountImpl.count(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"${ev.value} = graft.expressions.IntersectCountImpl.count($a, $b);"
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): IntersectCountStr =
-    copy(left = newLeft, right = newRight)
-}
-
-/** [[IntersectCountStr]] for `array<bigint>` — the hashed-shingle
-  * fast path (d20's verify): open-addressing probe over a primitive
-  * long table, zero boxing, one long[] allocation per pair. Same
-  * distinct-count semantics (parity in ExpressionSpec).
   */
 case class IntersectCountI64(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -124,7 +82,7 @@ object IntersectCountImpl {
   private val tableTl: ThreadLocal[Array[Long]] =
     ThreadLocal.withInitial(() => new Array[Long](1024))
 
-  /** [[count]] over primitive longs: open-addressing table (capacity
+  /** Distinct common elements of `a` and `b`: open-addressing table (capacity
     * = next pow2 ≥ 2·|small|), `Long.MinValue` slot = empty, matched
     * slots tombstoned back to empty so probe-side duplicates count
     * once. Null ELEMENTS: tracked via one boolean, matching
@@ -201,38 +159,6 @@ object IntersectCountImpl {
             } else s = (s + 1) & mask
           }
         }
-      }
-      j += 1
-    }
-    c
-  }
-
-  /** Distinct common elements of `a` and `b` (null element = one
-    * value). Builds the set from the smaller side, probes with the
-    * larger, removing on match so duplicates on the probe side count
-    * once — the removal count IS the distinct-intersection size.
-    */
-  def count(a: ArrayData, b: ArrayData): Int = {
-    val (small, large) =
-      if (a.numElements() <= b.numElements()) (a, b) else (b, a)
-    val ns = small.numElements()
-    if (ns == 0) return 0
-    val set = new java.util.HashSet[UTF8String](ns * 2)
-    var smallHasNull = false
-    var i = 0
-    while (i < ns) {
-      if (small.isNullAt(i)) smallHasNull = true
-      else set.add(small.getUTF8String(i))
-      i += 1
-    }
-    var c = 0
-    val nl = large.numElements()
-    var j = 0
-    while (j < nl && (!set.isEmpty || smallHasNull)) {
-      if (large.isNullAt(j)) {
-        if (smallHasNull) { c += 1; smallHasNull = false }
-      } else if (set.remove(large.getUTF8String(j))) {
-        c += 1
       }
       j += 1
     }

@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * argmax with first-in-priority-order tie-break, "und" when no
   * marker fires.
   *
-  * Value-identical to [[graft.text.Analysis.langIdComposed]] (parity
+  * Value-identical to `AnalysisComposed.langIdComposed` (parity
   * on random corpora in ExpressionSpec). The composed form runs one
   * interpreted `filter` lambda per LANGUAGE per row, each doing an
   * O(|markers|) linear `array_contains` per token; here every token

@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Value-identical to the composed
   * `array_max(transform(array_distinct(toks), w => size(filter(toks,
-  * t => t === w))))` inside [[graft.text.Analysis.topTokenFractionComposed]]
+  * t => t === w))))` inside `AnalysisComposed.topTokenFractionComposed`
   * (parity in ExpressionSpec): that form is O(n·distinct) interpreted
   * lambda evaluations per document — ~60k comparisons for a 300-token
   * doc — where this is one O(n) counting sweep. Null elements count

@@ -11,11 +11,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** MinHash sketch as a custom `TypedImperativeAggregate` — the
-  * mergeable-sketch form of [[graft.operators.Dedup.lshBandSignatures]]'s
+  * mergeable-sketch form of `DedupComposed.lshBandSignatures`'s
   * per-permutation `min` aggregates.
   *
   * Same hash basis as the DataFrame path (chunked md5 — see
-  * `Dedup.minhashChunk` — lowercase hex, lexicographic min), so
+  * `DedupComposed.minhashChunk` — lowercase hex, lexicographic min), so
   * signatures are value-identical to the composed-built-ins pipeline
   * (asserted in MinHashAggSpec) and to the DuckDB oracle's SQL.
   *
@@ -58,7 +58,7 @@ case class MinHashAgg(
     val v = child.eval(input)
     if (v != null) {
       val shingle = v.asInstanceOf[UTF8String].toString
-      // chunked-md5 basis, identical to Dedup.minhashChunk: permutation
+      // chunked-md5 basis, identical to DedupComposed.minhashChunk: permutation
       // h = 8-hex-char slice h%4 of digest "<h/4>|<shingle>"
       val nDigests = (numHashes + 3) / 4
       val digests = new Array[String](nDigests)

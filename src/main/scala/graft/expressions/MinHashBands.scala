@@ -10,12 +10,13 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native in-row MinHash-LSH band signatures of a shingle array —
-  * the md5-chunk profile of [[graft.operators.Dedup.lshBandSignatures]]
-  * (`Dedup.minhashChunk`: permutation h = 8-hex-char slice h%4 of
-  * md5("&lt;h/4&gt;|shingle")), computed in ONE pass over the array.
+  * the md5-chunk profile of the specs' `DedupComposed.lshBandSignatures`
+  * (`DedupComposed.minhashChunk`: permutation h = 8-hex-char slice
+  * h%4 of md5("&lt;h/4&gt;|shingle")), computed in ONE pass over the
+  * array.
   *
   * Value-identical to the composed in-row form retained as
-  * [[graft.operators.Dedup.bandSignaturesInRowComposed]] (parity in
+  * `DedupComposed.bandSignaturesInRowComposed` (parity in
   * ExpressionSpec) and therefore to the aggregation form and the
   * DuckDB oracle: fixed-width lowercase hex makes lexicographic
   * minima equal numeric u32 minima, so the kernel tracks ints and

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 
 /** Native in-row MinHash-LSH band signatures on the FNV-1a production
   * profile — the [[MinHashBandsExpr]] analogue of
-  * [[graft.operators.Dedup.lshBandSignaturesFast]]: permutation h is
+  * `DedupComposed.lshBandSignaturesFast`: permutation h is
   * `fmix64(fnv1a("&lt;h&gt;|" ++ shingle))`, minima are SIGNED long
   * `min`s, and each band signature is `fnv1a` of the `'|'`-joined
   * decimal minima (`concat_ws` of `cast(long as string)` — mirrored

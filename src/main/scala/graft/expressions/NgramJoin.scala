@@ -17,7 +17,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * d03's shingle stage at sf0.1.
   *
   * Value-identical to the composed form in
-  * [[graft.text.Analysis.ngramsComposed]] (parity on random corpora
+  * `AnalysisComposed.ngramsComposed` (parity on random corpora
   * in ExpressionSpec): same "w1 w2" join, `concat_ws`'s null-element
   * skip, and an empty array for docs shorter than n. Null INPUT
   * returns null here; `Analysis.ngrams` coalesces to the composed

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{DataType, LongType}
 
 /** One-pass 60-bit SimHash over pre-hashed tokens.
   *
-  * Semantically identical to [[graft.operators.Dedup.simhashFromHashes]]
+  * Semantically identical to `DedupComposed.simhashFromHashes`
   * (per-bit ±1 votes over the token hashes, bit set iff the vote is
   * strictly positive; a null token hash votes −1 on every bit, exactly
   * like the composed form's `when(null === 1, …).otherwise(-1)`), but

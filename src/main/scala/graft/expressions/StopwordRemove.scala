@@ -13,7 +13,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Value-identical to the composed
   * `filter(tokens, t => !array_contains(stopArr, t))` form retained as
-  * [[graft.text.TextOps.removeStopwordsComposed]] (parity in
+  * `TextOpsComposed.removeStopwordsComposed` (parity in
   * ExpressionSpec): same order, duplicates kept, null elements dropped
   * (`array_contains(stops, null)` is null, so the composed predicate
   * is never TRUE for them). The composed form pays an interpreted

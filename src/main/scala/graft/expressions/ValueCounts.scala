@@ -23,7 +23,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * map-side partial aggregation on top.
   *
   * Value-identical to the composed form retained as
-  * [[graft.operators.Ngrams.valueCountsComposed]]
+  * `NgramsComposed.valueCountsComposed`
   * (`transform(array_sort(array_distinct(a)), v => struct(v,
   * size(filter(a, t => t === v))))` — parity in ExpressionSpec).
   * Null elements are skipped entirely (callers feed n-gram arrays,

@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Native whitespace tokenizer — the hot first stage of every text
   * query, value-identical to the composed
   * `filter(split(c, "\\s+"), t => length(t) > 0)` form retained as
-  * [[graft.text.TextOps.tokenizeComposed]] (parity on random corpora,
+  * `TextOpsComposed.tokenizeComposed` (parity on random corpora,
   * including non-ASCII and mixed-whitespace content, in
   * ExpressionSpec).
   *

@@ -21,10 +21,11 @@ import org.apache.spark.sql.functions._
   *  - [[bucketOracle]]: md5-prefix → long — reproducible in DuckDB
   *    (`CAST('0x'||substring(md5(w),1,8) AS BIGINT)`), anchors the
   *    oracle row-for-row;
-  *  - [[bucketFast]]: xxhash64 — one 64-bit hash per token, the
-  *    profile a deployment runs. Same pipeline, swapped expression;
-  *    FeatureHashingSpec proves the two profiles agree on everything
-  *    hash-independent (per-doc token mass, bucket range).
+  *  - `SpecSupport.bucketFast` in the specs: xxhash64 — one 64-bit
+  *    hash per token, the profile a deployment would run. Same
+  *    pipeline, swapped expression; Round6OpsSpec proves the two
+  *    profiles agree on everything hash-independent (per-doc token
+  *    mass, bucket range).
   */
 object FeatureHashing {
 
@@ -33,10 +34,6 @@ object FeatureHashing {
     */
   def bucketOracle(tok: Column, numBuckets: Int): Column =
     conv(substring(md5(tok), 1, 8), 16, 10).cast("long") % numBuckets
-
-  /** xxhash64 bucket — production profile (pmod: xxhash64 is signed). */
-  def bucketFast(tok: Column, numBuckets: Int): Column =
-    pmod(xxhash64(tok), lit(numBuckets.toLong))
 
   /** Sparse hashed-TF rows `(doc_id, bucket, tf)` — explode, hash,
     * count. One gram... one token-key shuffle ((doc, bucket) hash

@@ -181,27 +181,6 @@ object TweetPipeline {
       trainN: Long, testN: Long,
       trainSec: Double, testSec: Double)
 
-  /** Hyper-parameter sweep (Part1.ipynb cells 32/37): fit/eval per
-    * regParam on the same seeded split — the reference's manual model
-    * -selection loop.
-    */
-  def sweepRegParam(algo: String, params: Seq[Double],
-                    featurized: DataFrame,
-                    seed: Long = 123L): Seq[EvalResult] =
-    params.map { p =>
-      val est = classifier(algo) match {
-        case lr: LogisticRegression => lr.setRegParam(p)
-        case svc: LinearSVC => svc.setRegParam(p)
-        case other => throw new IllegalArgumentException(
-          s"sweep supports lr/svc, got $other")
-      }
-      val Array(training, testing) =
-        featurized.randomSplit(Array(0.8, 0.2), seed)
-      val model = est.fit(training)
-      val (acc, f1) = accuracyF1(model.transform(testing))
-      EvalResult(s"$algo@$p", acc, f1, 0L, 0L, 0.0, 0.0)
-    }
-
   /** The evaluator's metrics over a predictions frame (label,
     * prediction), computed by one pass.
     */
@@ -209,15 +188,6 @@ object TweetPipeline {
     new MulticlassClassificationEvaluator()
       .setPredictionCol("prediction").setLabelCol("label")
       .getMetrics(predictions)
-
-  /** Accuracy and weighted F1 of a predictions frame (label,
-    * prediction) from one metrics pass — the exact values the
-    * evaluator's "accuracy" and "f1" metrics return.
-    */
-  private[graft] def accuracyF1(predictions: DataFrame): (Double, Double) = {
-    val m = metrics(predictions)
-    (m.accuracy, m.weightedFMeasure)
-  }
 
   /** The number of rows `m` was computed from, read off its confusion
     * matrix (every weight is 1, so the sum is exact below 2^53). The

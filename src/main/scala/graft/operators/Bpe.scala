@@ -26,11 +26,11 @@ import graft.core.LocalFinish
   *    connected-components discipline), so a production merge count
   *    (30k+) cannot build an unbounded plan or replay the whole
   *    replace chain per iteration.
-  *  - Encoding ([[encode]]) applies the learned rules as a chain of
-  *    in-row non-regex `replace` calls — stateless, codegen'd, zero
-  *    shuffle: the 100 TB path. The rule list is folded into the plan
-  *    as literals, bounded by [[MaxPlanMerges]] (the t12 plan-literal
-  *    contract).
+  *  - Encoding ([[encodeKernel]]) applies the learned rules in-row
+  *    through one native expression — stateless, codegen'd, zero
+  *    shuffle: the 100 TB path. Its executable spec, the chain of
+  *    non-regex `replace` calls (`BpeComposed.encode` in the specs),
+  *    is the form the DuckDB oracle mirrors.
   *
   * Merge semantics: symbols are stored boundary-marked — "cat" ⇒
   * `#c##a##t#` — so the merge of (l, r) is the plain string replace
@@ -48,28 +48,13 @@ import graft.core.LocalFinish
   * [[graft.queries.BpeQueries]] does) or pre-filter the marker.
   * [[vocab]] enforces the contract fail-loud at vocabulary scale
   * (one distinct-word check, not a corpus scan), which also covers
-  * training end-to-end; [[encode]] on an unvetted corpus with
+  * training end-to-end; [[encodeKernel]] on an unvetted corpus with
   * externally-supplied rules trusts the caller.
   */
 object Bpe {
 
   /** One learned merge rule; `rank` is the 1-based merge order. */
   final case class Merge(rank: Int, lhs: String, rhs: String, freq: Long)
-
-  /** Plan-literal ceiling for [[encode]]: each rule adds one nested
-    * `replace` node, and the REAL limit is the codegen recursion
-    * stack, not Catalyst node count — `StringReplace.doGenCode`
-    * recurses ~6 JVM frames per nested rule, and a measured 500-deep
-    * chain overflows a default-`-Xss` JVM with a fatal
-    * `StackOverflowError` that Spark's interpreted-fallback cannot
-    * catch (BpeSpec's beyond-the-ceiling test found this; the round-8
-    * value of 4096 assumed node-count was the bound and was never
-    * executed). 256 is measured-safe with 2× margin and composes
-    * with surrounding plan expressions. Production-sized rule sets
-    * (30k+) go through [[encodeSliced]], which loops ≤MaxPlanMerges
-    * slices with a `localCheckpoint` between them.
-    */
-  val MaxPlanMerges = 256
 
   private val Sep = "#"
 
@@ -99,7 +84,8 @@ object Bpe {
           .otherwise(mark(col("word"))).as("marked"),
         col("freq"))
 
-  private def applyMerge(marked: Column, lhs: String, rhs: String): Column =
+  private[graft] def applyMerge(marked: Column, lhs: String,
+                                rhs: String): Column =
     replace(marked,
       lit(Sep + lhs + Sep + Sep + rhs + Sep),
       lit(Sep + lhs + rhs + Sep))
@@ -251,75 +237,22 @@ object Bpe {
     out.result()
   }
 
-  /** Encode a token array with a learned rule list: every word is
+  /** Encode a token array with a learned rule list through the native
+    * kernel ([[graft.expressions.BpeEncodeExpr]]): every word is
     * boundary-marked, words join on a single space (which no merge
-    * pattern can span), and the rules apply in rank order as chained
-    * in-row replaces. Returns the encoded marked string; use
-    * [[pieceCount]] for the subword count.
-    */
-  def encode(tokens: Column, merges: Seq[Merge]): Column = {
-    require(merges.size <= MaxPlanMerges,
-      s"${merges.size} merge rules exceed the $MaxPlanMerges plan-literal " +
-        "ceiling; apply in slices with checkpoints between them")
-    val marked = array_join(transform(tokens, w => mark(w)), " ")
-    merges.sortBy(_.rank).foldLeft(marked)((c, m) =>
-      applyMerge(c, m.lhs, m.rhs))
-  }
-
-  /** [[encode]] through the native kernel
-    * ([[graft.expressions.BpeEncodeExpr]]): identical output (the
-    * replace chain stays as the executable spec and oracle mirror;
-    * random-corpus parity in BpeSpec), but all rules apply in one
-    * symbol-array pass per word with O(1) presence-count skipping —
-    * one string build instead of one corpus copy per rule, and NO
-    * plan-depth ceiling: a production 30k-rule tokenizer encodes in
-    * one expression, superseding the sliced/checkpointed path for
-    * plan-depth reasons (the slice path remains for engines without
-    * this kernel).
+    * pattern can span), and the rules apply in rank order. Returns the
+    * encoded marked string; use [[pieceCount]] for the subword count.
+    * Output is identical to the chained-replace executable spec
+    * (`BpeComposed.encode` in the specs, random-corpus parity in
+    * BpeSpec), but all rules apply in one symbol-array pass per word
+    * with O(1) presence-count skipping — one string build instead of
+    * one corpus copy per rule, and NO plan-depth ceiling: a
+    * production 30k-rule tokenizer encodes in one expression.
     */
   def encodeKernel(tokens: Column, merges: Seq[Merge]): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge._
     column(graft.expressions.BpeEncodeExpr(expression(tokens),
       merges.sortBy(_.rank).map(m => (m.lhs, m.rhs))))
-  }
-
-  /** Production-sized encode: apply an arbitrarily long rule list
-    * (30k+ merges — a real tokenizer) by slicing it into
-    * ≤`sliceSize`-rule chunks and `localCheckpoint`ing between
-    * chunks, so no single plan exceeds the [[MaxPlanMerges]]
-    * plan-literal ceiling and the replace chain never replays from
-    * the corpus scan. This is the loop the [[MaxPlanMerges]] scaladoc
-    * promises; spec-verified against the naive reference encoder at
-    * 256+ merges (BpeSpec).
-    *
-    * Storage discipline: each slice pins exactly one checkpoint and
-    * frees the previous ([[graft.core.Checkpoints.roll]]), so a 30k-
-    * rule encode holds O(corpus), not O(corpus × slices). The
-    * returned frame is backed by the final checkpoint — callers that
-    * are done with it can `Checkpoints.release` it.
-    *
-    * Trade-off vs [[encode]]: checkpointing materializes the corpus
-    * per slice, so for rule lists under the ceiling the single-plan
-    * zero-materialization [[encode]] is strictly better; this path
-    * exists for rule lists that cannot fit one plan.
-    */
-  def encodeSliced(docs: DataFrame, tokens: Column, merges: Seq[Merge],
-                   outCol: String = "encoded",
-                   sliceSize: Int = MaxPlanMerges): DataFrame = {
-    require(sliceSize >= 1 && sliceSize <= MaxPlanMerges,
-      s"sliceSize must be in [1, $MaxPlanMerges], got $sliceSize")
-    val marked = array_join(transform(tokens, w => mark(w)), " ")
-    val slices = merges.sortBy(_.rank).grouped(sliceSize).toSeq
-    slices.zipWithIndex.foldLeft(docs.withColumn(outCol, marked)) {
-      case (df, (slice, i)) =>
-        val applied = df.withColumn(outCol,
-          slice.foldLeft(col(outCol))((c, m) => applyMerge(c, m.lhs, m.rhs)))
-        // last slice stays lazy: the caller's consumption materializes
-        // it once; checkpointing here would pay an extra full pass
-        if (i == slices.size - 1) applied
-        else if (i == 0) applied.localCheckpoint()
-        else graft.core.Checkpoints.roll(applied, df)
-    }
   }
 
   /** Inverse of the encode marking — drop piece separators, then word
@@ -334,8 +267,8 @@ object Bpe {
     replace(replace(encoded, lit(Sep + Sep), lit("")),
       lit(Sep), lit(""))
 
-  /** Subword count of an [[encode]] result: every `##` separates two
-    * pieces of one word and every word is one piece plus its `##`
+  /** Subword count of an [[encodeKernel]] result: every `##`
+    * separates two pieces of one word and every word is one piece plus its `##`
     * count, so pieces = n_tokens + occurrences of `##` (an empty
     * document yields 0 + 0). Counted by length delta — plain string
     * ops, no regex, no split-array allocation.

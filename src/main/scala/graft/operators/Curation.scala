@@ -15,7 +15,7 @@ import graft.text.{Analysis, TextOps}
   * shrinks BEFORE anything shuffles). The only shuffle is the dedup
   * window, and it moves the slim scored projection (16-byte md5 + a
   * few ints per row), never the document text. Near-dup removal at
-  * scale chains [[Dedup.minhashLshPairs]] on the survivors.
+  * scale chains [[Dedup.minhashLshPairsDocs]] on the survivors.
   */
 object Curation {
 

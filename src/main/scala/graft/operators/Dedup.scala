@@ -24,9 +24,8 @@ object Dedup {
     * [[graft.expressions.IntersectCountI64]] primitive-table probe —
     * `size(array_intersect(a, b))` without materializing the
     * intersection array (parity in ExpressionSpec); the sets-verify
-    * Jaccard hot core for d13/d20. The string-array sibling
-    * [[graft.expressions.IntersectCountStr]] remains available for
-    * unhashed set workloads (measured in SCALE.md, round 9 coda 4).
+    * Jaccard hot core for d13/d20 (measured in SCALE.md, round 9
+    * coda 4).
     */
   private[graft] def intersectCountI64(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge._
@@ -41,12 +40,6 @@ object Dedup {
   def exactGroups(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.groupBy(md5(col(textCol)).as("content_hash"))
       .agg(count(lit(1)).as("n_copies"), min(col(idCol)).as("keep_id"))
-
-  /** Keep-first exact dedup: drops all but the min-id row per content. */
-  def exactDedup(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val keep = exactGroups(docs, idCol, textCol).select(col("keep_id"))
-    docs.join(keep, docs(idCol) === col("keep_id"), "left_semi")
-  }
 
   /** (doc, shingle) pairs: distinct word n-grams per document,
     * computed in-row (no explode-then-distinct shuffle of raw grams —
@@ -69,11 +62,13 @@ object Dedup {
         explode(array_distinct(Analysis.ngrams(col("__toks"), n)))
           .as("shingle"))
 
-  /** [[lshBandSignatures]] computed IN-ROW — same md5-chunk minhash
-    * profile, same band digests (value-parity asserted in spec) — as
-    * an array of (b, sig) structs per document. This is the form a
-    * STREAMING dedup needs: Structured Streaming forbids an
-    * aggregation upstream of a stateful operator in append mode, so
+  /** MinHash-LSH band signatures computed IN-ROW — the md5-chunk
+    * minhash profile and band digests of the aggregation form
+    * (`DedupComposed.lshBandSignatures` in the specs; value parity
+    * asserted there) — as an array of (b, sig) structs per document.
+    * This is the form a STREAMING dedup needs: Structured Streaming
+    * forbids an aggregation upstream of a stateful operator in append
+    * mode, so
     * the per-doc signature must come out of the scan projection, not
     * a group-by. Cost is identical in aggregate terms (numHashes
     * array passes over the doc's shingle set). Docs with no shingles
@@ -82,38 +77,14 @@ object Dedup {
     * Computed by the native one-sweep kernel
     * [[graft.expressions.MinHashBandsExpr]] (ceil(numHashes/4) md5
     * digests per shingle against a thread-local MessageDigest); the
-    * composed form below is its executable spec.
+    * composed form, `DedupComposed.bandSignaturesInRowComposed` in the
+    * specs, is its executable spec.
     */
   def bandSignaturesInRow(shingles: Column, numHashes: Int,
                           rowsPerBand: Int): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge._
     column(graft.expressions.MinHashBandsExpr(
       expression(shingles), numHashes, rowsPerBand))
-  }
-
-  /** The composed Catalyst-HOF reference form of
-    * [[bandSignaturesInRow]] (parity in ExpressionSpec). It runs one
-    * `transform` pass per PERMUTATION — numHashes array passes, each
-    * re-digesting every shingle, because subexpression elimination
-    * cannot reach inside separate lambda scopes — so production call
-    * sites use the kernel.
-    *
-    * Bind `shingles` to its own projected column first — it is read
-    * numHashes times (the [[shingles]] / Ngrams token-binding rule).
-    */
-  def bandSignaturesInRowComposed(shingles: Column, numHashes: Int,
-                                  rowsPerBand: Int): Column = {
-    require(numHashes % rowsPerBand == 0,
-      "numHashes must be a multiple of rowsPerBand")
-    val mins = (0 until numHashes).map(h =>
-      array_min(transform(shingles, s => minhashChunk(s, h))))
-    val bands = (0 until numHashes / rowsPerBand).map { b =>
-      struct(lit(b).as("b"),
-        md5(concat((b * rowsPerBand until (b + 1) * rowsPerBand)
-          .map(mins): _*)).as("sig"))
-    }
-    when(size(shingles) > 0, array(bands: _*))
-      .otherwise(array().cast("array<struct<b:int,sig:string>>"))
   }
 
   /** Exact n-gram Jaccard near-dup pairs (a < b, jaccard ≥ threshold).
@@ -124,7 +95,7 @@ object Dedup {
     * resulting jaccard is a lower bound, so this trades a bounded
     * false-negative rate for survival — the win is proven on a
     * hot-shingle skew fixture in DedupSimilaritySpec), or use
-    * [[minhashLshPairs]], which only ever verifies LSH candidates.
+    * [[minhashLshPairsDocs]], which only ever verifies LSH candidates.
     */
   def jaccardPairs(sh: DataFrame, threshold: Double,
                    maxShingleDf: Option[Int] = None): DataFrame = {
@@ -229,50 +200,11 @@ object Dedup {
       .filter(col("containment") >= threshold)
   }
 
-  /** EXACT set-similarity self-join via prefix filtering (the
-    * AllPairs/PPJoin family — Bayardo et al. 2007; Xiao et al. 2008
-    * Lemma 1): same relation as [[jaccardPairs]] — (a < b,
-    * jaccard ≥ threshold), NO false negatives — but candidates come
-    * only from shared PREFIX elements. Order every doc's shingle set
-    * rarest-first (global (df, shingle) order) and keep the first
-    * n − ⌈t·n⌉ + 1 elements: any pair with J ≥ t must intersect in
-    * both prefixes (a no-prefix-overlap pair has all common elements
-    * inside both suffixes, so i ≤ ⌈t·n⌉ − 1 < t·n ≤ i —
-    * contradiction). The exact LOSSLESS scale path between d02's
-    * all-shared-shingle emission and d03's probabilistic LSH.
-    *
-    * Scale shape: the df table is one shuffle of shingle counts;
-    * per-doc rarest-first sort is doc-local; candidate emission
-    * reuses the chained-generator per-shingle doc lists, but over
-    * PREFIX occurrences only — a stop-shingle shared by every doc
-    * sits at the END of the frequency order, outside almost every
-    * prefix, so the hot-shingle cartesian bomb that forces d02's
-    * `maxShingleDf` cap largely defuses itself (planted-skew
-    * measurement in DedupSimilaritySpec). Verification is one in-row
-    * `array_intersect` per surviving candidate over the persisted
-    * per-doc rarest-first shingle arrays (the
-    * [[sortedNeighborhoodPairsSets]] pattern — the exploded
-    * (pair × shingle) join re-shuffled corpus shingles once per
-    * verify side). Two lossless pre-verify prunes run with NO extra
-    * join — each prefix occurrence carries its (position, set-size)
-    * ints through the candidate shuffle: the Arasu et al. 2006 length
-    * filter (J ≥ t forces t·max(na,nb) ≤ min(na,nb)) and the PPJoin
-    * POSITIONAL filter (Xiao et al. 2008: the first shared element's
-    * positions bound the overlap by min(na−ia, nb−jb), which must
-    * reach t/(1+t)·(na+nb)) — at the t=0.5 operating point the
-    * prefix is half of every doc, so the positional bound does the
-    * heavy candidate pruning. Losslessness (≡ [[jaccardPairs]]) is
-    * asserted on random corpora in DedupSimilaritySpec.
-    */
-  def prefixFilterPairs(sh: DataFrame, threshold: Double): DataFrame =
-    prefixFilterStages(sh, threshold).result
-
-  /** [[prefixFilterPairs]] with the pin-release handle: the result
-    * plan's verify join reads the internally persisted corpus-sized
-    * `docSets` table, so the plain variant's pin lives until a
-    * caller-side storage sweep (Bench/TimeQuery sweep between
-    * queries; sessions free all storage at stop). Long-lived sessions
-    * should consume this form and `release()` ([[graft.core.Leased]]).
+  /** The prefix-filter join (`prefixFilterStagesHashed`) on string
+    * shingles, with the pin-release handle: the result plan's verify
+    * join reads the internally persisted corpus-sized `docSets`
+    * table, so the pin lives until the caller consumes the result and
+    * calls `release()` ([[graft.core.Leased]]).
     */
   def prefixFilterPairsLeased(sh: DataFrame,
                               threshold: Double): graft.core.Leased = {
@@ -280,7 +212,7 @@ object Dedup {
     graft.core.Leased(st.result, Seq(st.docSets))
   }
 
-  /** Intermediate frames of [[prefixFilterPairs]], exposed for
+  /** Intermediate frames of the prefix-filter join, exposed for
     * stage-level tests and plan audits. */
   private[graft] case class PrefixStages(docSets: DataFrame,
                                          cands: DataFrame,
@@ -295,7 +227,7 @@ object Dedup {
     * profile (pseudo-sf1: 11.9 s vs the prefix path's 41.7 s, because
     * the prefix path pays a df join, a per-doc rarest-first sort and
     * a candidate verify join for pruning a benign corpus barely
-    * needs), prefix filtering ([[prefixFilterPairs]]) under a
+    * needs), prefix filtering (`prefixFilterStagesHashed`) under a
     * heavy-tailed df (one hot shingle makes the emission's pair
     * volume quadratic — the planted-skew spec measures a >1000×
     * volume ratio — while rarest-first prefixes exclude it with NO
@@ -373,6 +305,41 @@ object Dedup {
       sh.groupBy(col("shingle")).agg(count(lit(1)).as("df")), threshold)
   }
 
+  /** The EXACT set-similarity self-join via prefix filtering (the
+    * AllPairs/PPJoin family — Bayardo et al. 2007; Xiao et al. 2008
+    * Lemma 1): same relation as [[jaccardPairs]] — (a < b,
+    * jaccard ≥ threshold), NO false negatives — but candidates come
+    * only from shared PREFIX elements. Order every doc's shingle set
+    * rarest-first (global (df, shingle) order) and keep the first
+    * n − ⌈t·n⌉ + 1 elements: any pair with J ≥ t must intersect in
+    * both prefixes (a no-prefix-overlap pair has all common elements
+    * inside both suffixes, so i ≤ ⌈t·n⌉ − 1 < t·n ≤ i —
+    * contradiction). The exact LOSSLESS scale path between d02's
+    * all-shared-shingle emission and d03's probabilistic LSH.
+    *
+    * Scale shape: the df table is one shuffle of shingle counts;
+    * per-doc rarest-first sort is doc-local; candidate emission
+    * reuses the chained-generator per-shingle doc lists, but over
+    * PREFIX occurrences only — a stop-shingle shared by every doc
+    * sits at the END of the frequency order, outside almost every
+    * prefix, so the hot-shingle cartesian bomb that forces d02's
+    * `maxShingleDf` cap largely defuses itself (planted-skew
+    * measurement in DedupSimilaritySpec). Verification is one in-row
+    * `array_intersect` per surviving candidate over the persisted
+    * per-doc rarest-first shingle arrays (the
+    * [[sortedNeighborhoodPairsSets]] pattern — the exploded
+    * (pair × shingle) join re-shuffled corpus shingles once per
+    * verify side). Two lossless pre-verify prunes run with NO extra
+    * join — each prefix occurrence carries its (position, set-size)
+    * ints through the candidate shuffle: the Arasu et al. 2006 length
+    * filter (J ≥ t forces t·max(na,nb) ≤ min(na,nb)) and the PPJoin
+    * POSITIONAL filter (Xiao et al. 2008: the first shared element's
+    * positions bound the overlap by min(na−ia, nb−jb), which must
+    * reach t/(1+t)·(na+nb)) — at the t=0.5 operating point the
+    * prefix is half of every doc, so the positional bound does the
+    * heavy candidate pruning. Losslessness (≡ [[jaccardPairs]]) is
+    * asserted on random corpora in DedupSimilaritySpec.
+    */
   private[graft] def prefixFilterStagesHashed(
       sh: DataFrame, dfTab: DataFrame,
       threshold: Double): PrefixStages = {
@@ -382,8 +349,7 @@ object Dedup {
     // prefix reads the order, the verify reads the set; persisted
     // because three consumers would otherwise re-run the df join +
     // doc aggregation over the corpus. Released by
-    // prefixFilterPairsLeased's handle; the plain prefixFilterPairs
-    // documents the caller-sweep contract.
+    // prefixFilterPairsLeased's handle, or by the caller's sweep.
     val docSets = sh.join(dfTab, "shingle")
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(struct(col("df"), col("shingle"))))
@@ -488,112 +454,13 @@ object Dedup {
           (col("sa.n") + col("sb.n") - col("i"))).as("jaccard"))
       .filter(col("jaccard") >= threshold)
 
-  /** 32-hex-digit md5 digests carved into 8-hex-char (32-bit) chunks:
-    * permutation h draws chunk h%4 of md5("<h/4>|<shingle>"), so
-    * `numHashes` permutations cost ceil(numHashes/4) digests per row
-    * instead of numHashes — md5's diffusion makes the chunks
-    * independent uniform hashes, and 32 bits is ample MinHash
-    * resolution for any realistic shingle-set size. Mirrored
-    * verbatim in the DuckDB oracle and in [[graft.expressions.MinHashAgg]].
-    */
-  private[operators] def minhashChunk(shingle: Column, h: Int): Column =
-    substring(md5(concat(lit(s"${h / 4}|"), shingle)), (h % 4) * 8 + 1, 8)
-
-  /** Per-doc LSH band signatures in ONE aggregation pass: the
-    * `numHashes` MinHash permutations (chunked md5, see
-    * [[minhashChunk]] — the lexicographic min of a uniform hash is a
-    * valid MinHash, and deterministic/engine-portable) are
-    * `numHashes` parallel `min` aggregates over a single doc_id
-    * group-by, and each band signature is the md5 of its
-    * `rowsPerBand` consecutive minhashes computed in the same
-    * projection. One shuffle of |sh| rows total — no hash-id
-    * cross-join row blowup, no second shuffle for banding.
-    */
-  def lshBandSignatures(sh: DataFrame, numHashes: Int,
-                        rowsPerBand: Int): DataFrame = {
-    require(numHashes % rowsPerBand == 0,
-      "numHashes must be a multiple of rowsPerBand")
-    val minCols = (0 until numHashes).map(h =>
-      min(minhashChunk(col("shingle"), h)).as(s"m$h"))
-    val grouped = sh.groupBy(col("doc_id"))
-      .agg(minCols.head, minCols.tail: _*)
-    val bands = (0 until numHashes / rowsPerBand).map { b =>
-      struct(lit(b).as("b"),
-        md5(concat((b * rowsPerBand until (b + 1) * rowsPerBand)
-          .map(h => col(s"m$h")): _*)).as("sig"))
-    }
-    grouped.select(col("doc_id"), explode(array(bands: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.b").as("b"), col("bs.sig").as("sig"))
-  }
-
-  /** Band signatures computed through the mergeable
-    * [[graft.expressions.MinHashAgg]] sketch (one buffer per group in
-    * partial agg instead of numHashes min columns; usable in
-    * streaming state and shard-union folds). Value-identical output
-    * to [[lshBandSignatures]] — same md5 hash basis — asserted in
-    * MinHashAggSpec.
-    */
-  def lshBandSignaturesSketch(sh: DataFrame, numHashes: Int,
-                              rowsPerBand: Int): DataFrame = {
-    require(numHashes % rowsPerBand == 0)
-    val sketch = org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.expressions.MinHashAgg(
-        org.apache.spark.sql.graftbridge.ColumnBridge
-          .expression(col("shingle")), numHashes)
-        .toAggregateExpression())
-    val grouped = sh.groupBy(col("doc_id")).agg(sketch.as("mh"))
-    val bands = (0 until numHashes / rowsPerBand).map { b =>
-      struct(lit(b).as("b"),
-        md5(concat((b * rowsPerBand until (b + 1) * rowsPerBand)
-          .map(h => element_at(col("mh"), h + 1)): _*)).as("sig"))
-    }
-    grouped.select(col("doc_id"), explode(array(bands: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.b").as("b"), col("bs.sig").as("sig"))
-  }
-
-  /** [[lshBandSignatures]] with the production hash profile: FNV-1a-64
-    * permutations (`graft_fnv64('<h>|' || shingle)`) and FNV-1a band
-    * signatures over the '|'-joined minima instead of
-    * chunked/concatenated md5. Identical LSH structure and cost
-    * shape — one |sh| shuffle — but one multiply-per-character hash
-    * per (shingle, permutation) instead of a cryptographic digest per
-    * 4, and long-typed signatures instead of 32-hex strings (smaller
-    * shuffle rows too). Unlike the round-6 xxhash64 basis, FNV-1a is
-    * pure mod-2^64 arithmetic the DuckDB oracle reproduces exactly
-    * (see [[graft.expressions.Fnv64]]), so the production profile is
-    * itself oracle-checked end-to-end (d05) rather than rows-only.
-    * The two profiles still bucket near-threshold pairs differently
-    * (any single hash family's band collisions are probabilistic at
-    * low jaccard); DedupSimilaritySpec asserts the production
-    * contract — no false positives, no missed high-jaccard pair.
-    */
-  def lshBandSignaturesFast(sh: DataFrame, numHashes: Int,
-                            rowsPerBand: Int): DataFrame = {
-    require(numHashes % rowsPerBand == 0,
-      "numHashes must be a multiple of rowsPerBand")
-    def fnv(c: Column): Column =
-      org.apache.spark.sql.graftbridge.ColumnBridge.column(
-        graft.expressions.Fnv64(
-          org.apache.spark.sql.graftbridge.ColumnBridge.expression(c)))
-    val minCols = (0 until numHashes).map(h =>
-      min(fnv(concat(lit(s"$h|"), col("shingle")))).as(s"m$h"))
-    val grouped = sh.groupBy(col("doc_id"))
-      .agg(minCols.head, minCols.tail: _*)
-    val bands = (0 until numHashes / rowsPerBand).map { b =>
-      struct(lit(b).as("b"),
-        fnv(concat_ws("|", (b * rowsPerBand until (b + 1) * rowsPerBand)
-          .map(h => col(s"m$h").cast("string")): _*)).as("sig"))
-    }
-    grouped.select(col("doc_id"), explode(array(bands: _*)).as("bs"))
-      .select(col("doc_id"), col("bs.b").as("b"), col("bs.sig").as("sig"))
-  }
-
-  /** [[lshBandSignaturesFast]] computed IN-ROW from a shingle-set
-    * array by the native one-sweep kernel
+  /** Band signatures on the production hash profile, computed IN-ROW
+    * from a shingle-set array by the native one-sweep kernel
     * [[graft.expressions.MinHashBandsFastExpr]] — same FNV-1a+fmix64
     * permutations, same signed-long minima, same `'|'`-joined band
-    * FNV (parity in ExpressionSpec); the [[bandSignaturesInRow]]
-    * analogue for the production hash profile.
+    * FNV as the group-by form (`DedupComposed.lshBandSignaturesFast`
+    * in the specs; parity in ExpressionSpec); the
+    * [[bandSignaturesInRow]] analogue for the production hash profile.
     */
   def bandSignaturesInRowFast(shingles: Column, numHashes: Int,
                               rowsPerBand: Int): Column = {
@@ -603,8 +470,9 @@ object Dedup {
   }
 
   /** [[minhashLshPairsDocs]] on the FNV-1a production profile — the
-    * zero-corpus-shuffle form of [[minhashLshPairsFast]] (identical
-    * output; parity in DedupSimilaritySpec).
+    * zero-corpus-shuffle form of the exploded-row pipeline
+    * (`DedupComposed.minhashLshPairsFast` in the specs; identical
+    * output, parity in DedupSimilaritySpec).
     */
   def minhashLshPairsFastDocs(docs: DataFrame, idCol: String,
                               tokens: Column, n: Int = 3,
@@ -655,24 +523,6 @@ object Dedup {
     scoreJaccard(inter, sizes, threshold)
   }
 
-  /** Full MinHash-LSH near-dup pipeline: shingle → band signatures →
-    * bucket-join candidates → exact-Jaccard verification *of the
-    * candidates only*. Identical output to filtering the exact
-    * all-pairs result by candidates (same intersection counts, same
-    * denominators), but the all-pairs join never runs.
-    */
-  def minhashLshPairs(sh: DataFrame, numHashes: Int = 16,
-                      rowsPerBand: Int = 4,
-                      threshold: Double = 0.5): DataFrame = {
-    // NOTE: sizes deliberately stays a separate count-only group-by —
-    // fusing it into the minhash aggregation makes that (md5-heavy)
-    // subtree a shared child consumed twice, and without caching
-    // Spark recomputes it per consumer (measured +30% at sf0.1).
-    val cands = lshCandidates(lshBandSignatures(sh, numHashes,
-      rowsPerBand))
-    verifyJaccard(sh, cands, threshold)
-  }
-
   /** Per-doc distinct shingle SETS (one array row per doc), the
     * zero-explode complement of [[shingles]] — token expression bound
     * before gram assembly for the same inline-blowup reason.
@@ -683,12 +533,13 @@ object Dedup {
       .select(col("doc_id"),
         array_distinct(Analysis.ngrams(col("__toks"), n)).as("shset"))
 
-  /** [[minhashLshPairs]] computed from the documents themselves with
-    * ZERO corpus-sized shuffle — identical output relation (same
-    * bands, same candidates, same exact-Jaccard verification; parity
-    * asserted in DedupSimilaritySpec).
+  /** Full MinHash-LSH near-dup pipeline computed from the documents
+    * themselves with ZERO corpus-sized shuffle — the relation of the
+    * exploded-row pipeline (`DedupComposed.minhashLshPairs` in the
+    * specs: same bands, same candidates, same exact-Jaccard
+    * verification; parity asserted in DedupSimilaritySpec).
     *
-    * Where [[minhashLshPairs]] shuffles every (doc, shingle) row into
+    * Where the exploded-row form shuffles every (doc, shingle) row into
     * a group-by to aggregate minhashes, here the band signatures come
     * straight out of the scan projection
     * ([[bandSignaturesInRow]], the native one-sweep kernel), so the
@@ -722,24 +573,11 @@ object Dedup {
     verifyJaccard(candSh, cands, threshold, Some(sizes))
   }
 
-  /** [[minhashLshPairs]] on the FNV-1a production profile — same
-    * candidate→verify pipeline, cheaper hashing. Verification is
-    * exact Jaccard either way, so the two profiles can differ only in
-    * near-threshold recall via bucket collisions (spec: no false
-    * positives, all high-jaccard pairs found).
-    */
-  def minhashLshPairsFast(sh: DataFrame, numHashes: Int = 16,
-                          rowsPerBand: Int = 4,
-                          threshold: Double = 0.5): DataFrame = {
-    val cands = lshCandidates(lshBandSignaturesFast(sh, numHashes,
-      rowsPerBand))
-    verifyJaccard(sh, cands, threshold)
-  }
-
   /** Persist a MinHash-LSH near-dup index for
     * [[incrementalNearDupsSets]] from per-doc shingle SETS
     * ([[shingleSets]]): the production-profile band signatures
-    * (in-row kernel, ≡ the [[lshBandSignaturesFast]] group-by) and the
+    * (in-row kernel, ≡ the specs' `DedupComposed.lshBandSignaturesFast`
+    * group-by) and the
     * shingle rows the exact-Jaccard verify needs. Build-once /
     * dedupe-many: the corpus is shingled and hashed exactly once, and
     * every incoming batch afterwards pays only its own shingling plus
@@ -762,9 +600,10 @@ object Dedup {
 
   /** Near-dup pairs between a NEW batch of docs, given as shingle
     * SETS, and a persisted [[writeNearDupIndexSets]] index — exactly
-    * the [[minhashLshPairsFast]] relation restricted to batch×index
-    * pairs (the d12 oracle asserts that identity; the exploded-row
-    * form it replaced is the parity spec). Id spaces must be disjoint,
+    * the exploded-row relation (`DedupComposed.minhashLshPairsFast` in
+    * the specs) restricted to batch×index pairs (the d12 oracle
+    * asserts that identity; the exploded-row index it replaced is the
+    * parity spec). Id spaces must be disjoint,
     * batch ids below index ids, to keep the a<b pair convention.
     *
     * The index tables are read once per session and path
@@ -808,45 +647,11 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Per-token 60-bit hashes (15 hex chars of md5 → fits a signed
-    * long in every engine). Materialize this as its own column before
-    * calling [[simhashFromHashes]] so the md5s are computed once per
-    * row, not once per bit.
-    */
-  def tokenHashes(tokens: Column): Column =
-    transform(tokens, t => conv(substring(md5(t), 1, 15), 16, 10)
-      .cast("long"))
-
-  /** 60-bit SimHash from pre-hashed tokens: per-bit ±1 votes, sign →
-    * bit, packed with literal shifts. Pure in-row Catalyst HOFs —
-    * no shuffle, scales with the scan.
-    */
-  def simhashFromHashes(hvs: Column): Column =
-    (0 until 60).map { b =>
-      val vote = aggregate(hvs, lit(0L), (acc, hv) =>
-        acc + when(shiftright(hv, b).bitwiseAND(1L) === 1L, 1L)
-          .otherwise(-1L))
-      when(vote > 0, lit(1L << b)).otherwise(lit(0L))
-    }.reduce((a, b) => a.bitwiseOR(b))
-
-  def simhash(tokens: Column): Column = simhashFromHashes(tokenHashes(tokens))
-
-  /** [[simhashFromHashes]] as the one-pass native expression
-    * [[graft.expressions.SimHash60]] — value-identical (ExpressionSpec
-    * asserts parity against the composed form), but whole-stage
-    * codegen instead of 60 interpreted HOF traversals per document.
-    * This is what the production path ([[simhashPairs]]) uses; the
-    * composed form stays as the executable spec of the bit math.
-    */
-  def simhashNative(hvs: Column): Column =
-    org.apache.spark.sql.graftbridge.ColumnBridge.column(
-      graft.expressions.SimHash60(
-        org.apache.spark.sql.graftbridge.ColumnBridge.expression(hvs)))
-
   /** The full tokens→fingerprint chain as ONE codegen'd expression
     * ([[graft.expressions.SimHashText]]): md5 + top-60-bit hash + vote
     * loop fused, no interpreted HOF pass and no intermediate hash
-    * array. Value-identical to [[simhash]].
+    * array. Value-identical to the composed chain
+    * (`DedupComposed.simhash` in the specs).
     */
   def simhashTextNative(tokens: Column): Column =
     org.apache.spark.sql.graftbridge.ColumnBridge.column(
@@ -1218,26 +1023,6 @@ object Dedup {
         (col("doc_id") === col("keep_id")).as("kept"))
   }
 
-  /** Keep-best near-duplicate removal over a whole corpus: close the
-    * near-dup `pairs` into clusters ([[dupClusters]]), keep each
-    * cluster's highest-quality member ([[resolveClusters]]), and pass
-    * unclustered documents through untouched. Returns the deduped
-    * corpus with `docs`' original columns.
-    *
-    * The corpus is only ever touched by one anti join against the
-    * dropped-id set (clustered non-winners — by near-dup construction
-    * a small fraction of the corpus), so the 100 TB side never
-    * shuffles and never carries cluster metadata.
-    */
-  def resolveDuplicates(docs: DataFrame, idCol: String,
-                        pairs: DataFrame, quality: Column): DataFrame = {
-    val q = docs.select(col(idCol).cast("long").as("doc_id"),
-      quality.cast("long").as("quality"))
-    val dropped = resolveClusters(dupClusters(pairs), q)
-      .filter(!col("kept")).select(col("doc_id"))
-    docs.join(dropped, docs(idCol) === dropped("doc_id"), "left_anti")
-  }
-
   /** Dense global rank of every document under a cheap blocking key —
     * the sort stage of sorted-neighborhood dedup (Hernández & Stolfo,
     * SIGMOD '95 "The Merge/Purge Problem"). Returns (id, rank) with
@@ -1286,30 +1071,10 @@ object Dedup {
         greatest(col("ida"), col("idb")).as("b"))
   }
 
-  /** Full sorted-neighborhood near-dup pass: rank by `sortKey`,
-    * window the ranking into candidate pairs, exact-verify Jaccard on
-    * the candidates only. Complements MinHash-LSH (d03): SNM catches
-    * what the blocking key co-locates at O(n·window) candidates with
-    * zero hashing cost — the classic cheap first pass when near-dups
-    * share prefixes (crawl snapshots, versioned docs).
-    */
-  def sortedNeighborhoodPairs(docs: DataFrame, idCol: String,
-                              sortKey: Column, tokens: Column,
-                              window: Int, threshold: Double): DataFrame = {
-    // persisted: the verification reads the shingle table three times
-    // (sizes + both intersection sides) — without the persist each
-    // read re-runs tokenize+ngram over the corpus, which dominated
-    // the 100× decade (253 s at pseudo-sf10, ~3× the shingling cost).
-    // The result plan reads it, so the pin lives until a caller-side
-    // storage sweep.
-    val sh = shingles(docs, idCol, tokens).persist()
-    val cands = sortedNeighborhoodCands(
-      sortedNeighborhoodRanks(docs, idCol, sortKey), window)
-    verifyJaccard(sh, cands, threshold)
-  }
-
-  /** [[sortedNeighborhoodPairs]] with verification on per-doc shingle
-    * SET arrays: each candidate pair joins its two `shset` arrays and
+  /** Sorted-neighborhood near-dup pairs with verification on per-doc
+    * shingle SET arrays (the exploded-row form,
+    * `DedupComposed.sortedNeighborhoodPairs` in the specs, is its
+    * parity spec): each candidate pair joins its two `shset` arrays and
     * the intersection is one in-row `array_intersect` instead of the
     * exploded (pair × shingle) join + re-aggregation. SNM emits
     * O(n·window) candidates — at 500k docs that is 5M pairs, and the
@@ -1639,62 +1404,6 @@ object Dedup {
       .select(col("doc_id"),
         col("__r")("clean_text").as("clean_text"),
         col("__r")("n_removed").as("n_removed"))
-  }
-
-  /** The composed Catalyst-HOF reference form of [[intraDocStrip]] —
-    * kept as the kernel's executable spec (ExpressionSpec asserts
-    * parity on random corpora); the kernel replaced it in the d19
-    * query path after the sort+exists chain measured 86.9 s at
-    * pseudo-sf10.
-    */
-  def intraDocStripComposed(docs: DataFrame, idCol: String,
-                            tokens: Column,
-                            window: Int = 3): DataFrame = {
-    require(window >= 2, s"window must be >= 2, got $window")
-    val W = window
-    val t = docs.select(col(idCol).cast("long").as("doc_id"),
-      tokens.as("__toks"))
-    val n = size(col("__toks"))
-    // (content, pos) per window start; array_sort orders structs
-    // field-by-field → content groups adjacent, first occurrence
-    // (min pos) leading each group. Docs shorter than the window get
-    // an EXPLICIT empty array — sequence(1, 0) would descend [1, 0].
-    val wins = when(n >= lit(W), transform(
-      sequence(lit(1), n - W + 1),
-      p => struct(slice(col("__toks"), p, lit(W)).as("w"),
-        p.cast("long").as("p"))))
-      .otherwise(array().cast("array<struct<w:array<string>,p:bigint>>"))
-    // all-but-first per content group: element i (0-based) is marked
-    // iff its predecessor in sorted order carries the same content.
-    // greatest(i,1) keeps element_at's 1-based index legal under ANSI
-    // when i = 0 (the i > 0 conjunct already excludes that element).
-    // The sorted array and the cut list are let-bound via Bind.once —
-    // lambda VARIABLES, not project aliases — because Catalyst's
-    // project collapsing would inline a column alias into the
-    // downstream `exists(...)` consumer, which sits inside the
-    // per-token filter lambda: the whole sort would then re-run per
-    // TOKEN (measured ~60×: 7.1 s → 0.6 s at sf0.1 with the binding).
-    import graft.expressions.Bind
-    val keep = Bind.once(array_sort(wins)) { sw =>
-      Bind.once(filter(
-        transform(sw, (x, i) =>
-          when(i > lit(0) &&
-            element_at(sw, greatest(i, lit(1)))("w") === x("w"),
-            x("p"))),
-        e => e.isNotNull)) { cut =>
-        filter(
-          transform(col("__toks"),
-            (tok, i) => struct(tok.as("w"), (i + 1).cast("long").as("p"))),
-          tp => !exists(cut,
-            p => tp("p") >= p && tp("p") <= p + lit(W - 1).cast("long")))
-      }
-    }
-    t.select(col("doc_id"), col("__toks"), keep.as("__keep"))
-      .select(col("doc_id"),
-        concat_ws(" ", transform(col("__keep"), tp => tp("w")))
-          .as("clean_text"),
-        (size(col("__toks")) - size(col("__keep"))).cast("long")
-          .as("n_removed"))
   }
 
   /** Fixed-point PageRank-style centrality over the undirected

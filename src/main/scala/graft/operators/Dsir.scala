@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.features.FeatureHashing
 
 /** DSIR — Data Selection via Importance Resampling (Xie et al. 2023,
   * "Data Selection for Language Models via Importance Resampling"):
@@ -15,7 +14,7 @@ import graft.features.FeatureHashing
   * Spark-first shape for 100 TB:
   *  - features (hashed unigrams + bigrams → `m` buckets) are a pure
   *    in-row expression — no vocabulary pass, no dictionary (the
-  *    [[FeatureHashing]] hashing-trick discipline);
+  *    [[graft.features.FeatureHashing]] hashing-trick discipline);
   *  - BOTH models fit in ONE corpus pass: a single map-side-combining
   *    aggregation keyed on bucket yields raw counts and target-slice
   *    counts together (shuffle volume ≤ m rows per task);
@@ -42,32 +41,16 @@ object Dsir {
   val Q = 16777216.0
 
   /** Hashed unigram+bigram feature buckets of a token array — pure
-    * in-row expression (md5 oracle-profile hash; swap
-    * [[FeatureHashing.bucketFast]] in deployments, the f05
+    * in-row expression (md5 oracle-profile hash, the f05
     * discipline), computed by the native one-sweep kernel
-    * [[graft.expressions.HashedGramBucketsExpr]]. The composed form
-    * below is its executable spec (parity in ExpressionSpec).
+    * [[graft.expressions.HashedGramBucketsExpr]]. The composed form,
+    * `DsirComposed.featureBucketsComposed` in the specs, is its
+    * executable spec (parity in ExpressionSpec).
     */
   def featureBuckets(tokens: Column, numBuckets: Int): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge._
     column(graft.expressions.HashedGramBucketsExpr(
       expression(tokens), numBuckets))
-  }
-
-  /** The composed Catalyst-HOF reference form of [[featureBuckets]]:
-    * bigram string array via `zip_with(slice, slice)`, then
-    * [[FeatureHashing.bucketOracle]] per feature. Kept as the
-    * kernel's executable spec; it builds a hex string + base-16
-    * parse per feature, so production call sites use the kernel.
-    */
-  def featureBucketsComposed(tokens: Column, numBuckets: Int): Column = {
-    val bigrams = when(size(tokens) >= 2,
-      zip_with(slice(tokens, lit(1), size(tokens) - 1),
-        slice(tokens, lit(2), size(tokens) - 1),
-        (a, b) => concat(a, lit("_"), b)))
-      .otherwise(array().cast("array<string>"))
-    transform(concat(tokens, bigrams),
-      t => FeatureHashing.bucketOracle(t, numBuckets))
   }
 
   /** Fit both hashed-n-gram unigram models in ONE pass and return the

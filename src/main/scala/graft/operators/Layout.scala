@@ -122,20 +122,6 @@ object Layout {
       .mode("overwrite").parquet(outPath)
   }
 
-  /** [[tableStats]] with HLL-estimated NDV (`approx_count_distinct`)
-    * — the 100 TB form: one sketch per column folds in a SINGLE
-    * aggregation over ONE scan with NO Expand pass (plan-asserted in
-    * LayoutSpec), so stats cost stops scaling with column count ×
-    * row count. Estimates carry ~2% standard error; everything else
-    * (rows, nulls, min/max) stays exact. Measured vs the exact form
-    * in SCALE.md.
-    */
-  def tableStatsApprox(df: DataFrame,
-                       numericCols: Seq[(String, Column)],
-                       stringCols: Seq[String]): DataFrame =
-    statsImpl(df, numericCols, stringCols,
-      e => approx_count_distinct(e, rsd = 0.02))
-
   /** ANALYZE-style per-column statistics with EXACT distinct counts
     * (c10): row count, null count, NDV, min/max — the table the
     * planner's join-reorder / broadcast decisions and a data-quality
@@ -153,9 +139,10 @@ object Layout {
     * 3× the union form (measured A/B, SCALE.md round 14 (d)). The
     * branch count is the COLUMN count — scan-setup overhead, not
     * data — and each scan reads one column, so the union form's
-    * total I/O equals the Expand form's single scan. At 100 TB the
-    * [[tableStatsApprox]] sketch form is still the intended path;
-    * this exact form exists because the gate hash-compares values.
+    * total I/O equals the Expand form's single scan. At 100 TB a
+    * sketch form (`approx_count_distinct` per column, measured in
+    * SCALE.md) is the intended path; this exact form exists because
+    * the gate hash-compares values.
     */
   def tableStats(df: DataFrame,
                  numericCols: Seq[(String, Column)],
@@ -183,43 +170,6 @@ object Layout {
           col("mn").as("min_s"), col("mx").as("max_s"))
     }
     branches.reduce(_ unionAll _)
-  }
-
-  private def statsImpl(df: DataFrame,
-                        numericCols: Seq[(String, Column)],
-                        stringCols: Seq[String],
-                        ndv: Column => Column): DataFrame = {
-    val aggs = numericCols.flatMap { case (name, e) => Seq(
-        sum(e.isNull.cast("long")).as(s"${name}__nulls"),
-        ndv(e).as(s"${name}__ndv"),
-        min(e).cast("double").as(s"${name}__min"),
-        max(e).cast("double").as(s"${name}__max"))
-      } ++ stringCols.flatMap { c => Seq(
-        sum(col(c).isNull.cast("long")).as(s"${c}__nulls"),
-        ndv(col(c)).as(s"${c}__ndv"),
-        min(col(c)).as(s"${c}__min"),
-        max(col(c)).as(s"${c}__max"))
-      }
-    val one = df.agg(count(lit(1)).as("__n"), aggs: _*)
-    val rows =
-      numericCols.map { case (name, _) =>
-        struct(lit(name).as("column"), col("__n").as("n_rows"),
-          col(s"${name}__nulls").as("n_nulls"),
-          col(s"${name}__ndv").as("ndv"),
-          col(s"${name}__min").as("min_n"),
-          col(s"${name}__max").as("max_n"),
-          lit(null).cast("string").as("min_s"),
-          lit(null).cast("string").as("max_s"))
-      } ++ stringCols.map { c =>
-        struct(lit(c).as("column"), col("__n").as("n_rows"),
-          col(s"${c}__nulls").as("n_nulls"),
-          col(s"${c}__ndv").as("ndv"),
-          lit(null).cast("double").as("min_n"),
-          lit(null).cast("double").as("max_n"),
-          col(s"${c}__min").as("min_s"),
-          col(s"${c}__max").as("max_s"))
-      }
-    one.select(explode(array(rows: _*)).as("s")).select(col("s.*"))
   }
 
   /** Equi-depth histogram of a non-null INTEGRAL column — the other

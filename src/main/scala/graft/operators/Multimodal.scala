@@ -283,7 +283,7 @@ object Multimodal {
     * BIGINTs (h_hi = bits 32–63, h_lo = bits 0–31) — split so the
     * oracle never builds a sign-overflowing 2⁶³ term. Near-identical
     * images (small pixel perturbations, re-encodes) land within a
-    * few Hamming bits; [[phashNearDup]] pairs them at scale.
+    * few Hamming bits.
     *
     * Decode is the same real-codec batch shape as [[decode]]
     * (per-partition `mapPartitions`, `javax.imageio`); non-image
@@ -335,75 +335,6 @@ object Multimodal {
           c += 1
         }
         ImageHash(a.asset_id, hi, lo)
-      }
-    }
-  }
-
-  /** Near-duplicate image pairs from [[aHash]] fingerprints: the 64
-    * bits split into 4 disjoint 16-bit bands; by pigeonhole every
-    * pair within Hamming distance ≤ 3 agrees on at least one whole
-    * band (the d04 SimHash argument), so candidates are an equi-join
-    * on (band index, band value) — banded buckets, never all-pairs —
-    * verified by exact popcount over the xor'd halves. At 100 TB the
-    * only shuffle is the 4-rows-per-image band table keyed by 16-bit
-    * values; image payloads are never touched (aHash already ran in
-    * the scan pass).
-    */
-  def phashNearDup(hashes: DataFrame, maxHamming: Int): DataFrame = {
-    require(maxHamming >= 0 && maxHamming <= 3,
-      s"4 bands guarantee recall only for hamming <= 3, got $maxHamming")
-    val mask = lit(0xffffL)
-    val banded = hashes.select(col("asset_id"), col("h_hi"), col("h_lo"),
-      posexplode(array(
-        col("h_lo").bitwiseAND(mask),
-        shiftright(col("h_lo"), 16).bitwiseAND(mask),
-        col("h_hi").bitwiseAND(mask),
-        shiftright(col("h_hi"), 16).bitwiseAND(mask)))
-        .as(Seq("band", "sig")))
-    val x = banded.as("x")
-    val yy = banded.as("y")
-    x.join(yy, col("x.band") === col("y.band") &&
-        col("x.sig") === col("y.sig") &&
-        col("x.asset_id") < col("y.asset_id"))
-      .select(col("x.asset_id").as("a"), col("y.asset_id").as("b"),
-        (expr("bit_count(x.h_hi ^ y.h_hi)") +
-          expr("bit_count(x.h_lo ^ y.h_lo)")).as("hamming"))
-      .distinct()
-      .filter(col("hamming") <= maxHamming)
-  }
-
-  /** Image resize: real decode → area-scale → re-encode PNG, metadata
-    * updated to the new dimensions. Non-image assets pass through
-    * untouched (audio/video resampling is a different operation).
-    */
-  def resizeImages(assets: Dataset[MediaAsset], w: Int,
-                   h: Int): Dataset[MediaAsset] = {
-    implicit val enc = Encoders.product[MediaAsset]
-    assets.map { a =>
-      if (a.kind != "image") a
-      else {
-        val src = ImageIO.read(new ByteArrayInputStream(a.payload))
-        require(src != null,
-          s"asset ${a.asset_id}: undecodable image payload")
-        // ImageIO reports TYPE_CUSTOM (0) for some real-world PNGs
-        // (16-bit, odd alpha layouts); the BufferedImage constructor
-        // rejects type 0, so fall back to a universal format.
-        val dstType =
-          if (src.getType == BufferedImage.TYPE_CUSTOM)
-            BufferedImage.TYPE_INT_ARGB
-          else src.getType
-        val dst = new BufferedImage(w, h, dstType)
-        val g = dst.createGraphics()
-        try {
-          g.setRenderingHint(
-            java.awt.RenderingHints.KEY_INTERPOLATION,
-            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-          g.drawImage(src, 0, 0, w, h, null)
-        } finally g.dispose()
-        val baos = new ByteArrayOutputStream()
-        ImageIO.write(dst, "png", baos)
-        a.copy(payload = baos.toByteArray,
-          meta = a.meta.copy(width = w, height = h))
       }
     }
   }

@@ -38,9 +38,9 @@ object Ngrams {
     * only rows that ever exist (and the only shuffle) are per-doc
     * DISTINCT grams flowing into one gram-key hash aggregate with
     * map-side partials — the naive
-    * `explode → groupBy(doc, gram) → groupBy(gram)` chain (kept below
-    * as [[ngramProfileComposed]], its executable spec) shuffles the
-    * full corpus-sized gram explosion first.
+    * `explode → groupBy(doc, gram) → groupBy(gram)` chain (its
+    * executable spec, `NgramsComposed.ngramProfileComposed` in the
+    * specs) shuffles the full corpus-sized gram explosion first.
     */
   def ngramProfile(docs: DataFrame, idCol: String, tokens: Column,
                    n: Int): DataFrame = {
@@ -54,33 +54,6 @@ object Ngrams {
       .groupBy(col("vc.value").as("gram"))
       .agg(count(lit(1)).as("df"), sum(col("vc.cnt")).as("occurrences"))
   }
-
-  /** The composed reference form of the per-row value histogram
-    * ([[graft.expressions.ValueCountsExpr]]): count each distinct
-    * value with a full-array filter, sorted by value. O(n·distinct)
-    * interpreted lambdas per row — kept ONLY as the kernel's
-    * executable spec (parity in ExpressionSpec; null-free arrays).
-    */
-  def valueCountsComposed(arr: Column): Column =
-    transform(array_sort(array_distinct(arr)),
-      v => struct(v.as("value"),
-        size(filter(arr, t => t === v)).cast("long").as("cnt")))
-
-  /** The composed reference form of [[ngramProfile]]: two-level
-    * aggregate — per-(doc, gram) counts first, then per-gram sums.
-    * Kept as the kernel path's executable spec (full-profile parity
-    * in ExpressionSpec); it shuffles every gram occurrence where the
-    * kernel path shuffles only per-doc distinct grams.
-    */
-  def ngramProfileComposed(docs: DataFrame, idCol: String, tokens: Column,
-                           n: Int): DataFrame =
-    docs.select(col(idCol).as("doc_id"), tokens.as("__toks"))
-      .select(col("doc_id"),
-        explode(ngramsInRow(col("__toks"), n)).as("gram"))
-      .groupBy(col("doc_id"), col("gram"))
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy(col("gram"))
-      .agg(count(lit(1)).as("df"), sum(col("cnt")).as("occurrences"))
 
   /** Top-K corpus n-grams by document frequency (ties → gram asc) —
     * the profile view that picks [[stripHotNgrams]]'s hot set.

@@ -53,26 +53,11 @@ import graft.core.Leased
   */
 object Quantiles {
 
-  /** Exact percentiles of `valCol` per `grpCol` at each q in `qs`.
+  /** Exact percentiles of `valCol` per `grpCol` at each q in `qs`,
+    * with the pin-release handle ([[graft.core.Leased]]).
     * Output: (grpCol, q, value) — `value` matches Spark's
     * `percentile(valCol, q)` (interpolated, weights 1). Nulls in
     * `valCol` are ignored (as the built-in does); NaN unsupported.
-    *
-    * Pin contract: the result plan references three TINY internally
-    * checkpointed frames (≤ groups × buckets rows — see
-    * [[exactPercentilesLeased]] for why they must be pinned); with
-    * this signature their blocks live until a caller-side storage
-    * sweep (Bench/TimeQuery sweep between queries; sessions free all
-    * storage at stop). Long-lived sessions calling in a loop should
-    * use [[exactPercentilesLeased]] and `release()` after consuming.
-    */
-  def exactPercentiles(df: DataFrame, grpCol: String, valCol: String,
-                       qs: Seq[Double],
-                       buckets: Int = 1 << 16): DataFrame =
-    exactPercentilesLeased(df, grpCol, valCol, qs, buckets).df
-
-  /** [[exactPercentiles]] with the pin-release handle
-    * ([[graft.core.Leased]]).
     *
     * Why the pins exist: each internally checkpointed frame is TINY
     * (≤ groups × buckets rows) but referenced from several subtrees —
@@ -156,10 +141,12 @@ object Quantiles {
     Leased(result, pins.toSeq)
   }
 
-  /** [[exactPercentiles]] pivoted to one row per group: each q in
-    * `named` becomes a column holding the (optionally rounded)
-    * percentile value. Same pin contract as [[exactPercentiles]];
-    * [[exactPercentilesWideLeased]] is the scoped-release form. */
+  /** [[exactPercentilesLeased]] pivoted to one row per group: each q
+    * in `named` becomes a column holding the (optionally rounded)
+    * percentile value. The result plan references the same tiny
+    * checkpointed frames, which live until a caller-side storage
+    * sweep; [[exactPercentilesWideLeased]] is the scoped-release
+    * form. */
   def exactPercentilesWide(df: DataFrame, grpCol: String,
                            valCol: String, named: Seq[(Double, String)],
                            roundTo: Int = -1): DataFrame =

@@ -27,17 +27,12 @@ object Similarity {
   /** Sequential-order float64 dot product of two float-array columns —
     * left-to-right IEEE accumulation, same result on every engine
     * (reassociation-free). Runs as the native codegen'd
-    * [[graft.expressions.DotF64]] kernel; [[dotComposed]] is the
-    * executable spec of the same semantics (bit-parity asserted in
-    * ExpressionSpec).
+    * [[graft.expressions.DotF64]] kernel; the specs'
+    * `SimilarityComposed.dotComposed` is the executable spec of the
+    * same semantics (bit-parity asserted in ExpressionSpec).
     */
   def dot(a: Column, b: Column): Column =
     kernel2(a, b, graft.expressions.DotF64(_, _))
-
-  /** The `aggregate(zip_with(...))` reference form of [[dot]]. */
-  def dotComposed(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
 
   /** Sequential-order L2 norm (native kernel; see [[dot]]). */
   def norm(a: Column): Column = {
@@ -45,19 +40,13 @@ object Similarity {
     column(graft.expressions.NormF64(expression(a)))
   }
 
-  /** The composed reference form of [[norm]]. */
-  def normComposed(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, v) => acc + v))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
-
   /** Cosine from PRE-computed norms — identical IEEE ops and order to
-    * [[cosine]] (so oracle hashes are unaffected), but the norms are
-    * bound to per-row columns once instead of being re-derived for
-    * every scored pair: in an all-pairs or candidate join each vector
-    * is scored against many partners, and [[cosine]] would re-run two
-    * full array passes per pair.
+    * `dot(a, b) / (norm(a) * norm(b))` (so oracle hashes are
+    * unaffected), but the norms are bound to per-row columns once
+    * instead of being re-derived for every scored pair: in an
+    * all-pairs or candidate join each vector is scored against many
+    * partners, and the inline form would re-run two full array passes
+    * per pair.
     */
   def cosineFromNorms(a: Column, b: Column, na: Column,
                       nb: Column): Column = dot(a, b) / (na * nb)
@@ -74,7 +63,7 @@ object Similarity {
     * identical to the window form — pinned by the e01/e13 oracle rows
     * and PlanAuditSpec.
     */
-  private[operators] def topKPerQuery(scored: DataFrame, scoreCol: String,
+  private[graft] def topKPerQuery(scored: DataFrame, scoreCol: String,
                                       scoreAsc: Boolean, k: Int): DataFrame = {
     import org.apache.spark.sql.graftbridge.ColumnBridge._
     val scoreType = scored.schema(scoreCol).dataType
@@ -212,9 +201,9 @@ object Similarity {
     * row — no corpus explode ×numTables, no candidate-pair exchange,
     * no shuffle of corpus vectors at all; the only exchange is the
     * |queries|·k bounded-heap merge of [[topKPerQuery]]. The former
-    * bucket-join form survives as [[lshKnnJoined]] (the executable
-    * spec, value-parity-pinned in DedupSimilaritySpec, and the path
-    * for query sets too large to ship as literals).
+    * bucket-join form is the executable spec
+    * (`SimilarityComposed.lshKnnJoined` in the specs,
+    * value-parity-pinned in DedupSimilaritySpec).
     */
   def lshKnn(corpus: DataFrame, queries: DataFrame, k: Int,
              numPlanes: Int = 4, numTables: Int = 16,
@@ -259,50 +248,6 @@ object Similarity {
     topKPerQuery(scored, "cos", scoreAsc = false, k)
   }
 
-  /** The bucket-join reference form of [[lshKnn]]: explode corpus and
-    * query bucket ids, equi-join on the (table, bucket) key, dedup
-    * candidate pairs, then join vectors back for scoring. Identical
-    * candidate set and scores (parity in DedupSimilaritySpec); kept as
-    * the executable spec and the path for a query side too large to
-    * ship as plan literals — at sf10 the in-row form replaces this
-    * form's shuffle of the full corpus vector table through the
-    * candidate join (279 → ~20 s, the e-family "corpus never
-    * shuffles" rule).
-    */
-  def lshKnnJoined(corpus: DataFrame, queries: DataFrame, k: Int,
-                   numPlanes: Int = 4, numTables: Int = 16,
-                   dim: Int = 64, seed: Long = 42L,
-                   idCol: String = "vec_id",
-                   vecCol: String = "embedding"): DataFrame = {
-    val planeSets = (0 until numTables)
-      .map(t => randomPlanes(numPlanes, dim, seed + 1000L * t))
-    def buckets(vec: Column): Column = array(
-      planeSets.zipWithIndex.map { case (ps, t) =>
-        struct(lit(t).as("t"), lshBucket(vec, ps).as("bkt"))
-      }: _*)
-
-    val c = corpus.select(col(idCol).as("n_id"), col(vecCol).as("n_vec"),
-      norm(col(vecCol)).as("n_nrm"))
-    val q = queries.select(col(idCol).as("q_id"), col(vecCol).as("q_vec"),
-      norm(col(vecCol)).as("q_nrm"))
-    val cBuckets = c.select(col("n_id"),
-      explode(buckets(col("n_vec"))).as("tb"))
-    val qBuckets = broadcast(q.select(col("q_id"),
-      explode(buckets(col("q_vec"))).as("tb")))
-
-    val candidates = cBuckets.join(qBuckets, Seq("tb"))
-      .filter(col("n_id") =!= col("q_id"))
-      .select(col("q_id"), col("n_id")).distinct()
-
-    val scored = candidates
-      .join(c, Seq("n_id"))
-      .join(broadcast(q), Seq("q_id"))
-      .select(col("q_id"), col("n_id"),
-        cosineFromNorms(col("q_vec"), col("n_vec"),
-          col("q_nrm"), col("n_nrm")).as("cos"))
-    topKPerQuery(scored, "cos", scoreAsc = false, k)
-  }
-
   /** IVF (inverted-file) approximate top-k: a k-means coarse
     * quantizer partitions the corpus into `numCells` Voronoi cells;
     * each query probes only its `nProbe` nearest cells and ranks the
@@ -337,15 +282,8 @@ object Similarity {
   /** Sequential-order squared L2 distance to a literal centroid —
     * reassociation-free, so engine-portable like [[dot]].
     */
-  private def sqDistLit(vec: Column, ctr: Array[Double]): Column =
+  private[graft] def sqDistLit(vec: Column, ctr: Array[Double]): Column =
     kernel2(vec, typedLit(ctr.toSeq), graft.expressions.SqDistF64(_, _))
-
-  /** The composed reference form of [[sqDistLit]] (parity spec). */
-  private[graft] def sqDistLitComposed(vec: Column,
-      ctr: Array[Double]): Column =
-    aggregate(zip_with(vec, typedLit(ctr.toSeq),
-      (x, y) => (x.cast("double") - y) * (x.cast("double") - y)),
-      lit(0.0), (acc, v) => acc + v)
 
   /** The `nProbe` nearest centroid ids for a vector, as a pure
     * Catalyst expression against ≤numCells centroid literals —
@@ -550,13 +488,6 @@ object Similarity {
         (col("s").cast("double") / col("n").cast("double") / lit(LloydQ))
           .as("centroid"))
 
-  /** Squared L2 distance to the nearest of `centroids` — the
-    * per-point SSE term of a k-means fit (all in-row, literal-folded
-    * like [[nearestCells]]).
-    */
-  def sqDistToNearest(vec: Column, centroids: Array[Array[Double]]): Column =
-    array_min(array(centroids.map(c => sqDistLit(vec, c)): _*))
-
   /** The centroids a [[lloydStep]] result denotes, collected to the
     * driver as the next iteration's literals: non-empty cells only,
     * renumbered densely 0..k'−1 in cell order (empty cells die, the
@@ -628,26 +559,6 @@ object Similarity {
     column(graft.expressions.SignSketch(expression(vec), dim))
   }
 
-  /** The composed reference form of [[signSketch]] (parity pinned in
-    * Round6OpsSpec): 64 `when(element_at(...) >= 0)` terms OR-ed
-    * together, guarded against short vectors. NOT for hot paths — the
-    * interpreted chain costs ~10 µs per evaluation and Catalyst may
-    * re-site it inside a join's pair loop (the round-7 e13 profile:
-    * 24 s of a 25 s sf1 run).
-    */
-  private[graft] def signSketchComposed(vec: Column, dim: Int = 64): Column = {
-    require(dim >= 1 && dim <= 64, s"signSketch needs 1..64 dims, got $dim")
-    val bits = (0 until dim).map(i =>
-      when(element_at(vec, i + 1) >= 0, lit(1L << i)).otherwise(lit(0L)))
-      .reduce((a, b) => a.bitwiseOR(b))
-    // A vector shorter than `dim` would read nulls past the end and
-    // silently sketch those bits as 0 (indistinguishable from a
-    // negative dim) — fail loudly instead of ranking wrong.
-    when(size(vec) >= dim, bits).otherwise(raise_error(format_string(
-      s"graft signSketch: vector has %s dims, needs >= $dim",
-      size(vec).cast("string"))))
-  }
-
   /** Approximate top-k by Hamming distance between sign sketches
     * (Charikar 2002 — sign-random-projection similarity; here the
     * identity projection's signs): rank = bit_count(xor(sketches)),
@@ -655,7 +566,7 @@ object Similarity {
     * popcount per pair — no float math touches the corpus — and the
     * broadcast-queries / corpus-never-shuffles shape matches
     * [[bruteForceKnn]] with 1/32 the scan bytes; re-rank survivors
-    * with [[cosine]] when exactness matters.
+    * with [[cosineFromNorms]] when exactness matters.
     */
   def hammingTopK(corpus: DataFrame, queries: DataFrame, k: Int,
                   dim: Int = 64,
@@ -765,28 +676,6 @@ object Similarity {
       .filter(col("cos") >= threshold)
   }
 
-  /** Full SemDeDup: fit the coarse quantizer (k-means, like
-    * [[ivfKnn]]), take cell-local pairs, close them into duplicate
-    * clusters — each embedding labeled with its semantic-dup group's
-    * min id, ready for [[graft.operators.Dedup.resolveClusters]]-style
-    * keep-one resolution. The e09 oracle pins the search stage with
-    * fixed centroids; the k-means fit stays spec-land (recall bar),
-    * the d06 discipline.
-    */
-  def semDedup(corpus: DataFrame, numCells: Int, threshold: Double,
-               seed: Long = 42L, idCol: String = "vec_id",
-               vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.ml.functions.array_to_vector
-    val km = new org.apache.spark.ml.clustering.KMeans()
-      .setK(numCells).setSeed(seed)
-      .setFeaturesCol("fv").setPredictionCol("cell")
-    val model = km.fit(corpus
-      .select(array_to_vector(col(vecCol)).as("fv")))
-    val pairs = semDedupPairs(corpus,
-      model.clusterCenters.map(_.toArray), threshold, idCol, vecCol)
-    Dedup.dupClusters(pairs.select(col("a"), col("b")))
-  }
-
   /** Product-quantization codebooks: `M` subspaces × `K` centroids ×
     * `dsub` dims each (Jégou et al. 2011, "Product quantization for
     * nearest neighbor search"). Codes compress a d-dim float vector
@@ -796,26 +685,13 @@ object Similarity {
   type Codebooks = Array[Array[Array[Double]]]
 
   /** Deterministic seeded codebooks — the fixed-literal profile the
-    * e10/e11 oracles pin (the d03-vs-d05 discipline: oracle anchors
-    * the math, [[pqTrain]] is the production fit).
+    * e10/e11 oracles pin (the d03-vs-d05 discipline: the oracle
+    * anchors the math; the k-means fit, `SimilarityComposed.pqTrain`,
+    * stays in the specs).
     */
   def seededCodebooks(numSub: Int, k: Int, dsub: Int,
                       seed: Long = 7L): Codebooks =
     Array.tabulate(numSub)(m => randomPlanes(k, dsub, seed + 31L * m))
-
-  /** Per-subspace k-means codebooks (the real PQ training). */
-  def pqTrain(corpus: DataFrame, numSub: Int, k: Int, dim: Int,
-              seed: Long = 42L, vecCol: String = "embedding"): Codebooks = {
-    import org.apache.spark.ml.functions.array_to_vector
-    val dsub = dim / numSub
-    Array.tabulate(numSub) { m =>
-      val km = new org.apache.spark.ml.clustering.KMeans()
-        .setK(k).setSeed(seed + m).setFeaturesCol("fv")
-      km.fit(corpus.select(array_to_vector(
-          slice(col(vecCol), m * dsub + 1, dsub)).as("fv")))
-        .clusterCenters.map(_.toArray)
-    }
-  }
 
   /** PQ encode: nearest codebook centroid per subvector (ties → lower
     * code, the [[nearestCells]] ordering). Pure in-row Catalyst
@@ -831,15 +707,6 @@ object Similarity {
       element_at(nearestCells(slice(vec, m * dsub + 1, dsub), cb, 1), 1)
     }: _*)
   }
-
-  /** PQ decode: concatenated centroids of each code — the lossy
-    * reconstruction whose error [[pqTrain]] minimizes.
-    */
-  def pqDecode(codes: Column, codebooks: Codebooks): Column =
-    concat(codebooks.zipWithIndex.map { case (cb, m) =>
-      element_at(
-        typedLit(cb.map(_.toSeq).toSeq), element_at(codes, m + 1) + 1)
-    }: _*)
 
   /** Asymmetric-distance (ADC) top-k over PQ codes: each query builds
     * its M×K lookup table of exact subvector-to-centroid distances

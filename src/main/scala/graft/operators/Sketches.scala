@@ -85,50 +85,10 @@ object Sketches {
     val hv = conv(substring(md5(item), 1, 15), 16, 10).cast("long")
     val bucket = (hv % (1L << p)).cast("int")
     val wbits = shiftright(hv, p)
-    // rank via the allocation-free LZCNT kernel; [[logLogComposed]]
-    // is the builtin-only executable spec it must equal
+    // rank via the allocation-free LZCNT kernel; the builtin-only
+    // executable spec it must equal is SketchesComposed.logLogComposed
     val rho = column(graft.expressions.LogLogRho(expression(wbits), p))
     struct(bucket.as("bucket"), wbits.as("wbits"), rho.as("rho"))
-  }
-
-  /** [[logLog]] in pure builtins — `length(bin(w))` allocates a
-    * digit string per row, so this form is the executable SPEC of
-    * the kernel (parity in SketchesIdsSpec), the oracle mirror
-    * shape, and the fallback if the kernel is ever unavailable. */
-  def logLogComposed(item: Column, p: Int): Column = {
-    require(p >= 1 && p <= 20, s"logLog: p must be in [1,20], got $p")
-    val rhoMax = 60 - p + 1
-    val hv = conv(substring(md5(item), 1, 15), 16, 10).cast("long")
-    val bucket = (hv % (1L << p)).cast("int")
-    val wbits = shiftright(hv, p)
-    val rho = when(wbits === 0L, lit(rhoMax))
-      .otherwise(lit(rhoMax) - length(bin(wbits))).cast("int")
-    struct(bucket.as("bucket"), wbits.as("wbits"), rho.as("rho"))
-  }
-
-  /** Driver-side LogLog cardinality estimate from collected
-    * registers (missing buckets = 0): `alpha_m · m² / Σ 2^(−M_j)` —
-    * the raw HyperLogLog estimator (Flajolet et al., 2007), no
-    * small/large-range correction. For spec bounds and operator
-    * callers; the hash gate pins the REGISTERS, not this float.
-    */
-  def logLogEstimate(registers: Map[Int, Int], p: Int): Double = {
-    // the alpha constants below (0.673/0.697/0.709 and the closed
-    // form) are defined by Flajolet et al. (2007) only for m >= 16;
-    // below that the raw estimator is biased, so refuse rather than
-    // silently mis-estimate (register EXTRACTION still allows p >= 1
-    // via logLogComposed — only this float is domain-restricted)
-    require(p >= 4 && p <= 20,
-      s"logLogEstimate: p must be in [4,20] (m >= 16), got $p")
-    val m = 1 << p
-    val alpha =
-      if (m == 16) 0.673
-      else if (m == 32) 0.697
-      else if (m == 64) 0.709
-      else 0.7213 / (1 + 1.079 / m)
-    val z = (0 until m).map(b =>
-      math.pow(2.0, -registers.getOrElse(b, 0).toDouble)).sum
-    alpha * m * m / z
   }
 
   def cmsEstimateFast(cms: Column, item: Column,

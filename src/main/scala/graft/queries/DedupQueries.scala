@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{IndexCache, Tables}
 import graft.operators.{Dedup, Similarity, Splits}
 import graft.text.TextOps
 
@@ -18,8 +18,8 @@ object DedupQueries {
 
   /** Fixed seeded PQ codebooks for the e10/e11 oracle anchors:
     * 64 dims → 4 subspaces × 16 centroids × 16 dims. The trained
-    * profile ([[Similarity.pqTrain]]) is spec-land, the e05/e08
-    * discipline.
+    * profile stays in the specs (`SimilarityComposed.pqTrain`), the
+    * e05/e08 discipline.
     */
   private lazy val pqCbs: Similarity.Codebooks =
     Similarity.seededCodebooks(numSub = 4, k = 16, dsub = 16)
@@ -112,8 +112,7 @@ object DedupQueries {
       // no corpus-wide group-by on either side of the persistence
       val sets = Dedup.shingleSets(Tables.documents(s, d), "doc_id",
         docTokens(s))
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-lsh-idx-").toString
+      val path = IndexCache.newIndexDir("graft-lsh-idx-")
       Dedup.writeNearDupIndexSets(sets.filter(col("doc_id") >= 100), path)
       Dedup.incrementalNearDupsSets(s, path,
         sets.filter(col("doc_id") < 100), threshold = 0.5)
@@ -186,8 +185,7 @@ object DedupQueries {
     // The d12 persisted-index discipline applied to substring spans.
     "d17_incremental_substring" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-sub-idx-").toString
+      val path = IndexCache.newIndexDir("graft-sub-idx-")
       Dedup.writeSubstringIndex(docs.filter(col("doc_id") >= 100),
         "doc_id", docTokens(s), path)
       Dedup.incrementalSubstringSpans(s, path,
@@ -410,8 +408,7 @@ object DedupQueries {
     "e16_ivf_persisted" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val ctrs = Similarity.randomPlanes(8, 64, seed = 7L)
-      val path = java.nio.file.Files
-        .createTempDirectory("graft-ivf-idx-").toString
+      val path = IndexCache.newIndexDir("graft-ivf-idx-")
       Similarity.ivfWriteIndex(emb, ctrs, path)
       Similarity.ivfSearchIndexed(s, path,
         emb.filter(col("vec_id") < 10), ctrs, k = 10, nProbe = 4)
@@ -530,7 +527,7 @@ object DedupQueries {
     // centroids), cell-local cosine pairs ≥ 0.4, closed into semantic
     // dup clusters. Same fixed-500 slice as e03/e04 — with literal
     // k=8 cells the per-cell term is the e03 quadratic; the scale
-    // path is Similarity.semDedup with k ∝ √n trained cells
+    // path is SimilarityComposed.semDedup with k ∝ √n trained cells
     // (recall vs the exact baseline asserted in spec).
     "e09_semdedup" -> ((s, d) => {
       val emb = Tables.embeddings(s, d).filter(col("vec_id") < 500)
@@ -603,7 +600,8 @@ object DedupQueries {
     "st08_stream_neardup_cands" -> ((s, d) => {
       // in-row kernel signatures out of the scan projection — the
       // exact shape the streaming side runs (and zero corpus shuffle;
-      // ≡ the lshBandSignatures aggregation form by spec parity)
+      // ≡ the aggregation form, DedupComposed.lshBandSignatures, by
+      // spec parity)
       val bands = Dedup
         .shingleSets(Tables.documents(s, d), "doc_id", docTokens(s))
         .select(col("doc_id"),
@@ -701,7 +699,7 @@ object DedupQueries {
     FnvSql.stages(p, src, keep)
 
   /** The d05 fast-profile candidates, mirrored from
-    * [[Dedup.lshBandSignaturesFast]]: per-permutation min of
+    * [[Dedup.bandSignaturesInRowFast]]: per-permutation min of
     * `fnv('<h>|' || shingle)` as signed longs, band signature =
     * fnv over the '|'-joined minima (16 hashes × 4 rows/band).
     */
@@ -726,8 +724,8 @@ object DedupQueries {
            ON x.b = y.b AND x.sig = y.sig AND x.doc_id < y.doc_id)"""
 
   /** MinHash → band-signature → bucket-join candidates, mirrored from
-    * [[Dedup.lshBandSignatures]]/[[Dedup.lshCandidates]] (16 hashes ×
-    * 4 rows/band). Shared by d03 (pairs) and d06 (clusters). */
+    * [[Dedup.bandSignaturesInRow]]/[[Dedup.lshCandidates]] (16 hashes
+    * × 4 rows/band). Shared by d03 (pairs) and d06 (clusters). */
   private val minhashCandsCte: String =
     """minh AS (
          SELECT doc_id, h.range AS h,

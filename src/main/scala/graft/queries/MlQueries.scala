@@ -263,22 +263,10 @@ object MlQueries {
       def relOk(x: Double, golden: Double, tol: Double): Boolean =
         math.abs(x / golden - 1.0) <= tol
       val (curveTol, lastTol) = if (bitExact) (1e-6, 1e-6) else (1e-3, 0.02)
-      // The two trainings are independent full-batch GD runs over the
-      // same cached 8-partition RDD; each iteration is one tiny 8-task
-      // job, so running them from two driver threads back-fills the
-      // idle cores (guide §2.6 "overlap independent jobs") — results
-      // are per-run identical, only the wall clock halves.
-      import scala.concurrent.{Await, ExecutionContext, Future}
-      import scala.concurrent.duration.Duration
-      // dedicated 2-thread pool, NOT Implicits.global: the trainings
-      // block on Spark actions, and global's parallelism tracks host
-      // cores — on a low-core driver the intended 2-way overlap would
-      // silently serialize (ADVICE r14). Shut down in the finally so
-      // repeated m08 runs don't leak threads.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      implicit val m08Ec: ExecutionContext =
-        ExecutionContext.fromExecutorService(pool)
-      val futures = Seq("SGD", "Adam").map { opt => (opt, Future {
+      // The two trainings run one after the other: each one's local
+      // finish (gd.FullBatch) already runs its partials on all of the
+      // session's task slots.
+      val outcomes = Seq("SGD", "Adam").map { opt =>
         val g = M08Golden.byOpt(opt)
         val (res, trainSec) = timed {
           graft.gd.TwoLayerNet.trainRdd(trainingRdd,
@@ -299,10 +287,7 @@ object MlQueries {
           .forall { case (a, b) => relOk(a, b, curveTol) }
         val lastOk = relOk(res.costs.last, g.lastCost, lastTol)
         (opt, c, curveOk, lastOk, diag)
-      }) }
-      val outcomes =
-        try futures.map { case (_, fu) => Await.result(fu, Duration.Inf) }
-        finally pool.shutdown()
+      }
       // GateDiag.record REPLACES a query's entry, so emit ONE record
       // with both optimizers' raw measurements (the old per-opt
       // records clobbered each other and only the footer survived)

@@ -480,32 +480,13 @@ object TextQueries {
     "merge batch", "spark", "spark a", "sort table window",
     "big vector", "window window", "quantum flux")
 
-  /** 100,000-entry generated phrase blocklist — the production-scale
-    * fixture behind the t21 kernel's list-size-independence claim
-    * (real screens reach this size: contamination phrase lists, C4++
-    * bad-word variants). Deterministic seeded 3-token phrases over a
-    * 60-word vocabulary; the automaton built from it is asserted
-    * O(pattern bytes) in ExpressionSpec and timed flat against the
-    * 12/263-entry lists (SCALE.md, round 10 blocklist gate). NOT
-    * used by the t21 oracle query — a 100k-term contains() chain is
-    * no oracle.
-    */
-  lazy val blocklist100k: Seq[String] = {
-    val vocab = (0 until 60).map(i => f"term$i%02d")
-    val rng = new scala.util.Random(1234L)
-    val out = collection.mutable.LinkedHashSet.empty[String]
-    while (out.size < 100000)
-      out += s"${vocab(rng.nextInt(60))} ${vocab(rng.nextInt(60))} " +
-        s"${vocab(rng.nextInt(60))}"
-    out.toSeq
-  }
-
   /** t18 body, callable from specs on planted frames: per-doc integer
     * statistics + integer-arithmetic rule flags + keep verdict over a
     * (doc_id, text) frame. Statistics come from the single-pass
     * native kernel (expressions/GopherStatsExpr; the composed HOF
-    * chain in [[gopherStatsComposed]] is its executable spec — parity
-    * in ExpressionSpec — and measured 58.4 s at pseudo-sf10 vs the
+    * chain, `TextQueriesComposed.gopherStatsComposed` in the specs, is
+    * its executable spec — parity in ExpressionSpec — and measured
+    * 58.4 s at pseudo-sf10 vs the
     * kernel's one sweep).
     */
   def gopherRules(docs: DataFrame): DataFrame = {
@@ -522,32 +503,6 @@ object TextQueries {
         col("__s")("n_2grams").as("n_2grams"),
         col("__s")("n_dup_2grams").as("n_dup_2grams"))
     gopherFlags(stats)
-  }
-
-  /** The composed Catalyst-HOF reference form of [[gopherRules]]'
-    * statistics stage — the kernel's executable spec.
-    */
-  def gopherStatsComposed(docs: DataFrame): DataFrame = {
-    val t = docs
-      .withColumn("toks", TextOps.tokenize(col("text")))
-      .withColumn("g2", Analysis.ngrams(col("toks"), 2))
-    // top_count (max token multiplicity) via sorted-run lengths —
-    // O(n log n) vs the naive O(n·distinct) count-per-distinct scan
-    val topCount = when(size(col("toks")) === 0, lit(0L))
-      .otherwise(array_max(Analysis.sortedRunLengths(col("toks"))))
-    t.select(col("doc_id"),
-      size(col("toks")).cast("long").as("n_tokens"),
-      aggregate(col("toks"), lit(0L), (acc, w) => acc + length(w))
-        .as("sum_len"),
-      topCount.as("top_count"),
-      // distinct stopwords present: hash-based set intersect, not a
-      // |distinct|×|stoplist| contains scan
-      size(array_intersect(array_distinct(col("toks")),
-        array(TextOps.EnglishStopwords.map(lit): _*)))
-        .cast("long").as("n_stop_distinct"),
-      size(col("g2")).cast("long").as("n_2grams"),
-      (size(col("g2")) - size(array_distinct(col("g2"))))
-        .cast("long").as("n_dup_2grams"))
   }
 
   /** Integer-arithmetic rule flags + keep verdict over a stats frame

@@ -424,7 +424,7 @@ object EventStreams {
   }
 
   /** Streaming exact dedup — the incremental face of
-    * [[graft.operators.Dedup.exactDedup]]: documents arriving on a
+    * [[graft.operators.Dedup.exactGroups]]: documents arriving on a
     * stream are deduplicated by content hash across micro-batches,
     * with the dedup state bounded by the watermark (a duplicate
     * arriving later than `watermark` after the original may pass —

@@ -12,29 +12,17 @@ object Analysis {
 
   /** Word n-grams of a token array, computed in-row (no explode →
     * no shuffle) by the native one-sweep kernel
-    * ([[graft.expressions.NgramJoinExpr]]; the composed
-    * [[ngramsComposed]] form below is its executable spec — parity
-    * in ExpressionSpec). Empty result for docs shorter than n, and
-    * for a null input (the composed `when` guard's behavior).
+    * ([[graft.expressions.NgramJoinExpr]]; the composed HOF form,
+    * `AnalysisComposed.ngramsComposed` in the specs, is its executable
+    * spec — parity in ExpressionSpec). Empty result for docs shorter
+    * than n, and for a null input (the composed `when` guard's
+    * behavior).
     */
   def ngrams(tokens: Column, n: Int): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge._
     coalesce(
       column(graft.expressions.NgramJoinExpr(expression(tokens), n)),
       array().cast("array<string>"))
-  }
-
-  /** The composed Catalyst-HOF reference form of [[ngrams]]: slide a
-    * window via `transform(sequence(...))`, join with `concat_ws`.
-    * Kept as the kernel's executable spec; it re-reads its input n×
-    * per gram, so production call sites use the kernel.
-    */
-  def ngramsComposed(tokens: Column, n: Int): Column = {
-    val grams = transform(
-      sequence(lit(0), size(tokens) - n),
-      i => concat_ws(" ", (1 to n).map(j => element_at(tokens, i + j)): _*))
-    when(size(tokens) >= n, grams)
-      .otherwise(array().cast("array<string>"))
   }
 
   /** BPE-ish pre-tokenizer regex (the GPT-2 pattern family, kept to
@@ -61,47 +49,17 @@ object Analysis {
     "fr" -> Seq("le", "les", "des", "et", "est", "une", "du", "dans",
       "pour", "que"))
 
-  private def markerHits(tokens: Column, markers: Seq[String]): Column =
-    size(filter(tokens, t => array_contains(array(markers.map(lit): _*), t)))
-
   /** Language-ID over a token array: argmax of marker-word hits with
     * deterministic priority-order tie-break; "und" (undetermined) when
     * no marker fires. Native one-sweep kernel
     * ([[graft.expressions.LangIdExpr]]: one hash probe per token into
-    * a marker→language-bitmask map); [[langIdComposed]] below is its
-    * executable spec.
+    * a marker→language-bitmask map); `AnalysisComposed.langIdComposed`
+    * in the specs is its executable spec.
     */
   def langId(tokens: Column): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge._
     column(graft.expressions.LangIdExpr(expression(tokens), LangMarkers))
   }
-
-  /** The composed reference form of [[langId]] — one interpreted
-    * `filter` lambda per language per row, each running O(|markers|)
-    * `array_contains` per token. Kept as the kernel's executable spec
-    * (parity in ExpressionSpec).
-    */
-  def langIdComposed(tokens: Column): Column =
-    // let-bind the token array AND the per-language hit counts:
-    // naively, `best` embeds every markerHits tree and each tie-break
-    // clause embeds `best` again, so Catalyst inlines ~24 marker
-    // passes (each re-running an unbound `tokens` expression — the
-    // regex split, at t04's call site) per row. Bound, it is one
-    // tokens eval + exactly 4 marker passes (sf10: 190 → ~2 s).
-    graft.expressions.Bind.once(tokens) { toks =>
-      graft.expressions.Bind.once(
-        array(LangMarkers.map { case (_, ms) => markerHits(toks, ms) }: _*)
-      ) { hits =>
-        val best = array_max(hits)
-        // h === best implies h > 0 ⇔ best > 0: same verdict as the
-        // original per-clause `h > 0` guard
-        LangMarkers.zipWithIndex.foldRight(lit("und")) {
-          case (((l, _), i), els) =>
-            when(element_at(hits, i + 1) === best && best > 0, lit(l))
-              .otherwise(els)
-        } // foldRight → first lang in priority order wins ties
-      }
-    }
 
   /** Mean per-token natural-log probability under a unigram model —
     * the cheap stand-in for perplexity-based quality filtering. The
@@ -135,21 +93,6 @@ object Analysis {
       round(distinctTokenCount(tokens).cast("double") /
         size(tokens).cast("double"), 6)).otherwise(lit(0.0))
 
-  /** Mean token length (integer sums, exact; rounded once). */
-  def meanTokenLen(tokens: Column): Column =
-    when(size(tokens) > 0,
-      round(aggregate(tokens, lit(0L), (acc, t) => acc + length(t))
-        .cast("double") / size(tokens).cast("double"), 6))
-      .otherwise(lit(0.0))
-
-  /** Ratio of stop-words among tokens (high ⇒ natural prose). */
-  def stopwordRatio(tokens: Column): Column =
-    when(size(tokens) > 0,
-      round(size(filter(tokens, t =>
-        array_contains(array(TextOps.EnglishStopwords.map(lit): _*), t)))
-        .cast("double") / size(tokens).cast("double"), 6))
-      .otherwise(lit(0.0))
-
   /** All four of [[tokenCount]]/[[distinctTokenCount]]/token-length
     * sum/stop-word hit count from ONE native sweep
     * ([[graft.expressions.TokenStatsExpr]]) as
@@ -180,18 +123,6 @@ object Analysis {
       .otherwise(lit(0.0))
   }
 
-  /** The composed reference form of [[topTokenFraction]] — per
-    * distinct token, a full-array `filter` count (O(n·distinct)
-    * interpreted lambdas per doc). Kept as the kernel's executable
-    * spec (parity in ExpressionSpec).
-    */
-  def topTokenFractionComposed(tokens: Column): Column =
-    when(size(tokens) > 0,
-      array_max(transform(array_distinct(tokens),
-        w => size(filter(tokens, t => t === w))))
-        .cast("double") / size(tokens))
-      .otherwise(lit(0.0))
-
   /** Duplicate-n-gram fraction: 1 − distinct/total over word n-grams
     * — high values flag internally repetitive documents. Per-row, no
     * shuffle. Takes the *bound* gram array (from [[ngrams]]) so the
@@ -200,32 +131,6 @@ object Analysis {
     when(size(grams) > 0,
       lit(1.0) - size(array_distinct(grams)).cast("double") / size(grams))
       .otherwise(lit(0.0))
-
-  /** Multiplicities of an array's values as sorted-run lengths:
-    * `array_sort` groups equal values into adjacent runs, run starts
-    * are boundary positions, lengths are consecutive-start
-    * differences (an n+1 sentinel closes the last run). O(n log n) +
-    * two linear passes vs the naive O(n·distinct)
-    * count-per-distinct-value scan; the sort and the start list are
-    * let-bound ([[graft.expressions.Bind]]) so Catalyst cannot inline
-    * them into per-element re-evaluation. Output order = value-sorted
-    * — deterministic, so float folds over it are reproducible
-    * cross-engine (t19's Shannon term).
-    */
-  def sortedRunLengths(arr: Column): Column = {
-    import graft.expressions.Bind
-    when(size(arr) === 0, array().cast("array<bigint>")).otherwise(
-      Bind.once(array_sort(arr)) { st =>
-        Bind.once(concat(filter(transform(st, (x, i) =>
-            when(i === lit(0) ||
-              element_at(st, greatest(i, lit(1))) =!= x,
-              (i + 1).cast("long"))),
-          e => e.isNotNull), array(size(st).cast("long") + 1))) { starts =>
-          transform(sequence(lit(1), size(starts) - 1),
-            j => element_at(starts, j + 1) - element_at(starts, j))
-        }
-      })
-  }
 
   /** Whole-document content fingerprint (exact-dedup key). */
   def fingerprint(text: Column): Column = md5(text)

@@ -36,15 +36,6 @@ object TextOps {
     column(graft.expressions.WhitespaceTokenizeExpr(expression(c)))
   }
 
-  /** The composed reference form of [[tokenize]]: regex split +
-    * empty-token filter. Kept as the kernel's executable spec; the
-    * regex matcher and the per-token interpreted `filter` lambda make
-    * it measurably slower on every text query, so production call
-    * sites use the kernel.
-    */
-  def tokenizeComposed(c: Column): Column =
-    filter(split(c, "\\s+"), t => length(t) > 0)
-
   /** F3/F6-adjacent — per-row stop-word removal preserving order and
     * duplicates (unlike `array_except`, which dedups — the reference's
     * Python `filter` keeps duplicates: `LogisticRegression.py:35-39`).
@@ -57,15 +48,6 @@ object TextOps {
     column(graft.expressions.StopwordRemoveExpr(expression(tokens), stops))
   }
 
-  /** The composed reference form of [[removeStopwords]]: interpreted
-    * `filter` lambda + O(|stops|) `array_contains` per token. Kept as
-    * the kernel's executable spec (parity in ExpressionSpec).
-    */
-  def removeStopwordsComposed(tokens: Column, stops: Seq[String]): Column = {
-    val stopArr = array(stops.map(lit): _*)
-    filter(tokens, t => !array_contains(stopArr, t))
-  }
-
   /** Number of blocklist entries occurring as SUBSTRINGS of `text` —
     * one Aho–Corasick sweep regardless of list size (native kernel,
     * [[graft.expressions.BlocklistHits]]); each entry counts at most
@@ -75,30 +57,6 @@ object TextOps {
   def blocklistHits(text: Column, patterns: Seq[String]): Column = {
     import org.apache.spark.sql.graftbridge.ColumnBridge._
     column(graft.expressions.BlocklistHits(expression(text), patterns))
-  }
-
-  /** The composed reference form of [[blocklistHits]]: one
-    * `contains` scan of the text PER pattern inside an interpreted
-    * `filter` lambda. Kept as the kernel's executable spec (parity in
-    * ExpressionSpec).
-    */
-  def blocklistHitsComposed(text: Column, patterns: Seq[String]): Column =
-    size(filter(array(patterns.map(lit): _*), p => contains(text, p)))
-
-  /** Unidecode-style ASCII folding (`RDD_logisticregression.py:52`):
-    * NFD-decompose, strip combining marks, drop remaining non-ASCII.
-    * In the reference's own chain this is provably an identity — it
-    * runs *after* `[^a-zA-Z]` → space, so its input is already pure
-    * ASCII — hence [[rddTokens]] omits it from the hot path rather
-    * than paying a UDF/codegen break for a no-op. Exposed standalone
-    * for corpora where folding runs before the letter filter.
-    */
-  val asciiFoldUdf = udf { (s: String) =>
-    if (s == null) null
-    else java.text.Normalizer
-      .normalize(s, java.text.Normalizer.Form.NFD)
-      .replaceAll("\\p{M}+", "")
-      .filter(_ < 128)
   }
 
   /** Full cleanup chain of the RDD stack (`RDD_logisticregression.py:

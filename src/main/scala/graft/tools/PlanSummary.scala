@@ -36,37 +36,6 @@ object PlanSummary {
   def wscSpans(plan: String): Int =
     "\\*\\((\\d+)\\)".r.findAllMatchIn(plan).map(_.group(1)).toSet.size
 
-  /** Every physical operator in the FINAL (post-AQE) executed plan,
-    * flattened — descending into adaptive plans, materialized query
-    * stages, reused exchanges/subqueries and subquery expressions,
-    * which plain `SparkPlan.collect` treats as leaves. This is the
-    * tree the suite-level scale invariants (no CartesianProduct, no
-    * partition-less Window) are asserted over: string matching can't
-    * tell an empty partitionSpec from an empty orderSpec.
-    */
-  def finalOperators(df: DataFrame)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    import org.apache.spark.sql.execution.{SparkPlan,
-      ReusedSubqueryExec, BaseSubqueryExec}
-    import org.apache.spark.sql.execution.adaptive.{
-      AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
-    df.collect()
-    def walk(p: SparkPlan): Seq[SparkPlan] = {
-      val below = p match {
-        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case q: QueryStageExec        => walk(q.plan)
-        case r: ReusedExchangeExec    => walk(r.child)
-        case r: ReusedSubqueryExec    => walk(r.child)
-        case s: BaseSubqueryExec      => walk(s.child)
-        case _                        => p.children.flatMap(walk)
-      }
-      val subq = p.subqueries.flatMap(walk)
-      p +: (below ++ subq)
-    }
-    walk(df.queryExecution.executedPlan)
-  }
-
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local("graft-plans", "8")
     val sfDir = "/root/testdata/sf0.001"

@@ -44,7 +44,7 @@ class ApproxSpec extends AnyFunSuite {
   private def assertQuantileParity(df: org.apache.spark.sql.DataFrame,
                                    grp: String, v: String,
                                    qs: Seq[Double], buckets: Int): Unit = {
-    val got = graft.operators.Quantiles
+    val got = SpecSupport
       .exactPercentiles(df, grp, v, qs, buckets)
       .collect().map(r => (r.get(0), r.getDouble(1)) -> r.getDouble(2))
       .toMap

@@ -49,7 +49,7 @@ class BpeSpec extends AnyFunSuite {
     import spark.implicits._
     val toks = TextOps.tokenize(col("text"))
     val pieces = d.select(
-      Bpe.pieceCount(toks, Bpe.encode(toks, merges)).as("p"))
+      Bpe.pieceCount(toks, BpeComposed.encode(toks, merges)).as("p"))
       .as[Int].collect()
     // both rules applied: "aaa" -> [aa, a] -> [aaa]; two words, one
     // piece each
@@ -62,7 +62,7 @@ class BpeSpec extends AnyFunSuite {
     val merges =
       Bpe.trainMerges(train, TextOps.tokenize(col("text")), 5)
     val enc = docs("low lower lowest newest")
-      .select(Bpe.encode(TextOps.tokenize(col("text")), merges).as("e"))
+      .select(BpeComposed.encode(TextOps.tokenize(col("text")), merges).as("e"))
       .as[String].collect().head
     // low -> [low]; lower -> [low, er]; lowest -> [low, est];
     // newest -> [n, e, w, est]
@@ -70,7 +70,7 @@ class BpeSpec extends AnyFunSuite {
       "#low# #low##er# #low##est# #n##e##w##est#")
     val toks = TextOps.tokenize(col("text"))
     val counted = docs("low lower lowest newest", "")
-      .select(Bpe.pieceCount(toks, Bpe.encode(toks, merges)).as("p"))
+      .select(Bpe.pieceCount(toks, BpeComposed.encode(toks, merges)).as("p"))
       .as[Int].collect()
     assert(counted.toSeq == Seq(9, 0)) // 1 + 2 + 2 + 4; empty doc -> 0
   }
@@ -84,7 +84,7 @@ class BpeSpec extends AnyFunSuite {
       .select(explode(TextOps.tokenize(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("freq"))
       .select(explode(Bpe.symbols(
-          Bpe.encode(array(col("word")), merges))).as("piece"),
+          BpeComposed.encode(array(col("word")), merges))).as("piece"),
         col("freq"))
       .groupBy(col("piece")).agg(sum(col("freq")).as("occ"))
       .as[(String, Long)].collect().toMap
@@ -157,7 +157,7 @@ class BpeSpec extends AnyFunSuite {
       val gotDist = Bpe.trainMerges(d, toks, 4, localFinishRows = 0L)
       assert(gotDist == got, s"local vs distributed trainer diverged " +
         s"for corpus $words")
-      val enc = d.select(Bpe.encode(toks, got).as("e"))
+      val enc = d.select(BpeComposed.encode(toks, got).as("e"))
         .as[String].collect().head
       val gotSyms = if (enc.isEmpty) Nil
         else enc.split(" ").toList.map(m =>
@@ -188,9 +188,9 @@ class BpeSpec extends AnyFunSuite {
     assert(got.map(m => (m.lhs, m.rhs, m.freq)) == expRules)
     // sliced encode (32-rule slices -> 8 checkpointed chunks) must be
     // byte-identical to the single-plan encode AND to the reference
-    val sliced = Bpe.encodeSliced(d, toks, got, "enc", sliceSize = 32)
+    val sliced = BpeComposed.encodeSliced(d, toks, got, "enc", sliceSize = 32)
       .select(col("doc_id"), col("enc"))
-    val single = d.select(col("doc_id"), Bpe.encode(toks, got).as("enc"))
+    val single = d.select(col("doc_id"), BpeComposed.encode(toks, got).as("enc"))
     val sl = sliced.as[(Long, String)].collect().sortBy(_._1)
     assert(sl.toSeq == single.as[(Long, String)].collect().sortBy(_._1).toSeq)
     val gotSyms = sl.flatMap(_._2.split(" ")).map(m =>
@@ -208,11 +208,11 @@ class BpeSpec extends AnyFunSuite {
     // refuses them and the sliced path is the only way through
     val rules = (1 to 5000).map(k => Bpe.Merge(k, "zz", "qq", 1L))
     assertThrows[IllegalArgumentException] {
-      Bpe.encode(col("t"), rules)
+      BpeComposed.encode(col("t"), rules)
     }
     val d = docs("ab cd", "ef")
     val toks = TextOps.tokenize(col("text"))
-    val sliced = Bpe.encodeSliced(d, toks, rules, "enc", sliceSize = 250)
+    val sliced = BpeComposed.encodeSliced(d, toks, rules, "enc", sliceSize = 250)
     // lineage is truncated: the final plan hangs off a checkpoint
     // (LogicalRDD leaf), carrying only the last slice's replaces —
     // not a 5000-replace expression tree
@@ -244,7 +244,7 @@ class BpeSpec extends AnyFunSuite {
       Bpe.trainMerges(d, TextOps.tokenize(col("text")), 6)
     val rebuilt = d.select(
       regexp_replace(regexp_replace(
-          Bpe.encode(TextOps.tokenize(col("text")), merges),
+          BpeComposed.encode(TextOps.tokenize(col("text")), merges),
           "##", ""),
         "#", "").as("r"))
       .as[String].collect().head
@@ -263,7 +263,7 @@ class BpeSpec extends AnyFunSuite {
       val toks = TextOps.tokenize(col("text"))
       val merges = Bpe.trainMerges(d, toks, 10)
       val chain = d.select(col("doc_id"),
-          Bpe.encode(toks, merges).as("e"))
+          BpeComposed.encode(toks, merges).as("e"))
         .as[(Long, String)].collect().toMap
       val kernel = d.select(col("doc_id"),
           Bpe.encodeKernel(toks, merges).as("e"))
@@ -281,7 +281,7 @@ class BpeSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val toksB = TextOps.tokenize(col("text"))
     val deep = Bpe.trainMerges(big, toksB, 256)
-    val sliced = Bpe.encodeSliced(big, toksB, deep, sliceSize = 64)
+    val sliced = BpeComposed.encodeSliced(big, toksB, deep, sliceSize = 64)
       .select(col("doc_id"), col("encoded"))
       .as[(Long, String)].collect().toMap
     val kernelDeep = big.select(col("doc_id"),
@@ -303,10 +303,10 @@ class BpeSpec extends AnyFunSuite {
       val toks = TextOps.tokenize(col("text"))
       val merges = Bpe.trainMerges(d, toks, 8)
       val plain = d.select(col("doc_id"),
-          Bpe.decode(Bpe.encode(toks, merges)).as("r"))
+          Bpe.decode(BpeComposed.encode(toks, merges)).as("r"))
         .as[(Long, String)].collect().toMap
       val sliced = Bpe.decode(col("encoded"))
-      val viaSlices = Bpe.encodeSliced(d, toks, merges, sliceSize = 3)
+      val viaSlices = BpeComposed.encodeSliced(d, toks, merges, sliceSize = 3)
         .select(col("doc_id"), sliced.as("r"))
         .as[(Long, String)].collect().toMap
       texts.zipWithIndex.foreach { case (t, i) =>

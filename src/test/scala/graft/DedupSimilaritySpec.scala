@@ -23,7 +23,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     val groups = Dedup.exactGroups(docs, "doc_id", "text")
     assert(groups.count() == 3)
-    val kept = Dedup.exactDedup(docs, "doc_id", "text")
+    val kept = DedupComposed.exactDedup(docs, "doc_id", "text")
       .select("doc_id").as[Long].collect().sorted
     assert(kept.toSeq == Seq(1L, 2L, 5L))
   }
@@ -138,7 +138,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       val exact = Dedup.jaccardPairs(sh, 0.5)
         .select($"a", $"b", $"jaccard")
         .as[(Long, Long, Double)].collect().toSet
-      val pf = Dedup.prefixFilterPairs(sh, 0.5)
+      val pf = DedupComposed.prefixFilterPairs(sh, 0.5)
         .select($"a", $"b", $"jaccard")
         .as[(Long, Long, Double)].collect().toSet
       assert(pf == exact, s"seed=${500 + seed}")
@@ -185,7 +185,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       "doc_id", TextOps.tokenize(col("text"))).persist()
     try {
       // UNCAPPED and exact — finds precisely the planted pair
-      val got = Dedup.prefixFilterPairs(sh, 0.5)
+      val got = DedupComposed.prefixFilterPairs(sh, 0.5)
         .select($"a", $"b").as[(Long, Long)].collect().toSeq.sorted
       assert(got == Seq((1L, 2L)))
       // the defusing mechanism, asserted structurally: rarest-first
@@ -219,7 +219,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val docs = Seq((1L, base), (2L, nearDup), (3L, other))
       .toDF("doc_id", "text")
     val sh = Dedup.shingles(docs, "doc_id", TextOps.tokenize(col("text")))
-    val pairs = Dedup.minhashLshPairs(sh).select("a", "b")
+    val pairs = DedupComposed.minhashLshPairs(sh).select("a", "b")
       .as[(Long, Long)].collect()
     assert(pairs.toSeq == Seq((1L, 2L)))
   }
@@ -228,7 +228,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val sh = Dedup.shingles(docs, "doc_id", TextOps.tokenize(col("text")))
     val exact = Dedup.jaccardPairs(sh, 0.5).select("a", "b").collect().toSet
-    val lsh = Dedup.minhashLshPairs(sh, threshold = 0.5)
+    val lsh = DedupComposed.minhashLshPairs(sh, threshold = 0.5)
       .select("a", "b").collect().toSet
     // at jaccard≈0.98 and 4 bands of 4, P(miss) ≈ 0 — expect identity
     assert(lsh == exact)
@@ -240,7 +240,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     // globally low-hashing shingle correlates misses across pairs —
     // assert bounded recall here, and perfect recall on the
     // statistically-clean planted fixture below.
-    val fast = Dedup.minhashLshPairsFast(sh, threshold = 0.5)
+    val fast = DedupComposed.minhashLshPairsFast(sh, threshold = 0.5)
       .select("a", "b").collect().toSet
     val high = Dedup.jaccardPairs(sh, 0.5)
       .filter(col("jaccard") >= 0.9).select("a", "b").collect().toSet
@@ -264,7 +264,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       base.map((2L * p, _)) ++ mod.map((2L * p + 1, _))
     }
     val sh = rows.toDF("doc_id", "shingle")
-    val found = Dedup.minhashLshPairsFast(sh, threshold = 0.5)
+    val found = DedupComposed.minhashLshPairsFast(sh, threshold = 0.5)
       .select("a", "b").as[(Long, Long)].collect().toSet
     val wanted = (0 until 100).map(p => (2L * p, 2L * p + 1)).toSet
     // per-pair detection ~0.999 ⇒ a miss is a ~1-in-1000 Bernoulli
@@ -282,8 +282,8 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val nearDup = (1 to 58).map(i => s"w$i").mkString(" ") + " x y"
     val other = (100 to 160).map(i => s"v$i").mkString(" ")
     val df = Seq(base, base, nearDup, other).toDF("text")
-      .select(Dedup.tokenHashes(TextOps.tokenize(col("text"))).as("hvs"))
-      .select(Dedup.simhashFromHashes(col("hvs")).as("fp"))
+      .select(DedupComposed.tokenHashes(TextOps.tokenize(col("text"))).as("hvs"))
+      .select(DedupComposed.simhashFromHashes(col("hvs")).as("fp"))
     val fps = df.as[Long].collect()
     assert(fps(0) == fps(1))
     assert(java.lang.Long.bitCount(fps(0) ^ fps(2)) <= 10)
@@ -327,7 +327,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (r.getLong(0), r.getLong(1),
         java.lang.Double.doubleToRawLongBits(r.getDouble(2)))
     }.toSet
-    val fromSh = key(Dedup.minhashLshPairs(
+    val fromSh = key(DedupComposed.minhashLshPairs(
       Dedup.shingles(docs, "doc_id", toks)))
     val fromDocs = key(Dedup.minhashLshPairsDocs(docs, "doc_id", toks))
     assert(fromDocs == fromSh,
@@ -344,7 +344,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val sh = Dedup.shingles(docs, "doc_id", toks)
     val sets = Dedup.shingleSets(docs, "doc_id", toks)
     // band-level parity
-    val aggBands = Dedup.lshBandSignaturesFast(sh, 16, 4)
+    val aggBands = DedupComposed.lshBandSignaturesFast(sh, 16, 4)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
     val rowBands = sets.select(col("doc_id"),
         explode(Dedup.bandSignaturesInRowFast(col("shset"), 16, 4))
@@ -359,11 +359,9 @@ class DedupSimilaritySpec extends AnyFunSuite {
         java.lang.Double.doubleToRawLongBits(r.getDouble(2)))
     }.toSet
     assert(key(Dedup.minhashLshPairsFastDocs(docs, "doc_id", toks)) ==
-      key(Dedup.minhashLshPairsFast(sh)))
-    val p1 = java.nio.file.Files
-      .createTempDirectory("graft-idx-parity-sh-").toString
-    val p2 = java.nio.file.Files
-      .createTempDirectory("graft-idx-parity-sets-").toString
+      key(DedupComposed.minhashLshPairsFast(sh)))
+    val p1 = graft.core.IndexCache.newIndexDir("graft-idx-parity-sh-")
+    val p2 = graft.core.IndexCache.newIndexDir("graft-idx-parity-sets-")
     NearDupIndexComposed.writeNearDupIndex(sh.filter(col("doc_id") >= 100), p1)
     Dedup.writeNearDupIndexSets(sets.filter(col("doc_id") >= 100), p2)
     val viaSh = key(NearDupIndexComposed.incrementalNearDups(spark, p1,
@@ -383,7 +381,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       (r.getLong(0), r.getLong(1),
         java.lang.Double.doubleToRawLongBits(r.getDouble(2)))
     }.toSet
-    val exploded = key(Dedup.sortedNeighborhoodPairs(docs, "doc_id",
+    val exploded = key(DedupComposed.sortedNeighborhoodPairs(docs, "doc_id",
       sortKey, toks, window = 10, threshold = 0.5))
     val viaSets = key(Dedup.sortedNeighborhoodPairsSets(docs, "doc_id",
       sortKey, toks, window = 10, threshold = 0.5))
@@ -402,7 +400,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
         r.getInt(3))
     }.toSet
     val inRow = key(Similarity.lshKnn(emb, q, 10))
-    val joined = key(Similarity.lshKnnJoined(emb, q, 10))
+    val joined = key(SimilarityComposed.lshKnnJoined(emb, q, 10))
     assert(inRow == joined,
       s"in-row vs joined diverge: ${(inRow diff joined).take(3)} / " +
         s"${(joined diff inRow).take(3)}")
@@ -423,7 +421,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val df = docs.toDF("doc_id", "text")
 
     val fps = df.select(col("doc_id"),
-        Dedup.simhash(TextOps.tokenize(col("text"))).as("fp"))
+        DedupComposed.simhash(TextOps.tokenize(col("text"))).as("fp"))
       .as[(Long, Long)].collect().toMap
     val expected = (for {
       a <- fps.keys; b <- fps.keys if a < b
@@ -551,7 +549,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
       .filter(col("vec_id") < 500)
     val seeded = Similarity.seededCodebooks(4, 16, 16)
-    val trained = Similarity.pqTrain(emb, numSub = 4, k = 16, dim = 64)
+    val trained = SimilarityComposed.pqTrain(emb, numSub = 4, k = 16, dim = 64)
 
     // codes live in [0, K)
     val codeRange = emb.select(posexplode(
@@ -566,12 +564,12 @@ class DedupSimilaritySpec extends AnyFunSuite {
       emb.select(Similarity.dot(
           org.apache.spark.sql.functions.zip_with(
             col("embedding").cast("array<double>"),
-            Similarity.pqDecode(
+            SimilarityComposed.pqDecode(
               Similarity.pqEncode(col("embedding"), cbs), cbs),
             (x, y) => x - y),
           org.apache.spark.sql.functions.zip_with(
             col("embedding").cast("array<double>"),
-            Similarity.pqDecode(
+            SimilarityComposed.pqDecode(
               Similarity.pqEncode(col("embedding"), cbs), cbs),
             (x, y) => x - y)).as("se"))
         .agg(avg(col("se"))).head().getDouble(0)
@@ -609,7 +607,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     }
     val coarse = recallOf(trained)
     val fine = recallOf(
-      Similarity.pqTrain(emb, numSub = 16, k = 16, dim = 64))
+      SimilarityComposed.pqTrain(emb, numSub = 16, k = 16, dim = 64))
     assert(fine > coarse,
       s"recall must rise with M: coarse=$coarse fine=$fine")
     assert(fine >= 0.15, s"fine-profile ADC recall@10=$fine")
@@ -623,7 +621,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(exact.nonEmpty)
     // trained path: k-means cells + cell-local pairs → clusters
-    val clusters = Similarity.semDedup(emb, numCells = 4,
+    val clusters = SimilarityComposed.semDedup(emb, numCells = 4,
       threshold = 0.4)
     val labels = clusters.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -802,7 +800,7 @@ class DedupSimilaritySpec extends AnyFunSuite {
     assert(Dedup.emissionWins(dfTab(shB), 16.0),
       "benign corpus must pick the emission path")
     assert(rel(Dedup.exactJaccardPairsAuto(shB, 0.5)) ==
-      rel(Dedup.prefixFilterPairs(shB, 0.5)))
+      rel(DedupComposed.prefixFilterPairs(shB, 0.5)))
 
     // hot-shingle skew (the self-defusing-prefix fixture at n=4000:
     // one shingle in ~40% of docs → Σ df·(df−1)/2 ≈ 1.3M over ~44k

@@ -152,7 +152,7 @@ class DupClustersSpec extends AnyFunSuite {
       (3L, "mid text"), (4L, "tiny"), (5L, "loner"), (6L, "alone"))
       .toDF("doc_id", "text")
     val pairs = Seq((1L, 2L), (3L, 4L)).toDF("a", "b")
-    val kept = Dedup.resolveDuplicates(docs, "doc_id", pairs,
+    val kept = DedupComposed.resolveDuplicates(docs, "doc_id", pairs,
       length(col("text")))
       .select(col("doc_id")).as[Long].collect().toSet
     // keepers: 2 (longer than 1), 3 (longer than 4); 5,6 untouched

@@ -237,7 +237,7 @@ class EventStreamsSpec extends AnyFunSuite {
       (4L, "xy"), // 1 token → no 3-gram shingles → no signature rows
       (5L, "the quick brown fox jumps over the lazy dog")) // dup of 1
       .toDF("doc_id", "text")
-    val agg = Dedup.lshBandSignatures(
+    val agg = DedupComposed.lshBandSignatures(
         Dedup.shingles(docs, "doc_id", TextOps.tokenize(col("text"))),
         numHashes = 16, rowsPerBand = 4)
       .as[(Long, Int, String)].collect().toSet
@@ -290,7 +290,7 @@ class EventStreamsSpec extends AnyFunSuite {
       val sh = Dedup.shingles(df, "doc_id", TextOps.tokenize(col("text")))
       val t = df.select(col("doc_id"), col("t"))
       val batch = Dedup.lshCandidates(
-          Dedup.lshBandSignatures(sh, 16, 4))
+          DedupComposed.lshBandSignatures(sh, 16, 4))
         .join(t.select(col("doc_id").as("a"), col("t").as("ta")), "a")
         .join(t.select(col("doc_id").as("b"), col("t").as("tb")), "b")
         .filter(abs(col("ta") - col("tb")) <= horizon)

@@ -101,7 +101,7 @@ class ExpressionSpec extends AnyFunSuite {
     val df = rows.toDF("v")
     val got = df.select(
         Similarity.signSketch(col("v")).as("native"),
-        Similarity.signSketchComposed(col("v")).as("composed"))
+        SimilarityComposed.signSketchComposed(col("v")).as("composed"))
       .as[(Long, Long)].collect()
     got.foreach { case (n, c) => assert(n == c) }
     // short vector fails loudly on both forms
@@ -110,7 +110,7 @@ class ExpressionSpec extends AnyFunSuite {
       shortV.select(Similarity.signSketch(col("v"))).collect()
     }
     intercept[Exception] {
-      shortV.select(Similarity.signSketchComposed(col("v"))).collect()
+      shortV.select(SimilarityComposed.signSketchComposed(col("v"))).collect()
     }
   }
 
@@ -121,14 +121,14 @@ class ExpressionSpec extends AnyFunSuite {
     val rows = Seq.fill(200)(Seq.fill(1 + rng.nextInt(40))(rng.nextLong()))
     val df = rows.toDF("hvs")
     val got = df.select(
-        Dedup.simhashNative(col("hvs")).as("native"),
-        Dedup.simhashFromHashes(col("hvs")).as("composed"))
+        DedupComposed.simhashNative(col("hvs")).as("native"),
+        DedupComposed.simhashFromHashes(col("hvs")).as("composed"))
       .as[(Long, Long)].collect()
     got.foreach { case (n, c) => assert(n == c) }
     // empty array → fingerprint 0 on both forms
     val empty = Seq(Seq.empty[Long]).toDF("hvs")
-      .select(Dedup.simhashNative(col("hvs")).as("n"),
-        Dedup.simhashFromHashes(col("hvs")).as("c"))
+      .select(DedupComposed.simhashNative(col("hvs")).as("n"),
+        DedupComposed.simhashFromHashes(col("hvs")).as("c"))
       .as[(Long, Long)].head()
     assert(empty == ((0L, 0L)))
   }
@@ -162,7 +162,7 @@ class ExpressionSpec extends AnyFunSuite {
       Seq.fill(1 + rng.nextInt(30))(vocab(rng.nextInt(vocab.size))))
     val got = rows.toDF("toks")
       .select(Dedup.simhashTextNative(col("toks")).as("fused"),
-        Dedup.simhash(col("toks")).as("composed"))
+        DedupComposed.simhash(col("toks")).as("composed"))
       .as[(Long, Long)].collect()
     got.foreach { case (f, c) => assert(f == c) }
   }
@@ -177,7 +177,7 @@ class ExpressionSpec extends AnyFunSuite {
       "graft.plans.KernelSubstitution")
     try {
     val vacuousGuard = Seq((Seq(1f), Seq(1f))).toDF("a", "b")
-      .select(Similarity.dotComposed(col("a"), col("b")))
+      .select(SimilarityComposed.dotComposed(col("a"), col("b")))
       .queryExecution.executedPlan.toString
     assert(!vacuousGuard.contains("graft_dot"),
       "rule exclusion failed; parity test would be vacuous")
@@ -188,21 +188,21 @@ class ExpressionSpec extends AnyFunSuite {
     val df = rows.toDF("a", "b")
     val dots = df.select(
         Similarity.dot(col("a"), col("b")).as("n"),
-        Similarity.dotComposed(col("a"), col("b")).as("c"))
+        SimilarityComposed.dotComposed(col("a"), col("b")).as("c"))
       .as[(Double, Double)].collect()
     dots.foreach { case (n, c) =>
       assert(java.lang.Double.doubleToRawLongBits(n) ==
         java.lang.Double.doubleToRawLongBits(c)) }
     val norms = df.select(
         Similarity.norm(col("a")).as("n"),
-        Similarity.normComposed(col("a")).as("c"))
+        SimilarityComposed.normComposed(col("a")).as("c"))
       .as[(Double, Double)].collect()
     norms.foreach { case (n, c) =>
       assert(java.lang.Double.doubleToRawLongBits(n) ==
         java.lang.Double.doubleToRawLongBits(c)) }
     val ctr = Array.fill(64)(rng.nextGaussian())
     val sq = df.select(
-        Similarity.sqDistLitComposed(col("a"), ctr).as("c"))
+        SimilarityComposed.sqDistLitComposed(col("a"), ctr).as("c"))
       .as[Double].collect()
     val sqNative = df.select(org.apache.spark.sql.graftbridge
         .ColumnBridge.column(graft.expressions.SqDistF64(
@@ -236,7 +236,7 @@ class ExpressionSpec extends AnyFunSuite {
           .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2)))
           .toMap
       val kernel = run(Dedup.intraDocStrip)
-      val composed = run(Dedup.intraDocStripComposed)
+      val composed = run(DedupComposed.intraDocStripComposed)
       assert(kernel == composed, s"seed=${600 + seed}")
     }
   }
@@ -260,7 +260,7 @@ class ExpressionSpec extends AnyFunSuite {
             TextOps.EnglishStopwords)).as("s"))
         .select(col("doc_id"), col("s.*"))
         .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
-      val composed = graft.queries.TextQueries.gopherStatsComposed(docs)
+      val composed = TextQueriesComposed.gopherStatsComposed(docs)
         .collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
       assert(kernel == composed, s"seed=${700 + seed}")
     }
@@ -273,8 +273,8 @@ class ExpressionSpec extends AnyFunSuite {
     val emb = spark.read
       .parquet("/root/testdata/sf0.001/embeddings.parquet").limit(20)
     val composed = emb.select(col("vec_id"),
-      Similarity.dotComposed(col("embedding"), col("embedding")).as("d"),
-      Similarity.normComposed(col("embedding")).as("n"))
+      SimilarityComposed.dotComposed(col("embedding"), col("embedding")).as("d"),
+      SimilarityComposed.normComposed(col("embedding")).as("n"))
     val plan = composed.queryExecution.executedPlan.toString
     assert(plan.contains("graft_dot"), s"dot idiom not fused:\n$plan")
     assert(plan.contains("graft_norm"), s"norm idiom not fused:\n$plan")
@@ -358,7 +358,7 @@ class ExpressionSpec extends AnyFunSuite {
       .map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
     def composed = {
       val t = df.withColumn("cs", split(col("text"), ""))
-        .withColumn("runs", Analysis.sortedRunLengths(col("cs")))
+        .withColumn("runs", AnalysisComposed.sortedRunLengths(col("cs")))
       t.select(col("id"),
         length(col("text")).cast("long"),
         size(array_distinct(col("cs"))).cast("long"),
@@ -420,7 +420,7 @@ class ExpressionSpec extends AnyFunSuite {
               .toMap
             val exp = docs
               .select(col("doc_id"),
-                Analysis.ngramsComposed(col("toks"), n))
+                AnalysisComposed.ngramsComposed(col("toks"), n))
               .collect().map(r => r.getLong(0) -> r.getSeq[String](1))
               .toMap
             assert(got == exp, s"codegen=$codegen seed=$seed n=$n")
@@ -451,7 +451,7 @@ class ExpressionSpec extends AnyFunSuite {
         val got = docs.select(col("id"), TextOps.tokenize(col("text")))
           .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
         val exp = docs
-          .select(col("id"), TextOps.tokenizeComposed(col("text")))
+          .select(col("id"), TextOpsComposed.tokenizeComposed(col("text")))
           .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
         assert(got == exp, s"codegen=$codegen: " +
           got.keySet.filter(k => got(k) != exp(k)).take(3)
@@ -479,7 +479,7 @@ class ExpressionSpec extends AnyFunSuite {
             .collect().map(r => r.getLong(0) ->
               java.lang.Double.doubleToRawLongBits(r.getDouble(1))).toMap
           val exp = docs.select(col("doc_id"),
-              Analysis.topTokenFractionComposed(col("toks")).as("f"))
+              AnalysisComposed.topTokenFractionComposed(col("toks")).as("f"))
             .collect().map(r => r.getLong(0) ->
               java.lang.Double.doubleToRawLongBits(r.getDouble(1))).toMap
           assert(got == exp, s"codegen=$codegen seed=$seed")
@@ -507,7 +507,7 @@ class ExpressionSpec extends AnyFunSuite {
           .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
         val got = run(TextOps.removeStopwords($"toks",
           TextOps.EnglishStopwords))
-        val exp = run(TextOps.removeStopwordsComposed($"toks",
+        val exp = run(TextOpsComposed.removeStopwordsComposed($"toks",
           TextOps.EnglishStopwords))
         assert(got == exp, s"codegen=$codegen")
       } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
@@ -573,7 +573,7 @@ class ExpressionSpec extends AnyFunSuite {
           }.toMap
         val got = entries(column(
           graft.expressions.ValueCountsExpr(expression($"arr"))))
-        val exp = entries(Ngrams.valueCountsComposed($"arr"))
+        val exp = entries(NgramsComposed.valueCountsComposed($"arr"))
         assert(got == exp, s"codegen=$codegen")
       } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
     }
@@ -587,7 +587,7 @@ class ExpressionSpec extends AnyFunSuite {
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
     val toks = graft.text.TextOps.tokenize($"text")
     assert(profile(Ngrams.ngramProfile(corpus, "doc_id", toks, 2)) ==
-      profile(Ngrams.ngramProfileComposed(corpus, "doc_id", toks, 2)))
+      profile(NgramsComposed.ngramProfileComposed(corpus, "doc_id", toks, 2)))
   }
 
   test("LangIdExpr ≡ composed marker-argmax langId on random token " +
@@ -611,7 +611,7 @@ class ExpressionSpec extends AnyFunSuite {
         def run(c: org.apache.spark.sql.Column) = docs.select($"id", c)
           .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
         val got = run(Analysis.langId($"toks"))
-        val exp = run(Analysis.langIdComposed($"toks"))
+        val exp = run(AnalysisComposed.langIdComposed($"toks"))
         assert(got == exp, s"codegen=$codegen: " +
           got.keySet.filter(k => got(k) != exp(k)).take(3)
             .map(k => s"$k: ${got(k)} vs ${exp(k)}").mkString("; "))
@@ -639,7 +639,7 @@ class ExpressionSpec extends AnyFunSuite {
               .selectExpr("doc_id", "transform(bs, x -> struct(x.b, x.sig)) as bs")
               .collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
             val exp = docs.select(col("doc_id"),
-                Dedup.bandSignaturesInRowComposed(col("shset"), nh, rpb)
+                DedupComposed.bandSignaturesInRowComposed(col("shset"), nh, rpb)
                   .as("bs"))
               .selectExpr("doc_id", "transform(bs, x -> struct(x.b, x.sig)) as bs")
               .collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
@@ -695,7 +695,7 @@ class ExpressionSpec extends AnyFunSuite {
               .toMap
             val exp = docs
               .select(col("doc_id"),
-                Dsir.featureBucketsComposed(col("toks"), m))
+                DsirComposed.featureBucketsComposed(col("toks"), m))
               .collect().map(r => r.getLong(0) -> r.getSeq[Long](1))
               .toMap
             assert(got == exp, s"codegen=$codegen seed=$seed m=$m")
@@ -735,7 +735,7 @@ class ExpressionSpec extends AnyFunSuite {
             .toMap
           val composed = docs
             .select(col("doc_id"),
-              Analysis.ngramsComposed(col("__toks"), 2).as("g"))
+              AnalysisComposed.ngramsComposed(col("__toks"), 2).as("g"))
             .select(col("doc_id"), size(col("g")).as("n"),
               Analysis.unigramAvgLogProb(col("g"), model, floor)
                 .as("lp"))
@@ -755,53 +755,6 @@ class ExpressionSpec extends AnyFunSuite {
     }
   }
 
-  test("IntersectCountStr ≡ size(array_intersect): random arrays with " +
-      "duplicates, shared nulls, empties; codegen and interpreted") {
-    import spark.implicits._
-    import org.apache.spark.sql.graftbridge.ColumnBridge._
-    val rng = new scala.util.Random(0x5e7L)
-    val vocab = (0 until 40).map(i => s"sh$i")
-    def arr(): Seq[String] = {
-      val n = rng.nextInt(30)
-      Seq.fill(n)(if (rng.nextInt(20) == 0) null
-        else vocab(rng.nextInt(vocab.length)))
-    }
-    val rows = Seq(
-      (Seq.empty[String], Seq.empty[String]),
-      (Seq("a"), Seq.empty[String]),
-      (Seq(null, "a", null), Seq("b", null)), // shared null counts once
-      (Seq("a", "a", "b"), Seq("b", "b", "a", "a")) // dups count once
-    ) ++ Seq.fill(60)((arr(), arr()))
-    val df = rows.zipWithIndex.map { case ((a, b), i) => (i.toLong, a, b) }
-      .toDF("id", "a", "b")
-    def composed = df.select(col("id"),
-      size(array_intersect(col("a"), col("b"))).as("c"))
-    def native = df.select(col("id"),
-      column(graft.expressions.IntersectCountStr(
-        expression(col("a")), expression(col("b")))).as("c"))
-    for (flag <- Seq("true", "false")) {
-      spark.conf.set("spark.sql.codegen.wholeStage", flag)
-      try {
-        val want = composed.collect().map(r => r.getLong(0) -> r.getInt(1))
-          .toMap
-        native.collect().foreach { r =>
-          assert(r.getInt(1) == want(r.getLong(0)),
-            s"id=${r.getLong(0)} codegen=$flag: " +
-              s"kernel ${r.getInt(1)} vs composed ${want(r.getLong(0))}")
-        }
-      } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
-    }
-    // null ARRAY input -> null out (nullIntolerant), both orders
-    val nl = Seq((Seq("a"), Option.empty[Seq[String]]))
-      .toDF("a", "b")
-      .select(column(graft.expressions.IntersectCountStr(
-        expression(col("a")), expression(col("b")))).as("c"),
-        column(graft.expressions.IntersectCountStr(
-          expression(col("b")), expression(col("a")))).as("d"))
-      .head()
-    assert(nl.isNullAt(0) && nl.isNullAt(1))
-  }
-
   test("BlocklistHits ≡ composed per-pattern contains: nested and " +
       "overlapping patterns, random texts, early exit; codegen and " +
       "interpreted") {
@@ -819,7 +772,7 @@ class ExpressionSpec extends AnyFunSuite {
     val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("id", "text")
     def composed = df.select(col("id"),
-      TextOps.blocklistHitsComposed(col("text"), patterns).as("c"))
+      TextOpsComposed.blocklistHitsComposed(col("text"), patterns).as("c"))
     def native = df.select(col("id"),
       TextOps.blocklistHits(col("text"), patterns).as("c"))
     for (flag <- Seq("true", "false")) {
@@ -850,7 +803,7 @@ class ExpressionSpec extends AnyFunSuite {
   test("BlocklistHits at 100k entries: automaton memory stays " +
       "O(pattern bytes) and counts match naive contains on planted docs") {
     import graft.expressions.AcAutomaton
-    val pats = graft.queries.TextQueries.blocklist100k
+    val pats = TextQueriesComposed.blocklist100k
     assert(pats.length == 100000 && pats.distinct.length == 100000)
     val auto = new AcAutomaton(pats.toArray)
     val (states, edges) = auto.sizeStats

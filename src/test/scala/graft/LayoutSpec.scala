@@ -169,31 +169,4 @@ class LayoutSpec extends AnyFunSuite {
       s"tableStats lost its per-column branches:\n$plan")
   }
 
-  test("tableStatsApprox: no Expand pass; estimates band-true vs exact") {
-    val orders = spark.read
-      .parquet("/root/testdata/sf0.01/orders.parquet")
-    val numeric = Seq(
-      "o_orderkey" -> col("o_orderkey"),
-      "o_custkey" -> col("o_custkey"),
-      "o_totalprice" -> col("o_totalprice"))
-    val strings = Seq("o_orderstatus", "o_orderpriority")
-    val approx = graft.operators.Layout
-      .tableStatsApprox(orders, numeric, strings)
-    // the sketch form folds every column in ONE aggregation over ONE
-    // scan: no Expand AND no per-column union branches
-    val approxPlan = approx.queryExecution.executedPlan.toString
-    assert(!approxPlan.contains("Expand"),
-      s"approx stats must not Expand:\n$approxPlan")
-    assert(!approxPlan.contains("Union"),
-      s"approx stats must stay a single scan:\n$approxPlan")
-    // HLL estimates within 5% of exact per column
-    val ex = graft.operators.Layout.tableStats(orders, numeric, strings)
-      .collect().map(r => r.getString(0) -> r.getLong(3)).toMap
-    graft.operators.Layout.tableStatsApprox(orders, numeric, strings)
-      .collect().foreach { r =>
-        val (c, est) = (r.getString(0), r.getLong(3))
-        assert(math.abs(est - ex(c)) <= math.max(1L, ex(c) / 20),
-          s"$c: est $est vs exact ${ex(c)}")
-      }
-  }
 }

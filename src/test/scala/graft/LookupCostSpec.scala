@@ -11,6 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import graft.core.IndexCache
 import graft.operators.{Dedup, Similarity}
 
@@ -244,6 +245,23 @@ class LookupCostSpec extends AnyFunSuite with BeforeAndAfterAll
     assert(nd.collect().isEmpty)
     assert(fields(nd) == fields(probe(ndPath,
       docSets.filter(col("doc_id") < 16))))
+  }
+
+  test("the d12 and e16 gate rows leave no index directory in the temp dir") {
+    val tmpDir = Path.of(System.getProperty("java.io.tmpdir"))
+    def indexDirs(): Set[String] = {
+      val ls = Files.list(tmpDir)
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.matches("graft-.*-idx-.*")).toSet
+      finally ls.close()
+    }
+    val before = indexDirs()
+    val results = Seq("d12_incremental_neardup", "e16_ivf_persisted")
+      .map(q => q -> graft.queries.DedupQueries.queries(q)(spark, sf))
+    // each row returns a lazy result over its index: read it only now
+    val counts = results.map { case (q, df) => q -> df.collect().length }
+    assert(counts.toMap.apply("e16_ivf_persisted") > 0)
+    assert(indexDirs() -- before == Set.empty)
   }
 
   private def deleteTree(p: Path): Unit = {

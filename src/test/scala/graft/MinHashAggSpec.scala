@@ -31,10 +31,10 @@ class MinHashAggSpec extends AnyFunSuite {
   }
 
   test("sketch band signatures == composed-min band signatures") {
-    val viaMin = Dedup.lshBandSignatures(shingles, 16, 4)
+    val viaMin = DedupComposed.lshBandSignatures(shingles, 16, 4)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
       .toSet
-    val viaSketch = Dedup.lshBandSignaturesSketch(shingles, 16, 4)
+    val viaSketch = DedupComposed.lshBandSignaturesSketch(shingles, 16, 4)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getString(2)))
       .toSet
     assert(viaSketch == viaMin)

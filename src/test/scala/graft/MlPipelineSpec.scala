@@ -30,7 +30,7 @@ class MlPipelineSpec extends AnyFunSuite {
   }
 
   test("S4: inferSchema CSV scan types the numeric columns") {
-    val df = Csv.inferred(spark, Csv.TrainCsv)
+    val df = SpecSupport.inferred(spark, Csv.TrainCsv)
     assert(df.count() === 7613L)
     assert(df.schema("id").dataType ===
       org.apache.spark.sql.types.IntegerType)
@@ -41,7 +41,7 @@ class MlPipelineSpec extends AnyFunSuite {
   }
 
   test("SQL surface: registered views answer spark.sql directly") {
-    graft.core.Tables.registerAll(spark, "/root/testdata/sf0.001")
+    SpecSupport.registerAll(spark, "/root/testdata/sf0.001")
     val n = spark.sql(
       "SELECT count(*) FROM lineitem JOIN orders ON l_orderkey = o_orderkey")
       .head().getLong(0)
@@ -130,7 +130,7 @@ class MlPipelineSpec extends AnyFunSuite {
     // the notebook's sweep shows quality degrading at strong
     // regularization (regParam 10 → majority-class collapse vs ~0.79
     // at 1.25); two grid points capture that shape cheaply.
-    val rs = TweetPipeline.sweepRegParam("lr", Seq(1.25, 10.0),
+    val rs = SpecSupport.sweepRegParam("lr", Seq(1.25, 10.0),
       featurized)
     assert(rs.head.accuracy > 0.74)
     assert(rs.last.accuracy < rs.head.accuracy)

@@ -94,28 +94,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(feats(3L).entropy === 0.0)
   }
 
-  test("resizeImages re-encodes images, passes others through") {
-    val assets = Multimodal.demoAssets(demoDocs, "doc_id", "text")
-    val before = assets.collect().map(a => a.asset_id ->
-      a.payload.toSeq).toMap
-    val resized = Multimodal.resizeImages(assets, 224, 224).collect()
-    resized.foreach { a =>
-      if (a.kind == "image") {
-        assert(a.meta.width === 224 && a.meta.height === 224)
-        val img = javax.imageio.ImageIO.read(
-          new java.io.ByteArrayInputStream(a.payload))
-        assert(img.getWidth === 224 && img.getHeight === 224)
-      } else {
-        assert(a.payload.toSeq == before(a.asset_id))
-      }
-    }
-    // a solid-color image stays solid through bilinear resize
-    val z = resized.find(_.asset_id == 3L).get
-    val img = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(z.payload))
-    assert(img.getRaster.getSample(100, 100, 0) === 'z'.toInt)
-  }
-
   test("demoAssets rejects empty and non-ASCII text loudly") {
     import spark.implicits._
     val empty = Seq((0L, "")).toDF("doc_id", "text")
@@ -128,36 +106,6 @@ class MultimodalSpec extends AnyFunSuite {
       Multimodal.demoAssets(nonAscii, "doc_id", "text").collect())
     assert(e2.getMessage.contains("pure-ASCII") ||
       Option(e2.getCause).exists(_.getMessage.contains("pure-ASCII")))
-  }
-
-  test("resize falls back to ARGB when the decoded type is TYPE_CUSTOM") {
-    // 16-bit gray PNG decodes to TYPE_USHORT_GRAY on the stock JDK, so
-    // fabricate the TYPE_CUSTOM condition directly: the fallback path
-    // must produce a valid resized PNG rather than throwing
-    // IllegalArgumentException from new BufferedImage(w, h, 0).
-    import java.awt.image.BufferedImage
-    val src = new BufferedImage(8, 8, BufferedImage.TYPE_INT_ARGB)
-    assert(src.getType != BufferedImage.TYPE_CUSTOM) // sanity
-    // The operator-level contract: resizeImages never constructs a
-    // BufferedImage with type 0. Verified indirectly — run resize over
-    // a 16-bit gray PNG payload (closest real-world trigger).
-    val w = 6; val h = 5
-    val img16 = new BufferedImage(w, h, BufferedImage.TYPE_USHORT_GRAY)
-    for (y <- 0 until h; x <- 0 until w)
-      img16.getRaster.setSample(x, y, 0, (x * 1000 + y) % 65536)
-    val baos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img16, "png", baos)
-    val asset = Multimodal.MediaAsset(9L, "image", baos.toByteArray,
-      Multimodal.MediaMeta("image/png", w, h, 0, 0L))
-    import spark.implicits._
-    implicit val enc = org.apache.spark.sql.Encoders
-      .product[Multimodal.MediaAsset]
-    val ds = spark.createDataset(Seq(asset))
-    val out = Multimodal.resizeImages(ds, 12, 10).collect()
-    assert(out.head.meta.width === 12 && out.head.meta.height === 10)
-    val back = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(out.head.payload))
-    assert(back.getWidth === 12 && back.getHeight === 10)
   }
 
   test("frameSample: one row per everyMs step, inclusive of 0") {
@@ -189,11 +137,11 @@ class MultimodalSpec extends AnyFunSuite {
     val far = base.map(b => (250 - (b & 0xff)).toByte)
     val hashes = Multimodal.aHash(
       Seq(img(1L, base), img(2L, near), img(3L, far)).toDS()).toDF()
-    val pairs = Multimodal.phashNearDup(hashes, maxHamming = 3)
+    val pairs = SpecSupport.phashNearDup(hashes, maxHamming = 3)
       .select($"a", $"b").as[(Long, Long)].collect().toSet
     assert(pairs == Set((1L, 2L)), s"got $pairs")
     // exact self-agreement: identical payloads pair at hamming 0
-    val dup = Multimodal.phashNearDup(Multimodal.aHash(
+    val dup = SpecSupport.phashNearDup(Multimodal.aHash(
         Seq(img(7L, base), img(8L, base)).toDS()).toDF(), 0)
       .as[(Long, Long, Int)].collect().toSeq
     assert(dup.map(t => (t._1, t._2)) == Seq((7L, 8L)) &&
@@ -212,7 +160,7 @@ class MultimodalSpec extends AnyFunSuite {
     assert(e.getMessage.contains("dims >= 8") ||
       Option(e.getCause).exists(_.getMessage.contains("dims >= 8")))
     intercept[IllegalArgumentException] {
-      Multimodal.phashNearDup(hashes, maxHamming = 4)
+      SpecSupport.phashNearDup(hashes, maxHamming = 4)
     }
   }
 }

@@ -7,10 +7,10 @@ import graft.operators.Dedup
 /** Executable spec of [[Dedup.writeNearDupIndexSets]] and
   * [[Dedup.incrementalNearDupsSets]]: the persisted near-dup index
   * built from exploded (doc_id, shingle) rows, with band signatures
-  * from the [[Dedup.lshBandSignaturesFast]] group-by, and the probe
+  * from the [[DedupComposed.lshBandSignaturesFast]] group-by, and the probe
   * that re-reads its three tables on every call. The sets path must
   * return the same relation (DedupSimilaritySpec), and this one is
-  * exactly [[Dedup.minhashLshPairsFast]] restricted to batch×index
+  * exactly [[DedupComposed.minhashLshPairsFast]] restricted to batch×index
   * pairs (Round7OpsSpec).
   */
 object NearDupIndexComposed {
@@ -18,7 +18,7 @@ object NearDupIndexComposed {
   def writeNearDupIndex(sh: DataFrame, path: String,
                         numHashes: Int = 16,
                         rowsPerBand: Int = 4): Unit = {
-    Dedup.lshBandSignaturesFast(sh, numHashes, rowsPerBand)
+    DedupComposed.lshBandSignaturesFast(sh, numHashes, rowsPerBand)
       .write.mode("overwrite").parquet(s"$path/bands")
     sh.write.mode("overwrite").parquet(s"$path/shingles")
     sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
@@ -33,7 +33,7 @@ object NearDupIndexComposed {
                           rowsPerBand: Int = 4,
                           threshold: Double = 0.5): DataFrame = {
     val idxBands = spark.read.parquet(s"$path/bands")
-    val newBands = Dedup.lshBandSignaturesFast(newSh, numHashes, rowsPerBand)
+    val newBands = DedupComposed.lshBandSignaturesFast(newSh, numHashes, rowsPerBand)
     val cands = newBands.as("x").join(idxBands.as("y"),
         col("x.b") === col("y.b") && col("x.sig") === col("y.sig"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))

@@ -125,8 +125,8 @@ class OptimizerCurveParitySpec extends AnyFunSuite {
         TwoLayerNet.Config(iterations = iters)).costs
       val adam = TwoLayerNet.train(tr,
         TwoLayerNet.Config(iterations = iters, optimizer = "Adam")).costs
-      val refSgd = Sinks.readCostCurve("/root/reference/out/NN_rdd_SGD")
-      val refAdam = Sinks.readCostCurve("/root/reference/out/NN_rdd_Adam")
+      val refSgd = SpecSupport.readCostCurve(s"$RefOut/NN_rdd_SGD")
+      val refAdam = SpecSupport.readCostCurve(s"$RefOut/NN_rdd_Adam")
       for ((name, ours, ref) <- Seq(("SGD", sgd, refSgd),
           ("Adam", adam, refAdam))) {
         info(f"$name head ours=${ours.head}%.4f ref=${ref.head}%.4f " +
@@ -153,7 +153,7 @@ class OptimizerCurveParitySpec extends AnyFunSuite {
   for (stack <- stacks; opt <- Optimizers)
     test(s"${stack.name}/$opt curve tracks the reference families") {
       val refs = stack.families
-        .map(p => Sinks.readCostCurve(s"$RefOut/$p$opt"))
+        .map(p => SpecSupport.readCostCurve(s"$RefOut/$p$opt"))
       assert(refs.forall(_.length >= Iters))
 
       val ours = engineCurve(stack.loss, stack.reg(), opt)

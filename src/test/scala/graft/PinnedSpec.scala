@@ -78,7 +78,7 @@ class PinnedSpec extends AnyFunSuite {
     import spark.implicits._
     val df = (1 to 400).map(i => (i % 3, (i * 7 % 101).toDouble))
       .toDF("g", "v")
-    val plain = Quantiles
+    val plain = SpecSupport
       .exactPercentiles(df, "g", "v", Seq(0.25, 0.5, 0.9))
       .collect().map(r => (r.getInt(0), r.getDouble(1)) -> r.getDouble(2))
       .toMap

@@ -30,7 +30,7 @@ class PlanAuditSpec extends AnyFunSuite {
 
     // -- self-validate both detectors on deliberately-bad plans --
     val bad = Seq((1, "a"), (2, "b"), (3, "c")).toDF("x", "g")
-    val badWin = PlanSummary.finalOperators(
+    val badWin = SpecSupport.finalOperators(
       bad.withColumn("rn", row_number().over(W.orderBy($"x"))))
     assert(badWin.exists {
       case w: WindowExec => w.partitionSpec.isEmpty
@@ -41,7 +41,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val prev = (spark.conf.getOption(abjt), spark.conf.getOption(aqeAbjt))
     spark.conf.set(abjt, "-1"); spark.conf.set(aqeAbjt, "-1")
     val badCart =
-      try PlanSummary.finalOperators(
+      try SpecSupport.finalOperators(
         bad.join(Seq(7, 8).toDF("y"), $"x" < $"y", "inner"))
       finally {
         prev._1.fold(spark.conf.unset(abjt))(spark.conf.set(abjt, _))
@@ -61,7 +61,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filterNot(_.startsWith("m0"))
     for (name <- names) {
-      val ops = PlanSummary.finalOperators(
+      val ops = SpecSupport.finalOperators(
         SparkEntry.queries(name)(spark, sf))
       assert(!ops.exists(_.isInstanceOf[CartesianProductExec]),
         s"$name: CartesianProduct in the executed plan")
@@ -292,7 +292,7 @@ class PlanAuditSpec extends AnyFunSuite {
       "scan-side might_contain probe, shuffle join regime") {
     import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
     val df = SparkEntry.queries("bk03_bloom_runtime_join")(spark, sf)
-    val ops = PlanSummary.finalOperators(df)
+    val ops = SpecSupport.finalOperators(df)
     // the optimizer must have planted the probe on the fact side —
     // walk expressions, not strings (the subquery nesting varies)
     val hasProbe = ops.exists(_.expressions.exists(_.exists(

@@ -116,7 +116,7 @@ class RddStackSpec extends AnyFunSuite {
     // compare per-document cost — their curve head is 6097·ln 2
     // (validating the normalizer), and at their last iteration the
     // per-doc training cost must agree within 5%.
-    val refCurve = Sinks.readCostCurve("/root/reference/out/output")
+    val refCurve = SpecSupport.readCostCurve("/root/reference/out/output")
     val refN = math.round(refCurve.head / math.log(2.0)).toDouble
     assert(math.abs(refCurve.head - refN * math.log(2.0)) < 1e-6)
     val lastI = refCurve.length - 1
@@ -130,12 +130,12 @@ class RddStackSpec extends AnyFunSuite {
     val dir = java.nio.file.Files
       .createTempDirectory("costcurve").toString + "/out"
     Sinks.costCurve(spark, res.costs.toSeq, dir)
-    val back = Sinks.readCostCurve(dir)
+    val back = SpecSupport.readCostCurve(dir)
     assert(back == res.costs.toSeq)
 
     // a missing directory fails loudly, never an empty curve
     val ex = intercept[RuntimeException](
-      Sinks.readCostCurve(dir + "-does-not-exist"))
+      SpecSupport.readCostCurve(dir + "-does-not-exist"))
     assert(ex.getMessage.contains("no such directory"))
   }
 

@@ -77,7 +77,7 @@ class Round6OpsSpec extends AnyFunSuite {
       .toDF("doc_id", "text").select(col("doc_id"), toks.as("tokens"))
     val b = 8
     for (profile <- Seq(FeatureHashing.bucketOracle _,
-                        FeatureHashing.bucketFast _)) {
+                        SpecSupport.bucketFast _)) {
       val tf = FeatureHashing.hashedTf(docs, "doc_id", col("tokens"), b,
         profile)
       val buckets = tf.select(col("bucket")).as[Long].collect()
@@ -283,7 +283,7 @@ class Round6OpsSpec extends AnyFunSuite {
 
     // bit-exact vs the hand-composed form: ⟨x,s_i⟩/√k per output dim
     val composed = array(signs.map(s0 =>
-      (Similarity.dotComposed(col("embedding"),
+      (SimilarityComposed.dotComposed(col("embedding"),
         typedLit(s0.toSeq)) / lit(4.0)): org.apache.spark.sql.Column): _*)
     val mismatches = df.select(
         Similarity.randomProject(col("embedding"), signs).as("a"),

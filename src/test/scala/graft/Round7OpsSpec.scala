@@ -28,8 +28,7 @@ class Round7OpsSpec extends AnyFunSuite {
     val queries = emb.filter(col("vec_id") < 10)
     val inFlight = Similarity.ivfSearch(emb, queries, ctrs,
       k = 10, nProbe = 4).collect().map(_.toSeq).toSet
-    val path = java.nio.file.Files
-      .createTempDirectory("ivf-spec-").toString
+    val path = graft.core.IndexCache.newIndexDir("ivf-spec-")
     Similarity.ivfWriteIndex(emb, ctrs, path)
     val indexed = Similarity.ivfSearchIndexed(spark, path, queries,
       ctrs, k = 10, nProbe = 4).collect().map(_.toSeq).toSet
@@ -39,8 +38,7 @@ class Round7OpsSpec extends AnyFunSuite {
 
   test("indexed probe prunes to the probed cells' partitions") {
     val ctrs = Similarity.randomPlanes(8, 64, seed = 7L)
-    val path = java.nio.file.Files
-      .createTempDirectory("ivf-spec-prune-").toString
+    val path = graft.core.IndexCache.newIndexDir("ivf-spec-prune-")
     Similarity.ivfWriteIndex(emb, ctrs, path)
     // nProbe=1, one query → exactly one probed cell.
     val one = Similarity.ivfSearchIndexed(spark, path,
@@ -65,11 +63,10 @@ class Round7OpsSpec extends AnyFunSuite {
       .parquet("/root/testdata/sf0.001/documents.parquet")
     val sh = Dedup.shingles(docs, "doc_id",
       graft.text.TextOps.tokenize(col("text")))
-    val full = Dedup.minhashLshPairsFast(sh, threshold = 0.5)
+    val full = DedupComposed.minhashLshPairsFast(sh, threshold = 0.5)
       .filter(col("a") < 100 && col("b") >= 100)
       .collect().map(_.toSeq).toSet
-    val path = java.nio.file.Files
-      .createTempDirectory("lsh-idx-spec-").toString
+    val path = graft.core.IndexCache.newIndexDir("lsh-idx-spec-")
     NearDupIndexComposed.writeNearDupIndex(sh.filter(col("doc_id") >= 100), path)
     val inc = NearDupIndexComposed.incrementalNearDups(spark, path,
       sh.filter(col("doc_id") < 100), threshold = 0.5)
@@ -150,7 +147,7 @@ class Round7OpsSpec extends AnyFunSuite {
       .parquet("/root/testdata/sf0.001/documents.parquet")
     val sh = Dedup.shingles(docs, "doc_id",
       graft.text.TextOps.tokenize(col("text")))
-    val pairs = Dedup.minhashLshPairs(sh, threshold = 0.5)
+    val pairs = DedupComposed.minhashLshPairs(sh, threshold = 0.5)
       .as[(Long, Long, Double)].collect()
       .map { case (a, b, j) => (a, b) -> j }.toMap
     val split = docs.select(col("doc_id"),
@@ -230,7 +227,7 @@ class Round7OpsSpec extends AnyFunSuite {
     def sse(ctrs: Array[Array[Double]]): Double =
       emb.select(
           org.apache.spark.sql.functions.sum(
-            graft.operators.Similarity.sqDistToNearest(
+            SimilarityComposed.sqDistToNearest(
               col("embedding"), ctrs)).as("s"))
         .head().getDouble(0)
     val ctrs1 = Similarity.collectCentroids(

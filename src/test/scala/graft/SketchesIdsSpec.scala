@@ -147,7 +147,7 @@ class SketchesIdsSpec extends AnyFunSuite {
         .select($"l.bucket", $"l.wbits", $"l.rho")
         .collect().map(r => (r.getInt(0), r.getLong(1), r.getInt(2)))
         .toSet
-    assert(decomp(Sketches.logLog) == decomp(Sketches.logLogComposed))
+    assert(decomp(Sketches.logLog) == decomp(SketchesComposed.logLogComposed))
     // rank boundaries, incl. the zero remainder (no special case in
     // the kernel: bitlen(0) = 0 falls out of LZCNT arithmetic)
     for ((w, expect) <- Seq(0L -> 55, 1L -> 54, 2L -> 53, 3L -> 53,
@@ -175,7 +175,7 @@ class SketchesIdsSpec extends AnyFunSuite {
     for (n <- Seq(500, 5000, 20000)) {
       val distinct = Seq.tabulate(n)(i => s"tok-$i-x")
       // feed with duplicates so the estimate sees a realistic stream
-      val est = Sketches.logLogEstimate(
+      val est = SketchesComposed.logLogEstimate(
         llRegisters(distinct ++ distinct.take(n / 3), 6), 6)
       // raw HLL estimator, 1.04/sqrt(64) = 13% standard error; allow 3σ
       assert(math.abs(est - n) / n < 0.4,

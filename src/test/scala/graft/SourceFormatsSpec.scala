@@ -63,7 +63,7 @@ class SourceFormatsSpec extends AnyFunSuite {
   }
 
   test("S4: inferSchema scan types numeric columns and agrees with the explicit-schema read") {
-    val inf = Csv.inferred(spark, Csv.TrainCsv)
+    val inf = SpecSupport.inferred(spark, Csv.TrainCsv)
     assert(inf.columns.toSeq ===
       Seq("id", "keyword", "location", "text", "target"))
     // inference types id/target numerically — exactly why the engine's

@@ -209,15 +209,6 @@ class TextOpsSpec extends AnyFunSuite {
     assert(rate < 0.03, f"at-risk rate $rate%.4f regressed above 3%%")
   }
 
-  test("asciiFold: strips diacritics, drops non-latin, keeps ascii") {
-    import spark.implicits._
-    val got = Seq("café naïve über", "ascii stays", "日本語x")
-      .toDF("t").select(TextOps.asciiFoldUdf($"t")).as[String].collect()
-    assert(got(0) == "cafe naive uber")
-    assert(got(1) == "ascii stays")
-    assert(got(2) == "x")
-  }
-
   test("ngrams: sliding window, short docs yield empty") {
     import spark.implicits._
     val got = Seq(Seq("a", "b", "c", "d"), Seq("a", "b"), Seq[String]())
@@ -249,8 +240,8 @@ class TextOpsSpec extends AnyFunSuite {
       Analysis.tokenCount(toks),
       Analysis.distinctTokenCount(toks),
       Analysis.typeTokenRatio(toks),
-      Analysis.meanTokenLen(toks),
-      Analysis.stopwordRatio(toks)).head()
+      AnalysisComposed.meanTokenLen(toks),
+      AnalysisComposed.stopwordRatio(toks)).head()
     assert(row.getInt(0) == 5)
     assert(row.getInt(1) == 3)
     assert(row.getDouble(2) == 0.6)
@@ -317,7 +308,7 @@ class TextOpsSpec extends AnyFunSuite {
       (2L, Seq("x")),
       (3L, Seq.empty[String]))
       .toDF("id", "arr")
-      .select($"id", Analysis.sortedRunLengths($"arr"))
+      .select($"id", AnalysisComposed.sortedRunLengths($"arr"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(got(1L) == Seq(1L, 3L, 1L)) // a:1, b:3, c:1 — char-sorted
     assert(got(2L) == Seq(1L))
@@ -332,7 +323,7 @@ class TextOpsSpec extends AnyFunSuite {
     // (2/3)ln(3/2) + (1/3)ln 3
     val df = Seq((1L, "aab")).toDF("doc_id", "text")
       .withColumn("cs", split($"text", ""))
-      .withColumn("runs", Analysis.sortedRunLengths($"cs"))
+      .withColumn("runs", AnalysisComposed.sortedRunLengths($"cs"))
     val row = df.select(
       (length($"text").cast("long") * length($"text")
         - aggregate($"runs", lit(0L), (acc, c) => acc + c * c))

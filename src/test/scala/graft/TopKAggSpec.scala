@@ -82,7 +82,7 @@ class TopKAggSpec extends AnyFunSuite {
         col("embedding").as("n_vec"))
       .join(q, col("n_id") =!= col("q_id"))
       .select(col("q_id"), col("n_id"),
-        Similarity.cosine(col("q_vec"), col("n_vec")).as("cos"))
+        SimilarityComposed.cosine(col("q_vec"), col("n_vec")).as("cos"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id").asc)
     val ref = scored.withColumn("rn", row_number().over(w))

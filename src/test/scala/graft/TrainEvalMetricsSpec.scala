@@ -38,7 +38,7 @@ class TrainEvalMetricsSpec extends AnyFunSuite {
   }
 
   test("accuracyF1 == the two evaluate calls on a skewed 3-class frame") {
-    val (acc, f1) = TweetPipeline.accuracyF1(skewed3)
+    val (acc, f1) = SpecSupport.accuracyF1(skewed3)
     assert((acc, f1) == evaluate(skewed3))
     assert(acc > 0.0 && acc < 1.0 && f1 > 0.0 && f1 < 1.0)
   }
