@@ -21,9 +21,10 @@ A reached method reaches:
   * the method handles among the bootstrap arguments of its
     invokedynamic instructions (Scala lambdas, `_ => KernelSubstitution`);
   * the `<clinit>` of every class whose members it touches;
-  * `graft.<pkg>.<Class>.<method>(` named in its string constants (the
-    Java source that codegen emits calls these by name), and the
-    constructor of an internal class named by a string constant
+  * when it builds a Catalyst `StaticInvoke`, the methods named by its
+    string constants on the objects it loads (a kernel's
+    `StaticInvoke(XImpl.getClass, _, "method", ...)` calls by name);
+  * the constructor of an internal class named by a string constant
     (reflective instantiation, e.g. a TypeTag's `staticClass`).
 
 A class whose constructor is reached has all its methods reached: the
@@ -75,7 +76,7 @@ COMPANION_METHODS = {"apply", "unapply", "unapplySeq", "toString",
 
 ACC_PUBLIC, ACC_STATIC, ACC_BRIDGE, ACC_SYNTHETIC = 0x1, 0x8, 0x40, 0x1000
 
-CODEGEN_CALL = re.compile(r"graft((?:\.[A-Za-z_$][\w$]*)+)\.([A-Za-z_][\w$]*)\(")
+STATIC_INVOKE = "org/apache/spark/sql/catalyst/expressions/objects/StaticInvoke"
 
 
 class Klass:
@@ -321,7 +322,7 @@ class Graph:
         while self.queue:
             m = self.queue.popleft()
             k = m.owner
-            strings = []
+            strings, modules, static_invoke = [], set(), False
             for op, idx in m.refs:
                 if op == "invokedynamic":
                     bi = re.match(r"#(\d+):", k.cp.get(idx, ("", "", ""))[1])
@@ -330,25 +331,23 @@ class Graph:
                             self.follow(k, h)
                 elif op.startswith("invoke"):
                     self.follow(k, idx)
+                    ref = member_ref(k, idx)
+                    static_invoke |= bool(ref) and ref[0].startswith(STATIC_INVOKE)
                 elif op in ("getstatic", "putstatic"):
                     ref = member_ref(k, idx)
                     if ref:
                         self.mark(ref[0], "<clinit>", "()V")
+                        if ref[1] == "MODULE$" and ref[0] in self.classes:
+                            modules.add(ref[0])
                 elif op in ("ldc", "ldc_w"):
                     s = string_of(k, idx)
                     if s is not None:
                         strings.append(s)
                         if s in self.by_string:
                             self.mark_named(self.by_string[s], "<init>")
-            self.codegen_calls("".join(strings).replace("$.MODULE$", "$"))
-
-    def codegen_calls(self, text):
-        for m in CODEGEN_CALL.finditer(text):
-            cls = "graft" + m.group(1).replace(".", "/")
-            for owner in (cls, cls + "$"):
-                if owner in self.classes:
-                    self.mark(owner, "<clinit>", "()V")
-                    self.mark_named(owner, m.group(2))
+            for owner in modules if static_invoke else ():
+                for s in strings:
+                    self.mark_named(owner, s)
 
 
 def reportable(c, meth, classes):

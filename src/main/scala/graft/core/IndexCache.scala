@@ -28,11 +28,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object IndexCache {
   val MaxEntries = 8
 
-  /** A fresh directory for an index that serves the current session:
-    * under the application's `SparkFiles` root, which Spark deletes
-    * when the context stops, so the index outlives every lazy result
-    * that reads it and nothing is left in the temp directory
-    * afterwards.
+  /** A fresh directory for an index or a re-laid-out table that
+    * serves the current session: under the application's `SparkFiles`
+    * root, which Spark deletes when the context stops, so the data
+    * outlives every lazy result that reads it and nothing is left in
+    * the temp directory afterwards.
     */
   def newIndexDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(

@@ -1,9 +1,9 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -28,47 +28,18 @@ import org.apache.spark.sql.types._
   */
 case class BigramLogProbExpr(child: Expression,
     model: Map[String, Double], floorLp: Double)
-    extends UnaryExpression {
+    extends RuntimeReplaceable with UnaryLike[Expression]
+    with org.apache.spark.sql.graftbridge.StringArrayInputTypes {
 
-  @transient private lazy val table: java.util.HashMap[String, java.lang.Double] = {
-    val m = new java.util.HashMap[String, java.lang.Double]()
-    model.foreach { case (k, v) => m.put(k, java.lang.Double.valueOf(v)) }
-    m
+  override lazy val replacement: Expression = {
+    val table = new java.util.HashMap[String, java.lang.Double]()
+    model.foreach { case (k, v) => table.put(k, java.lang.Double.valueOf(v)) }
+    StaticInvoke(BigramLogProbImpl.getClass, BigramLogProbExpr.OutType,
+      "score", Seq(child, Literal.fromObject(table,
+        ObjectType(classOf[java.util.HashMap[_, _]])), Literal(floorLp)),
+      returnNullable = false)
   }
-
-  override def dataType: DataType = BigramLogProbExpr.OutType
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = child.nullable
   override def prettyName: String = "graft_bigram_logprob"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckFailure(
-            s"$prettyName requires array<string>, got $other")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else BigramLogProbImpl.score(v.asInstanceOf[ArrayData], table, floorLp)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val tableRef = ctx.addReferenceObj("bigramModel", table,
-      "java.util.HashMap")
-    val floorRef = ctx.addReferenceObj("bigramFloor",
-      java.lang.Double.valueOf(floorLp), "java.lang.Double")
-    nullSafeCodeGen(ctx, ev, c => {
-      s"${ev.value} = graft.expressions.BigramLogProbImpl" +
-        s".score($c, $tableRef, $floorRef.doubleValue());"
-    })
-  }
 
   override protected def withNewChildInternal(
       newChild: Expression): BigramLogProbExpr = copy(child = newChild)

@@ -1,10 +1,10 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.types.{IntegerType, ObjectType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable
 
@@ -30,44 +30,27 @@ import scala.collection.mutable
   * has been seen.
   */
 case class BlocklistHits(child: Expression, patterns: Seq[String])
-    extends UnaryExpression {
+    extends RuntimeReplaceable with UnaryLike[Expression]
+    with org.apache.spark.sql.graftbridge.StringInputTypes {
 
   require(patterns.nonEmpty, "blocklist must be non-empty")
   require(patterns.forall(p => p != null && p.nonEmpty),
     "blocklist entries must be non-null and non-empty")
 
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = child.nullable
+  override lazy val replacement: Expression =
+    StaticInvoke(BlocklistHitsImpl.getClass, IntegerType, "count",
+      Seq(child, Literal.fromObject(new AcAutomaton(patterns.toArray),
+        ObjectType(classOf[AcAutomaton]))),
+      returnNullable = false)
   override def prettyName: String = "graft_blocklist_hits"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    child.dataType match {
-      case StringType => TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires string, got $other")
-    }
-
-  @transient private lazy val auto = new AcAutomaton(patterns.toArray)
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else auto.countEntriesPresent(
-      v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val autoRef = ctx.addReferenceObj("acAuto", auto,
-      classOf[AcAutomaton].getName)
-    nullSafeCodeGen(ctx, ev, c => {
-      s"${ev.value} = $autoRef.countEntriesPresent($c.getBytes());"
-    })
-  }
 
   override protected def withNewChildInternal(
       newChild: Expression): BlocklistHits = copy(child = newChild)
+}
+
+object BlocklistHitsImpl {
+  def count(text: UTF8String, auto: AcAutomaton): Int =
+    auto.countEntriesPresent(text.getBytes)
 }
 
 /** Aho–Corasick automaton over bytes with sparse transitions.

@@ -1,8 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -32,45 +32,18 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class BpeEncodeExpr(child: Expression,
                          merges: Seq[(String, String)])
-    extends UnaryExpression {
+    extends RuntimeReplaceable with UnaryLike[Expression]
+    with org.apache.spark.sql.graftbridge.StringArrayInputTypes {
 
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = child.nullable
+  override lazy val replacement: Expression =
+    StaticInvoke(BpeEncodeImpl.getClass, StringType, "encode",
+      Seq(child, Literal.fromObject(merges.toArray,
+        ObjectType(classOf[Array[(String, String)]]))),
+      returnNullable = false)
   override def prettyName: String = "graft_bpe_encode"
   // keep the (possibly 30k-entry) rule list out of plan strings
   override def toString: String =
     s"graft_bpe_encode($child, ${merges.size} rules)"
-
-  @transient private lazy val rules: Array[(String, String)] =
-    merges.toArray
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckFailure(
-            s"$prettyName requires array<string>, got $other")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else BpeEncodeImpl.encode(v.asInstanceOf[ArrayData], rules)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val rulesRef = ctx.addReferenceObj("bpeRules", rules,
-      "scala.Tuple2[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      s"${ev.value} = graft.expressions.BpeEncodeImpl" +
-        s".encode($c, $rulesRef);"
-    })
-  }
 
   override protected def withNewChildInternal(
       newChild: Expression): BpeEncodeExpr = copy(child = newChild)
@@ -94,7 +67,7 @@ object BpeEncodeImpl {
                          rules: Array[(String, String)],
                          out: java.lang.StringBuilder): Unit = {
     // initial symbols: one per character (the mark() form)
-    var syms = new Array[String](word.length)
+    val syms = new Array[String](word.length)
     var i = 0
     while (i < word.length) {
       syms(i) = String.valueOf(word.charAt(i)); i += 1

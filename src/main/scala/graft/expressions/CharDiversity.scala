@@ -1,9 +1,9 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -28,32 +28,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * Returns struct(n_total, n_distinct, sum_sq, shannon): the exact
   * integer Simpson/Gini pieces plus the float entropy.
   */
-case class CharDiversityStats(child: Expression) extends UnaryExpression {
+case class CharDiversityStats(child: Expression)
+    extends RuntimeReplaceable with UnaryLike[Expression]
+    with org.apache.spark.sql.graftbridge.StringInputTypes {
 
-  override def dataType: DataType = CharDiversityStats.OutType
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = child.nullable
+  override lazy val replacement: Expression =
+    StaticInvoke(CharDiversityImpl.getClass, CharDiversityStats.OutType,
+      "stats", Seq(child), returnNullable = false)
   override def prettyName: String = "graft_char_diversity"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a string input, got ${child.dataType}")
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else CharDiversityImpl.stats(v.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"${ev.value} = graft.expressions.CharDiversityImpl.stats($c);"
-    })
 
   override protected def withNewChildInternal(
       newChild: Expression): CharDiversityStats = copy(child = newChild)

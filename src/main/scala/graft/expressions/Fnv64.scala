@@ -1,8 +1,9 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** FNV-1a 64-bit hash over a string's Unicode CODE POINTS — the cheap
@@ -25,20 +26,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * Codegen'd (a static JVM call inside whole-stage codegen), so the
   * corpus-side cost stays one fused scan pass like the md5 profile.
   */
-case class Fnv64(child: Expression) extends UnaryExpression
+case class Fnv64(child: Expression)
+    extends RuntimeReplaceable with UnaryLike[Expression]
     with org.apache.spark.sql.graftbridge.StringInputTypes {
 
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
+  override lazy val replacement: Expression =
+    StaticInvoke(Fnv64Impl.getClass, LongType, "fnv1a64", Seq(child),
+      returnNullable = false)
   override def prettyName: String = "graft_fnv64"
-
-  override protected def nullSafeEval(input: Any): Any =
-    Fnv64Impl.fnv1a64(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.expressions.Fnv64Impl.fnv1a64($c)")
 
   override protected def withNewChildInternal(
       newChild: Expression): Fnv64 = copy(child = newChild)

@@ -2,9 +2,9 @@ package graft.expressions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -33,38 +33,16 @@ import org.apache.spark.sql.types._
   * two) bigrams containing it (`concat` null-propagation).
   */
 case class HashedGramBucketsExpr(child: Expression, numBuckets: Int)
-    extends UnaryExpression {
+    extends RuntimeReplaceable with UnaryLike[Expression]
+    with org.apache.spark.sql.graftbridge.StringArrayInputTypes {
 
   require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = child.nullable
+  override lazy val replacement: Expression =
+    StaticInvoke(HashedGramBucketsImpl.getClass,
+      ArrayType(LongType, containsNull = true), "build",
+      Seq(child, Literal(numBuckets)), returnNullable = false)
   override def prettyName: String = "graft_hashed_gram_buckets"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckFailure(
-            s"$prettyName requires array<string>, got $other")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else HashedGramBucketsImpl.build(v.asInstanceOf[ArrayData], numBuckets)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""${ev.value} =
-         graft.expressions.HashedGramBucketsImpl.build($c, $numBuckets);"""
-    })
 
   override protected def withNewChildInternal(
       newChild: Expression): HashedGramBucketsExpr = copy(child = newChild)

@@ -1,9 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.BinaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -30,36 +29,13 @@ import org.apache.spark.sql.types._
   * per pair, no output array, JIT-compiled inside whole-stage codegen.
   */
 case class IntersectCountI64(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends RuntimeReplaceable with BinaryLike[Expression]
+    with org.apache.spark.sql.graftbridge.LongArrayInputTypes {
 
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = left.nullable || right.nullable
+  override lazy val replacement: Expression =
+    StaticInvoke(IntersectCountImpl.getClass, IntegerType, "countI64",
+      Seq(left, right), returnNullable = false)
   override def prettyName: String = "graft_intersect_count_i64"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other =>
-        TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (array<bigint>, array<bigint>), got $other")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val a = left.eval(input)
-    if (a == null) return null
-    val b = right.eval(input)
-    if (b == null) return null
-    IntersectCountImpl.countI64(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"${ev.value} = graft.expressions.IntersectCountImpl.countI64($a, $b);"
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): IntersectCountI64 =

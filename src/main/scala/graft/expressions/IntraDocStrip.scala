@@ -1,9 +1,9 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -31,37 +31,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * Returns struct(clean_text, n_removed).
   */
 case class IntraDocStripExpr(child: Expression, window: Int)
-    extends UnaryExpression {
+    extends RuntimeReplaceable with UnaryLike[Expression]
+    with org.apache.spark.sql.graftbridge.StringArrayInputTypes {
   require(window >= 2, s"window must be >= 2, got $window")
 
-  override def dataType: DataType = IntraDocStripExpr.OutType
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = child.nullable
+  override lazy val replacement: Expression =
+    StaticInvoke(IntraDocStripImpl.getClass, IntraDocStripExpr.OutType,
+      "strip", Seq(child, Literal(window)), returnNullable = false)
   override def prettyName: String = "graft_intradoc_strip"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckFailure(
-            s"$prettyName requires array<string>, got $other")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else IntraDocStripImpl.strip(v.asInstanceOf[ArrayData], window)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"${ev.value} = graft.expressions.IntraDocStripImpl" +
-        s".strip($c, $window);"
-    })
 
   override protected def withNewChildInternal(
       newChild: Expression): IntraDocStripExpr = copy(child = newChild)

@@ -1,8 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,7 +24,8 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 case class LangIdExpr(child: Expression,
                       markers: Seq[(String, Seq[String])])
-    extends UnaryExpression {
+    extends RuntimeReplaceable with UnaryLike[Expression]
+    with org.apache.spark.sql.graftbridge.StringArrayInputTypes {
 
   // The marker→language mask is a 32-bit Int (1 << i per language);
   // a 33rd language would silently alias to bit 0 and misattribute
@@ -33,54 +34,22 @@ case class LangIdExpr(child: Expression,
     s"LangIdExpr supports at most 32 languages (got ${markers.size}); " +
       "widen the bitmask to Long/long[] before adding more")
 
-  @transient private lazy val maskMap: java.util.HashMap[UTF8String, Integer] = {
-    val m = new java.util.HashMap[UTF8String, Integer]()
+  override lazy val replacement: Expression = {
+    val maskMap = new java.util.HashMap[UTF8String, Integer]()
     markers.zipWithIndex.foreach { case ((_, ws), i) =>
       ws.foreach { w =>
         val k = UTF8String.fromString(w)
-        val prev = m.get(k)
-        m.put(k, (if (prev == null) 0 else prev.intValue()) | (1 << i))
+        val prev = maskMap.get(k)
+        maskMap.put(k, (if (prev == null) 0 else prev.intValue()) | (1 << i))
       }
     }
-    m
+    val langNames = markers.map(l => UTF8String.fromString(l._1)).toArray
+    StaticInvoke(LangIdImpl.getClass, StringType, "langId", Seq(child,
+      Literal.fromObject(maskMap, ObjectType(classOf[java.util.HashMap[_, _]])),
+      Literal.fromObject(langNames, ObjectType(classOf[Array[UTF8String]]))),
+      returnNullable = false)
   }
-
-  @transient private lazy val langNames: Array[UTF8String] =
-    markers.map(l => UTF8String.fromString(l._1)).toArray
-
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = child.nullable
   override def prettyName: String = "graft_lang_id"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckFailure(
-            s"$prettyName requires array<string>, got $other")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else LangIdImpl.langId(v.asInstanceOf[ArrayData], maskMap, langNames)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val mapRef = ctx.addReferenceObj("langMasks", maskMap,
-      "java.util.HashMap")
-    val namesRef = ctx.addReferenceObj("langNames", langNames,
-      "org.apache.spark.unsafe.types.UTF8String[]")
-    nullSafeCodeGen(ctx, ev, c => {
-      s"${ev.value} = graft.expressions.LangIdImpl" +
-        s".langId($c, $mapRef, $namesRef);"
-    })
-  }
 
   override protected def withNewChildInternal(
       newChild: Expression): LangIdExpr = copy(child = newChild)

@@ -1,8 +1,9 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, IntegerType}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.types.IntegerType
 
 /** LogLog rank of a hash remainder: `rho = (60 − p + 1) − bitlen(w)`
   * where `w` is the (60−p)-bit remainder of the engine-wide 60-bit
@@ -20,24 +21,16 @@ import org.apache.spark.sql.types.{DataType, IntegerType}
   * semantics, proven by the parity spec across the full boundary
   * set and random longs, codegen and interpreted).
   */
-case class LogLogRho(child: Expression, p: Int) extends UnaryExpression
+case class LogLogRho(child: Expression, p: Int)
+    extends RuntimeReplaceable with UnaryLike[Expression]
     with org.apache.spark.sql.graftbridge.LongInputTypes {
 
   require(p >= 1 && p <= 20, s"LogLogRho: p must be in [1,20], got $p")
 
-  private def rhoMax: Int = 60 - p + 1
-
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
+  override lazy val replacement: Expression =
+    StaticInvoke(LogLogRhoImpl.getClass, IntegerType, "rho",
+      Seq(child, Literal(60 - p + 1)), returnNullable = false)
   override def prettyName: String = "graft_loglog_rho"
-
-  override protected def nullSafeEval(input: Any): Any =
-    LogLogRhoImpl.rho(input.asInstanceOf[Long], rhoMax)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"($rhoMax - (64 - java.lang.Long.numberOfLeadingZeros($c)))")
 
   override protected def withNewChildInternal(
       newChild: Expression): LogLogRho = copy(child = newChild)

@@ -1,8 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -21,35 +21,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * all-null) array → 0; null array → null.
   */
 case class MaxMultiplicityExpr(child: Expression)
-    extends UnaryExpression {
+    extends RuntimeReplaceable with UnaryLike[Expression]
+    with org.apache.spark.sql.graftbridge.StringArrayInputTypes {
 
-  override def dataType: DataType = IntegerType
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = child.nullable
+  override lazy val replacement: Expression =
+    StaticInvoke(MaxMultiplicityImpl.getClass, IntegerType, "maxCount",
+      Seq(child), returnNullable = false)
   override def prettyName: String = "graft_max_multiplicity"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckFailure(
-            s"$prettyName requires array<string>, got $other")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else MaxMultiplicityImpl.maxCount(v.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"${ev.value} = graft.expressions.MaxMultiplicityImpl.maxCount($c);"
-    })
 
   override protected def withNewChildInternal(
       newChild: Expression): MaxMultiplicityExpr = copy(child = newChild)

@@ -1,8 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
@@ -26,43 +26,20 @@ import org.apache.spark.sql.types._
   */
 case class MinHashBandsFastExpr(child: Expression, numHashes: Int,
                                 rowsPerBand: Int)
-    extends UnaryExpression {
+    extends RuntimeReplaceable with UnaryLike[Expression]
+    with org.apache.spark.sql.graftbridge.StringArrayInputTypes {
 
   require(numHashes > 0 && numHashes % rowsPerBand == 0,
     s"numHashes $numHashes must be a positive multiple of rowsPerBand")
 
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("b", IntegerType, nullable = false),
-      StructField("sig", LongType, nullable = false))),
-    containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = child.nullable
+  override lazy val replacement: Expression =
+    StaticInvoke(MinHashBandsFastImpl.getClass, ArrayType(
+      StructType(Seq(StructField("b", IntegerType, nullable = false),
+        StructField("sig", LongType, nullable = false))),
+      containsNull = false), "build",
+      Seq(child, Literal(numHashes), Literal(rowsPerBand)),
+      returnNullable = false)
   override def prettyName: String = "graft_minhash_bands_fast"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckFailure(
-            s"$prettyName requires array<string>, got $other")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else MinHashBandsFastImpl.build(v.asInstanceOf[ArrayData], numHashes,
-      rowsPerBand)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""${ev.value} = graft.expressions.MinHashBandsFastImpl.build(
-         $c, $numHashes, $rowsPerBand);"""
-    })
 
   override protected def withNewChildInternal(
       newChild: Expression): MinHashBandsFastExpr = copy(child = newChild)

@@ -1,8 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -24,37 +24,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * form's empty array.
   */
 case class NgramJoinExpr(child: Expression, n: Int)
-    extends UnaryExpression {
+    extends RuntimeReplaceable with UnaryLike[Expression]
+    with org.apache.spark.sql.graftbridge.StringArrayInputTypes {
 
   require(n >= 1, s"ngram n must be >= 1, got $n")
 
-  override def dataType: DataType = ArrayType(StringType)
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = child.nullable
+  override lazy val replacement: Expression =
+    StaticInvoke(NgramJoinImpl.getClass, ArrayType(StringType), "build",
+      Seq(child, Literal(n)), returnNullable = false)
   override def prettyName: String = "graft_ngrams"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckFailure(
-            s"$prettyName requires array<string>, got $other")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else NgramJoinImpl.build(v.asInstanceOf[ArrayData], n)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"${ev.value} = graft.expressions.NgramJoinImpl.build($c, $n);"
-    })
 
   override protected def withNewChildInternal(
       newChild: Expression): NgramJoinExpr = copy(child = newChild)

@@ -1,9 +1,10 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, LongType}
+import org.apache.spark.sql.types.LongType
 
 /** One-pass 60-bit SimHash over pre-hashed tokens.
   *
@@ -21,20 +22,14 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * SQL / composed-HOF parity; the d04 DuckDB oracle re-verifies the
   * bit math end-to-end every round.
   */
-case class SimHash60(child: Expression) extends UnaryExpression
+case class SimHash60(child: Expression)
+    extends RuntimeReplaceable with UnaryLike[Expression]
     with org.apache.spark.sql.graftbridge.LongArrayInputTypes {
 
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
+  override lazy val replacement: Expression =
+    StaticInvoke(SimHashImpl.getClass, LongType, "simhash60", Seq(child),
+      returnNullable = false)
   override def prettyName: String = "graft_simhash60"
-
-  override protected def nullSafeEval(input: Any): Any =
-    SimHashImpl.simhash60(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.expressions.SimHashImpl.simhash60($c)")
 
   override protected def withNewChildInternal(
       newChild: Expression): SimHash60 = copy(child = newChild)
@@ -50,20 +45,14 @@ case class SimHash60(child: Expression) extends UnaryExpression
   * ExpressionSpec asserts parity against the composed form; the d04
   * oracle mirrors the same math in SQL.
   */
-case class SimHashText(child: Expression) extends UnaryExpression
+case class SimHashText(child: Expression)
+    extends RuntimeReplaceable with UnaryLike[Expression]
     with org.apache.spark.sql.graftbridge.StringArrayInputTypes {
 
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
+  override lazy val replacement: Expression =
+    StaticInvoke(SimHashImpl.getClass, LongType, "simhash60Text",
+      Seq(child), returnNullable = false)
   override def prettyName: String = "graft_simhash_text"
-
-  override protected def nullSafeEval(input: Any): Any =
-    SimHashImpl.simhash60Text(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.expressions.SimHashImpl.simhash60Text($c)")
 
   override protected def withNewChildInternal(
       newChild: Expression): SimHashText = copy(child = newChild)

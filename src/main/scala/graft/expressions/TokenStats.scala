@@ -1,9 +1,9 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -33,45 +33,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * sum_len nullable.
   */
 case class TokenStatsExpr(child: Expression, stopWords: Seq[String])
-    extends UnaryExpression {
+    extends RuntimeReplaceable with UnaryLike[Expression]
+    with org.apache.spark.sql.graftbridge.StringArrayInputTypes {
 
-  @transient private lazy val stopSet: java.util.HashSet[UTF8String] = {
-    val s = new java.util.HashSet[UTF8String](stopWords.size * 2)
-    stopWords.foreach(w => s.add(UTF8String.fromString(w)))
-    s
+  override lazy val replacement: Expression = {
+    val stopSet = new java.util.HashSet[UTF8String](stopWords.size * 2)
+    stopWords.foreach(w => stopSet.add(UTF8String.fromString(w)))
+    StaticInvoke(TokenStatsImpl.getClass, TokenStatsExpr.OutType, "stats",
+      Seq(child, Literal.fromObject(stopSet,
+        ObjectType(classOf[java.util.HashSet[_]]))),
+      returnNullable = false)
   }
-
-  override def dataType: DataType = TokenStatsExpr.OutType
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = child.nullable
   override def prettyName: String = "graft_token_stats"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckFailure(
-            s"$prettyName requires array<string>, got $other")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else TokenStatsImpl.stats(v.asInstanceOf[ArrayData], stopSet)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode = {
-    val setRef = ctx.addReferenceObj("stopSet", stopSet,
-      "java.util.HashSet")
-    nullSafeCodeGen(ctx, ev, c => {
-      s"${ev.value} = graft.expressions.TokenStatsImpl" +
-        s".stats($c, $setRef);"
-    })
-  }
 
   override protected def withNewChildInternal(
       newChild: Expression): TokenStatsExpr = copy(child = newChild)

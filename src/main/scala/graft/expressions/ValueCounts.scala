@@ -1,9 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -33,35 +32,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * array; null array → null.
   */
 case class ValueCountsExpr(child: Expression)
-    extends UnaryExpression {
+    extends RuntimeReplaceable with UnaryLike[Expression]
+    with org.apache.spark.sql.graftbridge.StringArrayInputTypes {
 
-  override def dataType: DataType = ValueCountsExpr.OutType
-  override def nullIntolerant: Boolean = true
-  override def nullable: Boolean = child.nullable
+  override lazy val replacement: Expression =
+    StaticInvoke(ValueCountsImpl.getClass, ValueCountsExpr.OutType,
+      "counts", Seq(child), returnNullable = false)
   override def prettyName: String = "graft_value_counts"
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-          .TypeCheckFailure(
-            s"$prettyName requires array<string>, got $other")
-    }
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else ValueCountsImpl.counts(v.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"${ev.value} = graft.expressions.ValueCountsImpl.counts($c);"
-    })
 
   override protected def withNewChildInternal(
       newChild: Expression): ValueCountsExpr = copy(child = newChild)
@@ -82,8 +59,7 @@ object ValueCountsImpl {
     while (i < n) {
       if (!arr.isNullAt(i)) {
         val t = arr.getUTF8String(i)
-        val prev = m.get(t)
-        m.put(t, if (prev == null) 1L else prev + 1L)
+        m.put(t, m.getOrDefault(t, 0L) + 1L)
       }
       i += 1
     }

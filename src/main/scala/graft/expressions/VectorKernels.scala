@@ -1,9 +1,10 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.{BinaryLike, UnaryLike}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{DataType, DoubleType}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 /** Native float64 vector kernels for the similarity stack.
   *
@@ -21,31 +22,14 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * null, exactly like `acc + null` inside `aggregate`.
   */
 case class DotF64(left: Expression, right: Expression)
-    extends BinaryExpression
+    extends RuntimeReplaceable with BinaryLike[Expression]
     with org.apache.spark.sql.graftbridge.DoubleArrayInputTypes {
 
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "graft_dot"
   // a null element yields a null SUM, not a null-skipping sum
-  override def nullable: Boolean = true
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val a = left.eval(input)
-    if (a == null) return null
-    val b = right.eval(input)
-    if (b == null) return null
-    VectorKernelImpl.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""java.lang.Double ${ev.value}Box =
-            graft.expressions.VectorKernelImpl.dot($a, $b);
-          if (${ev.value}Box == null) { ${ev.isNull} = true; }
-          else { ${ev.value} = ${ev.value}Box.doubleValue(); }"""
-    })
+  override lazy val replacement: Expression =
+    StaticInvoke(VectorKernelImpl.getClass, DoubleType, "dot",
+      Seq(left, right))
+  override def prettyName: String = "graft_dot"
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotF64 =
@@ -56,31 +40,13 @@ case class DotF64(left: Expression, right: Expression)
   * element-wise difference, fused into the same single pass.
   */
 case class SqDistF64(left: Expression, right: Expression)
-    extends BinaryExpression
+    extends RuntimeReplaceable with BinaryLike[Expression]
     with org.apache.spark.sql.graftbridge.DoubleArrayInputTypes {
 
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
+  override lazy val replacement: Expression =
+    StaticInvoke(VectorKernelImpl.getClass, DoubleType, "sqDist",
+      Seq(left, right))
   override def prettyName: String = "graft_sqdist"
-  override def nullable: Boolean = true
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val a = left.eval(input)
-    if (a == null) return null
-    val b = right.eval(input)
-    if (b == null) return null
-    VectorKernelImpl.sqDist(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      s"""java.lang.Double ${ev.value}Box =
-            graft.expressions.VectorKernelImpl.sqDist($a, $b);
-          if (${ev.value}Box == null) { ${ev.isNull} = true; }
-          else { ${ev.value} = ${ev.value}Box.doubleValue(); }"""
-    })
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SqDistF64 =
@@ -88,28 +54,13 @@ case class SqDistF64(left: Expression, right: Expression)
 }
 
 /** Sequential-order L2 norm: sqrt of the running sum of squares. */
-case class NormF64(child: Expression) extends UnaryExpression
+case class NormF64(child: Expression)
+    extends RuntimeReplaceable with UnaryLike[Expression]
     with org.apache.spark.sql.graftbridge.DoubleArrayInputTypes {
 
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
+  override lazy val replacement: Expression =
+    StaticInvoke(VectorKernelImpl.getClass, DoubleType, "norm", Seq(child))
   override def prettyName: String = "graft_norm"
-  override def nullable: Boolean = true
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val a = child.eval(input)
-    if (a == null) return null
-    VectorKernelImpl.norm(a.asInstanceOf[ArrayData])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      s"""java.lang.Double ${ev.value}Box =
-            graft.expressions.VectorKernelImpl.norm($a);
-          if (${ev.value}Box == null) { ${ev.isNull} = true; }
-          else { ${ev.value} = ${ev.value}Box.doubleValue(); }"""
-    })
 
   override protected def withNewChildInternal(
       newChild: Expression): NormF64 = copy(child = newChild)
@@ -127,21 +78,14 @@ case class NormF64(child: Expression) extends UnaryExpression
   * irrelevant wherever the optimizer re-sites it.
   */
 case class SignSketch(child: Expression, dim: Int)
-    extends UnaryExpression
+    extends RuntimeReplaceable with UnaryLike[Expression]
     with org.apache.spark.sql.graftbridge.DoubleArrayInputTypes {
   require(dim >= 1 && dim <= 64, s"signSketch needs 1..64 dims, got $dim")
 
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-  override def nullIntolerant: Boolean = true
+  override lazy val replacement: Expression =
+    StaticInvoke(VectorKernelImpl.getClass, LongType, "signSketch",
+      Seq(child, Literal(dim)), returnNullable = false)
   override def prettyName: String = "graft_signsketch"
-
-  override protected def nullSafeEval(input: Any): Any =
-    VectorKernelImpl.signSketch(input.asInstanceOf[ArrayData], dim)
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.expressions.VectorKernelImpl.signSketch($c, $dim)")
 
   override protected def withNewChildInternal(
       newChild: Expression): SignSketch = copy(child = newChild)

@@ -1,8 +1,8 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, RuntimeReplaceable}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -27,27 +27,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * emits empty or null tokens.
   */
 case class WhitespaceTokenizeExpr(child: Expression)
-    extends UnaryExpression
+    extends RuntimeReplaceable with UnaryLike[Expression]
     with org.apache.spark.sql.graftbridge.StringInputTypes {
 
   // containsNull matches the composed filter(split(...)) type so
   // downstream schemas (and the gate's schema compare) are unchanged;
   // the kernel never actually emits null tokens
-  override def dataType: DataType = ArrayType(StringType)
-  override def nullIntolerant: Boolean = true
+  override lazy val replacement: Expression =
+    StaticInvoke(WhitespaceTokenizeImpl.getClass, ArrayType(StringType),
+      "split", Seq(child), returnNullable = false)
   override def prettyName: String = "graft_tokenize"
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null
-    else WhitespaceTokenizeImpl.split(v.asInstanceOf[UTF8String])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext,
-                                   ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"${ev.value} = graft.expressions.WhitespaceTokenizeImpl.split($c);"
-    })
 
   override protected def withNewChildInternal(
       newChild: Expression): WhitespaceTokenizeExpr = copy(child = newChild)

@@ -100,7 +100,25 @@ object Dedup {
   def jaccardPairs(sh: DataFrame, threshold: Double,
                    maxShingleDf: Option[Int] = None): DataFrame = {
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val shJ = maxShingleDf match {
+    scoreJaccard(sharedShingles(sh, maxShingleDf), sizes, threshold)
+  }
+
+  /** Shared-shingle counts `(a, b, i)` of every doc pair (a < b), with
+    * the shingles above `maxShingleDf` dropped first (the hot-shingle
+    * survival mode of [[jaccardPairs]] and [[containmentPairs]]).
+    *
+    * No self-join: group docs per shingle once (one shuffle of |sh|),
+    * then emit each shingle's doc pairs through TWO chained generators
+    * — posexplode picks `a`, a second explode of the tail slice
+    * streams each `b`. Pair volume matches the join's output, but peak
+    * per-row memory is O(df) (the doc list itself; 8 MB at df = 10⁶),
+    * never the O(df²) a single flattened in-row pair array would
+    * materialize before exploding. Beyond that df, `maxShingleDf` is
+    * the survival mode.
+    */
+  private def sharedShingles(sh: DataFrame,
+                             maxShingleDf: Option[Int]): DataFrame = {
+    val kept = maxShingleDf match {
       case Some(cap) =>
         val hot = sh.groupBy(col("shingle"))
           .agg(count(lit(1)).as("df")).filter(col("df") > cap)
@@ -108,15 +126,7 @@ object Dedup {
         sh.join(hot, Seq("shingle"), "left_anti")
       case None => sh
     }
-    // intersection counts WITHOUT a self-join: group docs per shingle
-    // once (one shuffle of |sh|), then emit each shingle's doc pairs
-    // through TWO chained generators — posexplode picks `a`, a second
-    // explode of the tail slice streams each `b`. Pair volume matches
-    // the join's output, but peak per-row memory is O(df) (the doc
-    // list itself; 8 MB at df = 10⁶), never the O(df²) a single
-    // flattened in-row pair array would materialize before exploding.
-    // Beyond that df, `maxShingleDf` is the survival mode.
-    val inter = shJ.groupBy(col("shingle"))
+    kept.groupBy(col("shingle"))
       .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
       .select(col("ds"), posexplode(col("ds")).as(Seq("pos", "a")))
       .select(col("a"),
@@ -124,7 +134,6 @@ object Dedup {
           .as("b"))
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("i"))
-    scoreJaccard(inter, sizes, threshold)
   }
 
   /** MinHash estimator CALIBRATION (d21): for every exact-Jaccard
@@ -170,22 +179,7 @@ object Dedup {
   def containmentPairs(sh: DataFrame, threshold: Double,
                        maxShingleDf: Option[Int] = None): DataFrame = {
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val shC = maxShingleDf match {
-      case Some(cap) =>
-        val hot = sh.groupBy(col("shingle"))
-          .agg(count(lit(1)).as("df")).filter(col("df") > cap)
-          .select(col("shingle"))
-        sh.join(hot, Seq("shingle"), "left_anti")
-      case None => sh
-    }
-    val inter = shC.groupBy(col("shingle"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ds"))
-      .select(col("ds"), posexplode(col("ds")).as(Seq("pos", "a")))
-      .select(col("a"),
-        explode(slice(col("ds"), col("pos") + lit(2), size(col("ds"))))
-          .as("b"))
-      .groupBy(col("a"), col("b"))
-      .agg(count(lit(1)).as("i"))
+    val inter = sharedShingles(sh, maxShingleDf)
     // both directions emitted in ONE pass over the intersection
     // aggregate (a union of two reads would re-execute the whole
     // shingle pipeline per branch — the dupClustersStar lesson)
@@ -477,22 +471,10 @@ object Dedup {
   def minhashLshPairsFastDocs(docs: DataFrame, idCol: String,
                               tokens: Column, n: Int = 3,
                               numHashes: Int = 16, rowsPerBand: Int = 4,
-                              threshold: Double = 0.5): DataFrame = {
-    val sets = shingleSets(docs, idCol, tokens, n)
-    val bands = sets
-      .select(col("doc_id"),
-        explode(bandSignaturesInRowFast(col("shset"), numHashes,
-          rowsPerBand)).as("bs"))
-      .select(col("doc_id"), col("bs.b").as("b"), col("bs.sig").as("sig"))
-    val cands = lshCandidates(bands)
-    val candIds = cands
-      .select(explode(array(col("a"), col("b"))).as("doc_id")).distinct()
-    val candSets = sets.join(candIds, Seq("doc_id"), "left_semi")
-    val candSh = candSets
-      .select(col("doc_id"), explode(col("shset")).as("shingle"))
-    val sizes = candSets.select(col("doc_id"), size(col("shset")).as("n"))
-    verifyJaccard(candSh, cands, threshold, Some(sizes))
-  }
+                              threshold: Double = 0.5): DataFrame =
+    lshPairsFromSets(shingleSets(docs, idCol, tokens, n),
+      bandSignaturesInRowFast(col("shset"), numHashes, rowsPerBand),
+      threshold)
 
   /** Candidate pairs from shared LSH buckets (a < b, distinct). */
   def lshCandidates(bands: DataFrame): DataFrame =
@@ -556,12 +538,18 @@ object Dedup {
   def minhashLshPairsDocs(docs: DataFrame, idCol: String,
                           tokens: Column, n: Int = 3,
                           numHashes: Int = 16, rowsPerBand: Int = 4,
-                          threshold: Double = 0.5): DataFrame = {
-    val sets = shingleSets(docs, idCol, tokens, n)
+                          threshold: Double = 0.5): DataFrame =
+    lshPairsFromSets(shingleSets(docs, idCol, tokens, n),
+      bandSignaturesInRow(col("shset"), numHashes, rowsPerBand), threshold)
+
+  /** The body of [[minhashLshPairsDocs]] and [[minhashLshPairsFastDocs]]
+    * over per-doc shingle `sets`, given the in-row band-signature
+    * column of either hash profile.
+    */
+  private def lshPairsFromSets(sets: DataFrame, bandSigs: Column,
+                               threshold: Double): DataFrame = {
     val bands = sets
-      .select(col("doc_id"),
-        explode(bandSignaturesInRow(col("shset"), numHashes,
-          rowsPerBand)).as("bs"))
+      .select(col("doc_id"), explode(bandSigs).as("bs"))
       .select(col("doc_id"), col("bs.b").as("b"), col("bs.sig").as("sig"))
     val cands = lshCandidates(bands)
     val candIds = cands

@@ -419,11 +419,6 @@ object Similarity {
     topKPerQuery(scored, "cos", scoreAsc = false, k)
   }
 
-  /** Embedding-cosine near-duplicate pairs above a threshold —
-    * exact all-pairs variant (a < b). Quadratic: the verification
-    * baseline and the small-slice oracle query; the scale path is
-    * [[cosineDupPairs]].
-    */
   /** Per-label centroid of an embedding column, exploded to (label,
     * dim, centroid) rows. The shape that scales: `posexplode` fans
     * each vector into dim rows, but partial (map-side) aggregation
@@ -845,6 +840,11 @@ object Similarity {
     topKPerQuery(scored, "adist", scoreAsc = true, k)
   }
 
+  /** Embedding-cosine near-duplicate pairs above a threshold —
+    * exact all-pairs variant (a < b). Quadratic: the verification
+    * baseline and the small-slice oracle query; the scale path is
+    * [[cosineDupPairs]].
+    */
   def cosineDupPairsExact(corpus: DataFrame, threshold: Double,
                           idCol: String = "vec_id",
                           vecCol: String = "embedding"): DataFrame = {

@@ -32,6 +32,9 @@ import graft.expressions.{DotF64, NormF64}
   * lambda shapes (`acc + v` in that order, operands resolving to the
   * lambda's own variables, at most a cast-to-double in between), and
   * an identity finish lambda — anything else is left untouched.
+  *
+  * The rule runs after `ReplaceExpressions`, so it emits each kernel's
+  * `replacement` (its static call) rather than the kernel itself.
   */
 object KernelSubstitution extends Rule[LogicalPlan] {
 
@@ -110,11 +113,11 @@ object KernelSubstitution extends Rule[LogicalPlan] {
     plan.transformAllExpressions {
       case ArrayAggregate(ZipWith(a, b, prod), ZeroD(), merge, finish)
           if isPairProduct(prod) && isSum(merge) && isIdentity(finish) =>
-        DotF64(asDoubleArray(a), asDoubleArray(b))
+        DotF64(asDoubleArray(a), asDoubleArray(b)).replacement
       case sq: Sqrt => sq.child match {
         case ArrayAggregate(ArrayTransform(a, f), ZeroD(), merge, finish)
             if isSquare(f) && isSum(merge) && isIdentity(finish) =>
-          NormF64(asDoubleArray(a))
+          NormF64(asDoubleArray(a)).replacement
         case _ => sq
       }
     }

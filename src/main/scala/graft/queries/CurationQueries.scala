@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Tables
+import graft.core.{IndexCache, Tables}
 import graft.operators.Curation
 import graft.text.{Analysis, TextOps}
 
@@ -163,8 +163,7 @@ object CurationQueries {
     // so a column the merge mistypes or misaligns breaks the hash.
     "c07_schema_evolution" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-c07-").toString + "/docs"
+      val base = IndexCache.newIndexDir("graft-c07-") + "/docs"
       docs.filter(col("doc_id") % 2 === 0)
         .select(col("doc_id"), col("source"), col("n_chars"))
         .write.parquet(s"$base/batch=1")
@@ -226,8 +225,7 @@ object CurationQueries {
     // observation is only defined after the pass.
     "c13_observed_ingest" -> ((s, d) => {
       val obs = new org.apache.spark.sql.Observation()
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-c13-").toString + "/ingest"
+      val dir = IndexCache.newIndexDir("graft-c13-") + "/ingest"
       // ISOLATED session for the observed pass: Observation registers
       // itself in the session's ObservationManager and (Spark 4.1
       // classic) is never unregistered — a registered observation
@@ -259,8 +257,7 @@ object CurationQueries {
 
     "c09_incremental_rollup" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft-c09-").toString + "/rollup"
+      val dir = IndexCache.newIndexDir("graft-c09-") + "/rollup"
       def rollup(f: DataFrame) =
         Curation.sketchRollup(f, "source", "n_chars", md5(col("text")))
       rollup(docs.filter(col("doc_id") >= 100)).write.parquet(dir)

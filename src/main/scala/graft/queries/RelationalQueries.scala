@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.core.Tables
+import graft.core.{IndexCache, Tables}
 import graft.operators.Quantiles
 
 /** Relational operator pack — covers SURVEY.md §2.1–2.8 on the
@@ -74,8 +74,7 @@ object RelationalQueries {
     // the aggregate on top keeps the gate output small.
     "bk01_bucketed_join" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-bk-").toString
+      val base = IndexCache.newIndexDir("graft-bk-")
       graft.operators.Layout.writeBucketed(
         Tables.lineitem(s, d).select($"l_orderkey", $"l_quantity"),
         "graft_bk_li", s"$base/li", buckets = 8, key = "l_orderkey")
@@ -99,8 +98,7 @@ object RelationalQueries {
     // bucketed fact are shuffle-free scans.
     "bk02_bucketed_agg" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-bk2-").toString
+      val base = IndexCache.newIndexDir("graft-bk2-")
       graft.operators.Layout.writeBucketed(
         Tables.lineitem(s, d).select($"l_orderkey", $"l_quantity"),
         "graft_bk2_li", s"$base/li", buckets = 8, key = "l_orderkey")
@@ -166,8 +164,7 @@ object RelationalQueries {
     // hive-style partitioning (here).
     "ly01_partition_pruned_scan" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-ly-").toString + "/docs"
+      val base = IndexCache.newIndexDir("graft-ly-") + "/docs"
       Tables.documents(s, d).write.partitionBy("lang").parquet(base)
       s.read.parquet(base)
         .filter($"lang" === "de")
@@ -187,8 +184,7 @@ object RelationalQueries {
     // checks against the raw table.
     "ly02_zorder_scan" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-ly-").toString + "/orders_z"
+      val base = IndexCache.newIndexDir("graft-ly-") + "/orders_z"
       graft.operators.Layout.zOrderWrite(
         Tables.orders(s, d), "o_custkey", "o_totalprice", base,
         numFiles = 16)
@@ -210,8 +206,7 @@ object RelationalQueries {
     // the rewrite bit-for-bit.
     "ly03_compacted_scan" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-ly-").toString + "/docs_c"
+      val base = IndexCache.newIndexDir("graft-ly-") + "/docs_c"
       graft.operators.Layout.compact(
         s, s"$d/documents.parquet", base, targetRows = 2048L)
       s.read.parquet(base)
@@ -230,8 +225,7 @@ object RelationalQueries {
     // new column null where unwritten) and layout-invariant.
     "ly05_evolved_scan" -> ((s, d) => {
       import s.implicits._
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-ly-").toString + "/docs_evolved"
+      val base = IndexCache.newIndexDir("graft-ly-") + "/docs_evolved"
       val docs = Tables.documents(s, d)
       docs.filter($"doc_id" % 2 === 0)
         .select($"doc_id", $"lang", $"n_chars")

@@ -176,10 +176,13 @@ class ExpressionSpec extends AnyFunSuite {
     spark.conf.set("spark.sql.optimizer.excludedRules",
       "graft.plans.KernelSubstitution")
     try {
-    val vacuousGuard = Seq((Seq(1f), Seq(1f))).toDF("a", "b")
-      .select(SimilarityComposed.dotComposed(col("a"), col("b")))
+    // over a range, not a local relation: a local relation's projection
+    // is evaluated during optimization and no function is left to see
+    val vacuousGuard = spark.range(1)
+      .select(array(col("id").cast("float")).as("a"))
+      .select(SimilarityComposed.dotComposed(col("a"), col("a")))
       .queryExecution.executedPlan.toString
-    assert(!vacuousGuard.contains("graft_dot"),
+    assert(!vacuousGuard.contains("VectorKernelImpl.dot("),
       "rule exclusion failed; parity test would be vacuous")
     val rng = new scala.util.Random(0xE01L)
     val rows = Seq.fill(200)((
@@ -276,8 +279,10 @@ class ExpressionSpec extends AnyFunSuite {
       SimilarityComposed.dotComposed(col("embedding"), col("embedding")).as("d"),
       SimilarityComposed.normComposed(col("embedding")).as("n"))
     val plan = composed.queryExecution.executedPlan.toString
-    assert(plan.contains("graft_dot"), s"dot idiom not fused:\n$plan")
-    assert(plan.contains("graft_norm"), s"norm idiom not fused:\n$plan")
+    assert(plan.contains("VectorKernelImpl.dot("),
+      s"dot idiom not fused:\n$plan")
+    assert(plan.contains("VectorKernelImpl.norm("),
+      s"norm idiom not fused:\n$plan")
     // and the rewrite is value-identical to the kernels it claims
     val native = emb.select(col("vec_id"),
       Similarity.dot(col("embedding"), col("embedding")).as("d"),
@@ -302,14 +307,16 @@ class ExpressionSpec extends AnyFunSuite {
         (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, v) => v + acc).as("d"))
     val p1 = flipped.queryExecution.executedPlan.toString
-    assert(!p1.contains("graft_dot"), s"flipped merge fused:\n$p1")
+    assert(!p1.contains("VectorKernelImpl.dot("),
+      s"flipped merge fused:\n$p1")
     // non-zero seed is NOT the idiom
     val seeded = emb.select(aggregate(
       zip_with(col("embedding"), col("embedding"),
         (x, y) => x.cast("double") * y.cast("double")),
       lit(1.0), (acc, v) => acc + v).as("d"))
     val p2 = seeded.queryExecution.executedPlan.toString
-    assert(!p2.contains("graft_dot"), s"seeded aggregate fused:\n$p2")
+    assert(!p2.contains("VectorKernelImpl.dot("),
+      s"seeded aggregate fused:\n$p2")
   }
 
   test("vector kernels: null element poisons, null array nulls out") {
@@ -868,5 +875,46 @@ class ExpressionSpec extends AnyFunSuite {
         }
       } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
     }
+  }
+
+  test("a mistyped argument to an array<string> kernel is cast at " +
+      "analysis, not a runtime ClassCastException") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.Cast
+    import org.apache.spark.sql.graftbridge.ColumnBridge._
+    val df = Seq(Seq(1L, 2L, 3L)).toDF("a")
+      .select(column(graft.expressions.NgramJoinExpr(
+        expression(col("a")), 2)).as("g"))
+    val casts = df.queryExecution.analyzed.expressions.flatMap(_.collect {
+      case c: Cast => c.child.dataType.catalogString -> c.dataType.catalogString
+    })
+    assert(casts.contains("array<bigint>" -> "array<string>"),
+      df.queryExecution.analyzed)
+    assert(df.as[Seq[String]].head() == Seq("1 2", "2 3"))
+  }
+
+  test("source audit: no kernel hand-writes codegen, a type check or a " +
+      "Java call string; each binds its Impl through StaticInvoke") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val dir = Paths.get(sys.props("user.dir"), "src", "main", "scala",
+      "graft", "expressions")
+    val files = Files.list(dir).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    assert(files.size > 20, s"kernels not found under $dir")
+    val rules = Seq(
+      "a hand-written codegen or type check" ->
+        """\b(?:doGenCode|checkInputDataTypes|nullSafeCodeGen|defineCodeGen)\b""".r,
+      "a Java source string naming an Impl" ->
+        """"[^"\n]*\bgraft\.[\w.$]*Impl\b""".r)
+    val found = files.flatMap { f =>
+      Files.readAllLines(f).asScala.toSeq.zipWithIndex.flatMap {
+        case (line, i) => rules.collect {
+          case (what, re) if re.findFirstIn(line).isDefined =>
+            s"${f.getFileName}:${i + 1}: $what: ${line.trim}"
+        }
+      }
+    }
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

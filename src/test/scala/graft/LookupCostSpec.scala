@@ -247,18 +247,24 @@ class LookupCostSpec extends AnyFunSuite with BeforeAndAfterAll
       docSets.filter(col("doc_id") < 16))))
   }
 
-  test("the d12 and e16 gate rows leave no index directory in the temp dir") {
+  test("index and table gate rows leave no directory in the temp dir") {
     val tmpDir = Path.of(System.getProperty("java.io.tmpdir"))
     def indexDirs(): Set[String] = {
       val ls = Files.list(tmpDir)
       try ls.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.matches("graft-.*-idx-.*")).toSet
+        .filter(_.matches("graft-(?:.*-idx|bk2?|ly|c07|c09|c13)-.*")).toSet
       finally ls.close()
     }
     val before = indexDirs()
-    val results = Seq("d12_incremental_neardup", "e16_ivf_persisted")
-      .map(q => q -> graft.queries.DedupQueries.queries(q)(spark, sf))
-    // each row returns a lazy result over its index: read it only now
+    // every row that writes an index or a re-laid-out table first
+    val rows = Seq("d12_incremental_neardup", "e16_ivf_persisted",
+      "bk01_bucketed_join", "bk02_bucketed_agg",
+      "ly01_partition_pruned_scan", "ly02_zorder_scan",
+      "ly03_compacted_scan", "ly05_evolved_scan",
+      "c07_schema_evolution", "c09_incremental_rollup",
+      "c13_observed_ingest")
+    val results = rows.map(q => q -> graft.SparkEntry.queries(q)(spark, sf))
+    // each row returns a lazy result over its files: read it only now
     val counts = results.map { case (q, df) => q -> df.collect().length }
     assert(counts.toMap.apply("e16_ivf_persisted") > 0)
     assert(indexDirs() -- before == Set.empty)
