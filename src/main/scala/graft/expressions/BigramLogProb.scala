@@ -31,14 +31,11 @@ case class BigramLogProbExpr(child: Expression,
     extends RuntimeReplaceable with UnaryLike[Expression]
     with org.apache.spark.sql.graftbridge.StringArrayInputTypes {
 
-  override lazy val replacement: Expression = {
-    val table = new java.util.HashMap[String, java.lang.Double]()
-    model.foreach { case (k, v) => table.put(k, java.lang.Double.valueOf(v)) }
+  override lazy val replacement: Expression =
     StaticInvoke(BigramLogProbImpl.getClass, BigramLogProbExpr.OutType,
-      "score", Seq(child, Literal.fromObject(table,
-        ObjectType(classOf[java.util.HashMap[_, _]])), Literal(floorLp)),
+      "score", Seq(child, Literal.fromObject(BigramTable(model),
+        ObjectType(classOf[BigramTable])), Literal(floorLp)),
       returnNullable = false)
-  }
   override def prettyName: String = "graft_bigram_logprob"
 
   override protected def withNewChildInternal(
@@ -51,10 +48,20 @@ object BigramLogProbExpr {
     StructField("avg_logprob", DoubleType, nullable = false)))
 }
 
+/** The bigram model as a state literal (see [[StopWords]]). */
+final case class BigramTable(model: Map[String, Double]) {
+  @transient lazy val table: java.util.HashMap[String, java.lang.Double] = {
+    val t = new java.util.HashMap[String, java.lang.Double]()
+    model.foreach { case (k, v) => t.put(k, java.lang.Double.valueOf(v)) }
+    t
+  }
+  override def toString: String = s"BigramTable(${model.size} bigrams)"
+}
+
 object BigramLogProbImpl {
-  def score(arr: ArrayData,
-            table: java.util.HashMap[String, java.lang.Double],
+  def score(arr: ArrayData, model: BigramTable,
             floorLp: Double): InternalRow = {
+    val table = model.table
     val n = arr.numElements()
     if (n < 2)
       return new GenericInternalRow(Array[Any](0, 0.0))

@@ -23,8 +23,8 @@ import scala.collection.mutable
   * is self-synchronizing (a valid pattern byte sequence cannot start
   * mid-codepoint).
   *
-  * The automaton is built once on the driver from the literal pattern
-  * list and shipped with the plan (sparse per-state transitions:
+  * The automaton is built from the literal pattern list on first use
+  * in each deserialized copy of the plan (sparse per-state transitions:
   * memory is O(total pattern bytes), no 256-wide rows, so a 100k-entry
   * phrase list is ~megabytes); early-exits the scan once every entry
   * has been seen.
@@ -39,8 +39,8 @@ case class BlocklistHits(child: Expression, patterns: Seq[String])
 
   override lazy val replacement: Expression =
     StaticInvoke(BlocklistHitsImpl.getClass, IntegerType, "count",
-      Seq(child, Literal.fromObject(new AcAutomaton(patterns.toArray),
-        ObjectType(classOf[AcAutomaton]))),
+      Seq(child, Literal.fromObject(BlocklistPatterns(patterns),
+        ObjectType(classOf[BlocklistPatterns]))),
       returnNullable = false)
   override def prettyName: String = "graft_blocklist_hits"
 
@@ -48,9 +48,17 @@ case class BlocklistHits(child: Expression, patterns: Seq[String])
       newChild: Expression): BlocklistHits = copy(child = newChild)
 }
 
+/** The pattern list as a state literal (see [[StopWords]]). */
+final case class BlocklistPatterns(patterns: Seq[String]) {
+  @transient lazy val automaton: AcAutomaton =
+    new AcAutomaton(patterns.toArray)
+  override def toString: String =
+    s"BlocklistPatterns(${patterns.size} patterns)"
+}
+
 object BlocklistHitsImpl {
-  def count(text: UTF8String, auto: AcAutomaton): Int =
-    auto.countEntriesPresent(text.getBytes)
+  def count(text: UTF8String, blocklist: BlocklistPatterns): Int =
+    blocklist.automaton.countEntriesPresent(text.getBytes)
 }
 
 /** Aho–Corasick automaton over bytes with sparse transitions.
@@ -65,7 +73,7 @@ object BlocklistHitsImpl {
 final class AcAutomaton(patternStrs: Array[String]) extends Serializable {
   private val nPatterns = patternStrs.length
 
-  // --- trie build (driver-side, once per plan) ---
+  // --- trie build (once per automaton) ---
   private val (edgeStart, edgeByte, edgeTo, failTo, dictTo, outStart,
     outIds) = {
     val pats = patternStrs.map(
@@ -171,9 +179,9 @@ final class AcAutomaton(patternStrs: Array[String]) extends Serializable {
   // per ROW costs |patterns| bytes of allocation each row (50 GB of
   // churn for a 100k-entry list over 500k docs — measured 12 s vs the
   // 263-entry list's 4.2 s purely from that churn); stamping with a
-  // per-row generation makes the scan allocation-free. The automaton
-  // instance is shared across a whole executor (one reference object
-  // per plan), so the scratch state is ThreadLocal, @transient and
+  // per-row generation makes the scan allocation-free. One automaton
+  // can serve several task threads (every task holding the same plan
+  // object), so the scratch state is ThreadLocal, @transient and
   // rebuilt after deserialization.
   @transient private lazy val seenTL: ThreadLocal[Array[Int]] =
     new ThreadLocal[Array[Int]] {

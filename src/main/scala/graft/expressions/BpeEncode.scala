@@ -37,8 +37,8 @@ case class BpeEncodeExpr(child: Expression,
 
   override lazy val replacement: Expression =
     StaticInvoke(BpeEncodeImpl.getClass, StringType, "encode",
-      Seq(child, Literal.fromObject(merges.toArray,
-        ObjectType(classOf[Array[(String, String)]]))),
+      Seq(child, Literal.fromObject(BpeRules(merges),
+        ObjectType(classOf[BpeRules]))),
       returnNullable = false)
   override def prettyName: String = "graft_bpe_encode"
   // keep the (possibly 30k-entry) rule list out of plan strings
@@ -49,9 +49,15 @@ case class BpeEncodeExpr(child: Expression,
       newChild: Expression): BpeEncodeExpr = copy(child = newChild)
 }
 
+/** The merge-rule list as a state literal (see [[StopWords]]). */
+final case class BpeRules(merges: Seq[(String, String)]) {
+  @transient lazy val rules: Array[(String, String)] = merges.toArray
+  override def toString: String = s"BpeRules(${merges.size} rules)"
+}
+
 object BpeEncodeImpl {
-  def encode(arr: ArrayData,
-             rules: Array[(String, String)]): UTF8String = {
+  def encode(arr: ArrayData, bpeRules: BpeRules): UTF8String = {
+    val rules = bpeRules.rules
     val nWords = arr.numElements()
     val out = new java.lang.StringBuilder
     var w = 0

@@ -27,14 +27,11 @@ case class GopherStatsExpr(child: Expression, stopWords: Seq[String])
     extends RuntimeReplaceable with UnaryLike[Expression]
     with org.apache.spark.sql.graftbridge.StringArrayInputTypes {
 
-  override lazy val replacement: Expression = {
-    val stopSet = new java.util.HashSet[String]()
-    stopWords.foreach(stopSet.add)
+  override lazy val replacement: Expression =
     StaticInvoke(GopherStatsImpl.getClass, GopherStatsExpr.OutType,
-      "stats", Seq(child, Literal.fromObject(stopSet,
-        ObjectType(classOf[java.util.HashSet[_]]))),
+      "stats", Seq(child, Literal.fromObject(StopWords(stopWords),
+        ObjectType(classOf[StopWords]))),
       returnNullable = false)
-  }
   override def prettyName: String = "graft_gopher_stats"
 
   override protected def withNewChildInternal(
@@ -52,8 +49,8 @@ object GopherStatsExpr {
 }
 
 object GopherStatsImpl {
-  def stats(arr: ArrayData,
-            stops: java.util.HashSet[String]): InternalRow = {
+  def stats(arr: ArrayData, stopWords: StopWords): InternalRow = {
+    val stops = stopWords.strings
     val n = arr.numElements()
     val counts = new java.util.HashMap[String, Long]()
     val grams = new java.util.HashSet[(String, String)]()

@@ -34,33 +34,44 @@ case class LangIdExpr(child: Expression,
     s"LangIdExpr supports at most 32 languages (got ${markers.size}); " +
       "widen the bitmask to Long/long[] before adding more")
 
-  override lazy val replacement: Expression = {
-    val maskMap = new java.util.HashMap[UTF8String, Integer]()
-    markers.zipWithIndex.foreach { case ((_, ws), i) =>
-      ws.foreach { w =>
-        val k = UTF8String.fromString(w)
-        val prev = maskMap.get(k)
-        maskMap.put(k, (if (prev == null) 0 else prev.intValue()) | (1 << i))
-      }
-    }
-    val langNames = markers.map(l => UTF8String.fromString(l._1)).toArray
+  override lazy val replacement: Expression =
     StaticInvoke(LangIdImpl.getClass, StringType, "langId", Seq(child,
-      Literal.fromObject(maskMap, ObjectType(classOf[java.util.HashMap[_, _]])),
-      Literal.fromObject(langNames, ObjectType(classOf[Array[UTF8String]]))),
+      Literal.fromObject(LangIdTables(markers),
+        ObjectType(classOf[LangIdTables]))),
       returnNullable = false)
-  }
   override def prettyName: String = "graft_lang_id"
 
   override protected def withNewChildInternal(
       newChild: Expression): LangIdExpr = copy(child = newChild)
 }
 
+/** The marker lists as a state literal (see [[StopWords]]): the
+  * marker→language mask map and the language names in priority order.
+  */
+final case class LangIdTables(markers: Seq[(String, Seq[String])]) {
+  @transient lazy val masks: java.util.HashMap[UTF8String, Integer] = {
+    val m = new java.util.HashMap[UTF8String, Integer]()
+    markers.zipWithIndex.foreach { case ((_, ws), i) =>
+      ws.foreach { w =>
+        val k = UTF8String.fromString(w)
+        val prev = m.get(k)
+        m.put(k, (if (prev == null) 0 else prev.intValue()) | (1 << i))
+      }
+    }
+    m
+  }
+  @transient lazy val names: Array[UTF8String] =
+    markers.map(l => UTF8String.fromString(l._1)).toArray
+  override def toString: String =
+    markers.map(_._1).mkString("LangIdTables(", ",", ")")
+}
+
 object LangIdImpl {
   private val Und = UTF8String.fromString("und")
 
-  def langId(arr: ArrayData,
-             masks: java.util.HashMap[UTF8String, Integer],
-             names: Array[UTF8String]): UTF8String = {
+  def langId(arr: ArrayData, tables: LangIdTables): UTF8String = {
+    val masks = tables.masks
+    val names = tables.names
     val n = arr.numElements()
     val hits = new Array[Int](names.length)
     var i = 0

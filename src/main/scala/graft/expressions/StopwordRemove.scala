@@ -25,23 +25,44 @@ case class StopwordRemoveExpr(child: Expression, stopWords: Seq[String])
     extends RuntimeReplaceable with UnaryLike[Expression]
     with org.apache.spark.sql.graftbridge.StringArrayInputTypes {
 
-  override lazy val replacement: Expression = {
-    val stopSet = new java.util.HashSet[UTF8String](stopWords.size * 2)
-    stopWords.foreach(w => stopSet.add(UTF8String.fromString(w)))
+  override lazy val replacement: Expression =
     StaticInvoke(StopwordRemoveImpl.getClass, ArrayType(StringType),
-      "remove", Seq(child, Literal.fromObject(stopSet,
-        ObjectType(classOf[java.util.HashSet[_]]))),
+      "remove", Seq(child, Literal.fromObject(StopWords(stopWords),
+        ObjectType(classOf[StopWords]))),
       returnNullable = false)
-  }
   override def prettyName: String = "graft_remove_stopwords"
 
   override protected def withNewChildInternal(
       newChild: Expression): StopwordRemoveExpr = copy(child = newChild)
 }
 
+/** A stop-word list as the object literal a kernel's static call reads.
+  *
+  * Every kernel's state literal is a case class of the parameters its
+  * tables are built from, like this one: a literal compares by value,
+  * so two copies of one expression stay semantically equal (a cached
+  * frame or an exchange is reused across a self-join's re-aliased
+  * copy), and the tables are `@transient lazy`, built on first use in
+  * each JVM copy rather than each time the analyzer copies the
+  * expression.
+  */
+final case class StopWords(words: Seq[String]) {
+  @transient lazy val utf8: java.util.HashSet[UTF8String] = {
+    val set = new java.util.HashSet[UTF8String](words.size * 2)
+    words.foreach(w => set.add(UTF8String.fromString(w)))
+    set
+  }
+  @transient lazy val strings: java.util.HashSet[String] = {
+    val set = new java.util.HashSet[String](words.size * 2)
+    words.foreach(set.add)
+    set
+  }
+  override def toString: String = s"StopWords(${words.size} words)"
+}
+
 object StopwordRemoveImpl {
-  def remove(arr: ArrayData,
-             stops: java.util.HashSet[UTF8String]): ArrayData = {
+  def remove(arr: ArrayData, stopWords: StopWords): ArrayData = {
+    val stops = stopWords.utf8
     val n = arr.numElements()
     val buf = new Array[Any](n)
     var k = 0

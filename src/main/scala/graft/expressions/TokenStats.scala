@@ -36,14 +36,11 @@ case class TokenStatsExpr(child: Expression, stopWords: Seq[String])
     extends RuntimeReplaceable with UnaryLike[Expression]
     with org.apache.spark.sql.graftbridge.StringArrayInputTypes {
 
-  override lazy val replacement: Expression = {
-    val stopSet = new java.util.HashSet[UTF8String](stopWords.size * 2)
-    stopWords.foreach(w => stopSet.add(UTF8String.fromString(w)))
+  override lazy val replacement: Expression =
     StaticInvoke(TokenStatsImpl.getClass, TokenStatsExpr.OutType, "stats",
-      Seq(child, Literal.fromObject(stopSet,
-        ObjectType(classOf[java.util.HashSet[_]]))),
+      Seq(child, Literal.fromObject(StopWords(stopWords),
+        ObjectType(classOf[StopWords]))),
       returnNullable = false)
-  }
   override def prettyName: String = "graft_token_stats"
 
   override protected def withNewChildInternal(
@@ -59,8 +56,8 @@ object TokenStatsExpr {
 }
 
 object TokenStatsImpl {
-  def stats(arr: ArrayData,
-            stops: java.util.HashSet[UTF8String]): InternalRow = {
+  def stats(arr: ArrayData, stopWords: StopWords): InternalRow = {
+    val stops = stopWords.utf8
     val n = arr.numElements()
     val seen = new java.util.HashSet[UTF8String](n * 2)
     var sumLen = 0L

@@ -893,6 +893,45 @@ class ExpressionSpec extends AnyFunSuite {
     assert(df.as[Seq[String]].head() == Seq("1 2", "2 3"))
   }
 
+  test("two copies of a kernel with state are semantically equal, so a " +
+      "self-join reads the cached frame over it") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    import graft.expressions._
+    val toks = AttributeReference("toks", ArrayType(StringType))()
+    val text = AttributeReference("text", StringType)()
+    val stops = Seq("the", "a", "is")
+    val kernels: Seq[() => Expression] = Seq(
+      () => LangIdExpr(toks, graft.text.Analysis.LangMarkers),
+      () => StopwordRemoveExpr(toks, stops),
+      () => TokenStatsExpr(toks, stops),
+      () => GopherStatsExpr(toks, stops),
+      () => BigramLogProbExpr(toks, Map("a b" -> -1.5), -9.0),
+      () => BpeEncodeExpr(toks, Seq("l" -> "o", "lo" -> "w")),
+      () => BlocklistHits(text, Seq("bad", "worse")))
+    kernels.foreach { k =>
+      val (x, y) = (k(), k())
+      assert(x.semanticEquals(y) && x.semanticHash() == y.semanticHash(),
+        s"$x: two copies differ after canonicalization")
+    }
+    val docs = Seq((1L, "the cat is on the mat and the dog is in the house"),
+      (2L, "el gato y la casa de la playa")).toDF("id", "text")
+    val english = docs
+      .select(col("id"), graft.text.Analysis.langId(
+        graft.text.TextOps.tokenize(col("text"))).as("lang"))
+      .filter(col("lang") === "en").select(col("id")).persist()
+    try {
+      assert(english.count() == 1L)
+      val kept = docs.join(english, Seq("id"), "left_semi")
+      val plan = kept.queryExecution.withCachedData
+      assert(plan.collectFirst { case r: InMemoryRelation => r }.isDefined,
+        s"the self-join recomputes the cached frame:\n$plan")
+      assert(kept.select(col("id")).as[Long].collect().toSeq == Seq(1L))
+    } finally english.unpersist()
+  }
+
   test("source audit: no kernel hand-writes codegen, a type check or a " +
       "Java call string; each binds its Impl through StaticInvoke") {
     import java.nio.file.{Files, Paths}
